@@ -12,13 +12,26 @@ import graft.sources.{IcebergLite, IcebergLiteWriter, TableInfo}
   * `_duckdb_connection`, /root/reference/backend/main.py:361-388,567-620).
   *
   * Session model (A7): one long-lived SparkSession per process (JVM/Spark
-  * startup is the analog of the reference's extension warmup) and
-  * `spark.newSession()` per request — isolated SQLConf and temp-view
-  * namespace so concurrent requests cannot see each other's bound
-  * `iceberg_scan` views. Credential isolation on the shared Hadoop conf is
-  * the known hard part (SURVEY.md §7.3); storage settings are produced as
-  * per-request maps (ConnectionConfig.s3aSettings) and would be applied as
-  * per-bucket/per-catalog overrides on a real deployment.
+  * startup is the analog of the reference's extension warmup) and, per
+  * request, a child session borrowed EXCLUSIVELY from a small idle pool
+  * ([[SessionPool]]). The reference's fresh in-memory DuckDB connection
+  * is nearly free; a fresh `newSession()` is not (a new SessionState,
+  * function registration, and an artifact directory for Spark's cleaner
+  * to delete), so each pooled session is built once and reused:
+  *   - a session serves only requests with the same root session and
+  *     EXACTLY the same storage settings (compared for equality, never by
+  *     hash), so two credential sets never share one;
+  *   - before it goes back, the temp views the request's binders created
+  *     are dropped through the session catalog (no shared cache entry is
+  *     touched); a session whose views cannot be dropped is discarded;
+  *   - at most [[RequestThreads]] sessions wait idle.
+  * Still per request: config validation, the delete guard, the latest-
+  * metadata listing of every scanned table under the request's own
+  * settings (the parsed metadata and manifests come from
+  * `IcebergLite.metadataCache`), rewriting, validation, binding,
+  * analysis and execution. Credential isolation on the shared Hadoop
+  * conf is the known hard part (SURVEY.md §7.3): storage settings live
+  * only on the session's own conf ([[applyStorageSettings]]).
   */
 object Engine {
 
@@ -30,6 +43,11 @@ object Engine {
   val DefaultRowLimit = 1000
   val MaxRowLimit = 10000
 
+  /** Requests the HTTP gateway serves at once, and so the most idle
+    * sessions worth keeping.
+    */
+  val RequestThreads = 8
+
   def executeQuery(
       root: SparkSession,
       sql: String,
@@ -39,8 +57,8 @@ object Engine {
       throw EngineError(400, s"rowLimit must be <= $MaxRowLimit")
     // Bounded-cache contract for the long-running gateway: any
     // intermediate an operator persists during this request (tracked via
-    // CacheScope) is released once the rows are collected — per-request
-    // newSession() isolates conf/catalog but NOT the block manager, so
+    // CacheScope) is released once the rows are collected — a request
+    // session isolates conf/catalog but NOT the block manager, so
     // without this, persisted blocks would accumulate across requests
     // for the lifetime of the shared SparkContext.
     try executeQueryInner(root, sql, config, rowLimit)
@@ -57,14 +75,11 @@ object Engine {
       case Success(c) => c
       case Failure(e) => throw EngineError(400, e.getMessage)
     }
-    val spark = root.newSession()
-    // Graft's custom expressions (vec_dot, winnow_hashes, ...) plus the
-    // DuckDB-compat type-dispatchers (len, duck_slice) resolve per
-    // session; registering here means the gateway works on ANY root
-    // session, not only one built with GraftExtensions.
-    graft.functions.GraftFunctions.register(spark)
-    applyStorageSettings(spark, cfg)
+    SessionPool.withSession(root, storageSettings(cfg))(spark => run(spark, sql, cfg, rowLimit, t0))
+  }
 
+  private def run(spark: SparkSession, sql: String, cfg: ConnectionConfig,
+      rowLimit: Int, t0: Long): QueryResult = {
     // Delete-guard on the configured direct table path before every query
     // (reference main.py:575-576). Probe failures degrade inside.
     cfg.tablePath.foreach { p =>
@@ -98,14 +113,20 @@ object Engine {
     val df =
       try spark.sql(bound)
       catch { case e: Exception => throw EngineError(400, s"Query execution failed: ${firstLine(e)}") }
-    val (limited, _) = LimitInjector(df, rowLimit)
+    val (limited, injected) = LimitInjector(df, rowLimit)
+    // A user-written LIMIT is never overwritten, but collection stays
+    // bounded whatever it says: Spark folds this outer limit into the
+    // user's, so at most one row past the hard cap is collected — enough
+    // to tell a full result from a cut one.
+    val collected = if (injected) limited else limited.limit(MaxRowLimit + 1)
 
-    val rows =
-      try limited.collect()
+    val all =
+      try collected.collect()
       catch { case e: Exception => throw EngineError(400, s"Query execution failed: ${firstLine(e)}") }
+    val rows = if (all.length > MaxRowLimit) all.take(MaxRowLimit) else all
 
     val elapsedMs = (System.nanoTime() - t0) / 1000000
-    val scanned = bytesScanned(limited.queryExecution.executedPlan)
+    val scanned = bytesScanned(collected.queryExecution.executedPlan)
     val bytes =
       if (scanned > 0) scanned
       // Reference-style fallback estimate (main.py:594-595) when no file
@@ -174,8 +195,8 @@ object Engine {
 
   /** Apply the request's storage settings as PER-SESSION per-bucket S3A
     * overrides: `fs.s3a.bucket.<bucket>.*` entries on the request
-    * session's own conf (each request is a `newSession()` with an
-    * isolated SQLConf). The keys are deliberately UN-prefixed:
+    * session's own conf (each pooled session has an isolated SQLConf and
+    * serves one exact settings map). The keys are deliberately UN-prefixed:
     * `SessionState.newHadoopConf` copies every session conf entry into
     * the Hadoop configuration VERBATIM (the `spark.hadoop.` stripping
     * happens only for the static SparkConf at SparkContext startup), so
@@ -192,10 +213,16 @@ object Engine {
     * shared-nothing version of that fix).
     */
   def applyStorageSettings(spark: SparkSession, cfg: ConnectionConfig): Unit =
-    cfg.tablePath.filter(_.startsWith("s3://")).foreach { p =>
+    storageSettings(cfg).foreach { case (k, v) => spark.conf.set(k, v) }
+
+  /** The session conf entries [[applyStorageSettings]] sets: empty unless
+    * the connection names an `s3://` table path.
+    */
+  def storageSettings(cfg: ConnectionConfig): Map[String, String] =
+    cfg.tablePath.filter(_.startsWith("s3://")).fold(Map.empty[String, String]) { p =>
       val bucket = p.stripPrefix("s3://").takeWhile(_ != '/')
-      ConnectionConfig.s3aSettings(cfg).foreach { case (k, v) =>
-        spark.conf.set(k.replace("fs.s3a.", s"fs.s3a.bucket.$bucket."), v)
+      ConnectionConfig.s3aSettings(cfg).map { case (k, v) =>
+        k.replace("fs.s3a.", s"fs.s3a.bucket.$bucket.") -> v
       }
     }
 
@@ -255,4 +282,72 @@ object Engine {
 
   private def firstLine(e: Throwable): String =
     Option(e.getMessage).map(_.linesIterator.next()).getOrElse(e.getClass.getSimpleName)
+}
+
+/** Idle request sessions, each built once: `newSession()`, graft's
+  * function registrations and one exact storage-settings map. See the
+  * session model on [[Engine]].
+  */
+private[gateway] object SessionPool {
+
+  /** Sessions are interchangeable only under the SAME root session (by
+    * reference) and EXACTLY equal settings maps.
+    */
+  private final class Key(val root: SparkSession, val settings: Map[String, String]) {
+    override def equals(o: Any): Boolean = o match {
+      case k: Key => (k.root eq root) && k.settings == settings
+      case _ => false
+    }
+    override def hashCode: Int = System.identityHashCode(root) * 31 + settings.hashCode
+  }
+
+  // Oldest first; guarded by itself.
+  private val idle = new java.util.ArrayDeque[(Key, SparkSession)]()
+
+  /** Runs `f` on a session no other request holds meanwhile. */
+  def withSession[T](root: SparkSession, settings: Map[String, String])(
+      f: SparkSession => T): T = {
+    val key = new Key(root, settings)
+    val session = take(key).getOrElse(create(root, settings))
+    try f(session)
+    finally if (dropTempViews(session)) give(key, session)
+  }
+
+  def idleCount: Int = idle.synchronized(idle.size)
+
+  private def take(key: Key): Option[SparkSession] = idle.synchronized {
+    idle.removeIf(_._1.root.sparkContext.isStopped)
+    val it = idle.descendingIterator()
+    var found: Option[SparkSession] = None
+    while (found.isEmpty && it.hasNext) {
+      val (k, s) = it.next()
+      if (k == key) { it.remove(); found = Some(s) }
+    }
+    found
+  }
+
+  private def give(key: Key, session: SparkSession): Unit = idle.synchronized {
+    idle.addLast(key -> session)
+    while (idle.size > Engine.RequestThreads) idle.removeFirst()
+  }
+
+  private def create(root: SparkSession, settings: Map[String, String]): SparkSession = {
+    val s = root.newSession()
+    // Graft's custom expressions (vec_dot, winnow_hashes, ...) plus the
+    // DuckDB-compat type-dispatchers (len, duck_slice) resolve per
+    // session; registering here means the gateway works on ANY root
+    // session, not only one built with GraftExtensions.
+    graft.functions.GraftFunctions.register(s)
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** Drops every local temp view: SqlGuard admits no CREATE VIEW, so each
+    * was made by one of the request's binders. The session catalog's drop
+    * leaves the shared cache manager alone, unlike `spark.catalog`'s.
+    */
+  private def dropTempViews(s: SparkSession): Boolean = Try {
+    val catalog = s.sessionState.catalog
+    catalog.listLocalTempViews("*").foreach(v => catalog.dropTempView(v.table))
+  }.isSuccess
 }

@@ -26,11 +26,16 @@ import JValue._
   *   GET  /api/demo/queries    sample queries over the demo table
   *
   * Errors: HTTP 400 with {"detail": ...} for validation/guard/execution
-  * errors, 500 {"detail":"Internal server error"} otherwise; CORS `*`.
+  * errors, 500 {"detail":"Internal server error"} otherwise (logged with
+  * its stack trace); CORS `*`.
   */
 final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String]) {
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  // Non-daemon request threads: kept so stop() can shut them down.
+  private[gateway] val executor =
+    java.util.concurrent.Executors.newFixedThreadPool(Engine.RequestThreads)
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[HttpApi])
 
   def start(): Unit = {
     server.createContext("/", (ex: HttpExchange) => {
@@ -161,11 +166,18 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
             s"SELECT TRIM(word) AS word, COUNT(*) AS count FROM (SELECT UNNEST(string_split(text, ' ')) AS word FROM iceberg_scan('$t') WHERE text IS NOT NULL) GROUP BY word ORDER BY count DESC")))))
       case _ => (405, JObj("detail" -> JStr("Method Not Allowed")))
     })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    server.setExecutor(executor)
     server.start()
   }
 
-  def stop(): Unit = server.stop(0)
+  /** Closes the listener, then lets in-flight requests finish (up to 30 s)
+    * so the request threads end and the JVM can exit.
+    */
+  def stop(): Unit = {
+    server.stop(0)
+    executor.shutdown()
+    executor.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS)
+  }
 
   def address: String = s"http://localhost:${server.getAddress.getPort}"
 
@@ -215,7 +227,9 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
       case Failure(e: Engine.EngineError) => (e.status, JObj("detail" -> JStr(e.detail)))
       case Failure(e: ConnectionConfig.InvalidConfig) => (400, JObj("detail" -> JStr(e.message)))
       case Failure(e: Json.JsonParseException) => (400, JObj("detail" -> JStr(s"Invalid JSON: ${e.msg}")))
-      case Failure(_) => (500, JObj("detail" -> JStr("Internal server error")))
+      case Failure(e) =>
+        log.error(s"500 on ${ex.getRequestMethod} ${ex.getRequestURI.getPath}", e)
+        (500, JObj("detail" -> JStr("Internal server error")))
     }
     val bytes = payload.render.getBytes(StandardCharsets.UTF_8)
     val h = ex.getResponseHeaders

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Log
 /** Outer-LIMIT injection (the reference's limit half of
   * `_validate_and_limit_sql`, /root/reference/backend/main.py:102-111):
   * cap the result set at `rowLimit` rows unless the query already carries
-  * a top-level LIMIT — never overwrite a user-supplied one. The check
+  * a top-level LIMIT — never overwrite a user-supplied one (`Engine`
+  * still bounds what it collects above its hard cap). The check
   * reaches through a CTE (`WITH`) wrapper, like the reference's
   * `stmt.this if isinstance(stmt, exp.With)` unwrap.
   *

@@ -6,7 +6,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.gateway.{JValue, Json}
@@ -91,11 +91,14 @@ object IcebergLite {
     * `NNNNN-<uuid>.metadata.json` and Spark's `vN.metadata.json` naming
     * (the reference pins the same trick, main.py:477-480).
     */
-  def latestMetadataPath(conf: Configuration, tablePath: String): Option[Path] = {
+  def latestMetadataPath(conf: Configuration, tablePath: String): Option[Path] =
+    latestMetadataStatus(conf, tablePath).map(_.getPath)
+
+  private def latestMetadataStatus(conf: Configuration, tablePath: String): Option[FileStatus] = {
     val glob = new Path(s"$tablePath/metadata/*.metadata.json")
     val statuses = Try(fs(glob, conf).globStatus(glob)).toOption
       .flatMap(Option(_)).getOrElse(Array.empty)
-    statuses.map(_.getPath).sortBy(_.getName).lastOption
+    statuses.sortBy(_.getPath.getName).lastOption
   }
 
   def readMetadataJson(conf: Configuration, p: Path): JObj = {
@@ -109,20 +112,60 @@ object IcebergLite {
     } finally in.close()
   }
 
+  /** Source-byte bound of [[metadataCache]]: a few thousand manifests. */
+  val MetadataCacheBytes: Long = 64L << 20
+
+  /** Parsed metadata JSON, manifest lists and manifests by path, shared by
+    * every session of the process. All three are write-once files (see
+    * [[SourceCache]]).
+    */
+  private[sources] val metadataCache = new SourceCache(MetadataCacheBytes)
+
+  /** The metadata JSON a read plans against, resolved ONCE per read and
+    * then handed to every planning step: an explicit location (e.g. from
+    * a REST catalog's LoadTableResult) wins over the directory listing.
+    *
+    * The listing — or, for an explicit location, a status call — runs on
+    * every read under the caller's own configuration, so a new commit is
+    * seen at once and a caller without access is refused; only the parse
+    * of the write-once file comes from [[metadataCache]]. Its length and
+    * modification time join the cache key, because `vN.metadata.json`
+    * names repeat when a table is dropped and re-created at one path.
+    */
+  def resolveMetadata(conf: Configuration, tablePath: String,
+      metadataLocation: Option[String] = None): JObj = {
+    val status = metadataLocation match {
+      case Some(loc) =>
+        val p = new Path(loc)
+        fs(p, conf).getFileStatus(p)
+      case None => latestMetadataStatus(conf, tablePath)
+          .getOrElse(throw ProbeError(s"No Iceberg metadata readable at $tablePath"))
+    }
+    val p = status.getPath
+    metadataCache.getOrLoad(s"$p@${status.getLen}:${status.getModificationTime}") {
+      (readMetadataJson(conf, p), status.getLen)
+    }
+  }
+
   private def jLong(o: JObj, key: String): Option[Long] =
     o.get(key).collect { case JNum(n) => n.toLong }
 
-  /** Read every record of an Avro container file using its writer schema. */
-  private def readAvro(conf: Configuration, p: Path): Seq[GenericRecord] = {
-    val in = fs(p, conf).open(p)
-    try {
-      val stream = new DataFileStream[GenericRecord](in, new GenericDatumReader[GenericRecord]())
-      val out = ArrayBuffer.empty[GenericRecord]
-      while (stream.hasNext) out += stream.next()
-      stream.close()
-      out.toSeq
-    } finally Try(in.close())
-  }
+  /** Every record of an Avro container file, decoded with its writer
+    * schema. Manifest lists and manifests are write-once, so the decoded
+    * records are cached by path and shared read-only across threads.
+    */
+  private def readAvro(conf: Configuration, p: Path): IndexedSeq[GenericRecord] =
+    metadataCache.getOrLoad(p.toString) {
+      val in = fs(p, conf).open(p)
+      val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
+      val stream = new DataFileStream[GenericRecord](
+        new java.io.ByteArrayInputStream(bytes), new GenericDatumReader[GenericRecord]())
+      try {
+        val out = ArrayBuffer.empty[GenericRecord]
+        while (stream.hasNext) out += stream.next()
+        (out.toIndexedSeq, bytes.length.toLong)
+      } finally stream.close()
+    }
 
   private def fieldLong(r: GenericRecord, name: String, default: Long = 0L): Long =
     Option(r.getSchema.getField(name)).flatMap(_ => Option(r.get(name))) match {
@@ -174,14 +217,6 @@ object IcebergLite {
     }
   }
 
-  /** Resolve the metadata JSON to read: an explicit location (e.g. handed
-    * out by a REST catalog's LoadTableResult) wins over directory listing.
-    */
-  def resolveMetadataPath(conf: Configuration, tablePath: String,
-      metadataLocation: Option[String] = None): Path =
-    metadataLocation.map(new Path(_)).orElse(latestMetadataPath(conf, tablePath))
-      .getOrElse(throw ProbeError(s"No Iceberg metadata readable at $tablePath"))
-
   /** Fixed daemon pool for manifest fan-out: scan *planning* reads one Avro
     * file per manifest, and a large table carries thousands of manifests —
     * serial driver-side reads would make planning the bottleneck long
@@ -203,9 +238,12 @@ object IcebergLite {
     */
   def fileEntries(conf: Configuration, tablePath: String,
       snapshotId: Option[Long] = None,
-      metadataLocation: Option[String] = None): Seq[FileEntry] = {
-    val metaPath = resolveMetadataPath(conf, tablePath, metadataLocation)
-    val meta = readMetadataJson(conf, metaPath)
+      metadataLocation: Option[String] = None): Seq[FileEntry] =
+    fileEntriesOf(conf, tablePath, resolveMetadata(conf, tablePath, metadataLocation), snapshotId)
+
+  /** [[fileEntries]] planned against already-resolved metadata. */
+  private def fileEntriesOf(conf: Configuration, tablePath: String, meta: JObj,
+      snapshotId: Option[Long]): Seq[FileEntry] = {
     val manifests = currentManifests(conf, tablePath, meta, snapshotId)
     def entriesOf(m: ManifestInfo): Seq[FileEntry] =
       readAvro(conf, new Path(m.path)).flatMap { entry =>
@@ -417,10 +455,8 @@ object IcebergLite {
     * resolution over the snapshot log's timestamp-ms (reference capability
     * "time travel via snapshots", README.md:197).
     */
-  def snapshotIdAsOf(conf: Configuration, tablePath: String, tsMillis: Long): Long = {
-    val metaPath = resolveMetadataPath(conf, tablePath)
-    snapshotIdAsOfMeta(readMetadataJson(conf, metaPath), tsMillis, tablePath)
-  }
+  def snapshotIdAsOf(conf: Configuration, tablePath: String, tsMillis: Long): Long =
+    snapshotIdAsOfMeta(resolveMetadata(conf, tablePath), tsMillis, tablePath)
 
   private def snapshotIdAsOfMeta(meta: JObj, tsMillis: Long, tablePath: String): Long = {
     val snaps = meta.get("snapshots") match {
@@ -466,11 +502,18 @@ object IcebergLite {
       metadataLocation: Option[String] = None,
       excludeDataFiles: Set[String] = Set.empty,
       ref: Option[String] = None): DataFrame = {
+    val conf = sessionHadoopConf(spark)
+    scanMeta(spark, conf, tablePath, resolveMetadata(conf, tablePath, metadataLocation),
+      snapshotId, asOfMillis, applyDeletes, excludeDataFiles, ref)
+  }
+
+  /** [[scan]] planned against already-resolved metadata. */
+  private def scanMeta(spark: SparkSession, conf: Configuration, tablePath: String,
+      meta: JObj, snapshotId: Option[Long], asOfMillis: Option[Long],
+      applyDeletes: Boolean, excludeDataFiles: Set[String],
+      ref: Option[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types._
-    val conf = sessionHadoopConf(spark)
-    val metaPath = resolveMetadataPath(conf, tablePath, metadataLocation)
-    val meta = readMetadataJson(conf, metaPath)
     // Named ref (tag/branch): resolve to its pinned snapshot; 'main' is
     // the current snapshot (a plain scan).
     val refSnapId: Option[Long] = ref.filterNot(_ == "main").map { name =>
@@ -481,7 +524,7 @@ object IcebergLite {
     }
     val snapId = snapshotId.orElse(refSnapId).orElse(asOfMillis.map(ts =>
       snapshotIdAsOfMeta(meta, ts, tablePath)))
-    val entries = fileEntries(conf, tablePath, snapId, metadataLocation)
+    val entries = fileEntriesOf(conf, tablePath, meta, snapId)
     // allData drives schema/partition-type derivation; dataEntries (the
     // possibly-excluded subset, used by incrementalScan) drives the file
     // index — an empty INCREMENT over a non-empty table is a valid empty
@@ -642,7 +685,7 @@ object IcebergLite {
             jLong(delSnapObj, "parent-snapshot-id") match {
               case None => Nil // first snapshot: nothing strictly before
               case Some(parent) =>
-                fileEntries(conf, tablePath, Some(parent), metadataLocation)
+                fileEntriesOf(conf, tablePath, meta, Some(parent))
                   .filter(x => x.manifestContent == 0 && x.fileContent == 0)
                   .map(x => normPath(x.path))
             }
@@ -693,7 +736,7 @@ object IcebergLite {
   def incrementalScan(spark: SparkSession, tablePath: String,
       fromSnapshotId: Long, toSnapshotId: Option[Long] = None): DataFrame = {
     val conf = sessionHadoopConf(spark)
-    val meta = readMetadataJson(conf, resolveMetadataPath(conf, tablePath))
+    val meta = resolveMetadata(conf, tablePath)
     val snaps = meta.get("snapshots") match {
       case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
       case _ => Vector.empty
@@ -722,10 +765,11 @@ object IcebergLite {
           s"${nonAppend.size} non-append snapshot(s) (replace/overwrite — e.g. " +
           "compaction): their files rewrite history, not extend it. Re-read " +
           "from the table instead, or start after the rewrite.")
-    val baseline = fileEntries(conf, tablePath, Some(fromSnapshotId))
+    val baseline = fileEntriesOf(conf, tablePath, meta, Some(fromSnapshotId))
       .filter(e => e.manifestContent == 0 && e.fileContent == 0)
       .map(_.path).toSet
-    scan(spark, tablePath, snapshotId = Some(toId), excludeDataFiles = baseline)
+    scanMeta(spark, conf, tablePath, meta, Some(toId), None, applyDeletes = false,
+      baseline, None)
   }
 
   private def inferPartitionType(values: Seq[String]): org.apache.spark.sql.types.DataType = {
@@ -762,9 +806,7 @@ object IcebergLite {
   def snapshotsRelation(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
     val conf = sessionHadoopConf(spark)
-    val metaPath = latestMetadataPath(conf, tablePath)
-      .getOrElse(throw ProbeError(s"No Iceberg metadata readable at $tablePath"))
-    val meta = readMetadataJson(conf, metaPath)
+    val meta = resolveMetadata(conf, tablePath)
     val current = jLong(meta, "current-snapshot-id")
     val snaps = meta.get("snapshots") match {
       case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
@@ -797,9 +839,7 @@ object IcebergLite {
   def refsRelation(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
     val conf = sessionHadoopConf(spark)
-    val metaPath = latestMetadataPath(conf, tablePath)
-      .getOrElse(throw ProbeError(s"No Iceberg metadata readable at $tablePath"))
-    val meta = readMetadataJson(conf, metaPath)
+    val meta = resolveMetadata(conf, tablePath)
     val current = jLong(meta, "current-snapshot-id").getOrElse(0L)
     (("main", current, "branch") +: refsOf(meta))
       .map { case (n, id, t) => (n, t, id, id == current) }
@@ -819,9 +859,7 @@ object IcebergLite {
   def historyRelation(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
     val conf = sessionHadoopConf(spark)
-    val metaPath = latestMetadataPath(conf, tablePath)
-      .getOrElse(throw ProbeError(s"No Iceberg metadata readable at $tablePath"))
-    val meta = readMetadataJson(conf, metaPath)
+    val meta = resolveMetadata(conf, tablePath)
     val snaps = meta.get("snapshots") match {
       case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
       case _ => Vector.empty
@@ -866,13 +904,11 @@ object IcebergLite {
   def filesRelation(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
     val conf = sessionHadoopConf(spark)
-    val metaPath = latestMetadataPath(conf, tablePath)
-      .getOrElse(throw ProbeError(s"No Iceberg metadata readable at $tablePath"))
-    val meta = readMetadataJson(conf, metaPath)
+    val meta = resolveMetadata(conf, tablePath)
     val idToName: Map[String, String] = currentSchemaFieldIds(meta)
       .map(_.map { case (id, name, _) => id.toString -> name }.toMap)
       .getOrElse(Map.empty)
-    fileEntries(conf, tablePath)
+    fileEntriesOf(conf, tablePath, meta, None)
       .filter(_.fileContent == 0)
       .map(e => (
         e.path,
@@ -904,12 +940,8 @@ object IcebergLite {
   }
 
   /** True when the current snapshot carries any delete manifest/file. */
-  def hasDeletes(conf: Configuration, tablePath: String): Boolean = {
-    val metaPath = latestMetadataPath(conf, tablePath)
-      .getOrElse(throw ProbeError(s"No Iceberg metadata readable at $tablePath"))
-    val meta = readMetadataJson(conf, metaPath)
-    currentManifests(conf, tablePath, meta).exists(_.content != 0)
-  }
+  def hasDeletes(conf: Configuration, tablePath: String): Boolean =
+    currentManifests(conf, tablePath, resolveMetadata(conf, tablePath)).exists(_.content != 0)
 
   final case class DeleteGuardError(message: String) extends RuntimeException(message)
 
@@ -921,16 +953,23 @@ object IcebergLite {
       "the deletes and rewrites the data files (start with " +
       "-Dgraft.gateway.maintenance=true to enable it) — then retry."
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Delete-guard (reference main.py:391-423): block queries over tables
-    * with row-level deletes; a probe *failure* degrades to a warning
-    * rather than blocking (main.py:421-423).
+    * with row-level deletes; a probe *failure* degrades to a logged
+    * warning rather than blocking (main.py:421-423). The warning names
+    * the path and the cause, never the connection's settings.
     */
   def assertNoDeletes(spark: SparkSession, tablePath: String): Unit =
     Try(hasDeletes(sessionHadoopConf(spark), tablePath)) match {
       case Success(true) =>
         throw DeleteGuardError(DeleteGuardMessage)
       case Success(false) => ()
-      case Failure(_) => () // degraded: cannot validate -> proceed with caution
+      case Failure(e) =>
+        val cause = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+          .fold(e.getClass.getSimpleName)(m => s"${e.getClass.getSimpleName}: $m")
+        log.warn(s"delete guard degraded for $tablePath: its metadata could not be " +
+          s"read ($cause); the query proceeds unchecked")
     }
 
   /** Connection-probe metadata (reference `_probe_iceberg_table`,
@@ -945,8 +984,9 @@ object IcebergLite {
     var jsonOk = false
     var manifestOk = false
 
-    val metaOpt = Try(latestMetadataPath(conf, tablePath)).toOption.flatten
-      .flatMap(p => Try(readMetadataJson(conf, p)).toOption)
+    // One resolution feeds both sub-probes; the manifest aggregate needs
+    // the JSON, so it can only succeed where the JSON probe did.
+    val metaOpt = Try(resolveMetadata(conf, tablePath)).toOption
     metaOpt.foreach { meta =>
       jsonOk = true
       info = info.copy(
@@ -956,14 +996,14 @@ object IcebergLite {
           java.time.Instant.ofEpochMilli(ms).toString))
     }
 
-    Try(fileEntries(conf, tablePath)) match {
-      case Success(entries) =>
+    metaOpt.map(meta => Try(fileEntriesOf(conf, tablePath, meta, None))) match {
+      case Some(Success(entries)) =>
         manifestOk = true
         info = info.copy(
           rows = Some(entries.filter(_.manifestContent == 0).map(_.recordCount).sum),
           files = Some(entries.length.toLong),
           hasDeletes = Some(entries.exists(_.manifestContent != 0)))
-      case Failure(_) => ()
+      case _ => ()
     }
 
     if (!jsonOk && !manifestOk)

@@ -942,8 +942,7 @@ object IcebergLiteWriter {
     require(refType == "tag" || refType == "branch",
       s"ref type must be 'tag' or 'branch', got '$refType'")
     val conf = spark.sessionState.newHadoopConf()
-    val metaPath = IcebergLite.resolveMetadataPath(conf, tableDir)
-    val meta = IcebergLite.readMetadataJson(conf, metaPath)
+    val meta = IcebergLite.resolveMetadata(conf, tableDir)
     val snaps = snapshotObjs(meta)
     require(snaps.exists(s => longOf(s, "snapshot-id").contains(snapshotId)),
       s"snapshot $snapshotId not found at $tableDir")
@@ -957,8 +956,7 @@ object IcebergLiteWriter {
   /** Drop a named ref; its snapshot becomes expirable again. */
   def dropRef(spark: SparkSession, tableDir: String, name: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val metaPath = IcebergLite.resolveMetadataPath(conf, tableDir)
-    val meta = IcebergLite.readMetadataJson(conf, metaPath)
+    val meta = IcebergLite.resolveMetadata(conf, tableDir)
     val refs = refEntries(meta)
     require(refs.exists(_._1 == name), s"ref '$name' not found at $tableDir")
     val currentId = longOf(meta, "current-snapshot-id")
@@ -1042,8 +1040,7 @@ object IcebergLiteWriter {
     */
   def rollback(spark: SparkSession, tableDir: String, toSnapshotId: Long): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val metaPath = IcebergLite.resolveMetadataPath(conf, tableDir)
-    val meta = IcebergLite.readMetadataJson(conf, metaPath)
+    val meta = IcebergLite.resolveMetadata(conf, tableDir)
     val snaps = snapshotObjs(meta)
     require(snaps.exists(s => longOf(s, "snapshot-id").contains(toSnapshotId)),
       s"snapshot $toSnapshotId not found at $tableDir")
@@ -1079,8 +1076,7 @@ object IcebergLiteWriter {
       keepLast: Int): ExpireResult = {
     require(keepLast >= 1, "keepLast must be >= 1")
     val conf = spark.sessionState.newHadoopConf()
-    val metaPath = IcebergLite.resolveMetadataPath(conf, tableDir)
-    val meta = IcebergLite.readMetadataJson(conf, metaPath)
+    val meta = IcebergLite.resolveMetadata(conf, tableDir)
     val snaps = snapshotObjs(meta)
     val currentId = longOf(meta, "current-snapshot-id")
       .getOrElse(throw IcebergLite.ProbeError("metadata has no current-snapshot-id"))
@@ -1157,8 +1153,7 @@ object IcebergLiteWriter {
       olderThanMs: Long): OrphanCleanupResult = {
     require(olderThanMs >= 0, "olderThanMs must be >= 0")
     val conf = spark.sessionState.newHadoopConf()
-    val metaPath = IcebergLite.resolveMetadataPath(conf, tableDir)
-    val meta = IcebergLite.readMetadataJson(conf, metaPath)
+    val meta = IcebergLite.resolveMetadata(conf, tableDir)
     val snapIds = snapshotObjs(meta).flatMap(longOf(_, "snapshot-id"))
     // Every commit carries prior manifests forward, so the same manifest
     // appears in many snapshots' lists — dedupe the PATHS before reading

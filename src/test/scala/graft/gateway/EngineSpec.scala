@@ -248,4 +248,36 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     // a[0:2]: DuckDB treats a 0 lower bound as "from the start".
     assert(s.rows == Seq(Seq(Seq("b", "c"), "bcd", Seq("c", "d"), Seq("a", "b"))))
   }
+
+  test("a user LIMIT above the hard cap still collects at most MaxRowLimit rows") {
+    val big = Engine.executeQuery(spark,
+      "SELECT id FROM range(100000) ORDER BY id LIMIT 100000000", cfg)
+    assert(big.rows.length == Engine.MaxRowLimit)
+    assert(big.truncated)
+    assert(big.rows.last == Seq(Engine.MaxRowLimit - 1L))
+    // At or below the cap a user LIMIT keeps its meaning, past rowLimit too.
+    val atCap = Engine.executeQuery(spark,
+      s"SELECT id FROM range(100000) LIMIT ${Engine.MaxRowLimit}", cfg)
+    assert(atCap.rows.length == Engine.MaxRowLimit)
+    val small = Engine.executeQuery(spark, "SELECT id FROM range(5) LIMIT 100000000", cfg)
+    assert(small.rows.length == 5 && !small.truncated)
+  }
+
+  test("the next query sees an append and a compaction at once") {
+    val dir = tmpDir("engine_fresh") + "/warehouse/region"
+    val region = Tables.t(spark, sf0001, "region")
+    IcebergLiteWriter.write(spark, region.repartition(3), dir)
+    def count = Engine.executeQuery(spark,
+      s"SELECT COUNT(*) AS n FROM iceberg_scan('$dir')", cfg).rows.head.head
+    def files = Engine.executeQuery(spark,
+      s"SELECT COUNT(*) AS n FROM iceberg_files('$dir')", cfg).rows.head.head
+    assert(count == 5L)
+    val before = files.asInstanceOf[Long]
+    IcebergLiteWriter.append(spark, region.limit(2), dir)
+    assert(count == 7L)
+    assert(files == before + 1)
+    IcebergLiteWriter.compact(spark, dir)
+    assert(count == 7L)
+    assert(files == 1L)
+  }
 }

@@ -311,4 +311,15 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
       "SELECT a,\n     b\nFROM t\nWHERE x = 1\n  AND y = 2\nORDER BY a\nLIMIT 5")
     assert(post("/api/format", "{}").statusCode() == 400)
   }
+
+  test("stop() ends the request threads, so the JVM can exit") {
+    val own = new HttpApi(spark, 0, None)
+    own.start()
+    val r = client.send(
+      HttpRequest.newBuilder(URI.create(own.address + "/")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 200)
+    own.stop()
+    assert(own.executor.isTerminated)
+  }
 }
