@@ -26,8 +26,9 @@ import JValue._
   *   GET  /api/demo/queries    sample queries over the demo table
   *
   * Errors: HTTP 400 with {"detail": ...} for validation/guard/execution
-  * errors, 500 {"detail":"Internal server error"} otherwise (logged with
-  * its stack trace); CORS `*`.
+  * errors, 413 for a body over [[HttpApi.MaxBodyBytes]], 500
+  * {"detail":"Internal server error"} otherwise (logged with its stack
+  * trace); CORS `*`.
   */
 final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String]) {
 
@@ -69,13 +70,21 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
         case None => (400, JObj("detail" -> JStr("Connection test failed")))
       }
     })
-    server.createContext("/api/query", handlerWithBody { body =>
-      val obj = body.getOrElse(throw Engine.EngineError(400, "Request body required"))
-      val sql = obj.str("sql").getOrElse(throw Engine.EngineError(400, "sql is required"))
-      val conn = connectionFrom(body)
-      val rowLimit = obj.int("rowLimit").getOrElse(Engine.DefaultRowLimit)
-      val result = Engine.executeQuery(spark, sql, conn, rowLimit)
-      (200, queryResponseJson(result))
+    // One INFO line per request, for "why was this request slow": the
+    // status, the time, and the execution mode the engine chose. Never
+    // the SQL or the connection, which may carry credentials.
+    server.createContext("/api/query", (ex: HttpExchange) => {
+      val t0 = System.nanoTime()
+      var mode: Option[Engine.ExecutionMode] = None
+      val status = handleBody(ex) { body =>
+        val result = runQuery(body, m => mode = Some(m))
+        (200, queryResponseJson(result))
+      }
+      if (log.isInfoEnabled) log.info(
+        s"query status=$status ms=${(System.nanoTime() - t0) / 1000000} " +
+          s"inputRows=${mode.flatMap(_.inputRows.toOption).getOrElse("-")} " +
+          s"mode=${mode.fold("-")(_.name)} " +
+          s"unknownLeaf=${mode.flatMap(_.inputRows.left.toOption).getOrElse("-")}")
     })
     // CSV export (A14): same request as /api/query, result as a text/csv
     // attachment — the server-side analog of the reference UI's
@@ -84,19 +93,7 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
       Try {
         ex.getRequestMethod match {
           case "OPTIONS" => Left((204, JObj()))
-          case "POST" =>
-            val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            val body =
-              if (raw.trim.isEmpty) None
-              else Json.parse(raw) match {
-                case o: JObj => Some(o)
-                case _ => throw Engine.EngineError(400, "Request body must be a JSON object")
-              }
-            val obj = body.getOrElse(throw Engine.EngineError(400, "Request body required"))
-            val sql = obj.str("sql").getOrElse(throw Engine.EngineError(400, "sql is required"))
-            val conn = connectionFrom(body)
-            val rowLimit = obj.int("rowLimit").getOrElse(Engine.DefaultRowLimit)
-            Right(ResultExport.toCsv(Engine.executeQuery(spark, sql, conn, rowLimit)))
+          case "POST" => Right(ResultExport.toCsv(runQuery(readBody(ex))))
           case _ => Left((405, JObj("detail" -> JStr("Method Not Allowed"))))
         }
       } match {
@@ -183,6 +180,15 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
 
   // --- plumbing -----------------------------------------------------------
 
+  /** The `{sql, connection, rowLimit}` request both query routes take. */
+  private def runQuery(body: Option[JObj],
+      onMode: Engine.ExecutionMode => Unit = _ => ()): Engine.QueryResult = {
+    val obj = body.getOrElse(throw Engine.EngineError(400, "Request body required"))
+    val sql = obj.str("sql").getOrElse(throw Engine.EngineError(400, "sql is required"))
+    val rowLimit = obj.int("rowLimit").getOrElse(Engine.DefaultRowLimit)
+    Engine.executeQuery(spark, sql, connectionFrom(body), rowLimit, onMode)
+  }
+
   private def connectionFrom(body: Option[JObj]): ConnectionConfig = {
     val conn = body.flatMap(_.obj("connection"))
       .getOrElse(throw Engine.EngineError(400, "connection is required"))
@@ -202,26 +208,35 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
 
   private def handlerWithBody(
       route: Option[JObj] => (Int, JValue)): com.sun.net.httpserver.HttpHandler =
-    (ex: HttpExchange) => {
-      val resp = Try {
-        ex.getRequestMethod match {
-          case "OPTIONS" => (204, JObj())
-          case "POST" =>
-            val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            val body =
-              if (raw.trim.isEmpty) None
-              else Json.parse(raw) match {
-                case o: JObj => Some(o)
-                case _ => throw Engine.EngineError(400, "Request body must be a JSON object")
-              }
-            route(body)
-          case _ => (405, JObj("detail" -> JStr("Method Not Allowed")))
-        }
-      }
-      respond(ex, resp)
-    }
+    (ex: HttpExchange) => handleBody(ex)(route)
 
-  private def respond(ex: HttpExchange, result: Try[(Int, JValue)]): Unit = {
+  /** Serves one JSON-body POST route; returns the status sent. */
+  private def handleBody(ex: HttpExchange)(route: Option[JObj] => (Int, JValue)): Int =
+    respond(ex, Try {
+      ex.getRequestMethod match {
+        case "OPTIONS" => (204, JObj())
+        case "POST" => route(readBody(ex))
+        case _ => (405, JObj("detail" -> JStr("Method Not Allowed")))
+      }
+    })
+
+  /** The request's JSON object body (None when blank), read only up to
+    * [[HttpApi.MaxBodyBytes]]: a larger body is refused with 413.
+    */
+  private def readBody(ex: HttpExchange): Option[JObj] = {
+    val bytes = ex.getRequestBody.readNBytes(HttpApi.MaxBodyBytes + 1)
+    if (bytes.length > HttpApi.MaxBodyBytes)
+      throw Engine.EngineError(413, s"Request body exceeds ${HttpApi.MaxBodyBytes} bytes")
+    val raw = new String(bytes, StandardCharsets.UTF_8)
+    if (raw.trim.isEmpty) None
+    else Json.parse(raw) match {
+      case o: JObj => Some(o)
+      case _ => throw Engine.EngineError(400, "Request body must be a JSON object")
+    }
+  }
+
+  /** Sends the JSON response for `result`; returns its status. */
+  private def respond(ex: HttpExchange, result: Try[(Int, JValue)]): Int = {
     val (status, payload) = result match {
       case Success(r) => r
       case Failure(e: Engine.EngineError) => (e.status, JObj("detail" -> JStr(e.detail)))
@@ -244,6 +259,7 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
       os.write(bytes)
       os.close()
     }
+    status
   }
 
   private def respondRaw(ex: HttpExchange, status: Int, bytes: Array[Byte],
@@ -310,6 +326,12 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
     case r: Row => JArr(r.toSeq.toVector.map(valueJson))
     case other => JStr(String.valueOf(other))
   }
+}
+
+object HttpApi {
+
+  /** Largest request body any route reads; SQL text is far smaller. */
+  val MaxBodyBytes: Int = 1 << 20
 }
 
 /** Server entrypoint: seeds a demo Iceberg-lite table from the sf0.001

@@ -54,6 +54,9 @@ final class IcebergLiteFileIndex(
 
   override lazy val sizeInBytes: Long = files.map(_.size).sum
 
+  /** Rows in the indexed files, exact from the manifests' record counts. */
+  def recordCount: Long = files.map(_.recordCount).sum
+
   private val fieldTypes: Map[String, DataType] =
     partitionSchema.fields.map(f => f.name -> f.dataType).toMap
 

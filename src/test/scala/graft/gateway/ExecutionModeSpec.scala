@@ -1,0 +1,171 @@
+package graft.gateway
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.{QueryExecution, WholeStageCodegenExec}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{SparkFixture, Tables}
+import graft.sources.IcebergLiteWriter
+
+/** The per-request execution mode: statements over few exact input rows
+  * run interpreted (nothing compiles), larger or unsized ones compiled,
+  * and both modes return the same rows.
+  */
+class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
+
+  private val cfg = ConnectionConfig(
+    storageType = "minio", endpoint = "http://localhost:9000",
+    accessKey = "k", secretKey = "s")
+
+  private lazy val tables: Map[String, String] = {
+    val root = tmpDir("exec_mode")
+    Seq("orders", "nation", "region").map { t =>
+      val dir = s"$root/warehouse/$t"
+      IcebergLiteWriter.write(spark, Tables.t(spark, sf0001, t), dir)
+      t -> dir
+    }.toMap
+  }
+
+  private def run(sql: String, interpretBelowRows: Long = Engine.InterpretBelowRows)
+      : (Engine.QueryResult, Engine.ExecutionMode) = {
+    var mode: Option[Engine.ExecutionMode] = None
+    val r = Engine.executeWith(spark, sql, cfg, Engine.MaxRowLimit, m => mode = Some(m),
+      interpretBelowRows)
+    (r, mode.get)
+  }
+
+  /** Executed plans of the `collect`s run on the session the next request
+    * with `cfg` borrows (the newest idle one for its settings).
+    */
+  private def withPlans[A](body: ConcurrentLinkedQueue[QueryExecution] => A): A = {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val session = SessionPool.withSession(spark, Engine.storageSettings(cfg)) { s =>
+      s.listenerManager.register(listener)
+      s
+    }
+    try body(seen)
+    finally session.listenerManager.unregister(listener)
+  }
+
+  /** Whether the next executed plan `seen` receives has whole-stage codegen;
+    * listener events arrive asynchronously.
+    */
+  private def nextCompiled(seen: ConcurrentLinkedQueue[QueryExecution]): Boolean = {
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    val qe = seen.poll()
+    assert(qe != null, "no collect reached the listener")
+    Engine.planNodes(qe.executedPlan).exists(_.isInstanceOf[WholeStageCodegenExec])
+  }
+
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def lookup(key: Long) =
+    s"SELECT o_orderkey, o_custkey FROM iceberg_scan('${tables("orders")}') WHERE o_orderkey = $key"
+
+  test("a small point lookup with a new key compiles nothing and has no whole-stage codegen") {
+    val orders = Tables.t(spark, sf0001, "orders").orderBy("o_orderkey")
+      .select("o_orderkey", "o_custkey").collect()
+    run(lookup(orders(0).getLong(0)))
+    withPlans { seen =>
+      val before = compiles
+      val (r, mode) = run(lookup(orders(7).getLong(0)))
+      assert(compiles == before)
+      assert(r.rows == Seq(orders(7).toSeq))
+      assert(mode == Engine.ExecutionMode(Right(orders.length.toLong), interpreted = true))
+      assert(!nextCompiled(seen))
+    }
+  }
+
+  test("large and unsized inputs are compiled") {
+    withPlans { seen =>
+      val (big, bigMode) = run("SELECT sum(id) AS s FROM range(200000)")
+      assert(big.rows == Seq(Seq(199999L * 200000L / 2)))
+      assert(bigMode == Engine.ExecutionMode(Right(200000L), interpreted = false))
+      assert(nextCompiled(seen))
+      val (_, flatMode) = run(s"SELECT COUNT(*) AS n FROM parquet.`$sf0001/region.parquet`")
+      assert(flatMode == Engine.ExecutionMode(Left("InMemoryFileIndex"), interpreted = false))
+      assert(nextCompiled(seen))
+    }
+  }
+
+  test("input rows count subquery plans, and a CTE once per reference") {
+    val (_, sub) = run(
+      "SELECT COUNT(*) AS n FROM range(10) WHERE id IN (SELECT id FROM range(200000))")
+    assert(sub == Engine.ExecutionMode(Right(200010L), interpreted = false))
+    val (r, cte) = run(
+      "WITH t AS (SELECT id FROM range(60000)) SELECT COUNT(*) AS n FROM t a JOIN t b ON a.id = b.id")
+    assert(r.rows == Seq(Seq(60000L)))
+    assert(cte == Engine.ExecutionMode(Right(120000L), interpreted = false))
+    val (_, one) = run("SELECT 1 AS one")
+    assert(one == Engine.ExecutionMode(Right(1L), interpreted = true))
+  }
+
+  test("a pooled session that just ran interpreted runs a large statement compiled") {
+    withPlans { seen =>
+      val (_, small) = run(lookup(1L))
+      assert(small.interpreted)
+      assert(!nextCompiled(seen))
+      val (_, large) = run("SELECT id % 7 AS k, COUNT(*) AS n FROM range(300000) GROUP BY 1")
+      assert(!large.interpreted)
+      assert(nextCompiled(seen))
+      val (_, again) = run(lookup(2L))
+      assert(again.interpreted)
+      assert(!nextCompiled(seen))
+    }
+  }
+
+  test("the gateway fixture statements return the same rows in both modes as the root session") {
+    assert(spark.conf.get(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key) == "true")
+    val region = s"parquet.`$sf0001/region.parquet`"
+    val nation = s"parquet.`$sf0001/nation.parquet`"
+    val orders = s"parquet.`$sf0001/orders.parquet`"
+    // (gateway statement over the Iceberg-lite copies, the same statement
+    // in plain Spark SQL over the source parquet)
+    val cases = Seq(
+      (s"SELECT r_regionkey, r_name FROM iceberg_scan('${tables("region")}') ORDER BY r_regionkey",
+        s"SELECT r_regionkey, r_name FROM $region ORDER BY r_regionkey"),
+      (s"WITH t AS (SELECT r_regionkey, r_name FROM iceberg_scan('${tables("region")}')) " +
+        "SELECT * FROM t ORDER BY r_regionkey LIMIT 2",
+        s"WITH t AS (SELECT r_regionkey, r_name FROM $region) SELECT * FROM t ORDER BY r_regionkey LIMIT 2"),
+      (s"SELECT COUNT(*) AS n FROM iceberg_scan('${tables("orders")}')",
+        s"SELECT COUNT(*) AS n FROM $orders"),
+      (s"SELECT r.r_name, COUNT(*) AS n FROM iceberg_scan('${tables("nation")}') n " +
+        s"JOIN iceberg_scan('${tables("region")}') r ON n.n_regionkey = r.r_regionkey " +
+        "GROUP BY r.r_name ORDER BY r.r_name",
+        s"SELECT r.r_name, COUNT(*) AS n FROM $nation n JOIN $region r " +
+        "ON n.n_regionkey = r.r_regionkey GROUP BY r.r_name ORDER BY r.r_name"),
+      (s"SELECT o_orderstatus, COUNT(*) AS n, MIN(o_orderdate) AS lo, MAX(o_custkey) AS hi " +
+        s"FROM iceberg_scan('${tables("orders")}') GROUP BY o_orderstatus ORDER BY o_orderstatus",
+        s"SELECT o_orderstatus, COUNT(*) AS n, MIN(o_orderdate) AS lo, MAX(o_custkey) AS hi " +
+        s"FROM $orders GROUP BY o_orderstatus ORDER BY o_orderstatus"),
+      (s"SELECT o_custkey, o_orderkey, ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS rn " +
+        s"FROM iceberg_scan('${tables("orders")}') ORDER BY o_orderkey LIMIT 50",
+        s"SELECT o_custkey, o_orderkey, ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS rn " +
+        s"FROM $orders ORDER BY o_orderkey LIMIT 50"),
+      ("SELECT len('abcde') AS ls, len(string_split('a,b,c', ',')) AS ll",
+        "SELECT length('abcde') AS ls, size(split('a,b,c', ',')) AS ll"),
+      ("SELECT id FROM range(5) LIMIT 100000000", "SELECT id FROM range(5)"),
+      ("SELECT id % 7 AS k, COUNT(*) AS n, SUM(id) AS s FROM range(50000) GROUP BY 1 ORDER BY 1",
+        "SELECT id % 7 AS k, COUNT(*) AS n, SUM(id) AS s FROM range(50000) GROUP BY 1 ORDER BY 1"))
+    cases.foreach { case (gateway, plain) =>
+      val expected = spark.sql(plain).collect().toSeq.map(_.toSeq)
+      val (interpreted, im) = run(gateway, interpretBelowRows = Long.MaxValue)
+      val (compiled, cm) = run(gateway, interpretBelowRows = 0L)
+      assert(im.interpreted && !cm.interpreted, gateway)
+      assert(interpreted.rows == expected, gateway)
+      assert(compiled.rows == expected, gateway)
+    }
+    // No request's mode reaches the root session.
+    assert(spark.conf.get(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key) == "true")
+  }
+}

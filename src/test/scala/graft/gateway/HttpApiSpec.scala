@@ -312,6 +312,60 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     assert(post("/api/format", "{}").statusCode() == 400)
   }
 
+  test("a body over MaxBodyBytes gets 413 on both query routes; one at the cap is read") {
+    def padded(json: String, size: Int) = json + " " * (size - json.length)
+    val query = s"""{"sql":"SELECT 1 AS one","connection":$connJson}"""
+    Seq("/api/query", "/api/query/export").foreach { route =>
+      val r = post(route, padded(query, HttpApi.MaxBodyBytes + 1))
+      assert(r.statusCode() == 413, route)
+      assert(obj(r).str("detail").exists(_.contains(HttpApi.MaxBodyBytes.toString)), route)
+    }
+    val atCap = post("/api/query", padded(query, HttpApi.MaxBodyBytes))
+    assert(atCap.statusCode() == 200)
+    assert(obj(atCap).get("rows").contains(JArr(Vector(JArr(Vector(JValue.num(1L)))))))
+  }
+
+  test("each /api/query request logs one INFO line: status, time, input rows, mode; no credentials") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("query-lines", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(classOf[HttpApi]).asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.INFO)
+    val secretConn = connJson.replace("\"s\"", "\"s3cr3t-never-logged\"")
+    def logged(sql: String): String = {
+      lines.clear()
+      post("/api/query", s"""{"sql":"$sql","connection":$secretConn}""")
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while (lines.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      Thread.sleep(100)
+      assert(lines.size == 1, lines)
+      lines.peek()
+    }
+    try {
+      val one = logged("SELECT 1 AS one")
+      assert(one.matches(
+        "query status=200 ms=\\d+ inputRows=1 mode=interpreted unknownLeaf=-"), one)
+      val flat = logged(s"SELECT COUNT(*) AS n FROM parquet.`$sf0001/region.parquet`")
+      assert(flat.matches(
+        "query status=200 ms=\\d+ inputRows=- mode=compiled unknownLeaf=InMemoryFileIndex"), flat)
+      val refused = logged("DROP TABLE x")
+      assert(refused.matches("query status=400 ms=\\d+ inputRows=- mode=- unknownLeaf=-"), refused)
+      assert(!Seq(one, flat, refused).exists(_.contains("s3cr3t")))
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
+
   test("stop() ends the request threads, so the JVM can exit") {
     val own = new HttpApi(spark, 0, None)
     own.start()
