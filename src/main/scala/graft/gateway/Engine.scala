@@ -28,7 +28,8 @@ import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, Tabl
   *     hash), so two credential sets never share one;
   *   - before it goes back, the temp views the request's binders created
   *     are dropped through the session catalog (no shared cache entry is
-  *     touched); a session whose views cannot be dropped is discarded;
+  *     touched) and its execution-mode confs are restored (below); a
+  *     session that cannot be restored is discarded;
   *   - at most [[RequestThreads]] sessions wait idle.
   * Still per request: config validation, the delete guard, the latest-
   * metadata listing of every scanned table under the request's own
@@ -46,14 +47,30 @@ import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, Tabl
   * exact rows of every leaf of the plan and of its subqueries (an
   * Iceberg-lite index's manifest record counts, a local relation's rows,
   * one for `SELECT` without `FROM`, a range's length). Below
-  * [[InterpretBelowRows]] the request runs interpreted: no whole-stage
-  * codegen and the interpreted expression factories, so nothing
-  * compiles; at or above it, or when any leaf's size is unknown (a plain
-  * parquet path, a flat file), it runs compiled. Both confs are set on
-  * the borrowed session on every request, so no mode carries over from
-  * the session's previous request; task threads read them from the
-  * request's own job properties, so concurrent requests in different
-  * modes do not interfere.
+  * [[InterpretBelowRows]] the request runs as a small statement
+  * ([[SmallStatementConfs]]):
+  *   - interpreted: no whole-stage codegen and the interpreted expression
+  *     factories, so nothing compiles;
+  *   - without adaptive query execution, on one shuffle partition. AQE
+  *     buys nothing on so few rows and costs per request: its stage and
+  *     exchange pools start a thread per submission up to their caps
+  *     (each lives 60 s idle), and its plan updates add metrics and plan
+  *     copies to the SQL status store. One partition is what AQE would
+  *     coalesce a small shuffle to anyway, and a one-partition range
+  *     partitioner skips its sampling job.
+  * At or above the threshold, or when any leaf's size is unknown (a plain
+  * parquet path, a flat file), it runs compiled and adaptive, on the
+  * shuffle-partition count the pooled session was created with
+  * ([[compiledConfs]]).
+  *
+  * Restore rule: a pooled session is lent in compiled mode — set when it
+  * is created, and set again before it goes back to the pool, whatever
+  * the request did — so every statement is analyzed under the same
+  * confs (a `REPARTITION` hint reads the shuffle-partition count during
+  * analysis) and no mode carries over to the next request. A small
+  * statement switches only after its analysis. Task threads read the
+  * confs from the request's own job properties, so concurrent requests
+  * in different modes do not interfere.
   */
 object Engine {
 
@@ -78,6 +95,27 @@ object Engine {
     * even when it compiles.
     */
   val InterpretBelowRows = 100000L
+
+  /** The confs a statement below [[InterpretBelowRows]] runs under. The
+    * codegen pair goes together: whole-stage codegen alone off would still
+    * compile every expression through the same small cache.
+    */
+  private val SmallStatementConfs: Map[String, String] = Map(
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+    SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.NO_CODEGEN.toString,
+    SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false",
+    SQLConf.SHUFFLE_PARTITIONS.key -> "1")
+
+  /** The same confs as [[SmallStatementConfs]] for a compiled statement on
+    * a session created with `shufflePartitions`. Set explicitly, never
+    * unset: an unset shuffle-partition count on a child session falls
+    * back to Spark's default, not to the root session's value.
+    */
+  private[gateway] def compiledConfs(shufflePartitions: String): Map[String, String] = Map(
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "true",
+    SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.FALLBACK.toString,
+    SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "true",
+    SQLConf.SHUFFLE_PARTITIONS.key -> shufflePartitions)
 
   /** How one statement runs. `inputRows` is the exact sum over its leaves,
     * or the name of the first leaf whose row count is unknown.
@@ -164,7 +202,8 @@ object Engine {
       catch { case e: Exception => throw EngineError(400, s"Query execution failed: ${firstLine(e)}") }
     val input = inputRows(df.queryExecution.analyzed)
     val mode = ExecutionMode(input, input.exists(_ < interpretBelowRows))
-    setExecutionMode(spark, mode.interpreted)
+    // The session arrives in compiled mode; SessionPool restores it.
+    if (mode.interpreted) SmallStatementConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     onMode(mode)
     val (limited, injected) = LimitInjector(df, rowLimit)
     // A user-written LIMIT is never overwritten, but collection stays
@@ -216,16 +255,6 @@ object Engine {
     case _: OneRowRelation => Right(1L)
     case r: Range => Right(r.numElements.min(Long.MaxValue).toLong)
     case other => Left(other.nodeName)
-  }
-
-  /** Both confs, in both directions: whole-stage codegen alone off would
-    * still compile every expression through the same small cache.
-    */
-  private def setExecutionMode(spark: SparkSession, interpreted: Boolean): Unit = {
-    spark.conf.set(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key, !interpreted)
-    spark.conf.set(SQLConf.CODEGEN_FACTORY_MODE.key,
-      (if (interpreted) CodegenObjectFactoryMode.NO_CODEGEN
-       else CodegenObjectFactoryMode.FALLBACK).toString)
   }
 
   /** Result of one maintenance compaction request: the delete-applying
@@ -392,53 +421,64 @@ private[gateway] object SessionPool {
     override def hashCode: Int = System.identityHashCode(root) * 31 + settings.hashCode
   }
 
+  /** An idle session, with the mode confs it is restored to. */
+  private final class Pooled(val key: Key, val session: SparkSession,
+      val compiled: Map[String, String])
+
   // Oldest first; guarded by itself.
-  private val idle = new java.util.ArrayDeque[(Key, SparkSession)]()
+  private val idle = new java.util.ArrayDeque[Pooled]()
 
   /** Runs `f` on a session no other request holds meanwhile. */
   def withSession[T](root: SparkSession, settings: Map[String, String])(
       f: SparkSession => T): T = {
     val key = new Key(root, settings)
-    val session = take(key).getOrElse(create(root, settings))
-    try f(session)
-    finally if (dropTempViews(session)) give(key, session)
+    val pooled = take(key).getOrElse(create(key))
+    try f(pooled.session)
+    finally if (restore(pooled)) give(pooled)
   }
 
   def idleCount: Int = idle.synchronized(idle.size)
 
-  private def take(key: Key): Option[SparkSession] = idle.synchronized {
-    idle.removeIf(_._1.root.sparkContext.isStopped)
+  private def take(key: Key): Option[Pooled] = idle.synchronized {
+    idle.removeIf(_.key.root.sparkContext.isStopped)
     val it = idle.descendingIterator()
-    var found: Option[SparkSession] = None
+    var found: Option[Pooled] = None
     while (found.isEmpty && it.hasNext) {
-      val (k, s) = it.next()
-      if (k == key) { it.remove(); found = Some(s) }
+      val p = it.next()
+      if (p.key == key) { it.remove(); found = Some(p) }
     }
     found
   }
 
-  private def give(key: Key, session: SparkSession): Unit = idle.synchronized {
-    idle.addLast(key -> session)
+  private def give(pooled: Pooled): Unit = idle.synchronized {
+    idle.addLast(pooled)
     while (idle.size > Engine.RequestThreads) idle.removeFirst()
   }
 
-  private def create(root: SparkSession, settings: Map[String, String]): SparkSession = {
-    val s = root.newSession()
+  private def create(key: Key): Pooled = {
+    val s = key.root.newSession()
     // Graft's custom expressions (vec_dot, winnow_hashes, ...) plus the
     // DuckDB-compat type-dispatchers (len, duck_slice) resolve per
     // session; registering here means the gateway works on ANY root
     // session, not only one built with GraftExtensions.
     graft.functions.GraftFunctions.register(s)
-    settings.foreach { case (k, v) => s.conf.set(k, v) }
-    s
+    key.settings.foreach { case (k, v) => s.conf.set(k, v) }
+    val compiled = Engine.compiledConfs(s.conf.get(SQLConf.SHUFFLE_PARTITIONS.key))
+    compiled.foreach { case (k, v) => s.conf.set(k, v) }
+    new Pooled(key, s, compiled)
   }
 
-  /** Drops every local temp view: SqlGuard admits no CREATE VIEW, so each
-    * was made by one of the request's binders. The session catalog's drop
-    * leaves the shared cache manager alone, unlike `spark.catalog`'s.
+  /** Readies a session for its next request; false if that failed, so
+    * the session is discarded:
+    *   - drops every local temp view: SqlGuard admits no CREATE VIEW, so
+    *     each was made by one of the request's binders. The session
+    *     catalog's drop leaves the shared cache manager alone, unlike
+    *     `spark.catalog`'s;
+    *   - sets its compiled-mode confs again, whatever mode it ran in.
     */
-  private def dropTempViews(s: SparkSession): Boolean = Try {
-    val catalog = s.sessionState.catalog
+  private def restore(p: Pooled): Boolean = Try {
+    val catalog = p.session.sessionState.catalog
     catalog.listLocalTempViews("*").foreach(v => catalog.dropTempView(v.table))
+    p.compiled.foreach { case (k, v) => p.session.conf.set(k, v) }
   }.isSuccess
 }

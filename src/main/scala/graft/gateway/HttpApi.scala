@@ -2,10 +2,11 @@ package graft.gateway
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.UUID
 
 import scala.util.{Failure, Success, Try}
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{Row, SparkSession}
 
 import graft.sources.TableInfo
@@ -28,11 +29,12 @@ import JValue._
   * Errors: HTTP 400 with {"detail": ...} for validation/guard/execution
   * errors, 413 for a body over [[HttpApi.MaxBodyBytes]], 500
   * {"detail":"Internal server error"} otherwise (logged with its stack
-  * trace); CORS `*`.
+  * trace); CORS `*`. Both query routes answer with an `X-Request-Id`
+  * header, the id their log line carries.
   */
 final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String]) {
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = HttpApi.createServer(new InetSocketAddress(port))
   // Non-daemon request threads: kept so stop() can shut them down.
   private[gateway] val executor =
     java.util.concurrent.Executors.newFixedThreadPool(Engine.RequestThreads)
@@ -70,35 +72,24 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
         case None => (400, JObj("detail" -> JStr("Connection test failed")))
       }
     })
-    // One INFO line per request, for "why was this request slow": the
-    // status, the time, and the execution mode the engine chose. Never
-    // the SQL or the connection, which may carry credentials.
-    server.createContext("/api/query", (ex: HttpExchange) => {
-      val t0 = System.nanoTime()
-      var mode: Option[Engine.ExecutionMode] = None
-      val status = handleBody(ex) { body =>
-        val result = runQuery(body, m => mode = Some(m))
-        (200, queryResponseJson(result))
-      }
-      if (log.isInfoEnabled) log.info(
-        s"query status=$status ms=${(System.nanoTime() - t0) / 1000000} " +
-          s"inputRows=${mode.flatMap(_.inputRows.toOption).getOrElse("-")} " +
-          s"mode=${mode.fold("-")(_.name)} " +
-          s"unknownLeaf=${mode.flatMap(_.inputRows.left.toOption).getOrElse("-")}")
+    server.createContext("/api/query", logged { (ex, onMode) =>
+      handleBody(ex)(body => (200, queryResponseJson(runQuery(body, onMode))))
     })
     // CSV export (A14): same request as /api/query, result as a text/csv
     // attachment — the server-side analog of the reference UI's
     // exportResults download (frontend/js/app.js:451-479).
-    server.createContext("/api/query/export", (ex: HttpExchange) => {
+    server.createContext("/api/query/export", logged { (ex, onMode) =>
       Try {
         ex.getRequestMethod match {
           case "OPTIONS" => Left((204, JObj()))
-          case "POST" => Right(ResultExport.toCsv(runQuery(readBody(ex))))
+          case "POST" => Right(ResultExport.toCsv(runQuery(readBody(ex), onMode)))
           case _ => Left((405, JObj("detail" -> JStr("Method Not Allowed"))))
         }
       } match {
-        case Success(Right(csv)) => respondRaw(ex, 200, csv.getBytes(StandardCharsets.UTF_8),
-          "text/csv", Some(s"attachment; filename=graft-results-${System.currentTimeMillis()}.csv"))
+        case Success(Right(csv)) =>
+          respondRaw(ex, 200, csv.getBytes(StandardCharsets.UTF_8), "text/csv",
+            Some(s"attachment; filename=graft-results-${System.currentTimeMillis()}.csv"))
+          200
         case Success(Left(r)) => respond(ex, Success(r))
         case Failure(e) => respond(ex, Failure(e))
       }
@@ -195,8 +186,29 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
     ConnectionConfig.fromJson(conn)
   }
 
+  /** A query route that answers with an `X-Request-Id` header and logs one
+    * INFO line per request, for "why was this request slow": that id, the
+    * status, the time, and the execution mode the engine chose. Never the
+    * SQL or the connection, which may carry credentials. `serve` returns
+    * the status it sent.
+    */
+  private def logged(
+      serve: (HttpExchange, Engine.ExecutionMode => Unit) => Int): HttpHandler =
+    (ex: HttpExchange) => {
+      val t0 = System.nanoTime()
+      val id = UUID.randomUUID().toString
+      ex.getResponseHeaders.set("X-Request-Id", id)
+      var mode: Option[Engine.ExecutionMode] = None
+      val status = serve(ex, m => mode = Some(m))
+      if (log.isInfoEnabled) log.info(
+        s"query id=$id status=$status ms=${(System.nanoTime() - t0) / 1000000} " +
+          s"inputRows=${mode.flatMap(_.inputRows.toOption).getOrElse("-")} " +
+          s"mode=${mode.fold("-")(_.name)} " +
+          s"unknownLeaf=${mode.flatMap(_.inputRows.left.toOption).getOrElse("-")}")
+    }
+
   private def handler(
-      route: PartialFunction[(String, String), (Int, JValue)]): com.sun.net.httpserver.HttpHandler =
+      route: PartialFunction[(String, String), (Int, JValue)]): HttpHandler =
     (ex: HttpExchange) => {
       val key = (ex.getRequestMethod, ex.getRequestURI.getPath)
       val resp = Try {
@@ -207,7 +219,7 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
     }
 
   private def handlerWithBody(
-      route: Option[JObj] => (Int, JValue)): com.sun.net.httpserver.HttpHandler =
+      route: Option[JObj] => (Int, JValue)): HttpHandler =
     (ex: HttpExchange) => handleBody(ex)(route)
 
   /** Serves one JSON-body POST route; returns the status sent. */
@@ -332,6 +344,21 @@ object HttpApi {
 
   /** Largest request body any route reads; SQL text is far smaller. */
   val MaxBodyBytes: Int = 1 << 20
+
+  /** A JDK `HttpServer` whose connections have `TCP_NODELAY` set. The JDK
+    * server writes a response's headers and body separately; under
+    * Nagle's algorithm the body then waits for the client to ACK the
+    * headers, which the client delays by about 40 ms, so every response
+    * would pay that wait. The JDK reads `sun.net.httpserver.nodelay` once
+    * per JVM, when the first server is created, and has no per-server
+    * switch: every server in the process must be made here, before any
+    * other, for the setting to hold. A value the process set itself is
+    * left as it is.
+    */
+  def createServer(address: InetSocketAddress): HttpServer = {
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(address, 0)
+  }
 }
 
 /** Server entrypoint: seeds a demo Iceberg-lite table from the sf0.001

@@ -3,7 +3,10 @@ package graft.gateway
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.execution.{QueryExecution, WholeStageCodegenExec}
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,8 +15,9 @@ import graft.{SparkFixture, Tables}
 import graft.sources.IcebergLiteWriter
 
 /** The per-request execution mode: statements over few exact input rows
-  * run interpreted (nothing compiles), larger or unsized ones compiled,
-  * and both modes return the same rows.
+  * run interpreted (nothing compiles) without AQE on one shuffle
+  * partition, larger or unsized ones compiled and adaptive on the pooled
+  * session's own partition count, and both modes return the same rows.
   */
 class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
 
@@ -56,15 +60,29 @@ class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
     finally session.listenerManager.unregister(listener)
   }
 
-  /** Whether the next executed plan `seen` receives has whole-stage codegen;
-    * listener events arrive asynchronously.
+  /** The next executed plan `seen` receives; listener events arrive
+    * asynchronously.
     */
-  private def nextCompiled(seen: ConcurrentLinkedQueue[QueryExecution]): Boolean = {
+  private def nextPlan(seen: ConcurrentLinkedQueue[QueryExecution]): SparkPlan = {
     val deadline = System.nanoTime() + 30L * 1000000000L
     while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
     val qe = seen.poll()
     assert(qe != null, "no collect reached the listener")
-    Engine.planNodes(qe.executedPlan).exists(_.isInstanceOf[WholeStageCodegenExec])
+    qe.executedPlan
+  }
+
+  /** Whether the next executed plan `seen` receives has whole-stage codegen. */
+  private def nextCompiled(seen: ConcurrentLinkedQueue[QueryExecution]): Boolean =
+    Engine.planNodes(nextPlan(seen)).exists(_.isInstanceOf[WholeStageCodegenExec])
+
+  private def shufflePartitions(plan: SparkPlan): Seq[Int] =
+    Engine.planNodes(plan).collect { case s: ShuffleExchangeExec => s.numPartitions }
+
+  /** The shuffle-partition count a new child session of the fixture starts with. */
+  private lazy val createdPartitions: Int = {
+    val n = spark.newSession().conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt
+    assert(n > 1, "the fixture must not already run on one partition")
+    n
   }
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -167,5 +185,68 @@ class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
     }
     // No request's mode reaches the root session.
     assert(spark.conf.get(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key) == "true")
+  }
+
+  test("a small GROUP BY runs without AQE on one partition; a large statement after it is adaptive") {
+    withPlans { seen =>
+      val (small, smallMode) = run(s"SELECT o_orderstatus, COUNT(*) AS n " +
+        s"FROM iceberg_scan('${tables("orders")}') GROUP BY o_orderstatus ORDER BY o_orderstatus")
+      assert(smallMode.interpreted)
+      assert(small.rows.map(_.head) == Seq("F", "O", "P"))
+      val smallPlan = nextPlan(seen)
+      assert(!Engine.planNodes(smallPlan).exists(_.isInstanceOf[AdaptiveSparkPlanExec]))
+      assert(shufflePartitions(smallPlan).nonEmpty)
+      assert(shufflePartitions(smallPlan).forall(_ == 1))
+      // The same pooled session, right after: AQE back on, and the session's
+      // creation-time partition count, not the small statement's one.
+      val (sum, sumMode) = run("SELECT sum(id) AS s FROM range(200000)")
+      assert(!sumMode.interpreted)
+      assert(sum.rows == Seq(Seq(199999L * 200000L / 2)))
+      assert(nextPlan(seen).isInstanceOf[AdaptiveSparkPlanExec])
+      val (_, groupedMode) = run("SELECT id % 7 AS k, sum(id) AS s FROM range(200000) GROUP BY 1")
+      assert(!groupedMode.interpreted)
+      val grouped = nextPlan(seen)
+      assert(grouped.isInstanceOf[AdaptiveSparkPlanExec])
+      assert(shufflePartitions(grouped) == Seq(createdPartitions))
+    }
+  }
+
+  test("a REPARTITION hint analyzed right after a small request gets the session's own count") {
+    val (_, small) = run(lookup(3L))
+    assert(small.interpreted)
+    // The session that small request ran on: the newest idle one for cfg.
+    val analyzed = SessionPool.withSession(spark, Engine.storageSettings(cfg))(
+      _.sql("SELECT /*+ REPARTITION */ id FROM range(10)").queryExecution.analyzed)
+    assert(analyzed.collect { case r: RepartitionOperation => r.numPartitions } == Seq(createdPartitions))
+  }
+
+  test("shuffle-heavy fixture statements return the same rows in both modes as the root session") {
+    val nation = s"parquet.`$sf0001/nation.parquet`"
+    val region = s"parquet.`$sf0001/region.parquet`"
+    val orders = s"parquet.`$sf0001/orders.parquet`"
+    // (template, with {o}, {n}, {r} standing for orders, nation, region)
+    val templates = Seq(
+      "SELECT o_orderkey, o_totalprice FROM {o} ORDER BY o_totalprice DESC, o_orderkey",
+      "SELECT o_orderkey, o_orderstatus, rk FROM (SELECT o_orderkey, o_orderstatus, " +
+        "RANK() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC) AS rk FROM {o}) " +
+        "WHERE rk <= 3 ORDER BY o_orderstatus, rk, o_orderkey",
+      "SELECT DISTINCT o_custkey FROM {o} ORDER BY o_custkey",
+      "SELECT /*+ REPARTITION(o_custkey) */ o_custkey, COUNT(*) AS n, SUM(o_totalprice) AS t " +
+        "FROM {o} GROUP BY o_custkey ORDER BY n DESC, o_custkey LIMIT 20",
+      "SELECT n_regionkey AS k FROM {n} UNION SELECT r_regionkey FROM {r} ORDER BY k",
+      "SELECT r.r_name, COUNT(DISTINCT n.n_nationkey) AS n FROM {r} r LEFT JOIN {n} n " +
+        "ON n.n_regionkey = r.r_regionkey AND n.n_nationkey > 5 GROUP BY r.r_name ORDER BY r.r_name")
+    templates.foreach { t =>
+      def bind(o: String, n: String, r: String) =
+        t.replace("{o}", o).replace("{n}", n).replace("{r}", r)
+      val gateway = bind(s"iceberg_scan('${tables("orders")}')",
+        s"iceberg_scan('${tables("nation")}')", s"iceberg_scan('${tables("region")}')")
+      val expected = spark.sql(bind(orders, nation, region)).collect().toSeq.map(_.toSeq)
+      val (interpreted, im) = run(gateway, interpretBelowRows = Long.MaxValue)
+      val (compiled, cm) = run(gateway, interpretBelowRows = 0L)
+      assert(im.interpreted && !cm.interpreted, gateway)
+      assert(interpreted.rows == expected, gateway)
+      assert(compiled.rows == expected, gateway)
+    }
   }
 }

@@ -45,6 +45,9 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
   private def obj(r: HttpResponse[String]): JObj =
     Json.parse(r.body()).asInstanceOf[JObj]
 
+  /** The `X-Request-Id` a query route sends and logs: a random UUID. */
+  private val RequestId = "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"
+
   private val connJson =
     """{"storageType":"minio","endpoint":"http://localhost:9000",
       |"accessKey":"k","secretKey":"s"}""".stripMargin
@@ -325,7 +328,8 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     assert(obj(atCap).get("rows").contains(JArr(Vector(JArr(Vector(JValue.num(1L)))))))
   }
 
-  test("each /api/query request logs one INFO line: status, time, input rows, mode; no credentials") {
+  /** Runs `body` with the lines HttpApi logs meanwhile, at INFO. */
+  private def withLogLines[A](body: java.util.Queue[String] => A): A = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -339,31 +343,88 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     val level = logger.getLevel
     logger.addAppender(appender)
     logger.setLevel(Level.INFO)
-    val secretConn = connJson.replace("\"s\"", "\"s3cr3t-never-logged\"")
-    def logged(sql: String): String = {
-      lines.clear()
-      post("/api/query", s"""{"sql":"$sql","connection":$secretConn}""")
-      val deadline = System.nanoTime() + 10L * 1000000000L
-      while (lines.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
-      Thread.sleep(100)
-      assert(lines.size == 1, lines)
-      lines.peek()
-    }
-    try {
-      val one = logged("SELECT 1 AS one")
-      assert(one.matches(
-        "query status=200 ms=\\d+ inputRows=1 mode=interpreted unknownLeaf=-"), one)
-      val flat = logged(s"SELECT COUNT(*) AS n FROM parquet.`$sf0001/region.parquet`")
-      assert(flat.matches(
-        "query status=200 ms=\\d+ inputRows=- mode=compiled unknownLeaf=InMemoryFileIndex"), flat)
-      val refused = logged("DROP TABLE x")
-      assert(refused.matches("query status=400 ms=\\d+ inputRows=- mode=- unknownLeaf=-"), refused)
-      assert(!Seq(one, flat, refused).exists(_.contains("s3cr3t")))
-    } finally {
+    try body(lines)
+    finally {
       logger.removeAppender(appender)
       logger.setLevel(level)
       appender.stop()
     }
+  }
+
+  /** Posts `body` to `route`; returns the response and the one line logged
+    * for it, found by its request id: the server logs after the response
+    * is sent, so an earlier request's line may still arrive meanwhile.
+    */
+  private def postLogged(lines: java.util.Queue[String], route: String,
+      body: String): (HttpResponse[String], String) = {
+    val r = post(route, body)
+    val id = r.headers().firstValue("X-Request-Id").orElse("")
+    assert(id.nonEmpty, route)
+    def own = lines.toArray(Array.empty[String]).toSeq.filter(_.startsWith(s"query id=$id "))
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (own.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    Thread.sleep(100)
+    assert(own.size == 1, lines)
+    (r, own.head)
+  }
+
+  test("each /api/query request logs one INFO line: status, time, input rows, mode; no credentials") {
+    val secretConn = connJson.replace("\"s\"", "\"s3cr3t-never-logged\"")
+    def logged(lines: java.util.Queue[String], sql: String): String =
+      postLogged(lines, "/api/query", s"""{"sql":"$sql","connection":$secretConn}""")._2
+    withLogLines { lines =>
+      val one = logged(lines, "SELECT 1 AS one")
+      assert(one.matches(
+        s"query id=$RequestId status=200 ms=\\d+ inputRows=1 mode=interpreted unknownLeaf=-"), one)
+      val flat = logged(lines, s"SELECT COUNT(*) AS n FROM parquet.`$sf0001/region.parquet`")
+      assert(flat.matches(
+        s"query id=$RequestId status=200 ms=\\d+ inputRows=- mode=compiled unknownLeaf=InMemoryFileIndex"), flat)
+      val refused = logged(lines, "DROP TABLE x")
+      assert(refused.matches(s"query id=$RequestId status=400 ms=\\d+ inputRows=- mode=- unknownLeaf=-"), refused)
+      assert(!Seq(one, flat, refused).exists(_.contains("s3cr3t")))
+    }
+  }
+
+  test("both query routes send an X-Request-Id header, the id their log line carries") {
+    val one = s"""{"sql":"SELECT 1 AS one","connection":$connJson}"""
+    val refused = s"""{"sql":"DROP TABLE x","connection":$connJson}"""
+    withLogLines { lines =>
+      val ids = Seq(("/api/query", one, 200, "1", "interpreted"),
+          ("/api/query/export", one, 200, "1", "interpreted"),
+          ("/api/query", refused, 400, "-", "-"),
+          ("/api/query/export", refused, 400, "-", "-")).map {
+        case (route, body, status, rows, mode) =>
+          val (r, line) = postLogged(lines, route, body)
+          assert(r.statusCode() == status, route)
+          val id = r.headers().firstValue("X-Request-Id").orElse("")
+          assert(id.matches(RequestId), route)
+          assert(line.matches(s"query id=$id status=$status ms=\\d+ inputRows=$rows mode=$mode unknownLeaf=-"),
+            s"$route: $line")
+          if (route == "/api/query" && status == 200) {
+            assert(obj(r).fields.map(_._1) == Vector("columns", "rows", "stats", "truncated"))
+            assert(obj(r).obj("stats").get.fields.map(_._1) ==
+              Vector("executionTimeMs", "bytesScanned", "rowsReturned"))
+          }
+          id
+      }
+      assert(ids.distinct.length == ids.length)
+    }
+  }
+
+  test("keep-alive responses are not held back by Nagle's algorithm") {
+    // With Nagle on, the JDK server's separate body write waits for the
+    // client's delayed ACK of the headers: about 40 ms per response.
+    val http11 = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val request = HttpRequest.newBuilder(URI.create(base + "/api/format"))
+      .header("Content-Type", "application/json")
+      .POST(HttpRequest.BodyPublishers.ofString("""{"sql":"SELECT 1"}""")).build()
+    val ms = (1 to 25).map { _ =>
+      val t0 = System.nanoTime()
+      assert(http11.send(request, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.drop(5).sorted
+    val median = (ms(9) + ms(10)) / 2
+    assert(median < 10.0, ms.mkString("ms: ", ", ", ""))
   }
 
   test("stop() ends the request threads, so the JVM can exit") {

@@ -8,7 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkFixture, Tables}
-import graft.gateway.{ConnectionConfig, Engine}
+import graft.gateway.{ConnectionConfig, Engine, HttpApi}
 
 /** A9 end-to-end: a stub Iceberg REST catalog (the two GET endpoints of
   * the public rest-catalog-open-api surface) backed by a real
@@ -31,7 +31,9 @@ class RestCatalogSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterA
     metadataLoc = IcebergLite
       .latestMetadataPath(spark.sparkContext.hadoopConfiguration, dir).get.toString
 
-    server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    // Made through the gateway's factory: the JDK reads its socket settings
+    // at the first server the JVM creates, whichever suite runs first.
+    server = HttpApi.createServer(new InetSocketAddress("127.0.0.1", 0))
     def reply(ex: HttpExchange, status: Int, body: String): Unit = {
       val bytes = body.getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.set("Content-Type", "application/json")
