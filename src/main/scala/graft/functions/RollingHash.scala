@@ -48,7 +48,9 @@ object RollingHash {
   }
 }
 
-/** SQL registration for graft's custom expressions. */
+/** SQL registration for graft's custom expressions and the gateway's
+  * path-addressed table functions (`iceberg_scan`, ...).
+  */
 object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     // Skip names already present: `newSession()` clones the parent's
@@ -86,5 +88,6 @@ object GraftFunctions {
     // duck_len instead.
     reg("duck_len", DuckCompat.lenForArgs)
     reg("duck_slice", DuckCompat.sliceForArgs)
+    graft.gateway.TableFunctions.register(spark)
   }
 }

@@ -9,16 +9,19 @@ import org.apache.spark.sql.SparkSession
 import graft.sources.IcebergLite
 
 /** SQL-string rewrites performed before parsing, mirroring the reference's
-  * `_convert_to_iceberg_query` (/root/reference/backend/main.py:426-449)
-  * plus the `iceberg_scan('path')` table-function surface
-  * (main.py:440,464,556) that Spark SQL lacks.
+  * `_convert_to_iceberg_query` (/root/reference/backend/main.py:426-449).
+  * None fires inside a string literal, a quoted identifier or a comment.
   *
   * 1. read_parquet over an s3 parquet glob (legacy escape hatch) ->
   *    `iceberg_scan('s3://bucket/path')`, or a
   *    `iceberg_catalog.<ns>.<table>` reference when a REST catalog is
   *    configured (table name = last path segment).
-  * 2. `iceberg_scan('path')` -> a generated temp view bound to an
-  *    IcebergLite table scan for that path (SURVEY.md A4, option (i)).
+  * 3. REST catalog references -> generated temp views ([[plan]]).
+  * 4. The DuckDB-dialect pre-pass ([[convertDuckDbDialect]]).
+  *
+  * `iceberg_scan('path')` and the other path-addressed table functions
+  * are not rewritten: they are Spark table-valued functions
+  * ([[TableFunctions]]), bound while Spark analyzes the statement.
   */
 object DialectRewriter {
 
@@ -27,41 +30,11 @@ object DialectRewriter {
   private val ReadParquetRe: Regex =
     """(?i)read_parquet\(['"]s3://([^/'"]+)/([^'"]+?)/?\*?\*?/?\*?\.parquet['"]\)""".r
 
-  // Optional second argument = time travel, accepted as a snapshot id
-  // (`iceberg_scan('p', 123)` / `snapshot_id => 123`) or a committed-at
-  // bound (`timestamp => '2026-01-01T00:00:00Z'`, also bare
-  // `'2026-01-01 00:00:00'`) resolved via the snapshot log — the
-  // `TIMESTAMP AS OF` analog.
-  private val IcebergScanRe: Regex =
-    ("""(?i)iceberg_scan\(\s*['"]([^'"]+)['"]\s*""" +
-      """(?:,\s*(?:snapshot_id\s*=>\s*)?(\d+)\s*|,\s*ref\s*=>\s*['"]([^'"]+)['"]\s*""" +
-      """|,\s*(?:timestamp\s*=>\s*)?['"]([^'"]+)['"]\s*)?\)""").r
-
-  /** `iceberg_changes('path', from_snapshot => N [, to_snapshot => M])` —
-    * the SQL surface over [[IcebergLite.incrementalScan]]: exactly the
-    * rows appended AFTER snapshot N (up to M or current). The CDC read
-    * pattern an incremental pipeline polls with; non-append ranges
-    * (compaction/delete commits) refuse rather than emitting wrong
-    * deltas, surfacing as a 400 through the gateway.
-    */
-  private val IcebergChangesRe: Regex =
-    ("""(?i)iceberg_changes\(\s*['"]([^'"]+)['"]\s*,\s*(?:from_snapshot\s*=>\s*)?(\d+)\s*""" +
-      """(?:,\s*(?:to_snapshot\s*=>\s*)?(\d+)\s*)?\)""").r
-
-  /** ISO instant, or local "yyyy-MM-dd[ HH:mm:ss]" taken as UTC. */
-  private[gateway] def parseTravelTimestamp(s: String): Long =
-    scala.util.Try(java.time.Instant.parse(s).toEpochMilli).getOrElse {
-      val norm = if (s.contains(" ")) s.replace(" ", "T") else s
-      val withTime = if (norm.contains("T")) norm else norm + "T00:00:00"
-      java.time.LocalDateTime.parse(withTime)
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    }
-
   private val viewCounter = new AtomicLong(0)
 
   /** Rewrite 1: legacy read_parquet globs to the Iceberg surface. */
   def convertReadParquet(sql: String, config: ConnectionConfig): String =
-    ReadParquetRe.replaceAllIn(sql, m => {
+    replaceOutsideLiterals(ReadParquetRe, sql)(m => {
       val bucket = m.group(1)
       val path = m.group(2).reverse.dropWhile(c => c == '*' || c == '/').reverse
       val replacement =
@@ -71,24 +44,6 @@ object DialectRewriter {
         } else s"iceberg_scan('s3://$bucket/$path')"
       Regex.quoteReplacement(replacement)
     })
-
-  /** Rewrite 2: bind each iceberg_scan('p') occurrence to a temp view
-    * backed by an IcebergLite scan of `p` on this session, and substitute
-    * the view name into the SQL. View names are generated (never derived
-    * from user input) so this introduces no injection surface.
-    */
-  private val IcebergMetadataRe: Regex =
-    """(?i)iceberg_metadata\(\s*['"]([^'"]+)['"]\s*\)""".r
-  private val IcebergSnapshotsRe: Regex =
-    """(?i)iceberg_snapshots\(\s*['"]([^'"]+)['"]\s*\)""".r
-  private val IcebergFilesRe: Regex =
-    """(?i)iceberg_files\(\s*['"]([^'"]+)['"]\s*\)""".r
-  private val IcebergPartitionsRe: Regex =
-    """(?i)iceberg_partitions\(\s*['"]([^'"]+)['"]\s*\)""".r
-  private val IcebergHistoryRe: Regex =
-    """(?i)iceberg_history\(\s*['"]([^'"]+)['"]\s*\)""".r
-  private val IcebergRefsRe: Regex =
-    """(?i)iceberg_refs\(\s*['"]([^'"]+)['"]\s*\)""".r
 
   // `iceberg_catalog.<ns>.<table>` references and the reference's
   // suggested `SHOW TABLES FROM iceberg_catalog.<ns>` probe, resolved
@@ -112,16 +67,18 @@ object DialectRewriter {
     * that perform the catalog HTTP fetches, metadata/footer IO, and temp-
     * view creation. Callers validate the rewritten SQL first, so a
     * statement the guard rejects triggers no network or filesystem side
-    * effects.
+    * effects. These are the only temp views a request creates: a reference
+    * needs the request's catalog config, which a table-function builder
+    * cannot see.
     */
-  def planCatalogRefs(spark: SparkSession, sql: String,
+  def plan(spark: SparkSession, sql: String,
       config: ConnectionConfig): (String, Seq[() => Unit]) = {
     if (config.catalogType != "rest" ||
         !sql.toLowerCase(java.util.Locale.ROOT).contains("iceberg_catalog."))
       return (sql, Nil)
     lazy val client = graft.sources.RestCatalogClient.fromConfig(config)
     val binders = Seq.newBuilder[() => Unit]
-    val afterShow = ShowTablesRe.replaceAllIn(sql, m => {
+    val afterShow = replaceOutsideLiterals(ShowTablesRe, sql)(m => {
       val ns = m.group(1)
       val view = s"graft_iceberg_catalog_listing_${viewCounter.incrementAndGet()}"
       binders += (() => {
@@ -136,7 +93,7 @@ object DialectRewriter {
       })
       Regex.quoteReplacement(s"SELECT namespace, tableName FROM $view")
     })
-    val bound = CatalogRefRe.replaceAllIn(afterShow, m => {
+    val bound = replaceOutsideLiterals(CatalogRefRe, afterShow)(m => {
       val (ns, tbl) = (m.group(1), m.group(2))
       val view = s"graft_iceberg_catalog_${viewCounter.incrementAndGet()}"
       binders += (() => {
@@ -150,78 +107,10 @@ object DialectRewriter {
     (bound, binders.result())
   }
 
-  // DuckDB's flat-file table functions (read_csv/read_csv_auto with
-  // header+type inference, read_json/read_json_auto line-JSON, and
-  // read_parquet over a single local/posix path — the s3 GLOB form was
-  // already rewritten to iceberg_scan by convertReadParquet, mirroring
-  // the reference; a plain path stays a plain parquet read).
-  private val ReadCsvRe: Regex =
-    """(?i)\bread_csv(?:_auto)?\(\s*['"]([^'"]+)['"]\s*\)""".r
-  private val ReadJsonRe: Regex =
-    """(?i)\bread_(?:nd)?json(?:_auto|_objects)?\(\s*['"]([^'"]+)['"]\s*\)""".r
-  private val ReadParquetPlainRe: Regex =
-    """(?i)\bread_parquet\(\s*['"]([^'"]+)['"]\s*\)""".r
-
-  // Any flat-file reader call the single-path rewrites above did NOT
-  // consume — named options, path lists, computed paths. Detected after
-  // the rewrites so the user gets a precise 400 instead of Spark's
-  // misleading "undefined function read_csv".
-  private val FlatFileLeftoverRe: Regex =
-    """(?i)\b(read_(?:csv|(?:nd)?json|parquet)(?:_auto|_objects)?)\s*\(""".r
-
-  /** Opt-in gate for the flat-file readers (read_csv/read_json and plain-
-    * path read_parquet): unlike `iceberg_scan` — whose Iceberg/parquet
-    * layout requirement bounds what it can exfiltrate — these read ANY
-    * text file the gateway process can open, through an endpoint that is
-    * unauthenticated and serves CORS '*' (the reference's own trust model,
-    * where DuckDB allows local reads by default — but a wider surface).
-    * They are therefore DISABLED unless `-Dgraft.gateway.flatFileRoot=...`
-    * (or env GRAFT_FLATFILE_ROOT) names the allowed root directories
-    * (comma-separated path prefixes, compared after normalization so `..`
-    * traversal cannot escape; `*` = no restriction, the reference's
-    * behavior). Checked at PLAN time — a rejected path never reaches
-    * validation, binding, or IO.
-    */
-  private[gateway] def flatFileRoots: Option[Seq[String]] =
-    sys.props.get("graft.gateway.flatFileRoot")
-      .orElse(sys.env.get("GRAFT_FLATFILE_ROOT"))
-      .map(_.trim).filter(_.nonEmpty)
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-
-  private def checkFlatFilePath(fn: String, path: String): Unit = {
-    val roots = flatFileRoots.getOrElse(throw new IllegalArgumentException(
-      s"$fn is disabled: flat-file reads are gated off by default; start the " +
-        "gateway with -Dgraft.gateway.flatFileRoot=<root[,root2]> (or " +
-        "GRAFT_FLATFILE_ROOT; '*' for no restriction) to enable them"))
-    if (!roots.contains("*")) {
-      // Lexical normalization blocks `..` traversal but not symlinks: a
-      // link under an allowed root pointing outside it would pass a purely
-      // lexical prefix test. When the path exists on this filesystem,
-      // resolve it (and each root) to its canonical form first; glob
-      // patterns and not-yet-existing paths fall back to the lexical
-      // check, which is still `..`-safe.
-      def canonical(p: String): String =
-        try {
-          val jp = java.nio.file.Paths.get(p)
-          if (java.nio.file.Files.exists(jp)) jp.toRealPath().toString
-          else jp.normalize().toString
-        } catch { case _: Exception => p }
-      val norm = canonical(path)
-      val allowed = roots.exists { r =>
-        val rn = canonical(r)
-        // Exact match or a "/"-separated descendant — a plain prefix test
-        // would let /data-evil slip past an allowed root of /data.
-        norm == rn || norm.startsWith(rn + "/")
-      }
-      if (!allowed) throw new IllegalArgumentException(
-        s"$fn path '$path' is outside the allowed flat-file roots")
-    }
-  }
-
   /** Index ranges of string literals, quoted identifiers, and comments —
-    * table-function rewrites must not fire (and bind IO!) for text that
-    * is not code, e.g. `-- read_csv('/x')` or a data literal mentioning
-    * `iceberg_scan`.
+    * rewrites must not fire (and bind IO!) for text that is not code,
+    * e.g. `-- iceberg_catalog.ns.t` or a data literal mentioning
+    * `read_parquet('s3://...')`.
     */
   private def protectedRanges(sql: String): IndexedSeq[(Int, Int)] = {
     val out = IndexedSeq.newBuilder[(Int, Int)]
@@ -255,130 +144,6 @@ object DialectRewriter {
       else f(m))
   }
 
-  /** Text-only planning for the `iceberg_scan` / `iceberg_metadata` /
-    * `iceberg_snapshots` table functions plus DuckDB's flat-file readers;
-    * same deferred-binder contract as [[planCatalogRefs]].
-    *
-    * Trust model: paths reach `spark.read` exactly like `iceberg_scan`
-    * paths always have — the gateway is a self-hosted query endpoint
-    * whose engine can read what its process can read, the same contract
-    * as the reference's DuckDB (read_csv/read_parquet of any local file
-    * is reference behavior, not an extension).
-    */
-  def planIcebergScans(spark: SparkSession, sql: String): (String, Seq[() => Unit]) = {
-    val binders = Seq.newBuilder[() => Unit]
-    val scans = replaceOutsideLiterals(IcebergScanRe, sql)(m => {
-      val path = m.group(1)
-      val snapshotId = Option(m.group(2)).map(_.toLong)
-      val refName = Option(m.group(3))
-      val asOfMillis = Option(m.group(4)).map(parseTravelTimestamp)
-      val view = s"graft_iceberg_scan_${viewCounter.incrementAndGet()}"
-      binders += (() =>
-        IcebergLite.scan(spark, path, snapshotId, asOfMillis, ref = refName)
-          .createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    val withChanges = replaceOutsideLiterals(IcebergChangesRe, scans)(m => {
-      val path = m.group(1)
-      val from = m.group(2).toLong
-      val to = Option(m.group(3)).map(_.toLong)
-      val view = s"graft_iceberg_changes_${viewCounter.incrementAndGet()}"
-      binders += (() =>
-        IcebergLite.incrementalScan(spark, path, from, to).createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    val withMeta = replaceOutsideLiterals(IcebergMetadataRe, withChanges)(m => {
-      val path = m.group(1)
-      val view = s"graft_iceberg_metadata_${viewCounter.incrementAndGet()}"
-      binders += (() =>
-        IcebergLite.metadataRelation(spark, path).createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    val withSnaps = replaceOutsideLiterals(IcebergSnapshotsRe, withMeta)(m => {
-      val path = m.group(1)
-      val view = s"graft_iceberg_snapshots_${viewCounter.incrementAndGet()}"
-      binders += (() =>
-        IcebergLite.snapshotsRelation(spark, path).createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    val withFiles = replaceOutsideLiterals(IcebergFilesRe, withSnaps)(m => {
-      val path = m.group(1)
-      val view = s"graft_iceberg_files_${viewCounter.incrementAndGet()}"
-      binders += (() =>
-        IcebergLite.filesRelation(spark, path).createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    val withParts = replaceOutsideLiterals(IcebergPartitionsRe, withFiles)(m => {
-      val path = m.group(1)
-      val view = s"graft_iceberg_partitions_${viewCounter.incrementAndGet()}"
-      binders += (() =>
-        IcebergLite.partitionsRelation(spark, path).createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    val withHistory = replaceOutsideLiterals(IcebergHistoryRe, withParts)(m => {
-      val path = m.group(1)
-      val view = s"graft_iceberg_history_${viewCounter.incrementAndGet()}"
-      binders += (() =>
-        IcebergLite.historyRelation(spark, path).createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    val withRefs = replaceOutsideLiterals(IcebergRefsRe, withHistory)(m => {
-      val path = m.group(1)
-      val view = s"graft_iceberg_refs_${viewCounter.incrementAndGet()}"
-      binders += (() =>
-        IcebergLite.refsRelation(spark, path).createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    val withCsv = replaceOutsideLiterals(ReadCsvRe, withRefs)(m => {
-      val path = m.group(1)
-      checkFlatFilePath("read_csv", path)
-      val view = s"graft_read_csv_${viewCounter.incrementAndGet()}"
-      binders += (() => spark.read
-        .option("header", "true").option("inferSchema", "true")
-        .csv(path).createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    val withJson = replaceOutsideLiterals(ReadJsonRe, withCsv)(m => {
-      val path = m.group(1)
-      checkFlatFilePath("read_json", path)
-      val view = s"graft_read_json_${viewCounter.incrementAndGet()}"
-      binders += (() => spark.read.json(path).createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    val bound = replaceOutsideLiterals(ReadParquetPlainRe, withJson)(m => {
-      val path = m.group(1)
-      checkFlatFilePath("read_parquet", path)
-      val view = s"graft_read_parquet_${viewCounter.incrementAndGet()}"
-      binders += (() => spark.read.parquet(path).createOrReplaceTempView(view))
-      Regex.quoteReplacement(view)
-    })
-    // A reader call the single-path rewrites did not consume (named
-    // options, a path list, a computed path) would otherwise surface as
-    // Spark's "undefined function read_csv" — a baffling error for a
-    // function the gateway nominally supports. Reject it here with the
-    // actual limitation instead.
-    locally {
-      val ranges = protectedRanges(bound)
-      FlatFileLeftoverRe.findAllMatchIn(bound)
-        .find(m => !ranges.exists { case (a, b) => m.start >= a && m.start < b })
-        .foreach(m => throw new IllegalArgumentException(
-          s"${m.group(1)}: only the single-quoted-path form is supported " +
-            s"(e.g. ${m.group(1)}('/path/to/file')); named options, path " +
-            "lists, and computed paths are not"))
-    }
-    (bound, binders.result())
-  }
-
-  /** Full planning pass: catalog refs then scan functions, text-only.
-    * Returns the rewritten SQL (safe to validate) and the IO binders to
-    * run — in order — once validation accepts the statement.
-    */
-  def plan(spark: SparkSession, sql: String,
-      config: ConnectionConfig): (String, Seq[() => Unit]) = {
-    val (afterCatalog, catalogBinders) = planCatalogRefs(spark, sql, config)
-    val (bound, scanBinders) = planIcebergScans(spark, afterCatalog)
-    (bound, catalogBinders ++ scanBinders)
-  }
 
   // --- DuckDB-dialect function surface ------------------------------------
 
@@ -437,8 +202,7 @@ object DialectRewriter {
     * contract, lambda-as-string arguments, or format-code languages that
     * do not line up). Detected at call positions so a user gets a precise
     * 400 naming the limitation instead of Spark's UNRESOLVED_ROUTINE for
-    * a function the gateway nominally speaks the dialect of — the same
-    * design as the flat-file leftover detector. list_position/
+    * a function the gateway nominally speaks the dialect of. list_position/
     * list_intersect are here deliberately: Spark's array_position returns
     * 0 (not NULL) on a miss and array_intersect dedups, so a rename would
     * silently change answers.
@@ -841,18 +605,5 @@ object DialectRewriter {
       // Pattern.quote(expr): \Q expr \E with any embedded \E spliced as
       // \E\\E\Q — correct for every runtime value.
       s"concat('\\\\Q', replace(${convertDuckDbDialect(expr)}, '\\\\E', '\\\\E\\\\\\\\E\\\\Q'), '\\\\E')"
-  }
-
-  /** Immediate-execution forms (tests, ad-hoc callers): plan + bind. */
-  def bindCatalogRefs(spark: SparkSession, sql: String, config: ConnectionConfig): String = {
-    val (bound, binders) = planCatalogRefs(spark, sql, config)
-    binders.foreach(_.apply())
-    bound
-  }
-
-  def bindIcebergScans(spark: SparkSession, sql: String): String = {
-    val (bound, binders) = planIcebergScans(spark, sql)
-    binders.foreach(_.apply())
-    bound
   }
 }

@@ -26,16 +26,19 @@ import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, Tabl
   *   - a session serves only requests with the same root session and
   *     EXACTLY the same storage settings (compared for equality, never by
   *     hash), so two credential sets never share one;
-  *   - before it goes back, the temp views the request's binders created
-  *     are dropped through the session catalog (no shared cache entry is
-  *     touched) and its execution-mode confs are restored (below); a
-  *     session that cannot be restored is discarded;
+  *   - before it goes back, the temp views the request's REST catalog
+  *     references created are dropped through the session catalog (no
+  *     shared cache entry is touched) and its execution-mode confs are
+  *     restored (below); a session that cannot be restored is discarded;
   *   - at most [[RequestThreads]] sessions wait idle.
   * Still per request: config validation, the delete guard, the latest-
   * metadata listing of every scanned table under the request's own
   * settings (the parsed metadata and manifests come from
-  * `IcebergLite.metadataCache`), rewriting, validation, binding,
-  * analysis and execution. Credential isolation on the shared Hadoop
+  * `IcebergLite.metadataCache`), rewriting, validation, analysis and
+  * execution. `iceberg_scan('path')` and the other path-addressed table
+  * functions are bound during analysis ([[TableFunctions]], registered
+  * once per pooled session); only REST catalog references still bind
+  * through temp views. Credential isolation on the shared Hadoop
   * conf is the known hard part (SURVEY.md §7.3): storage settings live
   * only on the session's own conf ([[applyStorageSettings]]).
   *
@@ -174,20 +177,20 @@ object Engine {
       catch { case e: IcebergLite.DeleteGuardError => throw EngineError(400, e.getMessage) }
     }
 
-    // Plan the dialect rewrites text-only, validate, THEN run the binders:
-    // a statement the guard rejects must not trigger catalog HTTP fetches,
-    // Iceberg metadata/footer IO, or temp-view creation as side effects.
+    // Rewrite text-only, validate, THEN bind: a statement the guard
+    // rejects must not trigger catalog HTTP fetches, Iceberg metadata or
+    // footer IO, or temp-view creation as side effects. The table
+    // functions bind inside spark.sql, after validation.
     val converted = DialectRewriter.convertDuckDbDialect(
       DialectRewriter.convertReadParquet(sql, cfg))
     // Known-DuckDB functions with no safe Spark mapping get a precise 400
     // naming the limitation (and the supported surface) instead of
-    // Spark's UNRESOLVED_ROUTINE — same design as the flat-file leftover
-    // detector, run only on statements about to execute on Spark.
+    // Spark's UNRESOLVED_ROUTINE, run only on statements about to execute
+    // on Spark.
     try DialectRewriter.rejectUnknownDuckFunctions(converted)
     catch { case e: IllegalArgumentException => throw EngineError(400, e.getMessage) }
-    val (bound, binders) =
-      try DialectRewriter.plan(spark, converted, cfg) // text-only (may reject a malformed travel timestamp)
-      catch { case e: Exception => throw EngineError(400, s"Query execution failed: ${e.getMessage}") }
+    // REST catalog references become temp views; no other rewrite binds.
+    val (bound, binders) = DialectRewriter.plan(spark, converted, cfg)
 
     SqlGuard.validate(spark, bound) match {
       case Left(r) => throw EngineError(400, r.message)
@@ -471,7 +474,7 @@ private[gateway] object SessionPool {
   /** Readies a session for its next request; false if that failed, so
     * the session is discarded:
     *   - drops every local temp view: SqlGuard admits no CREATE VIEW, so
-    *     each was made by one of the request's binders. The session
+    *     each was made by a REST catalog reference's binder. The session
     *     catalog's drop leaves the shared cache manager alone, unlike
     *     `spark.catalog`'s;
     *   - sets its compiled-mode confs again, whatever mode it ran in.

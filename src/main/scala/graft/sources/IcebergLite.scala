@@ -609,8 +609,9 @@ object IcebergLite {
     // Merge-on-read applies BOTH delete kinds. Without the opt-in, a
     // delete-carrying LISTING is refused HERE, not just in
     // [[assertNoDeletes]]: the scaladoc's "callers must guard first" was
-    // a convention, and the gateway's iceberg_scan('<path>') binder — a
-    // caller the connection-level guard never sees — could silently
+    // a convention, and the gateway's iceberg_scan('<path>') table
+    // function (gateway.TableFunctions) — a caller the connection-level
+    // guard never sees — could silently
     // return removed rows (r11 fix; mirrors the reference's guard,
     // main.py:398-414). Per-SNAPSHOT, so time travel to a pre-delete
     // snapshot still reads cleanly while the current one is blocked.

@@ -2,9 +2,11 @@ package graft.gateway
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.SparkSession
+
 import graft.SparkFixture
 import graft.Tables
-import graft.sources.IcebergLiteWriter
+import graft.sources.{CountingLocalFs, IcebergLite, IcebergLiteWriter}
 
 class EngineSpec extends AnyFunSuite with SparkFixture {
 
@@ -119,9 +121,9 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val dir = tmpDir("engine_iso") + "/warehouse/region"
     IcebergLiteWriter.write(spark, Tables.t(spark, sf0001, "region"), dir)
     Engine.executeQuery(spark, s"SELECT * FROM iceberg_scan('$dir')", cfg)
-    // The generated view lives on the request's child session only.
+    // Nothing the request binds reaches the root session's catalog.
     assert(spark.catalog.listTables().collect()
-      .forall(t => !t.name.startsWith("graft_iceberg_scan_")))
+      .forall(t => !t.name.startsWith("graft_")))
   }
 
   test("storage settings land as per-session per-bucket S3A overrides") {
@@ -185,8 +187,8 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
       val pq = Engine.executeQuery(spark,
         s"SELECT COUNT(*) AS n FROM read_parquet('$sf0001/region.parquet')", cfg)
       assert(pq.rows.head.head == 5L)
-      // Binders fire only after validation: a mutation using the function
-      // still dies at the guard, with no view bound as a side effect.
+      // Readers run only after validation: a mutation using the function
+      // still dies at the guard, before anything is read.
       val err = intercept[Engine.EngineError](Engine.executeQuery(spark,
         s"DELETE FROM read_csv('$dir/t.csv')", cfg))
       assert(err.status == 400)
@@ -206,7 +208,7 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/t.csv"),
       "id\n1\n".getBytes("UTF-8"))
     // Disabled by default: a clear 400 naming the enabling switch, and
-    // NO file IO (the rejection happens at plan time).
+    // NO file IO (the reader checks its path before reading).
     val off = intercept[Engine.EngineError](Engine.executeQuery(spark,
       s"SELECT * FROM read_csv('$dir/t.csv')", cfg))
     assert(off.status == 400 && off.detail.contains("disabled"))
@@ -231,6 +233,126 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
       val all = Engine.executeQuery(spark, s"SELECT * FROM read_csv('$dir/t.csv')", cfg)
       assert(all.rows == Seq(Seq(1)))
     }
+  }
+
+  test("flat-file reader forms beyond a single quoted path get a clear rejection") {
+    def rejected(sql: String) = {
+      val e = intercept[Engine.EngineError](Engine.executeQuery(spark, sql, cfg))
+      assert(e.status == 400, e.detail)
+      e.detail
+    }
+    // Every form that reaches the reader names the one supported form.
+    for (sql <- Seq(
+        "SELECT * FROM read_csv('/x.csv', '/y.csv')",
+        "SELECT * FROM read_csv('/x.csv', header => true)",
+        "SELECT * FROM read_json(concat('/x', '.json'))")) {
+      val detail = rejected(sql)
+      assert(detail.contains("single-quoted-path"), detail)
+      assert(detail.contains(if (sql.contains("read_json")) "read_json" else "read_csv"), detail)
+    }
+    // `header=true` is a comparison with an unknown column, and a path
+    // list is not Spark syntax: both fail before the reader is called.
+    assert(rejected("SELECT * FROM read_csv('/x.csv', header=true)").contains("UNRESOLVED_COLUMN"))
+    assert(rejected("SELECT * FROM read_parquet(['/a.parquet', '/b.parquet'])")
+      .startsWith("Invalid SQL: "))
+    // In a literal or comment nothing is read or rejected.
+    val ok = Engine.executeQuery(spark,
+      "SELECT 'read_csv(x, header=true)' AS s -- read_json(a, b)", cfg)
+    assert(ok.rows == Seq(Seq("read_csv(x, header=true)")))
+  }
+
+  /** Runs `body` while the session the next request with `cfg` borrows
+    * (the newest idle one) reads local files through [[CountingLocalFs]].
+    */
+  private def counted[A](body: => A): A = {
+    def useCountingFs(on: Boolean): Unit =
+      SessionPool.withSession(spark, Engine.storageSettings(cfg)) { s =>
+        if (on) {
+          s.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+          s.conf.set("fs.file.impl.disable.cache", "true")
+        } else Seq("fs.file.impl", "fs.file.impl.disable.cache").foreach(s.conf.unset)
+      }
+    useCountingFs(on = true)
+    CountingLocalFs.reset()
+    try body finally useCountingFs(on = false)
+  }
+
+  test("a statement SqlGuard rejects reads nothing, though it names iceberg_scan") {
+    val dir = tmpDir("engine_guard_io") + "/warehouse/region"
+    IcebergLiteWriter.write(spark, Tables.t(spark, sf0001, "region"), dir)
+    counted {
+      for (sql <- Seq(
+          s"INSERT INTO t SELECT * FROM iceberg_scan('$dir')",
+          s"CREATE VIEW v AS SELECT * FROM iceberg_scan('$dir')")) {
+        val e = intercept[Engine.EngineError](Engine.executeQuery(spark, sql, cfg))
+        assert(e.status == 400 && e.detail.contains("not allowed"), e.detail)
+      }
+      assert(CountingLocalFs.listings.get == 0 && CountingLocalFs.opens.get == 0)
+      // The same scan, accepted, does list through the counting filesystem.
+      Engine.executeQuery(spark, s"SELECT COUNT(*) AS n FROM iceberg_scan('$dir')", cfg)
+      assert(CountingLocalFs.listings.get > 0)
+    }
+  }
+
+  test("iceberg_scan inside a literal and a comment is text: no IO") {
+    counted {
+      val r = Engine.executeQuery(spark,
+        "SELECT 'iceberg_scan(''/no/such/table'')' AS s -- iceberg_scan('/no/such/table')",
+        cfg)
+      assert(r.rows == Seq(Seq("iceberg_scan('/no/such/table')")))
+      assert(CountingLocalFs.listings.get == 0 && CountingLocalFs.opens.get == 0)
+    }
+  }
+
+  test("each iceberg_scan time-travel form returns what IcebergLite.scan returns") {
+    val dir = tmpDir("engine_travel") + "/warehouse/region"
+    val region = Tables.t(spark, sf0001, "region")
+    IcebergLiteWriter.write(spark, region, dir)
+    Thread.sleep(5) // distinct commit timestamps
+    IcebergLiteWriter.append(spark, region.limit(2), dir)
+    val snaps = IcebergLite.snapshotsRelation(spark, dir).orderBy("committed_at").collect()
+    val (first, firstAt) = (snaps(0).getLong(0), snaps(0).getTimestamp(1).getTime)
+    IcebergLiteWriter.setRef(spark, dir, "v1", first)
+    val iso = java.time.Instant.ofEpochMilli(firstAt).toString
+    def rows(travel: String) = Engine.executeQuery(spark,
+      s"SELECT * FROM iceberg_scan('$dir'$travel) ORDER BY r_regionkey, r_name", cfg).rows
+    def expected(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("r_regionkey", "r_name").collect().toSeq.map(_.toSeq)
+    val atFirst = expected(IcebergLite.scan(spark, dir, snapshotId = Some(first)))
+    assert(atFirst.length == 5)
+    assert(rows(s", $first") == atFirst)
+    assert(rows(s", snapshot_id => $first") == atFirst)
+    assert(rows(", ref => 'v1'") ==
+      expected(IcebergLite.scan(spark, dir, ref = Some("v1"))))
+    assert(rows(s", timestamp => '$iso'") ==
+      expected(IcebergLite.scan(spark, dir, asOfMillis = Some(firstAt))))
+    assert(rows(s", '$iso'") == atFirst)
+    assert(rows("") == expected(IcebergLite.scan(spark, dir)))
+    assert(rows("").length == 7)
+    // A name the function does not take is a precise 400.
+    val e = intercept[Engine.EngineError](rows(", version => 1"))
+    assert(e.status == 400)
+    assert(e.detail.contains("iceberg_scan: unknown argument version"), e.detail)
+    assert(e.detail.contains("snapshot_id, ref, timestamp"), e.detail)
+  }
+
+  test("a table function reads through the session that calls it, not the one it was registered on") {
+    val dir = tmpDir("engine_active") + "/warehouse/region"
+    IcebergLiteWriter.write(spark, Tables.t(spark, sf0001, "region"), dir)
+    val registered = spark.newSession()
+    graft.functions.GraftFunctions.register(registered)
+    // A cloned session carries the registered session's builders
+    // (cloneSession is private[sql]; public in bytecode).
+    val child = registered.getClass.getMethod("cloneSession").invoke(registered)
+      .asInstanceOf[SparkSession]
+    child.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    child.conf.set("fs.file.impl.disable.cache", "true")
+    val sql = s"SELECT COUNT(*) AS n FROM iceberg_scan('$dir')"
+    CountingLocalFs.reset()
+    assert(registered.sql(sql).collect()(0).getLong(0) == 5L)
+    assert(CountingLocalFs.listings.get == 0)
+    assert(child.sql(sql).collect()(0).getLong(0) == 5L)
+    assert(CountingLocalFs.listings.get > 0)
   }
 
   test("duckdb len works on strings AND lists; bracket slices on both too") {

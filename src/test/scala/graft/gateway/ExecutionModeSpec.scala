@@ -3,16 +3,17 @@ package graft.gateway
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
+import org.apache.spark.sql.catalyst.plans.logical.{RepartitionOperation, View}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkFixture, Tables}
-import graft.sources.IcebergLiteWriter
+import graft.sources.{IcebergLiteFileIndex, IcebergLiteWriter}
 
 /** The per-request execution mode: statements over few exact input rows
   * run interpreted (nothing compiles) without AQE on one shuffle
@@ -47,29 +48,37 @@ class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
     */
   private def withPlans[A](body: ConcurrentLinkedQueue[QueryExecution] => A): A = {
     val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    // Executions are numbered as they are created. An earlier request's
+    // event can still be on the listener bus; only later ones count.
+    @volatile var after = Long.MaxValue
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "collect") seen.add(qe)
+        if (funcName == "collect" && qe.id > after) seen.add(qe)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val session = SessionPool.withSession(spark, Engine.storageSettings(cfg)) { s =>
       s.listenerManager.register(listener)
+      after = s.range(1).queryExecution.id
       s
     }
     try body(seen)
     finally session.listenerManager.unregister(listener)
   }
 
-  /** The next executed plan `seen` receives; listener events arrive
+  /** The next query execution `seen` receives; listener events arrive
     * asynchronously.
     */
-  private def nextPlan(seen: ConcurrentLinkedQueue[QueryExecution]): SparkPlan = {
+  private def nextExecution(seen: ConcurrentLinkedQueue[QueryExecution]): QueryExecution = {
     val deadline = System.nanoTime() + 30L * 1000000000L
     while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
     val qe = seen.poll()
     assert(qe != null, "no collect reached the listener")
-    qe.executedPlan
+    qe
   }
+
+  /** The next executed plan `seen` receives. */
+  private def nextPlan(seen: ConcurrentLinkedQueue[QueryExecution]): SparkPlan =
+    nextExecution(seen).executedPlan
 
   /** Whether the next executed plan `seen` receives has whole-stage codegen. */
   private def nextCompiled(seen: ConcurrentLinkedQueue[QueryExecution]): Boolean =
@@ -247,6 +256,17 @@ class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
       assert(im.interpreted && !cm.interpreted, gateway)
       assert(interpreted.rows == expected, gateway)
       assert(compiled.rows == expected, gateway)
+    }
+  }
+
+  test("an iceberg_scan request's analyzed plan reads the table with no view in between") {
+    withPlans { seen =>
+      val (r, _) = run(s"SELECT COUNT(*) AS n FROM iceberg_scan('${tables("region")}')")
+      assert(r.rows == Seq(Seq(5L)))
+      val analyzed = nextExecution(seen).analyzed
+      assert(analyzed.collectWithSubqueries { case v: View => v }.isEmpty)
+      assert(analyzed.collect { case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        fs.location.isInstanceOf[IcebergLiteFileIndex] } == Seq(true))
     }
   }
 }

@@ -292,12 +292,11 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
     assert(IcebergLite.scan(spark, dir, asOfMillis = Some(t2)).count() == 7)
     // Through the SQL surface.
     val iso = java.time.Instant.ofEpochMilli(t1).toString
-    // Bind on a child session, as the gateway does — binding on the shared
-    // fixture session would leak the generated view into later suites.
+    // On a child session with graft's functions, as the gateway runs it.
     val child = spark.newSession()
-    val sql = graft.gateway.DialectRewriter.bindIcebergScans(child,
-      s"SELECT COUNT(*) AS n FROM iceberg_scan('$dir', timestamp => '$iso')")
-    assert(child.sql(sql).collect()(0).getLong(0) == 5)
+    graft.functions.GraftFunctions.register(child)
+    assert(child.sql(s"SELECT COUNT(*) AS n FROM iceberg_scan('$dir', timestamp => '$iso')")
+      .collect()(0).getLong(0) == 5)
     // Before the first commit: loud error.
     assertThrows[IcebergLite.ProbeError](
       IcebergLite.scan(spark, dir, asOfMillis = Some(t1 - 10000)))

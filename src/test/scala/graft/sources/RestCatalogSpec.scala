@@ -23,6 +23,7 @@ class RestCatalogSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterA
   private var endpoint: String = _
   private var metadataLoc: String = _
   private val goodToken = "Bearer ak:sk"
+  private val requests = new java.util.concurrent.atomic.AtomicInteger()
 
   override def beforeAll(): Unit = {
     val dir = tmpDir("rest_cat") + "/warehouse/movies"
@@ -35,6 +36,7 @@ class RestCatalogSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterA
     // at the first server the JVM creates, whichever suite runs first.
     server = HttpApi.createServer(new InetSocketAddress("127.0.0.1", 0))
     def reply(ex: HttpExchange, status: Int, body: String): Unit = {
+      requests.incrementAndGet()
       val bytes = body.getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.set("Content-Type", "application/json")
       ex.sendResponseHeaders(status, bytes.length)
@@ -121,5 +123,15 @@ class RestCatalogSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterA
          |ORDER BY m.n_name LIMIT 3""".stripMargin,
       cfg())
     assert(r.rows.length == 3)
+  }
+
+  test("catalog references inside a literal or a comment send no catalog request") {
+    requests.set(0)
+    val r = Engine.executeQuery(spark,
+      "SELECT 'iceberg_catalog.demo.movies' AS t, 'SHOW TABLES FROM iceberg_catalog.demo' AS s " +
+        "-- FROM iceberg_catalog.demo.movies",
+      cfg())
+    assert(r.rows == Seq(Seq("iceberg_catalog.demo.movies", "SHOW TABLES FROM iceberg_catalog.demo")))
+    assert(requests.get == 0)
   }
 }
