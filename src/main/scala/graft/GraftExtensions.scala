@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{DotProduct, NgramShingles, RollingHash, SortedDotLong, WinnowHashes}
+import graft.functions.GraftFunctions
 
 /** Session-extension entry point: makes graft's codegen'd expressions
   * available to EVERY session of a cluster via configuration —
@@ -14,55 +14,15 @@ import graft.functions.{DotProduct, NgramShingles, RollingHash, SortedDotLong, W
   * — the deployment-grade alternative to the per-session
   * `GraftFunctions.register` call (which remains for embedded/test use).
   * Injected at session build time, so SQL-only users (e.g. through the
-  * gateway) get `rolling_hash`, `vec_dot`, `ngram_shingles`, and
-  * `winnow_hashes` without any Scala code running first.
+  * gateway) get every function of `GraftFunctions.expressions`
+  * (`rolling_hash`, `vec_dot`, `ngram_shingles`, ...) without any Scala
+  * code running first. The gateway's table functions are not injected.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_sqdist"),
-      new ExpressionInfo(classOf[graft.functions.SqDist].getName, "vec_sqdist"),
-      (exprs: Seq[Expression]) => graft.functions.SqDist(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_shingles"),
-      new ExpressionInfo(classOf[NgramShingles].getName, "ngram_shingles"),
-      (exprs: Seq[Expression]) => NgramShingles.forArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_hashes"),
-      new ExpressionInfo(classOf[WinnowHashes].getName, "winnow_hashes"),
-      (exprs: Seq[Expression]) => WinnowHashes.forArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_anchors"),
-      new ExpressionInfo(classOf[graft.functions.WinnowAnchors].getName, "winnow_anchors"),
-      (exprs: Seq[Expression]) => graft.functions.WinnowAnchors.forArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_frame"),
-      new ExpressionInfo(classOf[graft.functions.BpeFrame].getName, "bpe_frame"),
-      (exprs: Seq[Expression]) => graft.functions.BpeFrame(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("common_extent"),
-      new ExpressionInfo(classOf[graft.functions.CommonExtent].getName, "common_extent"),
-      (exprs: Seq[Expression]) => graft.functions.CommonExtent.forArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_dot_long"),
-      new ExpressionInfo(classOf[SortedDotLong].getName, "sorted_dot_long"),
-      (exprs: Seq[Expression]) => SortedDotLong.forArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("duck_len"),
-      new ExpressionInfo(classOf[graft.functions.DuckLen].getName, "duck_len"),
-      (exprs: Seq[Expression]) => graft.functions.DuckCompat.lenForArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("duck_slice"),
-      new ExpressionInfo(classOf[graft.functions.DuckSlice].getName, "duck_slice"),
-      (exprs: Seq[Expression]) => graft.functions.DuckCompat.sliceForArgs(exprs)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.expressions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(builder.getClass.getName, name), builder))
+    }
 }

@@ -49,45 +49,51 @@ object RollingHash {
 }
 
 /** SQL registration for graft's custom expressions and the gateway's
-  * path-addressed table functions (`iceberg_scan`, ...).
+  * table functions (`iceberg_scan`, ...).
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    // Skip names already present: `newSession()` clones the parent's
-    // registry, so a blind createOrReplace on every gateway request would
-    // log a "function replaced" warning per query for the same builder.
-    def reg(name: String, builder: Seq[Expression] => Expression): Unit = {
-      val fr = spark.sessionState.functionRegistry
-      if (!fr.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        fr.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    reg("rolling_hash", exprs => RollingHash(exprs.head))
-    reg("vec_dot", exprs => DotProduct(exprs(0), exprs(1)))
-    reg("vec_sqdist", exprs => SqDist(exprs(0), exprs(1)))
-    reg("ngram_shingles", NgramShingles.forArgs)
-    reg("winnow_hashes", WinnowHashes.forArgs)
-    reg("cdc_chunks", CdcChunks.forArgs)
-    reg("suffix_stats", SuffixStats.forArgs)
-    reg("url_canonicalize", UrlCanonicalize.forArgs)
-    reg("winnow_anchors", WinnowAnchors.forArgs)
-    reg("bpe_frame", exprs => BpeFrame(exprs.head))
-    reg("bigram_bucket_counts", BigramBuckets.forArgs)
-    reg("term_counts", TermCounts.forArgs)
-    reg("pair_counts", exprs => PairCounts(exprs.head))
-    reg("vec_fold_sum", exprs => VecFoldSum(exprs.head))
-    reg("hash_weight_sum", HashWeightSum.forArgs)
-    reg("pq_code", PqCode.forArgs)
-    reg("common_extent", CommonExtent.forArgs)
-    reg("common_extent_packed", CommonExtent.forArgsPacked)
-    reg("sorted_dot_long", SortedDotLong.forArgs)
-    reg("bit_length_long", exprs => BitLength(exprs.head))
+
+  /** Every custom expression by SQL name: [[register]] adds them to one
+    * session, `graft.GraftExtensions` to every session of a cluster.
+    */
+  val expressions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("rolling_hash", exprs => RollingHash(exprs.head)),
+    ("vec_dot", exprs => DotProduct(exprs(0), exprs(1))),
+    ("vec_sqdist", exprs => SqDist(exprs(0), exprs(1))),
+    ("ngram_shingles", NgramShingles.forArgs),
+    ("winnow_hashes", WinnowHashes.forArgs),
+    ("cdc_chunks", CdcChunks.forArgs),
+    ("suffix_stats", SuffixStats.forArgs),
+    ("url_canonicalize", UrlCanonicalize.forArgs),
+    ("winnow_anchors", WinnowAnchors.forArgs),
+    ("bpe_frame", exprs => BpeFrame(exprs.head)),
+    ("bigram_bucket_counts", BigramBuckets.forArgs),
+    ("term_counts", TermCounts.forArgs),
+    ("pair_counts", exprs => PairCounts(exprs.head)),
+    ("vec_fold_sum", exprs => VecFoldSum(exprs.head)),
+    ("hash_weight_sum", HashWeightSum.forArgs),
+    ("pq_code", PqCode.forArgs),
+    ("common_extent", CommonExtent.forArgs),
+    ("common_extent_packed", CommonExtent.forArgsPacked),
+    ("sorted_dot_long", SortedDotLong.forArgs),
+    ("bit_length_long", exprs => BitLength(exprs.head)),
     // Named duck_len, not len: Spark 4 ships a string-only `len` builtin
     // (alias of length), and overriding it per session would both shadow
     // a builtin and log a "function replaced" warning on every gateway
     // request. The dialect pre-pass renames DuckDB's len calls to
     // duck_len instead.
-    reg("duck_len", DuckCompat.lenForArgs)
-    reg("duck_slice", DuckCompat.sliceForArgs)
+    ("duck_len", DuckCompat.lenForArgs),
+    ("duck_slice", DuckCompat.sliceForArgs))
+
+  def register(spark: SparkSession): Unit = {
+    // Skip names already present: `newSession()` clones the parent's
+    // registry, so a blind createOrReplace on every gateway request would
+    // log a "function replaced" warning per query for the same builder.
+    val fr = spark.sessionState.functionRegistry
+    expressions.foreach { case (name, builder) =>
+      if (!fr.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        fr.createOrReplaceTempFunction(name, builder, "built-in")
+    }
     graft.gateway.TableFunctions.register(spark)
   }
 }

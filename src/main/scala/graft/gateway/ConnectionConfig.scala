@@ -62,7 +62,7 @@ object ConnectionConfig {
   /** Storage-type-specific Hadoop S3A settings (the analog of the
     * reference's per-storage DuckDB `SET s3_*` block, main.py:274-314).
     * Pure mapping — returned as entries for `fs.s3a.*` so they can be
-    * applied per-bucket or per-catalog.
+    * applied per bucket.
     */
   def s3aSettings(c: ConnectionConfig): Map[String, String] = {
     val base: Map[String, String] = c.storageType match {
@@ -97,24 +97,6 @@ object ConnectionConfig {
       case None => Map.empty[String, String]
     }
     base ++ creds ++ token
-  }
-
-  /** Spark catalog registration entries for a REST catalog (the analog of
-    * the reference's CREATE SECRET + ATTACH, main.py:317-358). Values are
-    * config entries, not SQL — the injection vector A9 defends against
-    * does not exist here.
-    */
-  def restCatalogSettings(c: ConnectionConfig, catalogName: String = "iceberg_catalog"): Map[String, String] = {
-    require(c.catalogType == "rest", "restCatalogSettings requires catalogType=rest")
-    val endpoint = c.catalogEndpoint.getOrElse(
-      throw InvalidConfig("catalogEndpoint required for REST catalog"))
-    if (c.namespace.forall(_.isEmpty))
-      throw InvalidConfig("namespace required for REST catalog")
-    Map(
-      s"spark.sql.catalog.$catalogName" -> "org.apache.iceberg.spark.SparkCatalog",
-      s"spark.sql.catalog.$catalogName.type" -> "rest",
-      s"spark.sql.catalog.$catalogName.uri" -> endpoint,
-      s"spark.sql.catalog.$catalogName.credential" -> s"${c.accessKey}:${c.secretKey}")
   }
 
   /** Decode from a request-body JSON object. */

@@ -1,12 +1,8 @@
 package graft.gateway
 
-import java.util.concurrent.atomic.AtomicLong
-
 import scala.util.matching.Regex
 
 import org.apache.spark.sql.SparkSession
-
-import graft.sources.IcebergLite
 
 /** SQL-string rewrites performed before parsing, mirroring the reference's
   * `_convert_to_iceberg_query` (/root/reference/backend/main.py:426-449).
@@ -16,12 +12,14 @@ import graft.sources.IcebergLite
   *    `iceberg_scan('s3://bucket/path')`, or a
   *    `iceberg_catalog.<ns>.<table>` reference when a REST catalog is
   *    configured (table name = last path segment).
-  * 3. REST catalog references -> generated temp views ([[plan]]).
+  * 3. REST catalog references -> `iceberg_catalog_scan('ns', 'tbl')`
+  *    and `iceberg_catalog_tables('ns')` calls ([[convertCatalogRefs]]).
   * 4. The DuckDB-dialect pre-pass ([[convertDuckDbDialect]]).
   *
-  * `iceberg_scan('path')` and the other path-addressed table functions
-  * are not rewritten: they are Spark table-valued functions
-  * ([[TableFunctions]]), bound while Spark analyzes the statement.
+  * Every rewrite is text only. `iceberg_scan('path')`, the other
+  * path-addressed table functions and the two catalog functions are
+  * Spark table-valued functions ([[TableFunctions]]), bound while Spark
+  * analyzes the statement.
   */
 object DialectRewriter {
 
@@ -29,8 +27,6 @@ object DialectRewriter {
   // path, optional glob tail, case-insensitive, ' or " quotes.
   private val ReadParquetRe: Regex =
     """(?i)read_parquet\(['"]s3://([^/'"]+)/([^'"]+?)/?\*?\*?/?\*?\.parquet['"]\)""".r
-
-  private val viewCounter = new AtomicLong(0)
 
   /** Rewrite 1: legacy read_parquet globs to the Iceberg surface. */
   def convertReadParquet(sql: String, config: ConnectionConfig): String =
@@ -46,69 +42,39 @@ object DialectRewriter {
     })
 
   // `iceberg_catalog.<ns>.<table>` references and the reference's
-  // suggested `SHOW TABLES FROM iceberg_catalog.<ns>` probe, resolved
-  // through the REST catalog (A9). Identifier charset is enforced on the
-  // TABLE NAMES RETURNED BY THE CATALOG too — a hostile catalog response
-  // must not become a SQL fragment.
+  // suggested `SHOW TABLES FROM iceberg_catalog.<ns>` probe (A9).
   private val CatalogRefRe: Regex =
     """(?i)\biceberg_catalog\.([A-Za-z_][A-Za-z0-9_]*)\.([A-Za-z_][A-Za-z0-9_]*)""".r
   private val ShowTablesRe: Regex =
     """(?i)SHOW\s+TABLES\s+(?:FROM|IN)\s+iceberg_catalog\.([A-Za-z_][A-Za-z0-9_]*)""".r
-  private val SafeIdentRe = "^[A-Za-z_][A-Za-z0-9_]*$".r
 
   /** Rewrite 3 (REST catalogs only): `SHOW TABLES FROM iceberg_catalog.ns`
-    * becomes a (namespace, tableName) listing view over the catalog's
-    * table list, and each `iceberg_catalog.ns.tbl` reference becomes a
-    * temp view over the table's REST-loaded `metadata-location` via the
-    * IcebergLite chain — the analog of the reference's ATTACH'd catalog
+    * becomes `SELECT namespace, tableName FROM iceberg_catalog_tables('ns')`
+    * and each `iceberg_catalog.ns.tbl` reference becomes
+    * `iceberg_catalog_scan('ns', 'tbl')`: table functions
+    * ([[TableFunctions]]) that reach the catalog while Spark analyzes the
+    * statement, the analog of the reference's ATTACH'd catalog
     * (main.py:317-358).
-    *
-    * TEXT-ONLY: substitutes generated view names and returns the binders
-    * that perform the catalog HTTP fetches, metadata/footer IO, and temp-
-    * view creation. Callers validate the rewritten SQL first, so a
-    * statement the guard rejects triggers no network or filesystem side
-    * effects. These are the only temp views a request creates: a reference
-    * needs the request's catalog config, which a table-function builder
-    * cannot see.
     */
-  def plan(spark: SparkSession, sql: String,
-      config: ConnectionConfig): (String, Seq[() => Unit]) = {
-    if (config.catalogType != "rest" ||
-        !sql.toLowerCase(java.util.Locale.ROOT).contains("iceberg_catalog."))
-      return (sql, Nil)
-    lazy val client = graft.sources.RestCatalogClient.fromConfig(config)
-    val binders = Seq.newBuilder[() => Unit]
-    val afterShow = replaceOutsideLiterals(ShowTablesRe, sql)(m => {
-      val ns = m.group(1)
-      val view = s"graft_iceberg_catalog_listing_${viewCounter.incrementAndGet()}"
-      binders += (() => {
-        // Identifier charset is enforced on the names RETURNED by the
-        // catalog too — a hostile catalog response must not become a SQL
-        // fragment (they land in a DataFrame here, but stay consistent
-        // with the reference-shape listing).
-        val names = client.listTables(ns).filter(SafeIdentRe.matches)
-        spark.createDataFrame(names.map(n => (ns, n)))
-          .toDF("namespace", "tableName")
-          .createOrReplaceTempView(view)
-      })
-      Regex.quoteReplacement(s"SELECT namespace, tableName FROM $view")
-    })
-    val bound = replaceOutsideLiterals(CatalogRefRe, afterShow)(m => {
-      val (ns, tbl) = (m.group(1), m.group(2))
-      val view = s"graft_iceberg_catalog_${viewCounter.incrementAndGet()}"
-      binders += (() => {
-        val loc = client.metadataLocation(ns, tbl)
-        val tableRoot = loc.replaceAll("/metadata/[^/]+$", "")
-        IcebergLite.scan(spark, tableRoot, metadataLocation = Some(loc))
-          .createOrReplaceTempView(view)
-      })
-      Regex.quoteReplacement(view)
-    })
-    (bound, binders.result())
-  }
+  def convertCatalogRefs(sql: String, config: ConnectionConfig): String =
+    if (config.catalogType != "rest") sql
+    else {
+      val afterShow = replaceOutsideLiterals(ShowTablesRe, sql)(m => Regex.quoteReplacement(
+        s"SELECT namespace, tableName FROM iceberg_catalog_tables('${m.group(1)}')"))
+      replaceOutsideLiterals(CatalogRefRe, afterShow)(m => Regex.quoteReplacement(
+        s"iceberg_catalog_scan('${m.group(1)}', '${m.group(2)}')"))
+    }
+
+  /** [[convertCatalogRefs]] with no binders. Its only caller is
+    * perfbench's traced replay (`Trace.engine`); the ROADMAP item 1
+    * `[benchmark]` change, which makes the trace read the engine's own
+    * phases, deletes it.
+    */
+  def plan(spark: SparkSession, sql: String, config: ConnectionConfig)
+      : (String, Seq[() => Unit]) = (convertCatalogRefs(sql, config), Nil)
 
   /** Index ranges of string literals, quoted identifiers, and comments —
-    * rewrites must not fire (and bind IO!) for text that is not code,
+    * rewrites must not fire (and reach a catalog) for text that is not code,
     * e.g. `-- iceberg_catalog.ns.t` or a data literal mentioning
     * `read_parquet('s3://...')`.
     */
@@ -132,8 +98,7 @@ object DialectRewriter {
   }
 
   /** replaceAllIn, except matches that START inside a protected range are
-    * left untouched (both the text and — crucially — the side-effecting
-    * binder that `f` would have registered).
+    * left untouched.
     */
   private def replaceOutsideLiterals(re: Regex, sql: String)(
       f: Regex.Match => String): String = {

@@ -25,22 +25,22 @@ import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, Tabl
   * to delete), so each pooled session is built once and reused:
   *   - a session serves only requests with the same root session and
   *     EXACTLY the same storage settings (compared for equality, never by
-  *     hash), so two credential sets never share one;
-  *   - before it goes back, the temp views the request's REST catalog
-  *     references created are dropped through the session catalog (no
-  *     shared cache entry is touched) and its execution-mode confs are
-  *     restored (below); a session that cannot be restored is discarded;
+  *     hash), so two credential sets never share one; a REST catalog's URI
+  *     and token are among those settings;
+  *   - before it goes back, its execution-mode confs are restored (below);
+  *     a session that cannot be restored is discarded. A request creates
+  *     no temp view, so there is nothing else to undo;
   *   - at most [[RequestThreads]] sessions wait idle.
   * Still per request: config validation, the delete guard, the latest-
   * metadata listing of every scanned table under the request's own
   * settings (the parsed metadata and manifests come from
   * `IcebergLite.metadataCache`), rewriting, validation, analysis and
-  * execution. `iceberg_scan('path')` and the other path-addressed table
-  * functions are bound during analysis ([[TableFunctions]], registered
-  * once per pooled session); only REST catalog references still bind
-  * through temp views. Credential isolation on the shared Hadoop
-  * conf is the known hard part (SURVEY.md §7.3): storage settings live
-  * only on the session's own conf ([[applyStorageSettings]]).
+  * execution. `iceberg_scan('path')`, the other path-addressed table
+  * functions and REST catalog references are bound during analysis
+  * ([[TableFunctions]], registered once per pooled session). Credential
+  * isolation on the shared Hadoop conf is the known hard part (SURVEY.md
+  * §7.3): storage settings live only on the session's own conf
+  * ([[applyStorageSettings]]).
   *
   * Execution mode: Spark compiles generated Java (Janino) for every
   * distinct plan shape, and its codegen cache holds 100 classes, so a
@@ -178,9 +178,9 @@ object Engine {
     }
 
     // Rewrite text-only, validate, THEN bind: a statement the guard
-    // rejects must not trigger catalog HTTP fetches, Iceberg metadata or
-    // footer IO, or temp-view creation as side effects. The table
-    // functions bind inside spark.sql, after validation.
+    // rejects must not trigger catalog HTTP fetches or Iceberg metadata or
+    // footer IO as side effects. The table functions bind inside
+    // spark.sql, after validation.
     val converted = DialectRewriter.convertDuckDbDialect(
       DialectRewriter.convertReadParquet(sql, cfg))
     // Known-DuckDB functions with no safe Spark mapping get a precise 400
@@ -189,19 +189,15 @@ object Engine {
     // on Spark.
     try DialectRewriter.rejectUnknownDuckFunctions(converted)
     catch { case e: IllegalArgumentException => throw EngineError(400, e.getMessage) }
-    // REST catalog references become temp views; no other rewrite binds.
-    val (bound, binders) = DialectRewriter.plan(spark, converted, cfg)
+    val rewritten = DialectRewriter.convertCatalogRefs(converted, cfg)
 
-    SqlGuard.validate(spark, bound) match {
+    SqlGuard.validate(spark, rewritten) match {
       case Left(r) => throw EngineError(400, r.message)
       case Right(_) => ()
     }
 
-    try binders.foreach(_.apply())
-    catch { case e: Exception => throw EngineError(400, s"Query execution failed: ${e.getMessage}") }
-
     val df =
-      try spark.sql(bound)
+      try spark.sql(rewritten)
       catch { case e: Exception => throw EngineError(400, s"Query execution failed: ${firstLine(e)}") }
     val input = inputRows(df.queryExecution.analyzed)
     val mode = ExecutionMode(input, input.exists(_ < interpretBelowRows))
@@ -335,16 +331,19 @@ object Engine {
   def applyStorageSettings(spark: SparkSession, cfg: ConnectionConfig): Unit =
     storageSettings(cfg).foreach { case (k, v) => spark.conf.set(k, v) }
 
-  /** The session conf entries [[applyStorageSettings]] sets: empty unless
-    * the connection names an `s3://` table path.
+  /** The session conf entries [[applyStorageSettings]] sets: the S3A
+    * overrides when the connection names an `s3://` table path, and the
+    * REST catalog entries the catalog table functions read.
     */
-  def storageSettings(cfg: ConnectionConfig): Map[String, String] =
-    cfg.tablePath.filter(_.startsWith("s3://")).fold(Map.empty[String, String]) { p =>
+  def storageSettings(cfg: ConnectionConfig): Map[String, String] = {
+    val s3a = cfg.tablePath.filter(_.startsWith("s3://")).fold(Map.empty[String, String]) { p =>
       val bucket = p.stripPrefix("s3://").takeWhile(_ != '/')
       ConnectionConfig.s3aSettings(cfg).map { case (k, v) =>
         k.replace("fs.s3a.", s"fs.s3a.bucket.$bucket.") -> v
       }
     }
+    s3a ++ TableFunctions.catalogSettings(cfg)
+  }
 
   /** Real scan-size metric off the executed plan (vs the reference's
     * acknowledged `len(str(rows)) * 2` placeholder): sum of file-scan
@@ -471,17 +470,12 @@ private[gateway] object SessionPool {
     new Pooled(key, s, compiled)
   }
 
-  /** Readies a session for its next request; false if that failed, so
-    * the session is discarded:
-    *   - drops every local temp view: SqlGuard admits no CREATE VIEW, so
-    *     each was made by a REST catalog reference's binder. The session
-    *     catalog's drop leaves the shared cache manager alone, unlike
-    *     `spark.catalog`'s;
-    *   - sets its compiled-mode confs again, whatever mode it ran in.
+  /** Readies a session for its next request by setting its compiled-mode
+    * confs again, whatever mode it ran in; false if that failed, so the
+    * session is discarded. Nothing else needs undoing: SqlGuard admits no
+    * statement that creates a view or changes a conf, and the gateway
+    * creates none itself.
     */
-  private def restore(p: Pooled): Boolean = Try {
-    val catalog = p.session.sessionState.catalog
-    catalog.listLocalTempViews("*").foreach(v => catalog.dropTempView(v.table))
-    p.compiled.foreach { case (k, v) => p.session.conf.set(k, v) }
-  }.isSuccess
+  private def restore(p: Pooled): Boolean =
+    Try(p.compiled.foreach { case (k, v) => p.session.conf.set(k, v) }).isSuccess
 }

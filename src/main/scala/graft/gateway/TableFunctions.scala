@@ -7,21 +7,26 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, NamedArgumentExpression}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
-import graft.sources.IcebergLite
+import graft.sources.{IcebergLite, RestCatalogClient}
 
 /** DuckDB's path-addressed table functions as Spark table-valued functions:
   * `iceberg_scan('path')` (the reference's surface, main.py:440,464,556),
   * `iceberg_changes`, the `iceberg_*` metadata relations, and the gated
-  * flat-file readers. Each builder runs while Spark analyzes the statement
-  * and returns the logical plan of the DataFrame [[IcebergLite]] or
-  * `spark.read` builds for its literal arguments.
+  * flat-file readers; plus the two REST catalog functions that
+  * `iceberg_catalog.ns.tbl` and `SHOW TABLES FROM iceberg_catalog.ns` are
+  * rewritten to ([[DialectRewriter.convertCatalogRefs]]). Each builder
+  * runs while Spark analyzes the statement and returns the logical plan of
+  * the DataFrame [[IcebergLite]] or `spark.read` builds for its literal
+  * arguments.
   *
   * A builder reads through `SparkSession.active`, the session analyzing
   * the statement, never one it holds: every session registers the same
   * builders and a cloned session carries its parent's, so a held session
   * would read under another request's storage settings. SqlGuard
   * validates the parsed statement before analysis, so a rejected
-  * statement reaches no builder and does no IO.
+  * statement reaches no builder and does no IO. The catalog functions
+  * read the request's catalog from the same session's conf
+  * ([[catalogSettings]]).
   *
   * Trust model: paths reach the readers exactly as the reference's DuckDB
   * takes them; the gateway can read what its process can read. The
@@ -39,6 +44,21 @@ object TableFunctions {
     }
   }
 
+  // The request's REST catalog on its session's conf. The token key
+  // contains "token", so Spark's default `spark.redaction.regex` hides it.
+  private val CatalogUriKey = "graft.catalog.uri"
+  private val CatalogTokenKey = "graft.catalog.token"
+
+  /** The session conf entries the catalog functions read: the URI and
+    * bearer token of a REST config's `catalogEndpoint`, none otherwise.
+    * `Engine.storageSettings` includes them, so they are part of the
+    * session pool's key.
+    */
+  def catalogSettings(cfg: ConnectionConfig): Map[String, String] =
+    cfg.catalogEndpoint.filter(uri => cfg.catalogType == "rest" && uri.nonEmpty)
+      .fold(Map.empty[String, String])(uri =>
+        Map(CatalogUriKey -> uri) ++ RestCatalogClient.token(cfg).map(CatalogTokenKey -> _))
+
   private val builders: Seq[(String, Seq[Expression] => DataFrame)] = {
     def metadata(fn: String, relation: (SparkSession, String) => DataFrame) =
       fn -> ((args: Seq[Expression]) =>
@@ -55,6 +75,8 @@ object TableFunctions {
     Seq(
       "iceberg_scan" -> icebergScan _,
       "iceberg_changes" -> icebergChanges _,
+      "iceberg_catalog_scan" -> catalogScan _,
+      "iceberg_catalog_tables" -> catalogTables _,
       metadata("iceberg_metadata", IcebergLite.metadataRelation),
       metadata("iceberg_snapshots", IcebergLite.snapshotsRelation),
       metadata("iceberg_files", IcebergLite.filesRelation),
@@ -103,6 +125,50 @@ object TableFunctions {
     val from = a.getOrElse("from_snapshot", throw usage(fn, "needs from_snapshot"))
     IcebergLite.incrementalScan(SparkSession.active, path(fn, a),
       long(fn, "from_snapshot", from), a.get("to_snapshot").map(long(fn, "to_snapshot", _)))
+  }
+
+  /** `iceberg_catalog_scan('ns', 'tbl')`: the table's `metadata-location`
+    * from the REST catalog, read through the IcebergLite chain.
+    */
+  private def catalogScan(args: Seq[Expression]): DataFrame = {
+    val Seq(ns, tbl) = identifiers("iceberg_catalog_scan", args, Seq("namespace", "table"))
+    val loc = catalog().metadataLocation(ns, tbl)
+    IcebergLite.scan(SparkSession.active, loc.replaceAll("/metadata/[^/]+$", ""),
+      metadataLocation = Some(loc))
+  }
+
+  /** `iceberg_catalog_tables('ns')`: (namespace, tableName) rows for the
+    * tables the REST catalog lists. Names outside the identifier charset
+    * are dropped: a hostile catalog response must not become a table name
+    * a user then pastes into SQL.
+    */
+  private def catalogTables(args: Seq[Expression]): DataFrame = {
+    val Seq(ns) = identifiers("iceberg_catalog_tables", args, Seq("namespace"))
+    val names = catalog().listTables(ns).filter(SafeIdentRe.matches)
+    SparkSession.active.createDataFrame(names.map(n => (ns, n)))
+      .toDF("namespace", "tableName")
+  }
+
+  private def catalog(): RestCatalogClient = {
+    val conf = SparkSession.active.conf
+    RestCatalogClient(conf.getOption(CatalogUriKey), conf.getOption(CatalogTokenKey))
+  }
+
+  private val SafeIdentRe = "^[A-Za-z_][A-Za-z0-9_]*$".r
+
+  /** Positional string-literal arguments, one per name in `params`, each
+    * in the charset `iceberg_catalog.ns.tbl` allows, so a direct call
+    * reaches no catalog path the dotted form cannot.
+    */
+  private def identifiers(fn: String, args: Seq[Expression],
+      params: Seq[String]): Seq[String] = {
+    if (args.length != params.length)
+      throw usage(fn, s"takes ${params.mkString("(", ", ", ")")}")
+    params.zip(args).map { case (p, e) =>
+      val v = string(fn, p, e)
+      if (!SafeIdentRe.matches(v)) throw usage(fn, s"$p '$v' is not an identifier")
+      v
+    }
   }
 
   /** A call's arguments by parameter name: the first positional one is

@@ -88,10 +88,16 @@ object RestCatalogClient {
     * bearer token `accessKey:secretKey` (the shape the reference passes as
     * its catalog TOKEN, main.py:339-345).
     */
-  def fromConfig(c: ConnectionConfig): RestCatalogClient = {
-    val endpoint = c.catalogEndpoint.filter(_.nonEmpty).getOrElse(
-      throw CatalogError("catalogEndpoint required for REST catalog"))
-    val tok = Some(s"${c.accessKey}:${c.secretKey}").filter(_ != ":")
-    new RestCatalogClient(endpoint, tok)
-  }
+  def fromConfig(c: ConnectionConfig): RestCatalogClient =
+    apply(c.catalogEndpoint.filter(_.nonEmpty), token(c))
+
+  def token(c: ConnectionConfig): Option[String] =
+    Some(s"${c.accessKey}:${c.secretKey}").filter(_ != ":")
+
+  /** Client for `endpoint`; a [[CatalogError]] naming `catalogEndpoint`
+    * when there is none.
+    */
+  def apply(endpoint: Option[String], token: Option[String]): RestCatalogClient =
+    new RestCatalogClient(
+      endpoint.getOrElse(throw CatalogError("catalogEndpoint required for REST catalog")), token)
 }

@@ -1,5 +1,7 @@
 package graft.gateway
 
+import java.net.InetSocketAddress
+import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -13,7 +15,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkFixture, Tables}
-import graft.sources.{IcebergLiteFileIndex, IcebergLiteWriter}
+import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter}
 
 /** The per-request execution mode: statements over few exact input rows
   * run interpreted (nothing compiles) without AQE on one shuffle
@@ -35,18 +37,22 @@ class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
     }.toMap
   }
 
-  private def run(sql: String, interpretBelowRows: Long = Engine.InterpretBelowRows)
-      : (Engine.QueryResult, Engine.ExecutionMode) = {
+  private def run(sql: String, interpretBelowRows: Long = Engine.InterpretBelowRows,
+      config: ConnectionConfig = cfg): (Engine.QueryResult, Engine.ExecutionMode) = {
     var mode: Option[Engine.ExecutionMode] = None
-    val r = Engine.executeWith(spark, sql, cfg, Engine.MaxRowLimit, m => mode = Some(m),
+    val r = Engine.executeWith(spark, sql, config, Engine.MaxRowLimit, m => mode = Some(m),
       interpretBelowRows)
     (r, mode.get)
   }
 
   /** Executed plans of the `collect`s run on the session the next request
-    * with `cfg` borrows (the newest idle one for its settings).
+    * with `config` borrows (the newest idle one for its settings).
     */
-  private def withPlans[A](body: ConcurrentLinkedQueue[QueryExecution] => A): A = {
+  private def withPlans[A](body: ConcurrentLinkedQueue[QueryExecution] => A): A =
+    withPlansFor(cfg)(body)
+
+  private def withPlansFor[A](config: ConnectionConfig)(
+      body: ConcurrentLinkedQueue[QueryExecution] => A): A = {
     val seen = new ConcurrentLinkedQueue[QueryExecution]()
     // Executions are numbered as they are created. An earlier request's
     // event can still be on the listener bus; only later ones count.
@@ -56,7 +62,7 @@ class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
         if (funcName == "collect" && qe.id > after) seen.add(qe)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val session = SessionPool.withSession(spark, Engine.storageSettings(cfg)) { s =>
+    val session = SessionPool.withSession(spark, Engine.storageSettings(config)) { s =>
       s.listenerManager.register(listener)
       after = s.range(1).queryExecution.id
       s
@@ -268,5 +274,31 @@ class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
       assert(analyzed.collect { case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
         fs.location.isInstanceOf[IcebergLiteFileIndex] } == Seq(true))
     }
+  }
+
+  test("a REST catalog reference's analyzed plan reads the table with no view in between") {
+    val loc = IcebergLite.latestMetadataPath(
+      spark.sparkContext.hadoopConfiguration, tables("region")).get.toString
+    val server = HttpApi.createServer(new InetSocketAddress("127.0.0.1", 0))
+    server.createContext("/v1/namespaces/demo/tables/region", ex => {
+      val body = s"""{"metadata-location":"$loc"}""".getBytes(StandardCharsets.UTF_8)
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body)
+      ex.close()
+    })
+    server.start()
+    try {
+      val rest = cfg.copy(catalogType = "rest",
+        catalogEndpoint = Some(s"http://127.0.0.1:${server.getAddress.getPort}"))
+      withPlansFor(rest) { seen =>
+        val (r, mode) = run("SELECT COUNT(*) AS n FROM iceberg_catalog.demo.region", config = rest)
+        assert(r.rows == Seq(Seq(5L)))
+        assert(mode == Engine.ExecutionMode(Right(5L), interpreted = true))
+        val analyzed = nextExecution(seen).analyzed
+        assert(analyzed.collectWithSubqueries { case v: View => v }.isEmpty)
+        assert(analyzed.collect { case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+          fs.location.isInstanceOf[IcebergLiteFileIndex] } == Seq(true))
+      }
+    } finally server.stop(0)
   }
 }

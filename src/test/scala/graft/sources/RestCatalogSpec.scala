@@ -134,4 +134,74 @@ class RestCatalogSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterA
     assert(r.rows == Seq(Seq("iceberg_catalog.demo.movies", "SHOW TABLES FROM iceberg_catalog.demo")))
     assert(requests.get == 0)
   }
+
+  test("a rejected CREATE VIEW or INSERT naming a catalog table sends no catalog request") {
+    requests.set(0)
+    Seq(
+      "CREATE VIEW v AS SELECT * FROM iceberg_catalog.demo.movies",
+      "INSERT INTO t SELECT * FROM iceberg_catalog.demo.movies").foreach { sql =>
+      val e = intercept[Engine.EngineError](Engine.executeQuery(spark, sql, cfg()))
+      assert(e.status == 400, e.detail)
+    }
+    assert(requests.get == 0)
+  }
+
+  test("a SELECT over one catalog reference sends exactly one LoadTable request") {
+    requests.set(0)
+    val r = Engine.executeQuery(spark,
+      "SELECT COUNT(*) AS n FROM iceberg_catalog.demo.movies", cfg())
+    assert(r.rows == Seq(Seq(25L)))
+    assert(requests.get == 1)
+  }
+
+  test("a wrong token gets the catalog's 401 as a 400; the good token still works after it") {
+    val sql = "SELECT COUNT(*) AS n FROM iceberg_catalog.demo.movies"
+    assert(Engine.executeQuery(spark, sql, cfg()).rows == Seq(Seq(25L)))
+    val e = intercept[Engine.EngineError](Engine.executeQuery(spark, sql, cfg(sk = "wrong")))
+    assert(e.status == 400 && e.detail.contains("401"), e.detail)
+    assert(Engine.executeQuery(spark, sql, cfg()).rows == Seq(Seq(25L)))
+  }
+
+  test("a REST config without catalogEndpoint runs SELECT 1; a catalog reference names the gap") {
+    val noEndpoint = cfg().copy(catalogEndpoint = None)
+    assert(Engine.executeQuery(spark, "SELECT 1 AS one", noEndpoint).rows == Seq(Seq(1)))
+    Seq(
+      "SELECT * FROM iceberg_catalog.demo.movies" -> noEndpoint,
+      "SHOW TABLES FROM iceberg_catalog.demo" -> noEndpoint,
+      // A direct call on a connection with no REST catalog at all.
+      "SELECT * FROM iceberg_catalog_scan('demo', 'movies')" -> cfg().copy(catalogType = "none")
+    ).foreach { case (sql, c) =>
+      val e = intercept[Engine.EngineError](Engine.executeQuery(spark, sql, c))
+      assert(e.status == 400 && e.detail.contains("catalogEndpoint required"), e.detail)
+    }
+  }
+
+  test("direct catalog function calls take identifiers only; listed names are filtered") {
+    requests.set(0)
+    Seq(
+      "iceberg_catalog_scan('demo', '../movies')" ->
+        "iceberg_catalog_scan: table '../movies' is not an identifier",
+      "iceberg_catalog_scan('demo/tables', 'movies')" ->
+        "iceberg_catalog_scan: namespace 'demo/tables' is not an identifier",
+      "iceberg_catalog_tables('demo', 'x')" -> "iceberg_catalog_tables: takes (namespace)",
+      "iceberg_catalog_tables(concat('de', 'mo'))" ->
+        "iceberg_catalog_tables: namespace must be a string literal").foreach {
+      case (call, reason) =>
+        val e = intercept[Engine.EngineError](
+          Engine.executeQuery(spark, s"SELECT * FROM $call", cfg()))
+        assert(e.status == 400 && e.detail.contains(reason), e.detail)
+    }
+    assert(requests.get == 0)
+    server.createContext("/v1/namespaces/hostile/tables", ex => {
+      requests.incrementAndGet()
+      val body = """{"identifiers":[{"namespace":["hostile"],"name":"ok_t"},""" +
+        """{"namespace":["hostile"],"name":"x') UNION SELECT 1 --"}]}"""
+      val bytes = body.getBytes(StandardCharsets.UTF_8)
+      ex.sendResponseHeaders(200, bytes.length)
+      ex.getResponseBody.write(bytes)
+      ex.close()
+    })
+    val r = Engine.executeQuery(spark, "SHOW TABLES IN iceberg_catalog.hostile", cfg())
+    assert(r.rows.map(_.toList) == Seq(List("hostile", "ok_t")))
+  }
 }
