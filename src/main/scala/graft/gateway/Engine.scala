@@ -2,13 +2,16 @@ package graft.gateway
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.LocalTasks
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.catalyst.optimizer.InlineCTE
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, Range}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{CoalesceExec, CollectLimitExec, SQLExecution, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.internal.SQLConf
 
 import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, TableInfo}
@@ -60,11 +63,20 @@ import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, Tabl
   *     (each lives 60 s idle), and its plan updates add metrics and plan
   *     copies to the SQL status store. One partition is what AQE would
   *     coalesce a small shuffle to anyway, and a one-partition range
-  *     partitioner skips its sampling job.
+  *     partitioner skips its sampling job. Joins do not broadcast, so
+  *     every join's inputs meet in that one partition;
+  *   - on the request thread, not as Spark jobs ([[collectInThread]]):
+  *     each one-partition shuffle becomes a coalesce, and a root limit
+  *     reads its input as one partition, so when no shuffle is left
+  *     (an explicit `REPARTITION(8)` keeps one) the partitions are computed
+  *     one after another on this thread, each as a task
+  *     ([[org.apache.spark.graft.LocalTasks]]). No job, stage, task-binary
+  *     broadcast or closure cleaning is paid; a subquery or a broadcast
+  *     hint still runs its own job while the plan is prepared.
   * At or above the threshold, or when any leaf's size is unknown (a plain
-  * parquet path, a flat file), it runs compiled and adaptive, on the
-  * shuffle-partition count the pooled session was created with
-  * ([[compiledConfs]]).
+  * parquet path, a flat file), it runs compiled and adaptive, as Spark
+  * jobs, on the shuffle-partition count and broadcast threshold the
+  * pooled session was created with ([[compiledConfs]]).
   *
   * Restore rule: a pooled session is lent in compiled mode — set when it
   * is created, and set again before it goes back to the pool, whatever
@@ -73,7 +85,8 @@ import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, Tabl
   * analysis) and no mode carries over to the next request. A small
   * statement switches only after its analysis. Task threads read the
   * confs from the request's own job properties, so concurrent requests
-  * in different modes do not interfere.
+  * in different modes do not interfere; an in-thread task reads them from
+  * the thread's properties the same way.
   */
 object Engine {
 
@@ -101,24 +114,29 @@ object Engine {
 
   /** The confs a statement below [[InterpretBelowRows]] runs under. The
     * codegen pair goes together: whole-stage codegen alone off would still
-    * compile every expression through the same small cache.
+    * compile every expression through the same small cache. A broadcast
+    * join would run a job to build its table; without it a join's inputs
+    * meet in the one shuffle partition, which runs in the request thread.
     */
   private val SmallStatementConfs: Map[String, String] = Map(
     SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
     SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.NO_CODEGEN.toString,
     SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false",
-    SQLConf.SHUFFLE_PARTITIONS.key -> "1")
+    SQLConf.SHUFFLE_PARTITIONS.key -> "1",
+    SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.key -> "-1")
 
   /** The same confs as [[SmallStatementConfs]] for a compiled statement on
-    * a session created with `shufflePartitions`. Set explicitly, never
-    * unset: an unset shuffle-partition count on a child session falls
+    * a session created with `shufflePartitions` and `broadcastThreshold`.
+    * Set explicitly, never unset: an unset value on a child session falls
     * back to Spark's default, not to the root session's value.
     */
-  private[gateway] def compiledConfs(shufflePartitions: String): Map[String, String] = Map(
+  private[gateway] def compiledConfs(shufflePartitions: String,
+      broadcastThreshold: String): Map[String, String] = Map(
     SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "true",
     SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.FALLBACK.toString,
     SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "true",
-    SQLConf.SHUFFLE_PARTITIONS.key -> shufflePartitions)
+    SQLConf.SHUFFLE_PARTITIONS.key -> shufflePartitions,
+    SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.key -> broadcastThreshold)
 
   /** How one statement runs. `inputRows` is the exact sum over its leaves,
     * or the name of the first leaf whose row count is unknown.
@@ -127,16 +145,23 @@ object Engine {
     def name: String = if (interpreted) "interpreted" else "compiled"
   }
 
+  /** Where a statement's plan ran: on the request thread, or as Spark jobs. */
+  final case class Ran(inThread: Boolean) {
+    def name: String = if (inThread) "thread" else "jobs"
+  }
+
   /** Runs one gateway statement; `onMode` hears the execution mode once
-    * the statement is analyzed (a statement that fails earlier has none).
+    * the statement is analyzed, and `onRan` where it runs once its plan is
+    * ready (a statement that fails earlier has none).
     */
   def executeQuery(
       root: SparkSession,
       sql: String,
       config: ConnectionConfig,
       rowLimit: Int = DefaultRowLimit,
-      onMode: ExecutionMode => Unit = _ => ()): QueryResult =
-    executeWith(root, sql, config, rowLimit, onMode, InterpretBelowRows)
+      onMode: ExecutionMode => Unit = _ => (),
+      onRan: Ran => Unit = _ => ()): QueryResult =
+    executeWith(root, sql, config, rowLimit, onMode, InterpretBelowRows, onRan)
 
   /** [[executeQuery]] with the interpretation threshold as a parameter, so
     * tests can force either mode.
@@ -147,9 +172,12 @@ object Engine {
       config: ConnectionConfig,
       rowLimit: Int,
       onMode: ExecutionMode => Unit,
-      interpretBelowRows: Long): QueryResult = {
+      interpretBelowRows: Long,
+      onRan: Ran => Unit = _ => ()): QueryResult = {
     if (rowLimit > MaxRowLimit)
       throw EngineError(400, s"rowLimit must be <= $MaxRowLimit")
+    if (rowLimit < 1)
+      throw EngineError(400, "rowLimit must be >= 1")
     // Bounded-cache contract for the long-running gateway: any
     // intermediate an operator persists during this request (tracked via
     // CacheScope) is released once the rows are collected — a request
@@ -163,13 +191,13 @@ object Engine {
         case Failure(e) => throw EngineError(400, e.getMessage)
       }
       SessionPool.withSession(root, storageSettings(cfg))(spark =>
-        run(spark, sql, cfg, rowLimit, t0, onMode, interpretBelowRows))
+        run(spark, sql, cfg, rowLimit, t0, onMode, interpretBelowRows, onRan))
     } finally graft.ops.CacheScope.releaseCurrent()
   }
 
   private def run(spark: SparkSession, sql: String, cfg: ConnectionConfig,
       rowLimit: Int, t0: Long, onMode: ExecutionMode => Unit,
-      interpretBelowRows: Long): QueryResult = {
+      interpretBelowRows: Long, onRan: Ran => Unit): QueryResult = {
     // Delete-guard on the configured direct table path before every query
     // (reference main.py:575-576). Probe failures degrade inside.
     cfg.tablePath.foreach { p =>
@@ -212,8 +240,10 @@ object Engine {
     val collected = if (injected) limited else limited.limit(MaxRowLimit + 1)
 
     val all =
-      try collected.collect()
-      catch { case e: Exception => throw EngineError(400, s"Query execution failed: ${firstLine(e)}") }
+      try {
+        if (mode.interpreted) collectInThread(collected, onRan)
+        else { onRan(Ran(inThread = false)); collected.collect() }
+      } catch { case e: Exception => throw EngineError(400, s"Query execution failed: ${firstLine(e)}") }
     val rows = if (all.length > MaxRowLimit) all.take(MaxRowLimit) else all
 
     val elapsedMs = (System.nanoTime() - t0) / 1000000
@@ -230,6 +260,39 @@ object Engine {
       stats = QueryStats(elapsedMs, bytes, rows.length.toLong),
       truncated = rows.length >= rowLimit)
   }
+
+  /** `df.collect()` for a small statement: as one query execution, so
+    * listeners, the SQL status store and conf propagation see what they
+    * see for `collect`, but with the plan run on this thread when
+    * [[inThreadPlan]] leaves no shuffle in it, and as Spark jobs otherwise.
+    */
+  private def collectInThread(df: DataFrame, onRan: Ran => Unit): Array[Row] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      val decode = ExpressionEncoder(RowEncoder.encoderFor(df.schema)).resolveAndBind()
+        .createDeserializer()
+      val plan = inThreadPlan(qe.executedPlan)
+      val rdd = plan.execute()
+      val inThread = LocalTasks.narrow(rdd)
+      onRan(Ran(inThread))
+      if (inThread) LocalTasks.run(rdd)(_.map(decode).toArray).flatten.toArray
+      else plan.executeCollect().map(decode)
+    }
+  }
+
+  /** A copy of a small statement's executed plan with no stage boundary
+    * it can do without: every one-partition shuffle becomes a coalesce of
+    * its input, and a root limit reads its input as one partition instead
+    * of shuffling it to one.
+    */
+  private def inThreadPlan(plan: SparkPlan): SparkPlan =
+    plan.transformUp {
+      case s: ShuffleExchangeExec if s.numPartitions == 1 => CoalesceExec(1, s.child)
+    } match {
+      case l: CollectLimitExec => l.withNewChildren(Seq(CoalesceExec(1, l.child)))
+      case t: TakeOrderedAndProjectExec => t.withNewChildren(Seq(CoalesceExec(1, t.child)))
+      case p => p
+    }
 
   /** Exact rows read by every leaf of `plan` and of its subqueries, each
     * CTE counted once per reference; Left names the first leaf whose row
@@ -465,7 +528,8 @@ private[gateway] object SessionPool {
     // session, not only one built with GraftExtensions.
     graft.functions.GraftFunctions.register(s)
     key.settings.foreach { case (k, v) => s.conf.set(k, v) }
-    val compiled = Engine.compiledConfs(s.conf.get(SQLConf.SHUFFLE_PARTITIONS.key))
+    val compiled = Engine.compiledConfs(s.conf.get(SQLConf.SHUFFLE_PARTITIONS.key),
+      s.conf.get(SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.key))
     compiled.foreach { case (k, v) => s.conf.set(k, v) }
     new Pooled(key, s, compiled)
   }

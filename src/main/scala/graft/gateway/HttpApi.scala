@@ -72,17 +72,17 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
         case None => (400, JObj("detail" -> JStr("Connection test failed")))
       }
     })
-    server.createContext("/api/query", logged { (ex, onMode) =>
-      handleBody(ex)(body => (200, queryResponseJson(runQuery(body, onMode))))
+    server.createContext("/api/query", logged { (ex, heard) =>
+      handleBody(ex)(body => (200, queryResponseJson(runQuery(body, heard))))
     })
     // CSV export (A14): same request as /api/query, result as a text/csv
     // attachment — the server-side analog of the reference UI's
     // exportResults download (frontend/js/app.js:451-479).
-    server.createContext("/api/query/export", logged { (ex, onMode) =>
+    server.createContext("/api/query/export", logged { (ex, heard) =>
       Try {
         ex.getRequestMethod match {
           case "OPTIONS" => Left((204, JObj()))
-          case "POST" => Right(ResultExport.toCsv(runQuery(readBody(ex), onMode)))
+          case "POST" => Right(ResultExport.toCsv(runQuery(readBody(ex), heard)))
           case _ => Left((405, JObj("detail" -> JStr("Method Not Allowed"))))
         }
       } match {
@@ -172,12 +172,12 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
   // --- plumbing -----------------------------------------------------------
 
   /** The `{sql, connection, rowLimit}` request both query routes take. */
-  private def runQuery(body: Option[JObj],
-      onMode: Engine.ExecutionMode => Unit = _ => ()): Engine.QueryResult = {
+  private def runQuery(body: Option[JObj], heard: Heard): Engine.QueryResult = {
     val obj = body.getOrElse(throw Engine.EngineError(400, "Request body required"))
     val sql = obj.str("sql").getOrElse(throw Engine.EngineError(400, "sql is required"))
     val rowLimit = obj.int("rowLimit").getOrElse(Engine.DefaultRowLimit)
-    Engine.executeQuery(spark, sql, connectionFrom(body), rowLimit, onMode)
+    Engine.executeQuery(spark, sql, connectionFrom(body), rowLimit,
+      m => heard.mode = Some(m), r => heard.ran = Some(r))
   }
 
   private def connectionFrom(body: Option[JObj]): ConnectionConfig = {
@@ -186,24 +186,33 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
     ConnectionConfig.fromJson(conn)
   }
 
+  /** What the engine reported about one request: its execution mode and
+    * where its plan ran.
+    */
+  private final class Heard {
+    var mode: Option[Engine.ExecutionMode] = None
+    var ran: Option[Engine.Ran] = None
+  }
+
   /** A query route that answers with an `X-Request-Id` header and logs one
     * INFO line per request, for "why was this request slow": that id, the
-    * status, the time, and the execution mode the engine chose. Never the
-    * SQL or the connection, which may carry credentials. `serve` returns
-    * the status it sent.
+    * status, the time, the execution mode the engine chose and whether the
+    * plan ran on the request thread or as Spark jobs. Never the SQL or the
+    * connection, which may carry credentials. `serve` returns the status
+    * it sent.
     */
-  private def logged(
-      serve: (HttpExchange, Engine.ExecutionMode => Unit) => Int): HttpHandler =
+  private def logged(serve: (HttpExchange, Heard) => Int): HttpHandler =
     (ex: HttpExchange) => {
       val t0 = System.nanoTime()
       val id = UUID.randomUUID().toString
       ex.getResponseHeaders.set("X-Request-Id", id)
-      var mode: Option[Engine.ExecutionMode] = None
-      val status = serve(ex, m => mode = Some(m))
+      val heard = new Heard
+      val status = serve(ex, heard)
+      val mode = heard.mode
       if (log.isInfoEnabled) log.info(
         s"query id=$id status=$status ms=${(System.nanoTime() - t0) / 1000000} " +
           s"inputRows=${mode.flatMap(_.inputRows.toOption).getOrElse("-")} " +
-          s"mode=${mode.fold("-")(_.name)} " +
+          s"mode=${mode.fold("-")(_.name)} ran=${heard.ran.fold("-")(_.name)} " +
           s"unknownLeaf=${mode.flatMap(_.inputRows.left.toOption).getOrElse("-")}")
     }
 

@@ -49,6 +49,14 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(e.status == 400)
   }
 
+  test("rowLimit below 1 rejected with 400") {
+    Seq(0, -1).foreach { n =>
+      val e = intercept[Engine.EngineError](Engine.executeQuery(spark, regionSql, cfg, rowLimit = n))
+      assert(e.status == 400)
+      assert(e.detail == "rowLimit must be >= 1")
+    }
+  }
+
   test("mutating SQL rejected with 400") {
     val e = intercept[Engine.EngineError](
       Engine.executeQuery(spark, "DROP TABLE x", cfg))

@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -223,6 +224,20 @@ class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
       val grouped = nextPlan(seen)
       assert(grouped.isInstanceOf[AdaptiveSparkPlanExec])
       assert(shufflePartitions(grouped) == Seq(createdPartitions))
+    }
+  }
+
+  test("a join forced compiled right after a small one on the same session still broadcasts") {
+    val join = s"SELECT n_name, r_name FROM iceberg_scan('${tables("nation")}') " +
+      s"JOIN iceberg_scan('${tables("region")}') ON n_regionkey = r_regionkey"
+    def broadcasts(plan: SparkPlan) = Engine.planNodes(plan).exists(_.isInstanceOf[BroadcastHashJoinExec])
+    withPlans { seen =>
+      val (_, small) = run(join)
+      assert(small.interpreted)
+      assert(!broadcasts(nextPlan(seen)))
+      val (_, compiled) = run(join, interpretBelowRows = 0L)
+      assert(!compiled.interpreted)
+      assert(broadcasts(nextPlan(seen)))
     }
   }
 

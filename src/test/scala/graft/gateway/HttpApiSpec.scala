@@ -124,6 +124,15 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     assert(obj(r).str("detail").exists(_.contains("not allowed")))
   }
 
+  test("POST /api/query with rowLimit below 1 -> 400 + detail") {
+    val sql = s"SELECT r_name FROM parquet.`$sf0001/region.parquet`"
+    Seq(0, -1).foreach { n =>
+      val r = post("/api/query", s"""{"sql":"$sql","connection":$connJson,"rowLimit":$n}""")
+      assert(r.statusCode() == 400, n)
+      assert(obj(r).str("detail").contains("rowLimit must be >= 1"), n)
+    }
+  }
+
   test("POST /api/query with invalid JSON -> 400") {
     val r = post("/api/query", "{not json")
     assert(r.statusCode() == 400)
@@ -375,12 +384,12 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     withLogLines { lines =>
       val one = logged(lines, "SELECT 1 AS one")
       assert(one.matches(
-        s"query id=$RequestId status=200 ms=\\d+ inputRows=1 mode=interpreted unknownLeaf=-"), one)
+        s"query id=$RequestId status=200 ms=\\d+ inputRows=1 mode=interpreted ran=thread unknownLeaf=-"), one)
       val flat = logged(lines, s"SELECT COUNT(*) AS n FROM parquet.`$sf0001/region.parquet`")
       assert(flat.matches(
-        s"query id=$RequestId status=200 ms=\\d+ inputRows=- mode=compiled unknownLeaf=InMemoryFileIndex"), flat)
+        s"query id=$RequestId status=200 ms=\\d+ inputRows=- mode=compiled ran=jobs unknownLeaf=InMemoryFileIndex"), flat)
       val refused = logged(lines, "DROP TABLE x")
-      assert(refused.matches(s"query id=$RequestId status=400 ms=\\d+ inputRows=- mode=- unknownLeaf=-"), refused)
+      assert(refused.matches(s"query id=$RequestId status=400 ms=\\d+ inputRows=- mode=- ran=- unknownLeaf=-"), refused)
       assert(!Seq(one, flat, refused).exists(_.contains("s3cr3t")))
     }
   }
@@ -389,16 +398,16 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     val one = s"""{"sql":"SELECT 1 AS one","connection":$connJson}"""
     val refused = s"""{"sql":"DROP TABLE x","connection":$connJson}"""
     withLogLines { lines =>
-      val ids = Seq(("/api/query", one, 200, "1", "interpreted"),
-          ("/api/query/export", one, 200, "1", "interpreted"),
-          ("/api/query", refused, 400, "-", "-"),
-          ("/api/query/export", refused, 400, "-", "-")).map {
-        case (route, body, status, rows, mode) =>
+      val ids = Seq(("/api/query", one, 200, "1", "interpreted", "thread"),
+          ("/api/query/export", one, 200, "1", "interpreted", "thread"),
+          ("/api/query", refused, 400, "-", "-", "-"),
+          ("/api/query/export", refused, 400, "-", "-", "-")).map {
+        case (route, body, status, rows, mode, ran) =>
           val (r, line) = postLogged(lines, route, body)
           assert(r.statusCode() == status, route)
           val id = r.headers().firstValue("X-Request-Id").orElse("")
           assert(id.matches(RequestId), route)
-          assert(line.matches(s"query id=$id status=$status ms=\\d+ inputRows=$rows mode=$mode unknownLeaf=-"),
+          assert(line.matches(s"query id=$id status=$status ms=\\d+ inputRows=$rows mode=$mode ran=$ran unknownLeaf=-"),
             s"$route: $line")
           if (route == "/api/query" && status == 200) {
             assert(obj(r).fields.map(_._1) == Vector("columns", "rows", "stats", "truncated"))
