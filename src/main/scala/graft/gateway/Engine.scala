@@ -70,9 +70,15 @@ import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, Tabl
   *     reads its input as one partition, so when no shuffle is left
   *     (an explicit `REPARTITION(8)` keeps one) the partitions are computed
   *     one after another on this thread, each as a task
-  *     ([[org.apache.spark.graft.LocalTasks]]). No job, stage, task-binary
-  *     broadcast or closure cleaning is paid; a subquery or a broadcast
-  *     hint still runs its own job while the plan is prepared.
+  *     ([[org.apache.spark.graft.LocalTasks]]). No job, stage or
+  *     task-binary broadcast is paid. Two costs stay on this thread: the
+  *     plan's RDDs still clean their closures as they are built
+  *     (`HashAggregateExec` through `mapPartitionsWithIndex`,
+  *     `SortMergeJoinExec` through `zipPartitions`), and each file scan
+  *     still broadcasts its Hadoop conf as its reader is built; an
+  *     Iceberg-lite scan broadcasts it without the entries' source arrays
+  *     ([[graft.sources.IcebergLiteParquetFormat]]). A subquery or a
+  *     broadcast hint still runs its own job while the plan is prepared.
   * At or above the threshold, or when any leaf's size is unknown (a plain
   * parquet path, a flat file), it runs compiled and adaptive, as Spark
   * jobs, on the shuffle-partition count and broadcast threshold the

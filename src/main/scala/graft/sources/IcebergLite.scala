@@ -361,24 +361,41 @@ object IcebergLite {
       case _ => None
     }.filter(fs => fs.nonEmpty && fs.forall(_._1 >= 0))
 
-  /** `parquet.field.id` -> column name from one data file's footer (cached:
-    * Iceberg data files are immutable). Empty when the writer embedded no
-    * field ids.
+  /** One data file's footer as a scan uses it: the schema
+    * `spark.read.parquet(path).schema` gives, and `parquet.field.id` ->
+    * column name (empty when the writer embedded no field ids).
     */
-  private val fieldIdCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[Long, String]]()
+  private[sources] final case class FileFooter(
+      schema: org.apache.spark.sql.types.StructType, fieldIds: Map[Long, String])
 
-  private def parquetFieldIds(conf: Configuration, path: String): Map[Long, String] =
-    fieldIdCache.computeIfAbsent(path, p => {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf))
-      try {
-        import scala.jdk.CollectionConverters._
-        reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .flatMap(t => Option(t.getId).map(id => id.intValue().toLong -> t.getName))
-          .toMap
-      } finally reader.close()
-    })
+  /** Footer per data-file path (Iceberg data files are immutable, so a
+    * path keys identical content for the process lifetime).
+    */
+  private val footerCache = new java.util.concurrent.ConcurrentHashMap[String, FileFooter]()
+
+  /** The footer of the file at `path`, read on this thread under `conf`
+    * and converted as Spark converts it under the session's Parquet
+    * settings, every field nullable as a file source reads it.
+    * `spark.read.parquet` would run a Spark job to read it.
+    */
+  private[sources] def readFooter(spark: SparkSession, conf: Configuration,
+      path: String): FileFooter = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val p = new Path(path)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(p, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val sqlConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+      new ParquetToSparkSchemaConverter(sqlConf)).toNullable
+    val fieldIds = footer.getFileMetaData.getSchema.getFields.asScala
+      .flatMap(t => Option(t.getId).map(id => id.intValue().toLong -> t.getName))
+      .toMap
+    FileFooter(schema, fieldIds)
+  }
 
   /** Field-id projection for evolved tables: when the declared schema and
     * the data files disagree by NAME, a real Iceberg reader projects by
@@ -388,12 +405,11 @@ object IcebergLite {
     * columns / type changes / files without field ids stay refused).
     */
   private def fieldIdRenames(
-      conf: Configuration,
-      headPath: String,
-      fileSchema: org.apache.spark.sql.types.StructType,
+      footer: FileFooter,
       declaredIds: Seq[(Long, String, String)],
       partCols: Seq[String]): Option[Seq[(String, String)]] = {
-    val physIds = parquetFieldIds(conf, headPath)
+    val physIds = footer.fieldIds
+    val fileSchema = footer.schema
     if (physIds.isEmpty) return None
     val physTypes = fileSchema.fields.map(f => f.name -> f.dataType).toMap
     val resolved = declaredIds
@@ -472,12 +488,6 @@ object IcebergLite {
     eligible.maxBy(_._1)._2
   }
 
-  /** Footer schema per data-file path (Iceberg data files are immutable,
-    * so a path keys identical content for the process lifetime).
-    */
-  private val footerSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
   /** Scan the selected snapshot as a DataFrame.
     *
     * The listing goes through [[IcebergLiteFileIndex]], so partition
@@ -541,8 +551,9 @@ object IcebergLite {
     // it to every file (schema guard below refuses drifted tables). Cached
     // per head-file path — a path names immutable content in Iceberg, and
     // re-reading a footer per scan() call is planning overhead at scale.
-    val fileSchema = footerSchemaCache.computeIfAbsent(
-      allData.head.path, p => spark.read.parquet(p).schema)
+    val footer = footerCache.computeIfAbsent(
+      allData.head.path, p => readFooter(spark, conf, p))
+    val fileSchema = footer.schema
 
     // Schema-evolution guard: if the metadata declares a schema and the
     // file columns disagree by name, try field-id projection (renamed
@@ -558,7 +569,7 @@ object IcebergLite {
       if (missing.nonEmpty || extra.nonEmpty) {
         val declaredFieldIds = currentSchemaFieldIds(meta)
         val byId = declaredFieldIds.flatMap(ids =>
-          fieldIdRenames(conf, allData.head.path, fileSchema, ids, partCols))
+          fieldIdRenames(footer, ids, partCols))
         byId match {
           case Some(rs) => renames = rs.filter { case (p, d) => p != d }
           case None =>
@@ -600,8 +611,7 @@ object IcebergLite {
       spark, new Path(tablePath), liteFiles, partitionSchema, statTypes,
       hiddenFields)
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      index, partitionSchema, fileSchema, None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+      index, partitionSchema, fileSchema, None, new IcebergLiteParquetFormat(),
       Map.empty)(spark)
     val base = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .baseRelationToDataFrame(relation)

@@ -12,9 +12,13 @@ import org.apache.spark.util.Utils
 
 /** Computes an RDD's partitions on the calling thread, one after another,
   * each as a task of its own: what `Executor.TaskRunner` and `Task.run` do
-  * around a scheduled task, without the scheduler — no job, no stage, no
-  * task-binary broadcast and no closure cleaning. Only for a lineage with
-  * no shuffle ([[narrow]]): a shuffle's map side needs a stage.
+  * around a scheduled task, without the scheduler — no job, no stage and
+  * no task-binary broadcast, and no cleaning of the function `f`. That is
+  * not all of a statement's fixed cost: the RDDs were built before, and
+  * building them cleans their closures (`mapPartitionsWithIndex`,
+  * `zipPartitions`) and broadcasts each file scan's Hadoop conf. Only for
+  * a lineage with no shuffle ([[narrow]]): a shuffle's map side needs a
+  * stage.
   */
 object LocalTasks {
 
