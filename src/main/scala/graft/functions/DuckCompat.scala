@@ -1,18 +1,21 @@
 package graft.functions
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, FunctionRegistryBase, TableFunctionRegistry}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
 /** DuckDB-compat scalar functions whose semantics depend on the argument
-  * TYPE, so a text-level rename in the gateway's dialect pre-pass cannot
-  * express them (reference backend/main.py:95-100 — "any read-only DuckDB
+  * TYPE (reference backend/main.py:95-100 — "any read-only DuckDB
   * SELECT"): DuckDB's `len` is string length AND list cardinality; its
   * `a[i:j]` slice is 1-based-inclusive substring AND list slice. Each is a
   * [[RuntimeReplaceable]] that dispatches on the resolved child type and
   * rewrites itself to the matching native (codegen'd) expression during
-  * optimization — zero runtime overhead, and Spark-dialect queries are
-  * unaffected because neither name collides with a builtin.
+  * optimization — zero runtime overhead. [[DuckCompat.register]] makes
+  * `len` resolve to [[DuckLen]]; the gateway's dialect pre-pass emits
+  * `duck_slice` for a bracket slice.
   */
 case class DuckLen(child: Expression)
     extends RuntimeReplaceable with UnaryLike[Expression] {
@@ -56,13 +59,78 @@ case class DuckSlice(child: Expression, from: Expression, to: Expression)
     copy(child = newChildren(0), from = newChildren(1), to = newChildren(2))
 }
 
+/** DuckDB function names that Spark resolves as one of its own functions,
+  * registered per session by [[register]]. Argument order and semantics
+  * line up, so each name takes its Spark target's builder and
+  * `ExpressionInfo` from `FunctionRegistry.expressions`, the table Spark's
+  * builtin registry is filled from: a call resolves, and names its column,
+  * exactly as the target would. `string_split_regex` is Spark's `split`
+  * (both take a regex); the literal-delimiter `string_split` family needs
+  * its delimiter quoted and stays a text rewrite in the gateway.
+  */
 object DuckCompat {
-  def lenForArgs(exprs: Seq[Expression]): Expression = {
+
+  private val aliasTargets: Seq[(String, String)] = Seq(
+    "unnest" -> "explode",
+    "list_transform" -> "transform",
+    "list_filter" -> "filter",
+    "generate_series" -> "sequence",
+    "string_split_regex" -> "split",
+    "str_split_regex" -> "split",
+    "list_contains" -> "array_contains",
+    "list_distinct" -> "array_distinct",
+    "list_sort" -> "sort_array",
+    "list_min" -> "array_min",
+    "list_max" -> "array_max",
+    "array_to_string" -> "array_join",
+    "arg_min" -> "min_by",
+    "arg_max" -> "max_by",
+    // Integer epochs of a timestamp argument. DuckDB also overloads
+    // epoch_ms(BIGINT) as ms -> timestamp; that form fails analysis.
+    "epoch_ms" -> "unix_millis",
+    "epoch_us" -> "unix_micros",
+    "list_value" -> "array",
+    "list_concat" -> "concat",
+    "list_reverse" -> "reverse",
+    "list_append" -> "array_append",
+    "list_prepend" -> "array_prepend",
+    // Both find-style matches on two arguments; the 3-argument flags
+    // form fails arity at analysis.
+    "regexp_matches" -> "regexp_like")
+
+  private def lenForArgs(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1, "len expects one argument")
     DuckLen(exprs.head)
   }
   def sliceForArgs(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3, "duck_slice expects (value, from, to)")
     DuckSlice(exprs(0), exprs(1), exprs(2))
+  }
+
+  /** `len` replaces Spark's string-only builtin of that name in the
+    * sessions it is registered in; on strings the two are the same.
+    */
+  private val scalars: Seq[(String, (ExpressionInfo, Seq[Expression] => Expression))] =
+    ("len", (new ExpressionInfo(classOf[DuckLen].getName, "len"), lenForArgs _)) +:
+      aliasTargets.map { case (name, target) => name -> FunctionRegistry.expressions(target) }
+
+  /** Every DuckDB name [[register]] adds. */
+  val names: Seq[String] = scalars.map(_._1)
+
+  /** Registers the DuckDB names in `spark`'s function registry, and
+    * `unnest` in its table function registry too (`FROM unnest(...)`).
+    * A name whose builder is already the one registered here is skipped,
+    * so registering twice replaces nothing.
+    */
+  def register(spark: SparkSession): Unit = {
+    def put[T](registry: FunctionRegistryBase[T], name: String,
+        entry: (ExpressionInfo, Seq[Expression] => T)): Unit = {
+      val id = FunctionIdentifier(name)
+      if (!registry.lookupFunctionBuilder(id).exists(_ eq entry._2))
+        registry.registerFunction(id, entry._1, entry._2)
+    }
+    scalars.foreach { case (name, entry) => put(spark.sessionState.functionRegistry, name, entry) }
+    put(spark.sessionState.tableFunctionRegistry, "unnest",
+      TableFunctionRegistry.logicalPlans("explode"))
   }
 }

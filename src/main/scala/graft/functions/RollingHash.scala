@@ -48,8 +48,9 @@ object RollingHash {
   }
 }
 
-/** SQL registration for graft's custom expressions and the gateway's
-  * table functions (`iceberg_scan`, ...).
+/** SQL registration for graft's custom expressions, the DuckDB function
+  * names ([[DuckCompat]]) and the gateway's table functions
+  * (`iceberg_scan`, ...).
   */
 object GraftFunctions {
 
@@ -77,12 +78,6 @@ object GraftFunctions {
     ("common_extent_packed", CommonExtent.forArgsPacked),
     ("sorted_dot_long", SortedDotLong.forArgs),
     ("bit_length_long", exprs => BitLength(exprs.head)),
-    // Named duck_len, not len: Spark 4 ships a string-only `len` builtin
-    // (alias of length), and overriding it per session would both shadow
-    // a builtin and log a "function replaced" warning on every gateway
-    // request. The dialect pre-pass renames DuckDB's len calls to
-    // duck_len instead.
-    ("duck_len", DuckCompat.lenForArgs),
     ("duck_slice", DuckCompat.sliceForArgs))
 
   def register(spark: SparkSession): Unit = {
@@ -94,6 +89,7 @@ object GraftFunctions {
       if (!fr.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
         fr.createOrReplaceTempFunction(name, builder, "built-in")
     }
+    DuckCompat.register(spark)
     graft.gateway.TableFunctions.register(spark)
   }
 }

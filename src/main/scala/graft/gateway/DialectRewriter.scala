@@ -5,7 +5,7 @@ import scala.util.matching.Regex
 import org.apache.spark.sql.SparkSession
 
 /** SQL-string rewrites performed before parsing, mirroring the reference's
-  * `_convert_to_iceberg_query` (/root/reference/backend/main.py:426-449).
+  * `_convert_to_iceberg_query` (reference backend/main.py:426-449).
   * None fires inside a string literal, a quoted identifier or a comment.
   *
   * 1. read_parquet over an s3 parquet glob (legacy escape hatch) ->
@@ -16,10 +16,19 @@ import org.apache.spark.sql.SparkSession
   *    and `iceberg_catalog_tables('ns')` calls ([[convertCatalogRefs]]).
   * 4. The DuckDB-dialect pre-pass ([[convertDuckDbDialect]]).
   *
-  * Every rewrite is text only. `iceberg_scan('path')`, the other
-  * path-addressed table functions and the two catalog functions are
-  * Spark table-valued functions ([[TableFunctions]]), bound while Spark
-  * analyzes the statement.
+  * Every rewrite is text only. Each is text because Spark cannot parse
+  * what it replaces, or because the Spark form needs different argument
+  * text: a dotted `iceberg_catalog` reference names no Spark catalog; the
+  * `string_split` family's delimiter is quoted as a regex; strftime and
+  * strptime translate their format string; struct_pack's `:=` and bracket
+  * slices `x[i:j]` are not Spark syntax; struct_extract becomes a field
+  * access. DuckDB function names that Spark resolves as one of its own
+  * functions (`unnest`, `len`, `list_transform`, ...) are not rewritten:
+  * [[graft.functions.DuckCompat]] registers them in each session's
+  * function registry. `iceberg_scan('path')`, the other path-addressed
+  * table functions and the two catalog functions are Spark table-valued
+  * functions ([[TableFunctions]]), bound while Spark analyzes the
+  * statement.
   */
 object DialectRewriter {
 
@@ -73,14 +82,14 @@ object DialectRewriter {
   def plan(spark: SparkSession, sql: String, config: ConnectionConfig)
       : (String, Seq[() => Unit]) = (convertCatalogRefs(sql, config), Nil)
 
-  /** Index ranges of string literals, quoted identifiers, and comments —
-    * rewrites must not fire (and reach a catalog) for text that is not code,
-    * e.g. `-- iceberg_catalog.ns.t` or a data literal mentioning
-    * `read_parquet('s3://...')`.
+  /** Index ranges of string literals, quoted identifiers, and comments
+    * from index `from` on — rewrites must not fire (and reach a catalog)
+    * for text that is not code, e.g. `-- iceberg_catalog.ns.t` or a data
+    * literal mentioning `read_parquet('s3://...')`.
     */
-  private def protectedRanges(sql: String): IndexedSeq[(Int, Int)] = {
+  private def protectedRanges(sql: String, from: Int = 0): IndexedSeq[(Int, Int)] = {
     val out = IndexedSeq.newBuilder[(Int, Int)]
-    var i = 0
+    var i = from
     val n = sql.length
     while (i < n) {
       val c = sql.charAt(i)
@@ -112,64 +121,47 @@ object DialectRewriter {
 
   // --- DuckDB-dialect function surface ------------------------------------
 
-  /** DuckDB function names with a drop-in Spark equivalent: a pure rename
-    * suffices because argument order and semantics line up, and none of
-    * these names is a valid Spark function — so Spark-dialect SQL passes
-    * through byte-identical. `string_split_regex` maps straight onto
-    * Spark's `split` (both take a regex); the literal-delimiter
-    * `string_split` family is handled separately below.
+  /** A function call site: the lower-cased `name` starts at `start` and
+    * its argument list opens at `open`.
     */
-  private val DuckRenames: Map[String, String] = Map(
-    "unnest" -> "explode",
-    // DuckDB's len is string length AND list cardinality; Spark's own
-    // `len` builtin is string-only, so a rename to it (or to `length`)
-    // breaks len(list_col). The target is graft's duck_len
-    // (functions.DuckLen, registered per gateway session by Engine), a
-    // RuntimeReplaceable dispatching on the resolved argument type —
-    // identical to the builtin for strings, Size for arrays/maps.
-    "len" -> "duck_len",
-    "list_transform" -> "transform",
-    "list_filter" -> "filter",
-    "generate_series" -> "sequence",
-    "string_split_regex" -> "split",
-    "str_split_regex" -> "split",
-    "list_contains" -> "array_contains",
-    "list_distinct" -> "array_distinct",
-    "list_sort" -> "sort_array",
-    "list_min" -> "array_min",
-    "list_max" -> "array_max",
-    "array_to_string" -> "array_join",
-    // r11 additions — still pure renames with aligned semantics:
-    // arg_min/arg_max are Spark's min_by/max_by; list_value builds an
-    // array; list_concat is Spark's array concat; list_reverse is
-    // reverse; list_append/list_prepend match array_append/array_prepend
-    // (Spark 3.4/3.5+); regexp_matches and regexp_like both do partial
-    // (find-style) matching on two args — the 3-arg flags form fails
-    // arity at analysis, loudly.
-    "arg_min" -> "min_by",
-    "arg_max" -> "max_by",
-    // r12: DuckDB's integer epoch extractors are Spark's unix_* family —
-    // both return BIGINT ms/us since the epoch for a timestamp argument.
-    // (DuckDB also overloads epoch_ms(BIGINT) as ms->timestamp; that
-    // form fails Spark analysis loudly, the regexp_matches precedent.
-    // Plain `epoch` returns DOUBLE seconds and epoch_ns has no Spark
-    // counterpart — both stay precisely rejected.)
-    "epoch_ms" -> "unix_millis",
-    "epoch_us" -> "unix_micros",
-    "list_value" -> "array",
-    "list_concat" -> "concat",
-    "list_reverse" -> "reverse",
-    "list_append" -> "array_append",
-    "list_prepend" -> "array_prepend",
-    "regexp_matches" -> "regexp_like")
+  private final case class CallSite(name: String, start: Int, open: Int)
 
-  /** DuckDB functions with NO safe Spark rename (different return
+  /** The call sites of `sql` from index `from` on, in order: a word that
+    * does not start with a digit, followed after optional whitespace by
+    * `(`, outside string literals, quoted identifiers and comments.
+    */
+  private def callSites(sql: String, from: Int = 0): Seq[CallSite] = {
+    val sites = Seq.newBuilder[CallSite]
+    val n = sql.length
+    def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
+    var i = from
+    // No protected range starts with a word character, so a word never
+    // runs into one.
+    for ((a, b) <- protectedRanges(sql, from) :+ ((n, n))) {
+      while (i < a) {
+        val c = sql.charAt(i)
+        if (isWordChar(c) && !c.isDigit && (i == 0 || !isWordChar(sql.charAt(i - 1)))) {
+          var j = i
+          while (j < n && isWordChar(sql.charAt(j))) j += 1
+          var k = j
+          while (k < n && sql.charAt(k).isWhitespace) k += 1
+          if (k < n && sql.charAt(k) == '(')
+            sites += CallSite(sql.substring(i, j).toLowerCase(java.util.Locale.ROOT), i, k)
+          i = j
+        } else i += 1
+      }
+      i = b
+    }
+    sites.result()
+  }
+
+  /** DuckDB functions with NO safe Spark equivalent (different return
     * contract, lambda-as-string arguments, or format-code languages that
     * do not line up). Detected at call positions so a user gets a precise
     * 400 naming the limitation instead of Spark's UNRESOLVED_ROUTINE for
     * a function the gateway nominally speaks the dialect of. list_position/
     * list_intersect are here deliberately: Spark's array_position returns
-    * 0 (not NULL) on a miss and array_intersect dedups, so a rename would
+    * 0 (not NULL) on a miss and array_intersect dedups, so an alias would
     * silently change answers.
     */
   private val DuckUnsupported: Set[String] = Set(
@@ -346,7 +338,7 @@ object DialectRewriter {
 
   private[gateway] def unsupportedDuckDbMessage(fn: String): String =
     s"unsupported DuckDB function $fn; supported DuckDB-dialect functions: " +
-      (DuckRenames.keys ++ DuckSplitNames).toSeq.sorted.mkString(", ") +
+      (graft.functions.DuckCompat.names ++ DuckSplitNames).sorted.mkString(", ") +
       "; plus strftime/strptime with a string-literal format, " +
       "read_csv/read_json/read_parquet single-path forms, " +
       "iceberg_scan/iceberg_* table functions, and bracket slices x[i:j]"
@@ -358,122 +350,66 @@ object DialectRewriter {
     * `struct_pack` destined for DuckDB); the gateway calls this only on
     * statements about to run on Spark.
     */
-  def rejectUnknownDuckFunctions(sql: String): Unit = {
-    val ranges = protectedRanges(sql)
-    val n = sql.length
-    def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-    var i = 0
-    while (i < n) {
-      if (ranges.exists { case (a, b) => i >= a && i < b }) {
-        // Skip to the end of the protected range containing i.
-        i = ranges.collectFirst { case (a, b) if i >= a && i < b => b }.get
-      } else {
-        val c = sql.charAt(i)
-        if (isWordChar(c) && !c.isDigit && (i == 0 || !isWordChar(sql.charAt(i - 1)))) {
-          var j = i
-          while (j < n && isWordChar(sql.charAt(j))) j += 1
-          val word = sql.substring(i, j).toLowerCase(java.util.Locale.ROOT)
-          var k = j
-          while (k < n && sql.charAt(k).isWhitespace) k += 1
-          if (k < n && sql.charAt(k) == '(' && DuckUnsupported.contains(word))
-            throw new IllegalArgumentException(unsupportedDuckDbMessage(word))
-          if (k < n && sql.charAt(k) == '(' && DuckFormatFns.contains(word))
-            translateFormatCall(word, sql, k) match {
-              case Left(reason) => throw new IllegalArgumentException(
-                s"unsupported DuckDB function $word call: $reason")
-              case Right(_) => // translatable — convert pass handles it
-            }
-          if (k < n && sql.charAt(k) == '(' && DuckStructFns.contains(word))
-            translateStructCall(word, sql, k) match {
-              case Left(reason) => throw new IllegalArgumentException(
-                s"unsupported DuckDB function $word call: $reason")
-              case Right(_) => // translatable — convert pass handles it
-            }
-          i = j
-        } else i += 1
-      }
+  def rejectUnknownDuckFunctions(sql: String): Unit =
+    callSites(sql).foreach { site =>
+      if (DuckUnsupported.contains(site.name))
+        throw new IllegalArgumentException(unsupportedDuckDbMessage(site.name))
+      if (DuckFormatFns.contains(site.name) || DuckStructFns.contains(site.name))
+        translateCall(sql, site).swap.foreach(reason => throw new IllegalArgumentException(
+          s"unsupported DuckDB function ${site.name} call: $reason"))
     }
-  }
 
   /** DuckDB's literal-delimiter split family: `split` in Spark takes a
-    * REGEX, so the delimiter needs quoting, not just a rename.
+    * REGEX, so the delimiter needs quoting, not just an alias.
     */
   private val DuckSplitNames = Set("string_split", "str_split", "string_to_array")
+
+  /** The Spark text of a call to a text-translated DuckDB function:
+    * Right((replacement, index of the closing paren)), or Left(reason)
+    * when the call has none (a split of the wrong arity is left to fail
+    * at analysis).
+    */
+  private def translateCall(sql: String, site: CallSite): Either[String, (String, Int)] =
+    site.name match {
+      case w if DuckFormatFns.contains(w) => translateFormatCall(w, sql, site.open)
+      case w if DuckStructFns.contains(w) => translateStructCall(w, sql, site.open)
+      case w if DuckSplitNames.contains(w) => splitArgs(sql, site.open) match {
+        case Some((args, close)) if args.length == 2 => Right((
+          s"split(${convertDuckDbDialect(args.head.trim)}, ${quoteDelimiter(args(1).trim)})",
+          close))
+        case _ => Left(s"$w takes (string, delimiter)")
+      }
+      case w => Left(s"$w has no text translation")
+    }
 
   /** Rewrite 4: DuckDB-dialect pre-pass. The reference's declared contract
     * is "any read-only DuckDB SELECT" (backend/main.py:95-100) and its own
     * canonical demo query uses it — `UNNEST(string_split(genres, ','))`
     * (backend/main.py:767) — so real cloudfloe SQL must run verbatim.
-    * Token-level: renames apply only to function-call positions (name
-    * immediately followed by `(`) OUTSIDE string literals, quoted
-    * identifiers, and comments, so data literals like `WHERE x = 'len(a)'`
-    * are never corrupted. `string_split(x, d)` becomes `split(x, <quoted
-    * d>)`: a literal delimiter is regex-escaped at rewrite time; a computed
-    * one is wrapped in the `\Q…\E` construction `java.util.regex.Pattern
-    * .quote` uses (including its embedded-`\E` splice), evaluated at
-    * runtime.
+    * Only call sites ([[callSites]]) are translated, so data literals like
+    * `WHERE x = 'string_split(a, b)'` are never corrupted; a translated
+    * call converts its own arguments, and the scan resumes after it.
+    * `string_split(x, d)` becomes `split(x, <quoted d>)`: a literal
+    * delimiter is regex-escaped at rewrite time; a computed one is wrapped
+    * in the `\Q…\E` construction `java.util.regex.Pattern.quote` uses
+    * (including its embedded-`\E` splice), evaluated at runtime. Bracket
+    * slices are rewritten last ([[convertSlices]]).
     */
   def convertDuckDbDialect(sql: String): String = {
     // java.lang.StringBuilder for its (CharSequence, start, end) append —
     // the Scala wrapper lacks that overload and would box a tuple.
     val out = new java.lang.StringBuilder(sql.length + 16)
     var i = 0
-    val n = sql.length
-    def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        val j = skipQuoted(sql, i)
-        out.append(sql, i, j); i = j
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        val j = sql.indexOf('\n', i) match { case -1 => n; case k => k }
-        out.append(sql, i, j); i = j
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val j = sql.indexOf("*/", i + 2) match { case -1 => n; case k => k + 2 }
-        out.append(sql, i, j); i = j
-      } else if (isWordChar(c) && !c.isDigit &&
-          (i == 0 || !isWordChar(sql.charAt(i - 1)))) {
-        var j = i
-        while (j < n && isWordChar(sql.charAt(j))) j += 1
-        val word = sql.substring(i, j).toLowerCase(java.util.Locale.ROOT)
-        // A rename fires only on a CALL: next non-space char is `(`.
-        var k = j
-        while (k < n && sql.charAt(k).isWhitespace) k += 1
-        val isCall = k < n && sql.charAt(k) == '('
-        if (isCall && DuckFormatFns.contains(word)) {
-          translateFormatCall(word, sql, k) match {
-            case Right((replacement, close)) =>
-              out.append(replacement); i = close + 1
-            case Left(_) => // untranslatable — reject pass gives the 400
-              out.append(sql, i, j); i = j
-          }
-        } else if (isCall && DuckStructFns.contains(word)) {
-          translateStructCall(word, sql, k) match {
-            case Right((replacement, close)) =>
-              out.append(replacement); i = close + 1
-            case Left(_) => // untranslatable — reject pass gives the 400
-              out.append(sql, i, j); i = j
-          }
-        } else if (isCall && DuckSplitNames.contains(word)) {
-          splitArgs(sql, k) match {
-            case Some((args, close)) if args.length == 2 =>
-              out.append("split(")
-                .append(convertDuckDbDialect(args.head.trim)).append(", ")
-                .append(quoteDelimiter(args(1).trim)).append(')')
-              i = close + 1
-            case _ => // wrong arity — leave it to fail loudly at analysis
-              out.append(sql, i, j); i = j
-          }
-        } else if (isCall && DuckRenames.contains(word)) {
-          out.append(DuckRenames(word)); i = j
-        } else {
-          out.append(sql, i, j); i = j
-        }
-      } else {
-        out.append(c); i += 1
+    var sites = callSites(sql).iterator
+    while (sites.hasNext) {
+      val site = sites.next()
+      translateCall(sql, site).foreach { case (replacement, close) =>
+        out.append(sql, i, site.start).append(replacement)
+        i = close + 1
+        sites = callSites(sql, i).iterator
       }
     }
-    convertSlices(out.toString)
+    convertSlices(out.append(sql, i, sql.length).toString)
   }
 
   /** DuckDB's bracket-slice syntax `x[i:j]` (1-based, inclusive bounds;

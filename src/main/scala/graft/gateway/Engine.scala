@@ -40,7 +40,9 @@ import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, Tabl
   * `IcebergLite.metadataCache`), rewriting, validation, analysis and
   * execution. `iceberg_scan('path')`, the other path-addressed table
   * functions and REST catalog references are bound during analysis
-  * ([[TableFunctions]], registered once per pooled session). Credential
+  * ([[TableFunctions]]), and DuckDB function names such as `unnest` and
+  * `len` resolve as Spark functions ([[graft.functions.DuckCompat]]);
+  * both are registered once per pooled session. Credential
   * isolation on the shared Hadoop conf is the known hard part (SURVEY.md
   * §7.3): storage settings live only on the session's own conf
   * ([[applyStorageSettings]]).
@@ -528,10 +530,11 @@ private[gateway] object SessionPool {
 
   private def create(key: Key): Pooled = {
     val s = key.root.newSession()
-    // Graft's custom expressions (vec_dot, winnow_hashes, ...) plus the
-    // DuckDB-compat type-dispatchers (len, duck_slice) resolve per
-    // session; registering here means the gateway works on ANY root
-    // session, not only one built with GraftExtensions.
+    // Graft's custom expressions (vec_dot, winnow_hashes, duck_slice, ...),
+    // the DuckDB function names (unnest, len, list_transform, ...) and the
+    // table functions resolve per session; registering here means the
+    // gateway works on ANY root session, not only one built with
+    // GraftExtensions.
     graft.functions.GraftFunctions.register(s)
     key.settings.foreach { case (k, v) => s.conf.set(k, v) }
     val compiled = Engine.compiledConfs(s.conf.get(SQLConf.SHUFFLE_PARTITIONS.key),

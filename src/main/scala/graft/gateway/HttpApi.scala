@@ -267,9 +267,17 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
         log.error(s"500 on ${ex.getRequestMethod} ${ex.getRequestURI.getPath}", e)
         (500, JObj("detail" -> JStr("Internal server error")))
     }
-    val bytes = payload.render.getBytes(StandardCharsets.UTF_8)
+    respondRaw(ex, status, payload.render.getBytes(StandardCharsets.UTF_8),
+      "application/json")
+    status
+  }
+
+  /** Sends `bytes` with the CORS headers; a 204 sends the headers only. */
+  private def respondRaw(ex: HttpExchange, status: Int, bytes: Array[Byte],
+      contentType: String, disposition: Option[String] = None): Unit = {
     val h = ex.getResponseHeaders
-    h.set("Content-Type", "application/json")
+    h.set("Content-Type", contentType)
+    disposition.foreach(h.set("Content-Disposition", _))
     h.set("Access-Control-Allow-Origin", "*")
     h.set("Access-Control-Allow-Methods", "*")
     h.set("Access-Control-Allow-Headers", "*")
@@ -280,21 +288,6 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
       os.write(bytes)
       os.close()
     }
-    status
-  }
-
-  private def respondRaw(ex: HttpExchange, status: Int, bytes: Array[Byte],
-      contentType: String, disposition: Option[String] = None): Unit = {
-    val h = ex.getResponseHeaders
-    h.set("Content-Type", contentType)
-    disposition.foreach(h.set("Content-Disposition", _))
-    h.set("Access-Control-Allow-Origin", "*")
-    h.set("Access-Control-Allow-Methods", "*")
-    h.set("Access-Control-Allow-Headers", "*")
-    ex.sendResponseHeaders(status, bytes.length)
-    val os = ex.getResponseBody
-    os.write(bytes)
-    os.close()
   }
 
   private def tableInfoJson(i: TableInfo): JObj = {

@@ -35,43 +35,15 @@ object CacheScope {
       new java.util.ArrayDeque[DataFrame]()
   }
 
-  /** Explicit release handle for cross-thread drivers (futures / thread
-    * pools): the CONSTRUCTING thread captures [[currentToken]] after
-    * building its DataFrames and hands the token to whichever thread
-    * owns the consuming action; that thread calls [[Token.release]]
-    * after the final action. Without a token, a deque populated on a
-    * pool thread that never calls [[releaseCurrent]] would retain its
-    * persisted plan trees forever — silently restoring the
-    * unbounded-cache behavior this class exists to fix.
-    */
-  final class Token private[CacheScope] (
-      q: java.util.ArrayDeque[DataFrame]) {
-    /** Unpersist (non-blocking) everything currently registered on the
-      * capturing thread's deque — including entries pushed after the
-      * capture (the token aliases the thread's registry, it does not
-      * snapshot it). Safe to call from any thread, and safe to call
-      * more than once.
-      */
-    def release(): Unit = drain(q)
-  }
-
-  /** Capture a release token aliasing the CURRENT thread's registry:
-    * whatever that thread has tracked — or goes on to track — is
-    * released by `token.release()` from any thread. See [[Token]].
-    */
-  def currentToken(): Token = new Token(tracked.get())
-
   /** Persist `df` and register it for release by the current thread's
     * query driver. Returns `df` for chaining.
     *
     * CONTRACT: registration is per-thread — the thread that constructs
     * the DataFrame (and thus runs this call) is the one whose
     * [[releaseCurrent]] drains it. A driver that constructs on one
-    * thread and consumes on another (futures, thread pools) must either
-    * release on the constructing thread after the action completes, or
-    * capture [[currentToken]] on the constructing thread and call
-    * `token.release()` wherever the action finishes; otherwise the
-    * constructing thread's deque retains the persisted plan trees
+    * thread and consumes on another (futures, thread pools) must release
+    * on the constructing thread after the action completes; otherwise
+    * the constructing thread's deque retains the persisted plan trees
     * indefinitely.
     */
   def persistTracked(df: DataFrame,
@@ -85,9 +57,8 @@ object CacheScope {
   /** Unpersist (non-blocking) everything the current thread tracked
     * since its last release. Safe to call when nothing is tracked.
     */
-  def releaseCurrent(): Unit = drain(tracked.get())
-
-  private def drain(q: java.util.ArrayDeque[DataFrame]): Unit = {
+  def releaseCurrent(): Unit = {
+    val q = tracked.get()
     while (true) {
       val df = q.synchronized {
         if (q.isEmpty) null else q.pop()

@@ -55,33 +55,56 @@ class DialectRewriterSpec extends AnyFunSuite with graft.SparkFixture {
 
   private def duck(sql: String) = DialectRewriter.convertDuckDbDialect(sql)
 
+  /** A session with graft's functions and the DuckDB aliases, and a view
+    * `t` the rename cases read.
+    */
+  private lazy val registered = {
+    val s = spark.newSession()
+    graft.functions.GraftFunctions.register(s)
+    s.sql("SELECT * FROM VALUES ('abc', array(3, 1, 2), array('p', 'q'), 'xabbx', 7), " +
+      "('de', array(5), array('r'), 'ac', 2) AS t(x, a, w, s, b)").createOrReplaceTempView("t")
+    s
+  }
+
+  /** DuckDB function names are renamed by resolution, not by text: the
+    * pre-pass leaves `duckSql` as written, and a registered session
+    * answers it with the columns, types and rows of `sparkSql`.
+    */
+  private def renamed(duckSql: String, sparkSql: String): Unit = {
+    assert(duck(duckSql) == duckSql)
+    val (d, n) = (registered.sql(duckSql), registered.sql(sparkSql))
+    // Fields without metadata: an explicit alias drops the auto-alias mark.
+    def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType, f.nullable))
+    assert(fields(d) == fields(n), duckSql)
+    assert(d.collect().toSeq == n.collect().toSeq, duckSql)
+  }
+
   test("the reference's Popular Genres query rewrites to runnable Spark") {
     val in = "SELECT TRIM(genre) as genre, COUNT(*) as count FROM (SELECT " +
       "UNNEST(string_split(genres, ',')) as genre FROM iceberg_scan('s3://m/t') " +
       "WHERE titleType = 'movie' AND genres IS NOT NULL) GROUP BY genre ORDER BY count DESC"
     assert(duck(in) ==
       "SELECT TRIM(genre) as genre, COUNT(*) as count FROM (SELECT " +
-        "explode(split(genres, ',')) as genre FROM iceberg_scan('s3://m/t') " +
+        "UNNEST(split(genres, ',')) as genre FROM iceberg_scan('s3://m/t') " +
         "WHERE titleType = 'movie' AND genres IS NOT NULL) GROUP BY genre ORDER BY count DESC")
   }
 
   test("duckdb function renames: len, list_transform, list_filter, generate_series") {
-    // len renames to graft's duck_len (type-dispatching DuckLen), not to
-    // Spark's string-only `len`/`length` builtins — a blind rename there
-    // would break len(list_col) with an error naming a function the user
-    // never wrote.
-    assert(duck("SELECT len(x) FROM t") == "SELECT duck_len(x) FROM t")
-    assert(duck("SELECT LIST_TRANSFORM(a, x -> x + 1) FROM t") ==
+    // len resolves to graft's type-dispatching DuckLen, not to Spark's
+    // string-only `len` builtin, which would reject len(list_col).
+    renamed("SELECT len(x) FROM t", "SELECT length(x) AS `len(x)` FROM t")
+    renamed("SELECT len(a) FROM t", "SELECT size(a) AS `len(a)` FROM t")
+    renamed("SELECT LIST_TRANSFORM(a, x -> x + 1) FROM t",
       "SELECT transform(a, x -> x + 1) FROM t")
-    assert(duck("SELECT list_filter(a, x -> x > 0) FROM t") ==
+    renamed("SELECT list_filter(a, x -> x > 0) FROM t",
       "SELECT filter(a, x -> x > 0) FROM t")
-    assert(duck("SELECT generate_series(1, 5) AS s") == "SELECT sequence(1, 5) AS s")
-    assert(duck("SELECT string_split_regex(x, '[,;]') FROM t") ==
+    renamed("SELECT generate_series(1, 5) AS s", "SELECT sequence(1, 5) AS s")
+    renamed("SELECT string_split_regex(x, '[,;]') FROM t",
       "SELECT split(x, '[,;]') FROM t")
-    assert(duck("SELECT list_contains(a, 1), list_distinct(a), list_sort(a) FROM t") ==
+    renamed("SELECT list_contains(a, 1), list_distinct(a), list_sort(a) FROM t",
       "SELECT array_contains(a, 1), array_distinct(a), sort_array(a) FROM t")
-    assert(duck("SELECT list_min(a), list_max(a), array_to_string(a, ',') FROM t") ==
-      "SELECT array_min(a), array_max(a), array_join(a, ',') FROM t")
+    renamed("SELECT list_min(a), list_max(a), array_to_string(w, ',') FROM t",
+      "SELECT array_min(a), array_max(a), array_join(w, ',') FROM t")
   }
 
   test("string_split regex-escapes a metachar literal delimiter") {
@@ -106,6 +129,8 @@ class DialectRewriterSpec extends AnyFunSuite with graft.SparkFixture {
     assert(duck(lit) == lit)
     val block = "SELECT /* unnest(string_split(a,'.')) */ col FROM t"
     assert(duck(block) == block)
+    val translated = "SELECT 'string_split(y, ''.'')' AS s FROM t -- strftime(ts, '%Y')"
+    assert(duck(translated) == translated)
     // A bare word (not a call) is a column reference, not a function.
     assert(duck("SELECT len FROM t WHERE unnest = 1") ==
       "SELECT len FROM t WHERE unnest = 1")
@@ -122,7 +147,7 @@ class DialectRewriterSpec extends AnyFunSuite with graft.SparkFixture {
 
   test("nested duckdb constructs rewrite recursively") {
     assert(duck("SELECT UNNEST(string_split(lower(genres), '.')) FROM t") ==
-      """SELECT explode(split(lower(genres), '\\.')) FROM t""")
+      """SELECT UNNEST(split(lower(genres), '\\.')) FROM t""")
   }
 
   test("bracket slices with literal bounds become duck_slice; computed bounds pass through") {
@@ -138,13 +163,17 @@ class DialectRewriterSpec extends AnyFunSuite with graft.SparkFixture {
   }
 
   test("r11 renames: arg_min/arg_max, list_value, list_concat, regexp_matches") {
-    assert(duck("SELECT arg_min(a, b), arg_max(a, b) FROM t") ==
-      "SELECT min_by(a, b), max_by(a, b) FROM t")
-    assert(duck("SELECT list_value(1, 2, 3), list_concat(x, y) FROM t") ==
-      "SELECT array(1, 2, 3), concat(x, y) FROM t")
-    assert(duck("SELECT list_reverse(a), list_append(a, 1), list_prepend(0, a) FROM t") ==
-      "SELECT reverse(a), array_append(a, 1), array_prepend(0, a) FROM t")
-    assert(duck("SELECT * FROM t WHERE regexp_matches(s, 'ab+')") ==
+    renamed("SELECT arg_min(x, b), arg_max(x, b) FROM t",
+      "SELECT min_by(x, b), max_by(x, b) FROM t")
+    renamed("SELECT list_value(1, 2, 3), list_concat(a, a) FROM t",
+      "SELECT array(1, 2, 3), concat(a, a) FROM t")
+    renamed("SELECT list_reverse(a), list_append(a, 1), list_prepend(a, 0) FROM t",
+      "SELECT reverse(a), array_append(a, 1), array_prepend(a, 0) FROM t")
+    // DuckDB's own list_prepend order is (element, list); Spark's
+    // array_prepend rejects it at analysis.
+    intercept[org.apache.spark.sql.AnalysisException](
+      registered.sql("SELECT list_prepend(0, a) FROM t"))
+    renamed("SELECT * FROM t WHERE regexp_matches(s, 'ab+')",
       "SELECT * FROM t WHERE regexp_like(s, 'ab+')")
   }
 
@@ -182,7 +211,7 @@ class DialectRewriterSpec extends AnyFunSuite with graft.SparkFixture {
       "SELECT date_format(ts, 'd'' of ''MMMM, 100%') FROM t")
     // Nested dialect in the value argument converts too.
     assert(duck("SELECT strptime(list_min(xs), '%H:%M') FROM t") ==
-      "SELECT to_timestamp(array_min(xs), 'HH:mm') FROM t")
+      "SELECT to_timestamp(list_min(xs), 'HH:mm') FROM t")
     // Spark round-trip sanity on the translated patterns.
     val row = spark.sql(
       duck("SELECT strftime(TIMESTAMP '2024-03-07 09:05:01', '%Y-%m-%dT%H:%M:%S %p') AS s, " +
@@ -237,7 +266,7 @@ class DialectRewriterSpec extends AnyFunSuite with graft.SparkFixture {
     // Nested dialect inside the field values converts; nested calls
     // compose (struct_extract over a fresh struct_pack).
     assert(duck("SELECT struct_pack(xs := list_min(v)) FROM t") ==
-      "SELECT named_struct('xs', array_min(v)) FROM t")
+      "SELECT named_struct('xs', list_min(v)) FROM t")
     assert(duck("SELECT struct_extract(struct_pack(a := 1), 'a') AS v") ==
       "SELECT (named_struct('a', 1)).a AS v")
     // Spark round-trip sanity on the translated forms.
@@ -255,14 +284,15 @@ class DialectRewriterSpec extends AnyFunSuite with graft.SparkFixture {
     // The oracle corpus's own struct_pack (inside a DuckDB lambda)
     // converts idempotently.
     val lam = duck("SELECT list_transform(g, i -> struct_pack(w1 := toks[i])) FROM t")
-    assert(lam == "SELECT transform(g, i -> named_struct('w1', toks[i])) FROM t")
+    assert(lam == "SELECT list_transform(g, i -> named_struct('w1', toks[i])) FROM t")
     assert(duck(lam) == lam)
   }
 
   test("epoch_ms/epoch_us rename to unix_millis/unix_micros; epoch/epoch_ns stay rejected") {
-    assert(duck("SELECT epoch_ms(ts), epoch_us(ts) FROM t") ==
-      "SELECT unix_millis(ts), unix_micros(ts) FROM t")
-    val row = spark.sql(duck(
+    val epochs = "SELECT epoch_ms(TIMESTAMP '2024-03-07 09:05:01.25') AS ms, " +
+      "epoch_us(TIMESTAMP '2024-03-07 09:05:01.25') AS us"
+    renamed(epochs, epochs.replace("epoch_ms", "unix_millis").replace("epoch_us", "unix_micros"))
+    val row = registered.sql(duck(
       "SELECT epoch_ms(TIMESTAMP '1970-01-01 00:00:01.5') AS ms, " +
         "epoch_us(TIMESTAMP '1970-01-01 00:00:01.5') AS us")).collect()(0)
     assert(row.getLong(0) == 1500L && row.getLong(1) == 1500000L)
@@ -290,10 +320,10 @@ class DialectRewriterSpec extends AnyFunSuite with graft.SparkFixture {
   }
 
   test("the pre-pass is idempotent over the whole oracle corpus") {
-    // The corpus' oracle SQL is real DuckDB dialect (unnest, len,
-    // list_transform, generate_series all appear). One application must
-    // reach a fixpoint: every rewritten name is outside the rename maps,
-    // so a double-converted statement is byte-identical to a single
+    // The corpus' oracle SQL is real DuckDB dialect (string_split and
+    // struct_pack appear). One application must reach a fixpoint: no
+    // rewrite emits a name another rewrite translates, so a
+    // double-converted statement is byte-identical to a single
     // conversion — the gateway can safely re-run the pass on anything.
     val oracles = graft.SparkEntry.oracleSql.values
     assert(oracles.nonEmpty)

@@ -98,9 +98,9 @@ class InThreadSpec extends AnyFunSuite with SparkFixture {
       "SELECT 1 AS one")
     val expected = statements.map(s => spark.sql(plain(s)).collect().toSeq.map(_.toSeq))
     val requests = statements.map(gateway)
-    // The first scan of a table reads a data file's footer for its schema
-    // with a job, once per file (IcebergLite's footer cache); count warm
-    // requests, as a serving gateway runs them.
+    // Count warm requests, as a serving gateway runs them: the first scan
+    // of a table reads a data file's footer for its schema, once per file
+    // (IcebergLite's footer cache), on the request thread with no job.
     requests.foreach(run)
     val (results, jobs) = jobsStarted(requests.map(run))
     assert(jobs == 0)
