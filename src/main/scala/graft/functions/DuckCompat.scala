@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, FunctionRegistryBase, TableFunctionRegistry}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** DuckDB-compat scalar functions whose semantics depend on the argument
@@ -59,6 +60,19 @@ case class DuckSlice(child: Expression, from: Expression, to: Expression)
     copy(child = newChildren(0), from = newChildren(1), to = newChildren(2))
 }
 
+/** A DuckDB list builder (`list_prepend`, `list_append`, `list_concat`)
+  * as the Spark expression that gives DuckDB's answer. The replacement is
+  * this expression's child, so the analyzer coerces its argument types as
+  * it would for the Spark functions inside; the column is named after the
+  * DuckDB call.
+  */
+case class DuckList(name: String, parameters: Seq[Expression], replacement: Expression)
+    extends RuntimeReplaceable with InheritAnalysisRules {
+  override def prettyName: String = name
+  override protected def withNewChildInternal(newChild: Expression): DuckList =
+    copy(replacement = newChild)
+}
+
 /** DuckDB function names that Spark resolves as one of its own functions,
   * registered per session by [[register]]. Argument order and semantics
   * line up, so each name takes its Spark target's builder and
@@ -67,6 +81,9 @@ case class DuckSlice(child: Expression, from: Expression, to: Expression)
   * exactly as the target would. `string_split_regex` is Spark's `split`
   * (both take a regex); the literal-delimiter `string_split` family needs
   * its delimiter quoted and stays a text rewrite in the gateway.
+  * `list_prepend`, `list_append` and `list_concat` differ from their
+  * Spark counterparts in argument order or NULL handling, so each is a
+  * [[DuckList]] instead.
   */
 object DuckCompat {
 
@@ -90,10 +107,7 @@ object DuckCompat {
     "epoch_ms" -> "unix_millis",
     "epoch_us" -> "unix_micros",
     "list_value" -> "array",
-    "list_concat" -> "concat",
     "list_reverse" -> "reverse",
-    "list_append" -> "array_append",
-    "list_prepend" -> "array_prepend",
     // Both find-style matches on two arguments; the 3-argument flags
     // form fails arity at analysis.
     "regexp_matches" -> "regexp_like")
@@ -107,12 +121,37 @@ object DuckCompat {
     DuckSlice(exprs(0), exprs(1), exprs(2))
   }
 
+  /** DuckDB 1.0 reads a NULL list as an empty one in its list builders,
+    * where Spark's return NULL.
+    */
+  private def orEmpty(list: Expression): Expression = list.dataType match {
+    case t: ArrayType => Coalesce(Seq(list, Literal(new GenericArrayData(Array.empty[Any]), t)))
+    case _ => list // not a list: the Spark function's type check rejects it
+  }
+
+  /** A two-argument [[DuckList]] builder named `name`. */
+  private def listBuilder(name: String)(replace: Seq[Expression] => Expression) =
+    name -> (new ExpressionInfo(classOf[DuckList].getName, name), (exprs: Seq[Expression]) => {
+      require(exprs.length == 2, s"$name expects two arguments")
+      DuckList(name, exprs, replace(exprs))
+    })
+
+  /** The list builders whose arguments or NULL handling differ from
+    * Spark's: `list_prepend` takes (element, list), `array_prepend`
+    * (list, element); `list_concat` of two NULL lists is NULL.
+    */
+  private val listBuilders = Seq(
+    listBuilder("list_prepend") { case Seq(e, l) => ArrayPrepend(orEmpty(l), e) },
+    listBuilder("list_append") { case Seq(l, e) => ArrayAppend(orEmpty(l), e) },
+    listBuilder("list_concat") { case Seq(a, b) => Coalesce(Seq(Concat(Seq(a, b)), a, b)) })
+
   /** `len` replaces Spark's string-only builtin of that name in the
     * sessions it is registered in; on strings the two are the same.
     */
   private val scalars: Seq[(String, (ExpressionInfo, Seq[Expression] => Expression))] =
     ("len", (new ExpressionInfo(classOf[DuckLen].getName, "len"), lenForArgs _)) +:
-      aliasTargets.map { case (name, target) => name -> FunctionRegistry.expressions(target) }
+      (aliasTargets.map { case (name, target) => name -> FunctionRegistry.expressions(target) } ++
+        listBuilders)
 
   /** Every DuckDB name [[register]] adds. */
   val names: Seq[String] = scalars.map(_._1)

@@ -45,7 +45,7 @@ import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, Tabl
   * both are registered once per pooled session. Credential
   * isolation on the shared Hadoop conf is the known hard part (SURVEY.md
   * §7.3): storage settings live only on the session's own conf
-  * ([[applyStorageSettings]]).
+  * ([[storageSettings]]).
   *
   * Execution mode: Spark compiles generated Java (Janino) for every
   * distinct plan shape, and its codegen cache holds 100 classes, so a
@@ -194,10 +194,7 @@ object Engine {
     // for the lifetime of the shared SparkContext.
     try {
       val t0 = System.nanoTime()
-      val cfg = Try(ConnectionConfig.validated(config)) match {
-        case Success(c) => c
-        case Failure(e) => throw EngineError(400, e.getMessage)
-      }
+      val cfg = validated(config)
       SessionPool.withSession(root, storageSettings(cfg))(spark =>
         run(spark, sql, cfg, rowLimit, t0, onMode, interpretBelowRows, onRan))
     } finally graft.ops.CacheScope.releaseCurrent()
@@ -336,11 +333,10 @@ object Engine {
 
   /** Maintenance endpoints mutate tables, so unlike the read-only query
     * path they are OFF by default; `-Dgraft.gateway.maintenance=true`
-    * (or GRAFT_MAINTENANCE=true) opts in.
+    * opts in.
     */
   def maintenanceEnabled: Boolean =
     sys.props.get("graft.gateway.maintenance")
-      .orElse(sys.env.get("GRAFT_MAINTENANCE"))
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
 
   /** Table maintenance: the delete guard's own remediation ("compact the
@@ -356,29 +352,32 @@ object Engine {
       throw EngineError(403,
         "maintenance is disabled: compaction rewrites table data, so it is " +
           "off by default on this read-only gateway; start with " +
-          "-Dgraft.gateway.maintenance=true (or GRAFT_MAINTENANCE=true) to enable it")
-    val cfg = Try(ConnectionConfig.validated(config)) match {
-      case Success(c) => c
-      case Failure(e) => throw EngineError(400, e.getMessage)
-    }
+          "-Dgraft.gateway.maintenance=true to enable it")
+    val cfg = validated(config)
     // A request-level tablePath (any path iceberg_scan could address —
     // same trust model as the SQL table function) wins over the
     // connection's S3-only tablePath field.
     val path = tablePath.filter(_.nonEmpty).orElse(cfg.tablePath).getOrElse(
       throw EngineError(400, "tablePath is required for compaction"))
-    val spark = root.newSession()
-    graft.functions.GraftFunctions.register(spark)
-    applyStorageSettings(spark, cfg)
-    try {
-      val rw = IcebergLiteWriter.rewriteApplyingDeletes(spark, path)
-      val cp = IcebergLiteWriter.compact(spark, path, targetBytes)
-      MaintenanceResult(rw.written > 0, rw.rewritten, rw.written,
-        cp.rewritten, cp.written)
-    } catch {
-      case e: IcebergLite.ProbeError => throw EngineError(400, e.getMessage)
-      case e: Exception => throw EngineError(400, s"Compaction failed: ${firstLine(e)}")
+    SessionPool.withSession(root, storageSettings(cfg)) { spark =>
+      try {
+        val rw = IcebergLiteWriter.rewriteApplyingDeletes(spark, path)
+        val cp = IcebergLiteWriter.compact(spark, path, targetBytes)
+        MaintenanceResult(rw.written > 0, rw.rewritten, rw.written,
+          cp.rewritten, cp.written)
+      } catch {
+        case e: IcebergLite.ProbeError => throw EngineError(400, e.getMessage)
+        case e: Exception => throw EngineError(400, s"Compaction failed: ${firstLine(e)}")
+      }
     }
   }
+
+  /** The request's connection config, validated; an invalid one is a 400. */
+  private def validated(config: ConnectionConfig): ConnectionConfig =
+    Try(ConnectionConfig.validated(config)) match {
+      case Success(c) => c
+      case Failure(e) => throw EngineError(400, e.getMessage)
+    }
 
   /** Apply the request's storage settings as PER-SESSION per-bucket S3A
     * overrides: `fs.s3a.bucket.<bucket>.*` entries on the request
@@ -398,6 +397,11 @@ object Engine {
     * reference fixed the analogous shared-connection race with a
     * per-request lock, main.py:262-272 — per-session conf is the
     * shared-nothing version of that fix).
+    *
+    * The gateway itself sets these through [[SessionPool]], which builds
+    * each session with [[storageSettings]]; this entry point stays for
+    * callers that configure a session of their own, such as a benchmark
+    * harness's traced replay.
     */
   def applyStorageSettings(spark: SparkSession, cfg: ConnectionConfig): Unit =
     storageSettings(cfg).foreach { case (k, v) => spark.conf.set(k, v) }
@@ -447,11 +451,6 @@ object Engine {
       demoTablePath: Option[String] = None): Option[TableInfo] =
     Try {
       val cfg = ConnectionConfig.validated(config)
-      val spark = root.newSession()
-      // The probe needs the request's credentials exactly like a query
-      // does — with strictly per-session settings there is no global
-      // fallback that could accidentally make it work.
-      applyStorageSettings(spark, cfg)
       if (cfg.catalogType == "rest") {
         // List the namespace's tables over the REST catalog API — the
         // analog of the reference's `SHOW TABLES FROM iceberg_catalog.ns`
@@ -463,13 +462,20 @@ object Engine {
         TableInfo(
           path = s"iceberg_catalog.$ns",
           suggestedQuery = s"SHOW TABLES FROM iceberg_catalog.$ns")
-      } else cfg.tablePath match {
-        case Some(p) => IcebergLite.probe(spark, p)
-        case None =>
-          val demo = demoTablePath.getOrElse(
-            throw IcebergLite.ProbeError("no demo table configured"))
-          IcebergLite.scan(spark, demo).limit(1).collect()
-          IcebergLite.probe(spark, demo)
+      } else {
+        // The probe needs the request's credentials exactly like a query
+        // does — with strictly per-session settings there is no global
+        // fallback that could accidentally make it work.
+        SessionPool.withSession(root, storageSettings(cfg)) { spark =>
+          cfg.tablePath match {
+            case Some(p) => IcebergLite.probe(spark, p)
+            case None =>
+              val demo = demoTablePath.getOrElse(
+                throw IcebergLite.ProbeError("no demo table configured"))
+              IcebergLite.scan(spark, demo).limit(1).collect()
+              IcebergLite.probe(spark, demo)
+          }
+        }
       }
     }.toOption
 

@@ -82,6 +82,12 @@ object Json {
 
   final case class JsonParseException(msg: String) extends RuntimeException(msg)
 
+  /** Deepest array/object nesting [[parse]] accepts. The parser recurses
+    * once per level, so an unbounded depth lets a small body overflow the
+    * thread's stack; past this cap the input is rejected instead.
+    */
+  val MaxDepth = 512
+
   def parse(input: String): JValue = {
     val p = new Parser(input)
     val v = p.parseValue()
@@ -92,6 +98,7 @@ object Json {
 
   private final class Parser(s: String) {
     var pos = 0
+    private var depth = 0
     def atEnd: Boolean = pos >= s.length
     def skipWs(): Unit =
       while (!atEnd && (s.charAt(pos) == ' ' || s.charAt(pos) == '\t' ||
@@ -109,8 +116,8 @@ object Json {
       skipWs()
       if (atEnd) fail("Unexpected end of input")
       s.charAt(pos) match {
-        case '{' => parseObj()
-        case '[' => parseArr()
+        case '{' => nested(parseObj())
+        case '[' => nested(parseArr())
         case '"' => JStr(parseString())
         case 't' => parseLit("true", JBool(true))
         case 'f' => parseLit("false", JBool(false))
@@ -123,6 +130,17 @@ object Json {
     private def parseLit(lit: String, v: JValue): JValue = {
       if (!s.startsWith(lit, pos)) fail(s"Invalid literal")
       pos += lit.length
+      v
+    }
+
+    /** Parses an array or object one level deeper than its container;
+      * a failure ends the whole parse, so nothing needs unwinding.
+      */
+    private def nested(parse: => JValue): JValue = {
+      if (depth == MaxDepth) fail(s"Nesting deeper than $MaxDepth levels")
+      depth += 1
+      val v = parse
+      depth -= 1
       v
     }
 

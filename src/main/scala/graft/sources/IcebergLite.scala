@@ -277,18 +277,6 @@ object IcebergLite {
     }
   }
 
-  /** All data-file paths referenced by one manifest, regardless of entry
-    * status — snapshot expiration must treat history-only (status 2)
-    * references from retained snapshots as still reachable.
-    */
-  private[sources] def manifestFilePaths(conf: Configuration,
-      manifestPath: String): Seq[String] =
-    readAvro(conf, new Path(manifestPath)).flatMap { entry =>
-      Option(entry.get("data_file")).collect { case df: GenericRecord =>
-        fieldStr(df, "file_path")
-      }.flatten
-    }
-
   /** All partition-spec fields of the default spec (identity AND hidden
     * transforms). `source-name` is the lite format's direct source link
     * (older lite tables without it fall back to the field name, which is
@@ -471,9 +459,6 @@ object IcebergLite {
     * resolution over the snapshot log's timestamp-ms (reference capability
     * "time travel via snapshots", README.md:197).
     */
-  def snapshotIdAsOf(conf: Configuration, tablePath: String, tsMillis: Long): Long =
-    snapshotIdAsOfMeta(resolveMetadata(conf, tablePath), tsMillis, tablePath)
-
   private def snapshotIdAsOfMeta(meta: JObj, tsMillis: Long, tablePath: String): Long = {
     val snaps = meta.get("snapshots") match {
       case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
@@ -845,7 +830,6 @@ object IcebergLite {
   /** The `iceberg_refs('path')` relation — real Iceberg's `<table>.refs`
     * metadata table: every named ref (tag or branch) with its pinned
     * snapshot, plus the implicit `main` branch at the current snapshot.
-    * Tags protect their snapshot from [[IcebergLiteWriter.expireSnapshots]].
     */
   def refsRelation(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._

@@ -302,8 +302,7 @@ object IcebergLiteWriter {
   }
 
   private def commit(spark: SparkSession, df: DataFrame, tableDir: String,
-      mode: SaveMode, withDeleteManifest: Boolean, partitionBy: Seq[String],
-      extraSummary: Map[String, String] = Map.empty): Unit = {
+      mode: SaveMode, withDeleteManifest: Boolean, partitionBy: Seq[String]): Unit = {
     val conf = IcebergLite.sessionHadoopConf(spark)
     val dataDir = s"$tableDir/data"
 
@@ -323,11 +322,10 @@ object IcebergLiteWriter {
     // Manifest EXACTLY the files this write produces (listing diff around
     // the write), never "whatever is unmanifested in data/": debris from a
     // commit that died between its data write and its metadata swap must
-    // not ride along with a later (e.g. replayed streaming) commit — that
-    // would duplicate the dead batch's rows. Orphans stay unreferenced
-    // garbage instead, removable by storage-level orphan cleanup exactly
-    // as in real Iceberg. Delete files (delete-*.parquet) live under
-    // data/ too and are never data.
+    // not ride along with a later commit — that would duplicate the dead
+    // commit's rows. Orphans stay unreferenced garbage instead, for an
+    // outside tool's orphan-file cleanup, as in real Iceberg. Delete files
+    // (delete-*.parquet) live under data/ too and are never data.
     val dataPath = new Path(dataDir)
     val fs = dataPath.getFileSystem(conf)
     val before: Set[String] =
@@ -363,83 +361,7 @@ object IcebergLiteWriter {
     }
 
     commitSnapshot(conf, tableDir, prior, snapshotId, newManifests,
-      schemaJson = Some(schemaFieldsJson(df.schema)), partCols = partCols,
-      extraSummary = extraSummary)
-  }
-
-  /** The summary key an idempotent streaming sink stamps on each commit. */
-  val StreamingBatchIdKey = "streaming-batch-id"
-
-  // Per-table commit locks: the check-then-commit below must be atomic
-  // against OTHER WRITERS IN THIS PROCESS (a stopped-and-restarted query
-  // whose old instance has one last foreachBatch in flight). Cross-process
-  // atomicity needs a catalog with compare-and-swap (what real Iceberg
-  // commits use); the lite file format has no CAS, so the documented
-  // deployment boundary is one writer process per table — Structured
-  // Streaming's one-driver model already matches it.
-  private val tableCommitLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Append one streaming micro-batch as a snapshot tagged with its batch
-    * id. Paired with [[committedStreamingBatchIds]], this gives an
-    * exactly-once table from Structured Streaming's at-least-once
-    * foreachBatch replay: a restarted query re-offers the last batch, the
-    * sink sees its id already in the snapshot log, and skips the commit
-    * (the same summary-tag protocol real Iceberg sinks use for
-    * idempotence; their tag rides a catalog CAS — see the lock note
-    * above for this format's single-process boundary). Returns true when
-    * the batch committed, false when it was already present.
-    */
-  def appendStreamingBatch(spark: SparkSession, df: DataFrame, tableDir: String,
-      batchId: Long, partitionBy: Seq[String] = Nil): Boolean = {
-    val lock = tableCommitLocks.computeIfAbsent(tableDir, _ => new Object)
-    lock.synchronized {
-      if (committedStreamingBatchIds(spark, tableDir).contains(batchId)) false
-      else {
-        val mode =
-          if (IcebergLite.latestMetadataPath(
-            IcebergLite.sessionHadoopConf(spark), tableDir).isEmpty) SaveMode.Overwrite
-          else SaveMode.Append
-        commit(spark, df, tableDir, mode, withDeleteManifest = false, partitionBy,
-          extraSummary = Map(StreamingBatchIdKey -> batchId.toString))
-        true
-      }
-    }
-  }
-
-  // committedStreamingBatchIds memo, keyed by the latest metadata file's
-  // name (unique per commit): the per-micro-batch cost stays one directory
-  // listing instead of re-parsing a snapshot log that grows with stream
-  // lifetime. Pair long-running streams with expireSnapshots maintenance
-  // to bound the log itself, exactly as real Iceberg tables do.
-  private val batchIdCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Set[Long])]()
-
-  /** Batch ids already committed to the table's snapshot log. Metadata-only
-    * (a listing + at most one JSON read) — restart recovery costs no data IO.
-    */
-  def committedStreamingBatchIds(spark: SparkSession, tableDir: String): Set[Long] = {
-    val conf = IcebergLite.sessionHadoopConf(spark)
-    IcebergLite.latestMetadataPath(conf, tableDir) match {
-      case None => Set.empty
-      case Some(p) =>
-        val key = p.toString
-        val cached = batchIdCache.get(tableDir)
-        if (cached != null && cached._1 == key) cached._2
-        else {
-          val meta = IcebergLite.readMetadataJson(conf, p)
-          val ids = (meta.get("snapshots") match {
-            case Some(graft.gateway.JValue.JArr(items)) =>
-              items.collect { case o: graft.gateway.JValue.JObj => o }
-                .flatMap(_.get("summary").collect { case s: graft.gateway.JValue.JObj => s })
-                .flatMap(_.str(StreamingBatchIdKey))
-                .flatMap(s => scala.util.Try(s.toLong).toOption)
-            case _ => Vector.empty
-          }).toSet
-          batchIdCache.put(tableDir, (key, ids))
-          ids
-        }
-    }
+      schemaJson = Some(schemaFieldsJson(df.schema)), partCols = partCols)
   }
 
   /** One manifest entry (status 0=EXISTING / 1=ADDED) for a data file. */
@@ -809,8 +731,7 @@ object IcebergLiteWriter {
       prior: Option[graft.gateway.JValue.JObj], snapshotId: Long,
       newManifests: Seq[(String, Long, Int)], schemaJson: Option[String],
       partCols: Seq[String], carryPriorManifests: Boolean = true,
-      operation: String = "append",
-      extraSummary: Map[String, String] = Map.empty): Unit = {
+      operation: String = "append"): Unit = {
     val metaDir = s"$tableDir/metadata"
     // REPLACE commits (compaction) write a complete manifest themselves;
     // carrying the prior ones would resurrect the rewritten files.
@@ -830,9 +751,6 @@ object IcebergLiteWriter {
     writeAvro(conf, manifestListPath, ManifestFileSchema, manifestRecords)
 
     val nowMs = System.currentTimeMillis()
-    val summaryJson = (Seq(s""""operation": "$operation"""") ++
-      extraSummary.toSeq.sortBy(_._1).map { case (k, v) => s""""$k": "$v"""" })
-      .mkString("{", ", ", "}")
     // Lineage per the spec: each snapshot records the snapshot it was
     // committed on top of; the history relation chases this chain.
     val parentId = prior.flatMap(longOf(_, "current-snapshot-id"))
@@ -843,7 +761,7 @@ object IcebergLiteWriter {
          |      "snapshot-id": $snapshotId,$parentField
          |      "timestamp-ms": $nowMs,
          |      "manifest-list": "$manifestListPath",
-         |      "summary": $summaryJson
+         |      "summary": {"operation": "$operation"}
          |    }""".stripMargin
     val priorSnapshots = prior.toSeq.flatMap(_.get("snapshots")).flatMap {
       case graft.gateway.JValue.JArr(items) => items.map(graft.gateway.Json.render)
@@ -899,7 +817,7 @@ object IcebergLiteWriter {
     out.close()
   }
 
-  // ---- table maintenance: rollback + snapshot expiration -----------------
+  // ---- metadata-only commits: refs + rollback ---------------------------
 
   private def longOf(o: graft.gateway.JValue.JObj, key: String): Option[Long] =
     o.get(key).collect { case graft.gateway.JValue.JNum(v) => v.toLong }
@@ -930,9 +848,8 @@ object IcebergLiteWriter {
   private val RefNameRe = "^[A-Za-z0-9._-]{1,255}$".r
 
   /** Create or move a named ref — Iceberg's tags ("keep this snapshot
-    * addressable as v1.0") and branches. Metadata-only commit; the ref'd
-    * snapshot becomes immune to [[expireSnapshots]] until the ref drops.
-    * `main` is reserved: it always means the current snapshot.
+    * addressable as v1.0") and branches. Metadata-only commit. `main` is
+    * reserved: it always means the current snapshot.
     */
   def setRef(spark: SparkSession, tableDir: String, name: String,
       snapshotId: Long, refType: String = "tag"): Unit = {
@@ -951,18 +868,6 @@ object IcebergLiteWriter {
     val refs = refEntries(meta).filterNot(_._1 == name) :+ ((name, snapshotId, refType))
     writeMetadataOnly(conf, tableDir, meta, snaps, currentId,
       snapshotLogEntries(meta), Some(refs))
-  }
-
-  /** Drop a named ref; its snapshot becomes expirable again. */
-  def dropRef(spark: SparkSession, tableDir: String, name: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val meta = IcebergLite.resolveMetadata(conf, tableDir)
-    val refs = refEntries(meta)
-    require(refs.exists(_._1 == name), s"ref '$name' not found at $tableDir")
-    val currentId = longOf(meta, "current-snapshot-id")
-      .getOrElse(throw IcebergLite.ProbeError("metadata has no current-snapshot-id"))
-    writeMetadataOnly(conf, tableDir, meta, snapshotObjs(meta), currentId,
-      snapshotLogEntries(meta), Some(refs.filterNot(_._1 == name)))
   }
 
   /** (timestamp-ms, snapshot-id) entries of the metadata's snapshot-log;
@@ -1049,134 +954,6 @@ object IcebergLiteWriter {
     // exactly what distinguishes `history` from `snapshots`).
     val log = snapshotLogEntries(meta) :+ ((System.currentTimeMillis(), toSnapshotId))
     writeMetadataOnly(conf, tableDir, meta, snaps, toSnapshotId, log)
-  }
-
-  /** Result of one [[expireSnapshots]] call. */
-  final case class ExpireResult(expiredSnapshots: Int, deletedManifests: Int,
-      deletedDataFiles: Int)
-
-  /** Expire all but the most recent `keepLast` snapshots (the current
-    * snapshot is always retained), deleting every manifest list, manifest,
-    * and data file reachable ONLY from expired snapshots. Reachability is
-    * computed over ALL entry statuses, so a file that a retained snapshot
-    * merely tombstoned (status 2) — still needed to reconstruct that
-    * snapshot's history — is never deleted. On a merge-on-read table the
-    * parent CHAIN of any retained delete-carrying snapshot is retained
-    * too (the scan scopes equality deletes to their commit's parent
-    * listing), so expiry never strands a delete-applying reader —
-    * reclamation on MoR tables comes from [[compact]], which rewrites
-    * the deletes away, after which expiry reclaims the old layout.
-    *
-    * Scale note: the planning walk is proportional to manifest count, not
-    * data size (same as scan planning), and deletes are issued per file —
-    * at object-store scale these would batch through a bulk-delete API,
-    * which changes the I/O call, not the reachability computation.
-    */
-  def expireSnapshots(spark: SparkSession, tableDir: String,
-      keepLast: Int): ExpireResult = {
-    require(keepLast >= 1, "keepLast must be >= 1")
-    val conf = spark.sessionState.newHadoopConf()
-    val meta = IcebergLite.resolveMetadata(conf, tableDir)
-    val snaps = snapshotObjs(meta)
-    val currentId = longOf(meta, "current-snapshot-id")
-      .getOrElse(throw IcebergLite.ProbeError("metadata has no current-snapshot-id"))
-    val retained = {
-      val tailIds = snaps.takeRight(keepLast).flatMap(longOf(_, "snapshot-id")).toSet
-      // Ref-targeted snapshots (tags/branches) are never expirable — the
-      // whole point of a tag is to keep its snapshot addressable.
-      var keepIds = tailIds + currentId ++ refEntries(meta).map(_._2)
-      // MoR readability: the scan scopes an equality delete to the file
-      // listing at the delete snapshot's PARENT (IcebergLite.scan), so a
-      // retained snapshot that carries delete manifests needs its parent
-      // retained too — expiring the parent would leave the table
-      // unreadable in delete-applying mode ("snapshot not found"). Closed
-      // under iteration: a newly-retained parent may itself carry
-      // deletes. Bounded by the snapshot count.
-      val byId = snaps.flatMap(s => longOf(s, "snapshot-id").map(_ -> s)).toMap
-      var grown = true
-      while (grown) {
-        val parents = keepIds.flatMap(byId.get)
-          .filter(s => IcebergLite.currentManifests(conf, tableDir, meta,
-            longOf(s, "snapshot-id")).exists(_.content == 1))
-          .flatMap(s => longOf(s, "parent-snapshot-id"))
-          .filter(byId.contains)
-        val add = parents -- keepIds
-        grown = add.nonEmpty
-        keepIds ++= add
-      }
-      snaps.filter(s => longOf(s, "snapshot-id").exists(keepIds))
-    }
-    val retainedIds = retained.flatMap(longOf(_, "snapshot-id")).toSet
-    val expired = snaps.filterNot(s => longOf(s, "snapshot-id").exists(retainedIds))
-    if (expired.isEmpty) return ExpireResult(0, 0, 0)
-
-    def manifestPathsOf(snapIds: Seq[Long]): Set[String] =
-      snapIds.flatMap(id =>
-        IcebergLite.currentManifests(conf, tableDir, meta, Some(id)).map(_.path)).toSet
-    val liveManifests = manifestPathsOf(retainedIds.toSeq)
-    val expiredIds = expired.flatMap(longOf(_, "snapshot-id"))
-    val deadManifests = manifestPathsOf(expiredIds) -- liveManifests
-    val liveFiles = liveManifests.flatMap(IcebergLite.manifestFilePaths(conf, _))
-    val deadFiles =
-      deadManifests.flatMap(IcebergLite.manifestFilePaths(conf, _)) -- liveFiles
-
-    def delete(p: String): Unit = {
-      val path = new Path(p)
-      path.getFileSystem(conf).delete(path, false)
-    }
-    deadFiles.foreach(delete)
-    deadManifests.foreach(delete)
-    expired.flatMap(_.str("manifest-list")).foreach(delete)
-    val log = snapshotLogEntries(meta).filter { case (_, id) => retainedIds(id) }
-    writeMetadataOnly(conf, tableDir, meta, retained, currentId, log)
-    ExpireResult(expired.size, deadManifests.size, deadFiles.size)
-  }
-
-  final case class OrphanCleanupResult(scanned: Int, deleted: Int)
-
-  /** Delete data-directory files NO snapshot in the log references — the
-    * debris a commit leaves when it dies between its data write and its
-    * metadata swap (commits deliberately never adopt such files; see the
-    * listing-diff note in `commit`). Reachability is computed over EVERY
-    * snapshot, current and historical, so time travel stays intact, and
-    * `olderThanMs` is the same grace period real Iceberg's
-    * remove_orphan_files defaults to days of: an in-flight concurrent
-    * commit's data files exist BEFORE its metadata lands, and a zero
-    * grace period would eat them. Single-writer-process boundary as with
-    * all lite commits.
-    *
-    * Listing + deletion are driver-side Hadoop FS calls, like
-    * [[expireSnapshots]]: at object-store scale both would batch through
-    * a bulk API — different I/O, same reachability computation.
-    */
-  def removeOrphanFiles(spark: SparkSession, tableDir: String,
-      olderThanMs: Long): OrphanCleanupResult = {
-    require(olderThanMs >= 0, "olderThanMs must be >= 0")
-    val conf = spark.sessionState.newHadoopConf()
-    val meta = IcebergLite.resolveMetadata(conf, tableDir)
-    val snapIds = snapshotObjs(meta).flatMap(longOf(_, "snapshot-id"))
-    // Every commit carries prior manifests forward, so the same manifest
-    // appears in many snapshots' lists — dedupe the PATHS before reading
-    // (O(manifests) Avro reads, not O(snapshots x manifests): a 1000-
-    // append table would otherwise re-read ~500k manifests here).
-    val manifestPaths = snapIds.flatMap(id =>
-      IcebergLite.currentManifests(conf, tableDir, meta, Some(id)).map(_.path)).distinct
-    val dataPath = new Path(s"$tableDir/data")
-    val fs = dataPath.getFileSystem(conf)
-    // Qualify BOTH sides before comparing: manifests may record paths in a
-    // different form than the listing returns (scheme-less tableDir, a
-    // relocated/copied table, externally authored metadata). Raw string
-    // equality would make every live file look orphaned — and deleted.
-    val qualify = (p: Path) => fs.makeQualified(p).toString
-    val live: Set[String] = manifestPaths
-      .flatMap(p => IcebergLite.manifestFilePaths(conf, p))
-      .map(p => qualify(new Path(p))).toSet
-    val all = if (fs.exists(dataPath)) listParquet(fs, dataPath) else Nil
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    val orphans = all.filter(s =>
-      !live.contains(qualify(s.getPath)) && s.getModificationTime <= cutoff)
-    orphans.foreach(s => fs.delete(s.getPath, false))
-    OrphanCleanupResult(all.size, orphans.size)
   }
 
   private def manifestFileRecord(path: String, len: Long, content: Int,

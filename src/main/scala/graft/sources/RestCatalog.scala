@@ -3,8 +3,6 @@ package graft.sources
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
-import scala.util.Try
-
 import graft.gateway.{ConnectionConfig, JValue, Json}
 import graft.gateway.JValue.{JArr, JObj}
 
@@ -74,11 +72,6 @@ final class RestCatalogClient(
         throw CatalogError(s"LoadTable $namespace.$table has no metadata-location"))
       case _ => throw CatalogError("LoadTable response is not a JSON object")
     }
-
-  /** Liveness probe of the catalog root (`GET /v1/config`); any well-formed
-    * response counts — some catalogs gate config behind auth.
-    */
-  def ping(): Boolean = Try(get("/v1/config")).isSuccess
 }
 
 object RestCatalogClient {

@@ -165,14 +165,17 @@ class DialectRewriterSpec extends AnyFunSuite with graft.SparkFixture {
   test("r11 renames: arg_min/arg_max, list_value, list_concat, regexp_matches") {
     renamed("SELECT arg_min(x, b), arg_max(x, b) FROM t",
       "SELECT min_by(x, b), max_by(x, b) FROM t")
-    renamed("SELECT list_value(1, 2, 3), list_concat(a, a) FROM t",
-      "SELECT array(1, 2, 3), concat(a, a) FROM t")
-    renamed("SELECT list_reverse(a), list_append(a, 1), list_prepend(a, 0) FROM t",
-      "SELECT reverse(a), array_append(a, 1), array_prepend(a, 0) FROM t")
-    // DuckDB's own list_prepend order is (element, list); Spark's
-    // array_prepend rejects it at analysis.
+    renamed("SELECT list_value(1, 2, 3), list_reverse(a) FROM t",
+      "SELECT array(1, 2, 3), reverse(a) FROM t")
+    // The list builders keep DuckDB's argument order: list_prepend takes
+    // (element, list), so Spark's (list, element) order fails analysis.
+    val lists = registered.sql(
+      "SELECT list_concat(a, a), list_append(a, 1), list_prepend(0, a) FROM t").collect()
+    assert(lists.map(r => (0 to 2).map(r.getSeq[Int](_))).toSeq == Seq(
+      Seq(Seq(3, 1, 2, 3, 1, 2), Seq(3, 1, 2, 1), Seq(0, 3, 1, 2)),
+      Seq(Seq(5, 5), Seq(5, 1), Seq(0, 5))))
     intercept[org.apache.spark.sql.AnalysisException](
-      registered.sql("SELECT list_prepend(0, a) FROM t"))
+      registered.sql("SELECT list_prepend(a, 0) FROM t"))
     renamed("SELECT * FROM t WHERE regexp_matches(s, 'ab+')",
       "SELECT * FROM t WHERE regexp_like(s, 'ab+')")
   }

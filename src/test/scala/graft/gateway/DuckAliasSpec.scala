@@ -3,6 +3,7 @@ package graft.gateway
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
 import graft.SparkFixture
 import graft.functions.{DuckCompat, DuckLen, GraftFunctions}
@@ -65,18 +66,43 @@ class DuckAliasSpec extends AnyFunSuite with SparkFixture {
     ("epoch_ms", "unix_millis", "SELECT FN(TIMESTAMP '1970-01-01 00:00:01.5')"),
     ("epoch_us", "unix_micros", "SELECT FN(TIMESTAMP '1970-01-01 00:00:01.5')"),
     ("list_value", "array", "SELECT FN(1, 2, 3)"),
-    ("list_concat", "concat", "SELECT FN(array(1), array(2, 3))"),
     ("list_reverse", "reverse", "SELECT FN(array(1, 2, 3))"),
-    ("list_append", "array_append", "SELECT FN(array(1, 2), 3)"),
-    ("list_prepend", "array_prepend", "SELECT FN(array(1, 2), 0)"),
     ("regexp_matches", "regexp_like", "SELECT FN('abbc', 'b+'), FN('ac', 'b+')"))
 
+  /** The list builders, each call with DuckDB 1.0.0's answer. */
+  private val listCalls: Seq[(String, Seq[Any])] = Seq(
+    "list_prepend(0, array(1, 2))" -> Seq(0, 1, 2),
+    "list_prepend(NULL, array(1))" -> Seq(null, 1),
+    "list_prepend(1, CAST(NULL AS ARRAY<INT>))" -> Seq(1),
+    "list_prepend(NULL, CAST(NULL AS ARRAY<INT>))" -> Seq(null),
+    "list_append(array(1, 2), 3)" -> Seq(1, 2, 3),
+    "list_append(CAST(NULL AS ARRAY<INT>), 1)" -> Seq(1),
+    "list_append(CAST(NULL AS ARRAY<INT>), NULL)" -> Seq(null),
+    "list_concat(array(1), array(2, 3))" -> Seq(1, 2, 3),
+    "list_concat(CAST(NULL AS ARRAY<INT>), array(1))" -> Seq(1),
+    "list_concat(array(1), CAST(NULL AS ARRAY<INT>))" -> Seq(1),
+    "list_concat(CAST(NULL AS ARRAY<INT>), CAST(NULL AS ARRAY<INT>))" -> null)
+
   test("each DuckDB name returns its Spark target's columns, types and rows") {
-    assert(("len" +: aliases.map(_._1)).toSet == DuckCompat.names.toSet)
+    assert(("len" +: (aliases.map(_._1) ++ listCalls.map(_._1.takeWhile(_ != '('))))
+      .toSet == DuckCompat.names.toSet)
     assert(DuckCompat.names.size == 23)
     aliases.foreach { case (name, target, statement) =>
       assertSameResult(statement.replace("FN", name), statement.replace("FN", target))
     }
+  }
+
+  test("list_prepend, list_append and list_concat answer as DuckDB does") {
+    listCalls.foreach { case (call, expected) =>
+      val r = query(s"SELECT $call")
+      assert(r.columns == Seq(call.replace("CAST(NULL AS ARRAY<INT>)", "NULL")), call)
+      assert(r.rows == Seq(Seq(expected)), call)
+      assert(fields(s"SELECT $call AS v").map(_._2.asInstanceOf[ArrayType].elementType) ==
+        Seq(IntegerType), call)
+    }
+    // Inside a lambda, the list is a lambda variable.
+    assert(query("SELECT transform(array(array(1), CAST(NULL AS ARRAY<INT>)), " +
+      "x -> list_prepend(0, x)) AS v").rows == Seq(Seq(Seq(Seq(0, 1), Seq(0)))))
   }
 
   test("len is string length for strings and binaries, cardinality for arrays") {
@@ -151,7 +177,8 @@ class DuckAliasSpec extends AnyFunSuite with SparkFixture {
     val advertised = msg.split("supported DuckDB-dialect functions: ")(1)
       .split("; plus")(0).split(", ").toSeq
     val samples = aliases.map { case (name, _, statement) => name -> statement.replace("FN", name) }
-      .toMap ++ Seq("string_split", "str_split", "string_to_array")
+      .toMap ++ listCalls.map { case (call, _) => call.takeWhile(_ != '(') -> s"SELECT $call" } ++
+      Seq("string_split", "str_split", "string_to_array")
       .map(n => n -> s"SELECT $n('a,b', ',')") + ("len" -> "SELECT len('abc')")
     assert(advertised.toSet == samples.keySet)
     advertised.foreach(name => assert(query(samples(name)).rows.nonEmpty, name))

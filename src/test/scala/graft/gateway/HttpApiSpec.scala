@@ -138,6 +138,19 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     assert(r.statusCode() == 400)
   }
 
+  test("a deeply nested JSON body gets 400 and the next request is served") {
+    // Bounded wait: a request thread that dies mid-parse never answers.
+    val deep = client.send(
+      HttpRequest.newBuilder(URI.create(base + "/api/query"))
+        .timeout(java.time.Duration.ofSeconds(60))
+        .POST(HttpRequest.BodyPublishers.ofString("[" * 5000 + "]" * 5000)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(deep.statusCode() == 400)
+    assert(obj(deep).str("detail").exists(_.startsWith("Invalid JSON: Nesting deeper than")))
+    val next = post("/api/query", s"""{"sql":"SELECT 1 AS one","connection":$connJson}""")
+    assert(next.statusCode() == 200)
+  }
+
   test("POST /api/query without sql -> 400") {
     val r = post("/api/query", s"""{"connection":$connJson}""")
     assert(r.statusCode() == 400)

@@ -33,6 +33,24 @@ class JsonSpec extends AnyFunSuite {
     }
   }
 
+  test("nesting past MaxDepth throws JsonParseException; the cap itself parses") {
+    def arrays(n: Int) = "[" * n + "]" * n
+    def objects(n: Int) = """{"a":""" * n + "1" + "}" * n
+    def depth(v: JValue): Int = v match {
+      case JArr(items) => 1 + items.map(depth).maxOption.getOrElse(0)
+      case JObj(fields) => 1 + fields.map(f => depth(f._2)).maxOption.getOrElse(0)
+      case _ => 0
+    }
+    // 5,000 levels is a 10 KB body, enough to overflow a default thread stack.
+    Seq(arrays(5000), objects(5000), arrays(Json.MaxDepth + 1), objects(Json.MaxDepth + 1))
+      .foreach { deep =>
+        val e = intercept[Json.JsonParseException](Json.parse(deep))
+        assert(e.msg.contains(s"Nesting deeper than ${Json.MaxDepth} levels"), e.msg)
+      }
+    assert(depth(Json.parse(arrays(Json.MaxDepth))) == Json.MaxDepth)
+    assert(depth(Json.parse(objects(Json.MaxDepth))) == Json.MaxDepth)
+  }
+
   test("NaN/Infinity render as null") {
     assert(JValue.num(Double.NaN) == JNull)
     assert(JValue.num(Double.PositiveInfinity) == JNull)

@@ -243,29 +243,6 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
         col("ts") <= lit(ts("2022-03-01 07:00:00"))).count())
   }
 
-  test("exactly-once streaming batches land in a hidden-partitioned layout") {
-    import spark.implicits._
-    val dir = tmpDir("iceberg_stream_hidden") + "/warehouse/stream_hidden"
-    val ts = (d: String) => java.sql.Timestamp.valueOf(d)
-    val b0 = Seq((1L, ts("2024-01-01 10:00:00"), 3L), (2L, ts("2024-01-02 10:00:00"), 5L))
-      .toDF("event_id", "ts", "user_id")
-    val spec = Seq("day(ts)", "bucket(4, user_id)")
-    assert(IcebergLiteWriter.appendStreamingBatch(spark, b0, dir, batchId = 0L, spec))
-    // Batch 1 inherits the spec WITHOUT re-passing it (the metadata carries it).
-    val b1 = Seq((3L, ts("2024-01-03 10:00:00"), 7L)).toDF("event_id", "ts", "user_id")
-    assert(IcebergLiteWriter.appendStreamingBatch(spark, b1, dir, batchId = 1L))
-    // Replay of batch 1 is a no-op (exactly-once), layout + pruning intact.
-    assert(!IcebergLiteWriter.appendStreamingBatch(spark, b1, dir, batchId = 1L))
-    val scan = IcebergLite.scan(spark, dir)
-    assert(scan.count() == 3)
-    assert(scan.columns.toSet == Set("event_id", "ts", "user_id"))
-    assert(filesScanned(scan.filter(col("user_id") === 7L)) < filesScanned(scan))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val meta = IcebergLite.latestMetadataPath(conf, dir)
-      .map(p => IcebergLite.readMetadataJson(conf, p)).get
-    assert(IcebergLite.partitionSpecDsl(meta) == spec)
-  }
-
   test("column-bounds filter skips files whose min/max exclude the predicate") {
     val df = IcebergLite.scan(spark, rangedTable)
     val all = filesScanned(df)
@@ -516,7 +493,7 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
     // Simulate a commit that died between its data write and its metadata
     // swap: a stray parquet sits in data/ unmanifested. A later append
     // must manifest exactly its own files — the orphan's rows must not
-    // appear (they would duplicate a replayed batch's rows).
+    // appear (they would duplicate the dead commit's rows).
     val dir = tmpDir("iceberg_orphan") + "/warehouse/region_orphan"
     val region = Tables.t(spark, sf0001, "region")
     IcebergLiteWriter.write(spark, region, dir)
@@ -530,32 +507,6 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
 
     IcebergLiteWriter.append(spark, region.limit(2), dir)
     // 5 original + 2 appended; the orphan's 5 duplicate rows excluded.
-    assert(IcebergLite.scan(spark, dir).count() == 7)
-
-    // Orphan cleanup: within the grace period the debris survives (it
-    // could be a concurrent commit's not-yet-manifested data)...
-    val graced = IcebergLiteWriter.removeOrphanFiles(spark, dir,
-      olderThanMs = 3600L * 1000)
-    assert(graced.deleted == 0, graced.toString)
-    assert(fs.exists(new Path(dataDir, "part-orphan-from-dead-commit.parquet")))
-    // ...past it, exactly the unreferenced file goes; every snapshot's
-    // files stay, so current reads AND time travel are intact.
-    val cleaned = IcebergLiteWriter.removeOrphanFiles(spark, dir, olderThanMs = 0)
-    assert(cleaned.deleted == 1, cleaned.toString)
-    assert(!fs.exists(new Path(dataDir, "part-orphan-from-dead-commit.parquet")))
-    assert(IcebergLite.scan(spark, dir).count() == 7)
-    val firstSnap = IcebergLite.snapshotsRelation(spark, dir)
-      .orderBy("committed_at").collect()(0).getLong(0)
-    assert(IcebergLite.scan(spark, dir, snapshotId = Some(firstSnap)).count() == 5)
-
-    // Path-form divergence must NOT fabricate orphans: addressed through a
-    // scheme-qualified alias of the same table, every live file still
-    // matches (both sides are qualified before comparison) — raw string
-    // equality here would delete the whole table.
-    val qualified = fs.makeQualified(new Path(dir)).toString
-    assert(qualified != dir && qualified.endsWith(dir), qualified)
-    val aliased = IcebergLiteWriter.removeOrphanFiles(spark, qualified, olderThanMs = 0)
-    assert(aliased.deleted == 0, aliased.toString)
     assert(IcebergLite.scan(spark, dir).count() == 7)
   }
 
@@ -698,7 +649,7 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
     assert(err.getMessage.contains("Compaction refused"))
   }
 
-  test("rollback repoints current; expiration deletes only unreachable files") {
+  test("rollback repoints current and every snapshot stays addressable") {
     val dir = tmpDir("iceberg_maint") + "/warehouse/orders_maint"
     val orders = Tables.t(spark, sf0001, "orders").select("o_orderkey", "o_totalprice")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -723,30 +674,6 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
     IcebergLiteWriter.rollback(spark, dir, idC)
     assert(IcebergLite.scan(spark, dir).count() == orders.count())
     intercept[IllegalArgumentException](IcebergLiteWriter.rollback(spark, dir, 424242L))
-
-    // Appends carry prior manifests forward, so expiring A..C behind the
-    // current snapshot must delete NO data files (all still reachable).
-    val keepData = IcebergLiteWriter.expireSnapshots(spark, dir, keepLast = 1)
-    assert(keepData.expiredSnapshots == 2 && keepData.deletedDataFiles == 0,
-      s"carried-forward files must survive: $keepData")
-    assert(IcebergLite.scan(spark, dir).count() == orders.count())
-
-    // After compaction rewrites everything, the pre-compaction files are
-    // reachable only from the old snapshots: expiration reclaims them.
-    val preCompactFiles = IcebergLite.fileEntries(conf, dir).map(_.path).toSet
-    assert(IcebergLiteWriter.compact(spark, dir).written == 1)
-    val res = IcebergLiteWriter.expireSnapshots(spark, dir, keepLast = 1)
-    assert(res.expiredSnapshots == 1 && res.deletedDataFiles == preCompactFiles.size,
-      s"expected ${preCompactFiles.size} reclaimed files: $res")
-    preCompactFiles.foreach { p =>
-      val path = new Path(p)
-      assert(!path.getFileSystem(conf).exists(path), s"not reclaimed: $p")
-    }
-    // The table still reads fully through the compacted layout...
-    assert(IcebergLite.scan(spark, dir).count() == orders.count())
-    // ...and expired snapshots are gone from the metadata.
-    intercept[IcebergLite.ProbeError](
-      IcebergLite.scan(spark, dir, snapshotId = Some(idC)).count())
   }
 
   test("rewriteApplyingDeletes turns a MoR table back into a guard-passing one") {
@@ -779,31 +706,5 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
     // A clean table is a no-op, not a spurious rewrite.
     assert(IcebergLiteWriter.rewriteApplyingDeletes(spark, dir) ==
       IcebergLiteWriter.CompactionResult(0, 0))
-  }
-
-  test("expiration keeps the parent chain of delete-carrying snapshots (MoR stays readable)") {
-    import spark.implicits._
-    val dir = tmpDir("iceberg_expire_mor") + "/warehouse/orders_expire_mor"
-    // S1 base, S2 atomic upsert (equality delete scoped to S1's listing),
-    // S3/S4 appends. keepLast = 3 would expire S1 by the tail rule alone —
-    // but the MoR scan resolves the S2 delete against S1's file listing,
-    // so expiring S1 makes every delete-applying read throw "snapshot not
-    // found". The retention closure must keep S1 alive.
-    val base = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("o_orderkey", "o_totalprice")
-    IcebergLiteWriter.write(spark, base, dir)
-    IcebergLiteWriter.upsert(spark,
-      Seq((2L, 99.0)).toDF("o_orderkey", "o_totalprice"), dir, Seq("o_orderkey"))
-    IcebergLiteWriter.append(spark, Seq((4L, 40.0)).toDF("o_orderkey", "o_totalprice"), dir)
-    IcebergLiteWriter.append(spark, Seq((5L, 50.0)).toDF("o_orderkey", "o_totalprice"), dir)
-    val res = IcebergLiteWriter.expireSnapshots(spark, dir, keepLast = 3)
-    // Appends carry the delete manifest forward, so the closure walks the
-    // parent chain back to S1 — nothing is expirable here. That
-    // conservatism is the point: on a MoR table, reclamation comes from
-    // compaction (which rewrites the deletes away), not from expiry.
-    assert(res.expiredSnapshots == 0, s"MoR parent chain must be retained: $res")
-    val rows = IcebergLite.scan(spark, dir, applyDeletes = true)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(rows.keySet == Set(1L, 2L, 3L, 4L, 5L), rows)
-    assert(rows(2L) == 99.0, s"upserted value must win: $rows")
   }
 }

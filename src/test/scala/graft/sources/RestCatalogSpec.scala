@@ -48,8 +48,6 @@ class RestCatalogSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterA
       if (!hdr.contains(goodToken)) reply(ex, 401, """{"error":"unauthorized"}""")
       else { val (s, b) = ok; reply(ex, s, b) }
     }
-    server.createContext("/v1/config", ex =>
-      authed(ex)((200, """{"defaults":{},"overrides":{}}""")))
     server.createContext("/v1/namespaces/demo/tables/movies", ex =>
       authed(ex)((200,
         s"""{"metadata-location":"$metadataLoc","metadata":{"format-version":2}}""")))
@@ -72,7 +70,6 @@ class RestCatalogSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterA
 
   test("client lists namespace tables and resolves a metadata location") {
     val client = RestCatalogClient.fromConfig(cfg())
-    assert(client.ping())
     assert(client.listTables("demo") == Seq("movies"))
     assert(client.listTables("empty").isEmpty)
     assert(client.metadataLocation("demo", "movies") == metadataLoc)
