@@ -1,8 +1,10 @@
 package graft.functions
 
+import scala.util.{Left, Right}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, FunctionRegistryBase, TableFunctionRegistry}
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, FunctionRegistryBase, TableFunctionRegistry, UnresolvedExtractValue}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -73,19 +75,32 @@ case class DuckList(name: String, parameters: Seq[Expression], replacement: Expr
     copy(replacement = newChild)
 }
 
-/** DuckDB function names that Spark resolves as one of its own functions,
-  * registered per session by [[register]]. Argument order and semantics
-  * line up, so each name takes its Spark target's builder and
-  * `ExpressionInfo` from `FunctionRegistry.expressions`, the table Spark's
-  * builtin registry is filled from: a call resolves, and names its column,
-  * exactly as the target would. `string_split_regex` is Spark's `split`
-  * (both take a regex); the literal-delimiter `string_split` family needs
-  * its delimiter quoted and stays a text rewrite in the gateway.
-  * `list_prepend`, `list_append` and `list_concat` differ from their
-  * Spark counterparts in argument order or NULL handling, so each is a
-  * [[DuckList]] instead.
+/** The DuckDB functions, registered per session by [[register]]. Each is
+  * a function builder, so a call is resolved while Spark analyzes the
+  * statement, inside lambdas too, and a string literal in it is read as
+  * the value Spark parsed.
+  *   - Names that Spark resolves as one of its own functions: argument
+  *     order and semantics line up, so each takes its Spark target's
+  *     builder and `ExpressionInfo` from `FunctionRegistry.expressions`,
+  *     the table Spark's builtin registry is filled from. A call resolves,
+  *     and names its column, exactly as the target would.
+  *     `string_split_regex` is Spark's `split` (both take a regex).
+  *   - `list_prepend`, `list_append` and `list_concat` differ from their
+  *     Spark counterparts in argument order or NULL handling, so each is a
+  *     [[DuckList]] instead.
+  *   - Functions whose Spark form takes different arguments: the
+  *     literal-delimiter `string_split` family is `split` on a quoted
+  *     regex; `strftime`/`strptime` are `date_format`/`to_timestamp` on a
+  *     translated pattern; `struct_pack(k => v, ...)` is `named_struct`
+  *     (the gateway turns DuckDB's `:=` into `=>`); `struct_extract(s,
+  *     'f')` is the field access `(s).f`.
+  *   - DuckDB functions with no safe Spark equivalent throw
+  *     [[unsupportedDuckDbMessage]], as does a call of the others that
+  *     has no exact translation, naming the reason.
   */
 object DuckCompat {
+
+  private type Builder = Seq[Expression] => Expression
 
   private val aliasTargets: Seq[(String, String)] = Seq(
     "unnest" -> "explode",
@@ -145,16 +160,200 @@ object DuckCompat {
     listBuilder("list_append") { case Seq(l, e) => ArrayAppend(orEmpty(l), e) },
     listBuilder("list_concat") { case Seq(a, b) => Coalesce(Seq(Concat(Seq(a, b)), a, b)) })
 
+  /** Rejects a call of DuckDB function `fn` that has no exact Spark form. */
+  private def reject(fn: String, reason: String): Nothing =
+    throw new IllegalArgumentException(s"unsupported DuckDB function $fn call: $reason")
+
+  /** The value of a non-NULL string literal. */
+  private def stringLiteral(e: Expression): Option[String] = e match {
+    case Literal(v, _: StringType) if v != null => Some(v.toString)
+    case _ => None
+  }
+
+  /** DuckDB's literal-delimiter split family: Spark's `split` takes a
+    * REGEX, so the delimiter is quoted. A string-literal delimiter is
+    * regex-escaped here; any other is wrapped in the `\Q…\E` construction
+    * `java.util.regex.Pattern.quote` uses (including its embedded-`\E`
+    * splice), evaluated at runtime.
+    */
+  private val splitNames = Seq("string_split", "str_split", "string_to_array")
+
+  private def quoteDelimiter(delimiter: Expression): Expression =
+    stringLiteral(delimiter) match {
+      case Some(d) =>
+        Literal(d.flatMap(c => if ("\\^$.|?*+()[]{}".indexOf(c) >= 0) s"\\$c" else c.toString))
+      case None => Concat(Seq(Literal("\\Q"),
+        StringReplace(delimiter, Literal("\\E"), Literal("\\E\\\\E\\Q")), Literal("\\E")))
+    }
+
+  private val splitBuilders = {
+    val (info, split) = FunctionRegistry.expressions("split")
+    splitNames.map(name => name -> (info, (exprs: Seq[Expression]) => exprs match {
+      case Seq(str, delimiter) => split(Seq(str, quoteDelimiter(delimiter)))
+      case _ => reject(name, s"$name takes (string, delimiter)")
+    }))
+  }
+
+  /** C strftime code → Spark datetime pattern fragment. Only codes whose
+    * Spark pattern is value-identical are mapped — %g (DuckDB millis) and
+    * %n (nanos) are deliberately absent: a wrong fraction width would
+    * silently change answers, the list_position design rule.
+    */
+  private val FormatCodes: Map[String, String] = Map(
+    "%Y" -> "yyyy", "%y" -> "yy", "%m" -> "MM", "%d" -> "dd",
+    "%H" -> "HH", "%I" -> "hh", "%M" -> "mm", "%S" -> "ss",
+    "%f" -> "SSSSSS", "%j" -> "DDD", "%p" -> "a",
+    "%a" -> "EEE", "%A" -> "EEEE", "%b" -> "MMM", "%B" -> "MMMM",
+    "%-d" -> "d", "%-m" -> "M", "%-H" -> "H", "%-I" -> "h",
+    "%-M" -> "m", "%-S" -> "s", "%-j" -> "D", "%%" -> "%")
+
+  /** Codes whose FORMATTING is value-identical but whose PARSING
+    * diverges: C strptime maps two-digit years 69-99 to the 1900s while
+    * Spark's 'yy' (Java reduced-year, base 2000) parses every two-digit
+    * value into 2000-2099, so strptime('69-01-01', '%y-%m-%d') would
+    * silently return 2069 instead of 1969 — the silent value change the
+    * %g/%n exclusion rule forbids. strftime keeps these (a two-digit
+    * year PRINTS identically); strptime gets the precise 400.
+    */
+  private val FormatOnlyCodes: Set[String] = Set("%y")
+
+  /** Translate a C strftime format string into a Spark datetime pattern.
+    * Literal runs containing a letter (or a quote) are single-quoted —
+    * letters are pattern-reserved in Java's DateTimeFormatter and an
+    * embedded quote doubles. Left(reason) on any code outside the table,
+    * or (when `parsing`) on a [[FormatOnlyCodes]] member.
+    */
+  private def translateFormat(fmt: String,
+      parsing: Boolean = false): Either[String, String] = {
+    val out = new StringBuilder
+    val lit = new StringBuilder
+    def flush(): Unit = if (lit.nonEmpty) {
+      val s = lit.toString
+      if (s.exists(c => c.isLetter || c == '\''))
+        out.append('\'').append(s.replace("'", "''")).append('\'')
+      else out.append(s)
+      lit.clear()
+    }
+    var i = 0
+    while (i < fmt.length) {
+      if (fmt.charAt(i) == '%') {
+        val code =
+          if (i + 2 < fmt.length && fmt.charAt(i + 1) == '-') fmt.substring(i, i + 3)
+          else if (i + 1 < fmt.length) fmt.substring(i, i + 2)
+          else return Left("dangling % at end of format")
+        FormatCodes.get(code) match {
+          case Some(_) if parsing && FormatOnlyCodes(code) => return Left(
+            s"format code $code parses differently in Spark (two-digit years " +
+              "69-99 read as 2069-2099, not 1969-1999); it is supported for " +
+              "strftime only")
+          case Some("%") => lit.append('%') // %% is literal text
+          case Some(p) => flush(); out.append(p)
+          case None => return Left(
+            s"format code $code has no exact Spark datetime-pattern equivalent " +
+              s"(supported: ${FormatCodes.keys.toSeq.sorted.mkString(" ")})")
+        }
+        i += code.length
+      } else { lit.append(fmt.charAt(i)); i += 1 }
+    }
+    flush()
+    Right(out.toString)
+  }
+
+  /** DuckDB's C-style format-code functions, as the Spark function
+    * `target` on the translated pattern. The format is the string-literal
+    * argument containing a `%`: DuckDB's documented order is (value,
+    * format), so argument 2 is the format whenever it qualifies, and a
+    * VALUE literal that happens to contain '%' (strptime('12%M', '%H:%M'))
+    * is never mistaken for it; argument 1 is only consulted for the
+    * Python-ish (format, value) order.
+    */
+  private def formatBuilder(name: String, target: String) = {
+    val (info, build) = FunctionRegistry.expressions(target)
+    name -> (info, (exprs: Seq[Expression]) => {
+      if (exprs.length != 2) reject(name, s"$name takes (value, format); got ${exprs.length} arguments")
+      val formats = exprs.map(stringLiteral(_).filter(_.contains('%')))
+      val fmtIdx = formats.lastIndexWhere(_.isDefined)
+      if (fmtIdx < 0) reject(name, s"$name needs a string-literal format containing % codes " +
+        "(a computed format cannot be translated)")
+      translateFormat(formats(fmtIdx).get, parsing = name == "strptime") match {
+        case Right(pattern) => build(Seq(exprs(1 - fmtIdx), Literal(pattern)))
+        case Left(reason) => reject(name, reason)
+      }
+    })
+  }
+
+  /** `struct_pack(a => x, b => y)` is `named_struct('a', x, 'b', y)`, and
+    * `struct_extract(s, 'a')` is the field access `(s).a`, named as Spark
+    * names it. Positional arguments to either have no Spark equivalent.
+    */
+  private val structBuilders: Seq[(String, (ExpressionInfo, Builder))] = Seq(
+    "struct_pack" -> (FunctionRegistry.expressions("named_struct")._1, (exprs: Seq[Expression]) => {
+      if (exprs.isEmpty) reject("struct_pack", "struct_pack needs at least one name := value argument")
+      CreateNamedStruct(exprs.flatMap {
+        case NamedArgumentExpression(key, value) => Seq(Literal(key), value)
+        case other => reject("struct_pack",
+          s"struct_pack argument '${other.sql}' is not of the form name := value")
+      })
+    }),
+    "struct_extract" -> (new ExpressionInfo(classOf[UnresolvedExtractValue].getName, "struct_extract"),
+      (exprs: Seq[Expression]) => exprs match {
+        case Seq(struct, field) => stringLiteral(field) match {
+          case Some(f) =>
+            // `(s).f` over a column parses as the column path `s.f`, which
+            // names its column `f`; over any other expression it is this
+            // field access alone.
+            val access = UnresolvedExtractValue(struct, Literal(f))
+            struct match {
+              case _: NamedExpression => Alias(access, f)()
+              case _ => access
+            }
+          case None => reject("struct_extract", "struct_extract needs a string-literal field name " +
+            "(positional extraction has no Spark equivalent)")
+        }
+        case _ => reject("struct_extract",
+          s"struct_extract takes (struct, field); got ${exprs.length} arguments")
+      }))
+
+  /** DuckDB functions with NO safe Spark equivalent (different return
+    * contract, lambda-as-string arguments, or format-code languages that
+    * do not line up), so a call gets a precise 400 naming the limitation
+    * instead of Spark's UNRESOLVED_ROUTINE for a function the gateway
+    * nominally speaks the dialect of. list_position/list_intersect are
+    * here deliberately: Spark's array_position returns 0 (not NULL) on a
+    * miss and array_intersect dedups, so an alias would silently change
+    * answers.
+    */
+  private val unsupported: Seq[(String, (ExpressionInfo, Builder))] = Seq(
+    "list_aggregate", "list_aggr", "list_apply", "list_reduce",
+    "list_unique", "list_has_any", "list_has_all",
+    "list_position", "list_indexof", "list_intersect",
+    "struct_insert",
+    "epoch", "epoch_ns").map(name => name -> (new ExpressionInfo(getClass.getName, name),
+      (_: Seq[Expression]) => throw new IllegalArgumentException(unsupportedDuckDbMessage(name))))
+
   /** `len` replaces Spark's string-only builtin of that name in the
     * sessions it is registered in; on strings the two are the same.
     */
-  private val scalars: Seq[(String, (ExpressionInfo, Seq[Expression] => Expression))] =
+  private val renames: Seq[(String, (ExpressionInfo, Builder))] =
     ("len", (new ExpressionInfo(classOf[DuckLen].getName, "len"), lenForArgs _)) +:
       (aliasTargets.map { case (name, target) => name -> FunctionRegistry.expressions(target) } ++
         listBuilders)
 
+  private val scalars: Seq[(String, (ExpressionInfo, Builder))] =
+    renames ++ splitBuilders ++
+      Seq(formatBuilder("strftime", "date_format"), formatBuilder("strptime", "to_timestamp")) ++
+      structBuilders ++ unsupported
+
   /** Every DuckDB name [[register]] adds. */
   val names: Seq[String] = scalars.map(_._1)
+
+  /** The 400 detail for a call of a DuckDB function with no Spark form. */
+  private[graft] def unsupportedDuckDbMessage(fn: String): String =
+    s"unsupported DuckDB function $fn; supported DuckDB-dialect functions: " +
+      (renames.map(_._1) ++ splitNames).sorted.mkString(", ") +
+      "; plus strftime/strptime with a string-literal format, " +
+      "read_csv/read_json/read_parquet single-path forms, " +
+      "iceberg_scan/iceberg_* table functions, and bracket slices x[i:j]"
 
   /** Registers the DuckDB names in `spark`'s function registry, and
     * `unnest` in its table function registry too (`FROM unnest(...)`).

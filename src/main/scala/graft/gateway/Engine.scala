@@ -40,8 +40,8 @@ import graft.sources.{IcebergLite, IcebergLiteFileIndex, IcebergLiteWriter, Tabl
   * `IcebergLite.metadataCache`), rewriting, validation, analysis and
   * execution. `iceberg_scan('path')`, the other path-addressed table
   * functions and REST catalog references are bound during analysis
-  * ([[TableFunctions]]), and DuckDB function names such as `unnest` and
-  * `len` resolve as Spark functions ([[graft.functions.DuckCompat]]);
+  * ([[TableFunctions]]), and DuckDB functions such as `unnest`, `len` and
+  * `string_split` resolve as Spark functions ([[graft.functions.DuckCompat]]);
   * both are registered once per pooled session. Credential
   * isolation on the shared Hadoop conf is the known hard part (SURVEY.md
   * §7.3): storage settings live only on the session's own conf
@@ -212,17 +212,11 @@ object Engine {
 
     // Rewrite text-only, validate, THEN bind: a statement the guard
     // rejects must not trigger catalog HTTP fetches or Iceberg metadata or
-    // footer IO as side effects. The table functions bind inside
-    // spark.sql, after validation.
-    val converted = DialectRewriter.convertDuckDbDialect(
-      DialectRewriter.convertReadParquet(sql, cfg))
-    // Known-DuckDB functions with no safe Spark mapping get a precise 400
-    // naming the limitation (and the supported surface) instead of
-    // Spark's UNRESOLVED_ROUTINE, run only on statements about to execute
-    // on Spark.
-    try DialectRewriter.rejectUnknownDuckFunctions(converted)
-    catch { case e: IllegalArgumentException => throw EngineError(400, e.getMessage) }
-    val rewritten = DialectRewriter.convertCatalogRefs(converted, cfg)
+    // footer IO as side effects. The table functions bind, and the DuckDB
+    // functions resolve or reject their call, inside spark.sql, after
+    // validation.
+    val rewritten = DialectRewriter.convertCatalogRefs(
+      DialectRewriter.convertDuckDbDialect(DialectRewriter.convertReadParquet(sql, cfg)), cfg)
 
     SqlGuard.validate(spark, rewritten) match {
       case Left(r) => throw EngineError(400, r.message)

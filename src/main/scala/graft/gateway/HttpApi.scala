@@ -100,8 +100,12 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
     // (-Dgraft.gateway.maintenance=true); see Engine.runCompaction.
     server.createContext("/api/maintenance/compact", handlerWithBody { body =>
       val conn = connectionFrom(body)
-      val targetBytes = body.flatMap(_.int("targetBytes")).map(_.toLong)
-        .getOrElse(128L << 20)
+      val targetBytes = body match {
+        case Some(b) if b.get("targetBytes").isDefined =>
+          b.long("targetBytes").filter(_ > 0).getOrElse(throw Engine.EngineError(400,
+            "targetBytes must be a positive whole number of bytes"))
+        case _ => 128L << 20
+      }
       val r = Engine.runCompaction(spark, conn, targetBytes,
         body.flatMap(_.str("tablePath")))
       (200, JObj(
@@ -175,7 +179,10 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
   private def runQuery(body: Option[JObj], heard: Heard): Engine.QueryResult = {
     val obj = body.getOrElse(throw Engine.EngineError(400, "Request body required"))
     val sql = obj.str("sql").getOrElse(throw Engine.EngineError(400, "sql is required"))
-    val rowLimit = obj.int("rowLimit").getOrElse(Engine.DefaultRowLimit)
+    val rowLimit =
+      if (obj.get("rowLimit").isEmpty) Engine.DefaultRowLimit
+      else obj.int("rowLimit").getOrElse(throw Engine.EngineError(400,
+        s"rowLimit must be a whole number <= ${Engine.MaxRowLimit}"))
     Engine.executeQuery(spark, sql, connectionFrom(body), rowLimit,
       m => heard.mode = Some(m), r => heard.ran = Some(r))
   }

@@ -19,7 +19,12 @@ object JValue {
   final case class JObj(fields: Vector[(String, JValue)]) extends JValue {
     def get(key: String): Option[JValue] = fields.collectFirst { case (`key`, v) => v }
     def str(key: String): Option[String] = get(key).collect { case JStr(s) => s }
-    def int(key: String): Option[Int] = get(key).collect { case JNum(n) => n.toInt }
+    /** The field as an Int: None when it is absent, not a number, or not
+      * a whole number in Int range (never a wrapped or truncated value).
+      */
+    def int(key: String): Option[Int] = get(key).collect { case JNum(n) if n.isValidInt => n.toInt }
+    /** The field as a Long, on the terms of [[int]]. */
+    def long(key: String): Option[Long] = get(key).collect { case JNum(n) if n.isValidLong => n.toLong }
     def obj(key: String): Option[JObj] = get(key).collect { case o: JObj => o }
   }
   object JObj {
@@ -198,7 +203,10 @@ object Json {
             case 't' => sb.append('\t')
             case 'u' =>
               if (pos + 4 >= s.length) fail("Truncated unicode escape")
-              sb.append(Integer.parseInt(s.substring(pos + 1, pos + 5), 16).toChar)
+              val hex = s.substring(pos + 1, pos + 5)
+              if (!hex.forall(c => "0123456789abcdefABCDEF".indexOf(c) >= 0))
+                fail("Invalid unicode escape")
+              sb.append(Integer.parseInt(hex, 16).toChar)
               pos += 4
             case e => fail(s"Invalid escape '\\$e'")
           }

@@ -236,22 +236,21 @@ object TableFunctions {
     * unauthenticated and serves CORS '*' (the reference's own trust model,
     * where DuckDB allows local reads by default — but a wider surface).
     * They are therefore DISABLED unless `-Dgraft.gateway.flatFileRoot=...`
-    * (or env GRAFT_FLATFILE_ROOT) names the allowed root directories
+    * names the allowed root directories
     * (comma-separated path prefixes, compared after normalization so `..`
     * traversal cannot escape; `*` = no restriction, the reference's
     * behavior). Checked in the builder before any read.
     */
   private def flatFileRoots: Option[Seq[String]] =
     sys.props.get("graft.gateway.flatFileRoot")
-      .orElse(sys.env.get("GRAFT_FLATFILE_ROOT"))
       .map(_.trim).filter(_.nonEmpty)
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
 
   private def checkFlatFilePath(fn: String, path: String): Unit = {
     val roots = flatFileRoots.getOrElse(throw new IllegalArgumentException(
       s"$fn is disabled: flat-file reads are gated off by default; start the " +
-        "gateway with -Dgraft.gateway.flatFileRoot=<root[,root2]> (or " +
-        "GRAFT_FLATFILE_ROOT; '*' for no restriction) to enable them"))
+        "gateway with -Dgraft.gateway.flatFileRoot=<root[,root2]> ('*' for " +
+        "no restriction) to enable them"))
     if (!roots.contains("*")) {
       // Lexical normalization blocks `..` traversal but not symlinks: a
       // link under an allowed root pointing outside it would pass a purely

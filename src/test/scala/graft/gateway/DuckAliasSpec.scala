@@ -3,6 +3,7 @@ package graft.gateway
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TableFunctionRegistry}
 import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
 import graft.SparkFixture
@@ -84,9 +85,9 @@ class DuckAliasSpec extends AnyFunSuite with SparkFixture {
     "list_concat(CAST(NULL AS ARRAY<INT>), CAST(NULL AS ARRAY<INT>))" -> null)
 
   test("each DuckDB name returns its Spark target's columns, types and rows") {
-    assert(("len" +: (aliases.map(_._1) ++ listCalls.map(_._1.takeWhile(_ != '('))))
-      .toSet == DuckCompat.names.toSet)
-    assert(DuckCompat.names.size == 23)
+    val renames = "len" +: (aliases.map(_._1) ++ listCalls.map(_._1.takeWhile(_ != '(')))
+    assert(renames.toSet.size == 23)
+    assert(renames.forall(DuckCompat.names.contains))
     aliases.foreach { case (name, target, statement) =>
       assertSameResult(statement.replace("FN", name), statement.replace("FN", target))
     }
@@ -130,7 +131,7 @@ class DuckAliasSpec extends AnyFunSuite with SparkFixture {
     assert(from.rows == Seq(Seq(2), Seq(3)))
     assertSameResult("SELECT * FROM unnest(array(1, 2, 3)) AS t(x) WHERE x > 1",
       "SELECT * FROM explode(array(1, 2, 3)) AS t(x) WHERE x > 1")
-    // The reference's demo shape: unnest over the text-rewritten split.
+    // The reference's demo shape: unnest over the DuckDB split.
     val demo = query("SELECT UNNEST(string_split('Drama,Comedy', ',')) AS genre")
     assert(demo.rows == Seq(Seq("Drama"), Seq("Comedy")))
   }
@@ -164,8 +165,15 @@ class DuckAliasSpec extends AnyFunSuite with SparkFixture {
     first.zip(builders).foreach { case (a, b) => assert(a eq b) }
   }
 
+  test("no DuckDB name shadows a Spark builtin except len") {
+    assert(DuckCompat.names.size == 43)
+    assert(DuckCompat.names.filter(n =>
+      FunctionRegistry.builtin.functionExists(FunctionIdentifier(n))) == Seq("len"))
+    assert(!TableFunctionRegistry.builtin.functionExists(FunctionIdentifier("unnest")))
+  }
+
   test("every name the unsupported-function message advertises resolves") {
-    val msg = DialectRewriter.unsupportedDuckDbMessage("list_aggregate")
+    val msg = DuckCompat.unsupportedDuckDbMessage("list_aggregate")
     assert(msg == "unsupported DuckDB function list_aggregate; supported DuckDB-dialect " +
       "functions: arg_max, arg_min, array_to_string, epoch_ms, epoch_us, generate_series, " +
       "len, list_append, list_concat, list_contains, list_distinct, list_filter, list_max, " +

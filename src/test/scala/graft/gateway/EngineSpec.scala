@@ -379,6 +379,15 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(s.rows == Seq(Seq(Seq("b", "c"), "bcd", Seq("c", "d"), Seq("a", "b"))))
   }
 
+  test("duckdb struct_pack and strftime resolve inside a lambda") {
+    val r = Engine.executeQuery(spark,
+      "SELECT list_transform(array(1, 2), i -> struct_pack(k := i, " +
+        "d := strftime(TIMESTAMP '2024-03-07 09:05:01', '%Y-%m-%d'))) AS v", cfg)
+    assert(r.columns == Seq("v"))
+    assert(r.rows.map(_.map(_.asInstanceOf[collection.Seq[org.apache.spark.sql.Row]].map(_.toSeq))) ==
+      Seq(Seq(Seq(Seq(1, "2024-03-07"), Seq(2, "2024-03-07")))))
+  }
+
   test("a user LIMIT above the hard cap still collects at most MaxRowLimit rows") {
     val big = Engine.executeQuery(spark,
       "SELECT id FROM range(100000) ORDER BY id LIMIT 100000000", cfg)

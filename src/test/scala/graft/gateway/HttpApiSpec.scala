@@ -138,6 +138,27 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     assert(r.statusCode() == 400)
   }
 
+  test("a bad unicode escape in the body -> 400 Invalid JSON, not 500") {
+    val r = post("/api/query", s"""{"sql":"\\u12G4","connection":$connJson}""")
+    assert(r.statusCode() == 400, r.body())
+    assert(obj(r).str("detail").exists(_.startsWith("Invalid JSON: Invalid unicode escape")),
+      r.body())
+  }
+
+  test("a rowLimit that is not a whole number in Int range -> 400, never a wrapped limit") {
+    Seq("4294967297", "4294968296", "2.9", "\"5\"", "null").foreach { n =>
+      val r = post("/api/query",
+        s"""{"sql":"SELECT explode(array(0, 1, 2, 3)) AS id","connection":$connJson,"rowLimit":$n}""")
+      assert(r.statusCode() == 400, n)
+      assert(obj(r).str("detail").contains("rowLimit must be a whole number <= 10000"), n)
+    }
+    val two = post("/api/query",
+      s"""{"sql":"SELECT explode(array(0, 1, 2, 3)) AS id","connection":$connJson,"rowLimit":2.0}""")
+    assert(two.statusCode() == 200, two.body())
+    assert(obj(two).get("rows").contains(JArr(Vector(JArr(Vector(JNum(0))), JArr(Vector(JNum(1)))))),
+      two.body())
+  }
+
   test("a deeply nested JSON body gets 400 and the next request is served") {
     // Bounded wait: a request thread that dies mid-parse never answers.
     val deep = client.send(
@@ -250,10 +271,13 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
 
   test("an unmapped DuckDB function returns a precise 400, not UNRESOLVED_ROUTINE") {
     val r = post("/api/query",
-      s"""{"sql":"SELECT list_aggregate(a, 'sum') FROM t","connection":$connJson}""")
+      s"""{"sql":"SELECT list_aggregate(array(1, 2), 'sum')","connection":$connJson}""")
     assert(r.statusCode() == 400, r.body())
     val detail = obj(r).str("detail").getOrElse("")
-    assert(detail.contains("unsupported DuckDB function list_aggregate"), detail)
+    // Rejected while Spark analyzes the statement, so it carries the prefix
+    // every analysis error does.
+    assert(detail.startsWith(
+      "Query execution failed: unsupported DuckDB function list_aggregate;"), detail)
     assert(detail.contains("supported DuckDB-dialect functions"), detail)
     assert(!detail.contains("UNRESOLVED_ROUTINE"), detail)
   }
@@ -300,6 +324,36 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
       val bad = post("/api/maintenance/compact", s"""{"connection":$connJson}""")
       assert(bad.statusCode() == 400, bad.body())
       assert(obj(bad).str("detail").getOrElse("").contains("tablePath"))
+    } finally System.clearProperty("graft.gateway.maintenance")
+  }
+
+  test("a targetBytes that is not a positive whole Long -> 400 before any table is written") {
+    import spark.implicits._
+    val dir = tmpDir("http_maint_target") + "/warehouse/maint/docs"
+    IcebergLiteWriter.write(spark, Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"), dir)
+    IcebergLiteWriter.upsert(spark, Seq((2L, 99.0)).toDF("id", "v"), dir, Seq("id"))
+    def files = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.map(_.toString).sorted.toSeq
+      finally walk.close()
+    }
+    val before = files
+    System.setProperty("graft.gateway.maintenance", "true")
+    try {
+      Seq("0", "-1", "1.5", "9223372036854775808", "\"1\"", "null").foreach { n =>
+        val r = post("/api/maintenance/compact",
+          s"""{"tablePath":"$dir","targetBytes":$n,"connection":$connJson}""")
+        assert(r.statusCode() == 400, n)
+        assert(obj(r).str("detail").contains(
+          "targetBytes must be a positive whole number of bytes"), n)
+      }
+      assert(files == before)
+      // A target past 32 bits is read whole: 4294967296 is 4 GiB, not the
+      // 0 its low 32 bits would give.
+      val big = post("/api/maintenance/compact",
+        s"""{"tablePath":"$dir","targetBytes":4294967296,"connection":$connJson}""")
+      assert(big.statusCode() == 200, big.body())
     } finally System.clearProperty("graft.gateway.maintenance")
   }
 

@@ -27,6 +27,22 @@ class JsonSpec extends AnyFunSuite {
     assert(Json.parse("\"\\u0041\\u00e9\"") == JStr("Aé"))
   }
 
+  test("a unicode escape needs four hex digits") {
+    Seq("\"\\uZZZZ\"", "\"\\u-041\"", "\"\\u12G4\"", "\"\\u+041\"").foreach { bad =>
+      val e = intercept[Json.JsonParseException](Json.parse(bad))
+      assert(e.msg.startsWith("Invalid unicode escape"), bad)
+    }
+    assert(Json.parse("\"\\u0041\"") == JStr("A"))
+  }
+
+  test("int and long read only whole numbers in range") {
+    val o = Json.parse(
+      """{"a":4294967297,"b":4294968296,"c":2.9,"d":-7,"e":"7","f":9223372036854775808}""")
+      .asInstanceOf[JObj]
+    assert(Seq("a", "b", "c", "d", "e", "f").map(o.int) == Seq(None, None, None, Some(-7), None, None))
+    assert(Seq("a", "c", "f").map(o.long) == Seq(Some(4294967297L), None, None))
+  }
+
   test("malformed input throws JsonParseException") {
     Seq("{", "[1,", "\"unterminated", "{'single':1}", "{\"a\":}", "1 2").foreach { bad =>
       intercept[Json.JsonParseException](Json.parse(bad))
