@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.gateway.{JValue, Json}
-import graft.gateway.JValue.{JNum, JObj, JStr}
+import graft.gateway.JValue.JObj
 
 /** Table metadata descriptor (the reference's `TableInfo`,
   * /root/reference/backend/main.py:244-259). Snapshot ids are stringified
@@ -71,19 +71,10 @@ object IcebergLite {
     * state.
     */
   def sessionHadoopConf(spark: SparkSession): Configuration =
-    // Delegate to Spark's own merge so the metadata path and the parquet
-    // data path can never diverge. sessionState is private[sql] (public
-    // in bytecode) — reflection, with the equivalent manual merge as the
-    // fallback; EngineSpec pins that both see per-session overrides.
-    try {
-      val ss = spark.getClass.getMethod("sessionState").invoke(spark)
-      ss.getClass.getMethod("newHadoopConf").invoke(ss).asInstanceOf[Configuration]
-    } catch {
-      case scala.util.control.NonFatal(_) =>
-        val merged = new Configuration(spark.sparkContext.hadoopConfiguration)
-        spark.conf.getAll.foreach { case (k, v) => if (v != null) merged.set(k, v) }
-        merged
-    }
+    // Spark's own merge, so the metadata path and the parquet data path
+    // can never diverge; EngineSpec pins that both see per-session
+    // overrides.
+    spark.sessionState.newHadoopConf()
 
   private def fs(p: Path, conf: Configuration): FileSystem = p.getFileSystem(conf)
 
@@ -147,8 +138,69 @@ object IcebergLite {
     }
   }
 
-  private def jLong(o: JObj, key: String): Option[Long] =
-    o.get(key).collect { case JNum(n) => n.toLong }
+  // ---- the metadata fields; every other module reads them through these --
+
+  /** The metadata's snapshot objects, in commit order. */
+  def snapshotsOf(meta: JObj): Vector[JObj] =
+    meta.get("snapshots") match {
+      case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
+      case _ => Vector.empty
+    }
+
+  def snapshotOf(meta: JObj, snapshotId: Long): Option[JObj] =
+    snapshotsOf(meta).find(_.long("snapshot-id").contains(snapshotId))
+
+  def currentSnapshotIdOf(meta: JObj): Option[Long] = meta.long("current-snapshot-id")
+
+  /** (timestamp-ms, snapshot-id) entries of the snapshot-log: when each
+    * snapshot became the current one. Log-less metadata (tables written
+    * before the log, or by minimal writers) degrades to commit order.
+    */
+  def snapshotLogOf(meta: JObj): Seq[(Long, Long)] =
+    meta.get("snapshot-log") match {
+      case Some(JValue.JArr(items)) => items.collect { case o: JObj =>
+        (o.long("timestamp-ms").getOrElse(0L), o.long("snapshot-id").getOrElse(0L))
+      }
+      case _ => snapshotsOf(meta).flatMap { s =>
+        for (id <- s.long("snapshot-id"); ts <- s.long("timestamp-ms")) yield (ts, id)
+      }
+    }
+
+  /** (name, snapshot-id, type) entries of the metadata's refs map. */
+  def refsOf(meta: JObj): Seq[(String, Long, String)] =
+    meta.get("refs") match {
+      case Some(o: JObj) => o.fields.collect {
+        case (name, r: JObj) =>
+          (name, r.long("snapshot-id").getOrElse(0L), r.str("type").getOrElse("tag"))
+      }
+      case _ => Nil
+    }
+
+  /** One declared field: Iceberg field id (-1 when absent), name, type name. */
+  final case class SchemaField(id: Long, name: String, tpe: String)
+
+  /** The current schema: its `fields` value as stored (what a metadata
+    * rewrite carries forward, nested and foreign types included) and each
+    * field read as a [[SchemaField]].
+    */
+  final case class CurrentSchema(fieldsJson: JValue, fields: Seq[SchemaField])
+
+  def currentSchemaOf(meta: JObj): Option[CurrentSchema] = {
+    val id = meta.long("current-schema-id").getOrElse(0L)
+    val schemas = meta.get("schemas").collect { case JValue.JArr(items) => items }
+    schemas.toSeq.flatten
+      .collectFirst { case s: JObj if s.long("schema-id").contains(id) => s }
+      .flatMap(_.get("fields"))
+      .map { fs =>
+        CurrentSchema(fs, fs match {
+          case JValue.JArr(items) => items.collect { case f: JObj =>
+            SchemaField(f.long("id").getOrElse(-1L), f.str("name").getOrElse(""),
+              f.str("type").getOrElse(""))
+          }
+          case _ => Nil
+        })
+      }
+  }
 
   /** Every record of an Avro container file, decoded with its writer
     * schema. Manifest lists and manifests are write-once, so the decoded
@@ -199,13 +251,9 @@ object IcebergLite {
     */
   def currentManifests(conf: Configuration, tablePath: String, meta: JObj,
       snapshotId: Option[Long] = None): Seq[ManifestInfo] = {
-    val snapId = snapshotId.orElse(jLong(meta, "current-snapshot-id"))
+    val snapId = snapshotId.orElse(currentSnapshotIdOf(meta))
       .getOrElse(throw ProbeError("metadata has no current-snapshot-id"))
-    val snapshots = meta.get("snapshots") match {
-      case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
-      case _ => Vector.empty
-    }
-    val snap = snapshots.find(s => jLong(s, "snapshot-id").contains(snapId))
+    val snap = snapshotOf(meta, snapId)
       .getOrElse(throw ProbeError(s"snapshot $snapId not found in metadata"))
     val mlPath = snap.str("manifest-list")
       .getOrElse(throw ProbeError("snapshot has no manifest-list"))
@@ -242,7 +290,7 @@ object IcebergLite {
     fileEntriesOf(conf, tablePath, resolveMetadata(conf, tablePath, metadataLocation), snapshotId)
 
   /** [[fileEntries]] planned against already-resolved metadata. */
-  private def fileEntriesOf(conf: Configuration, tablePath: String, meta: JObj,
+  private[sources] def fileEntriesOf(conf: Configuration, tablePath: String, meta: JObj,
       snapshotId: Option[Long]): Seq[FileEntry] = {
     val manifests = currentManifests(conf, tablePath, meta, snapshotId)
     def entriesOf(m: ManifestInfo): Seq[FileEntry] =
@@ -285,9 +333,9 @@ object IcebergLite {
   def partitionSpecFields(meta: JObj): Seq[PartitionField] =
     meta.get("partition-specs") match {
       case Some(JValue.JArr(specs)) =>
-        val defaultId = jLong(meta, "default-spec-id").getOrElse(0L)
+        val defaultId = meta.long("default-spec-id").getOrElse(0L)
         specs.collect { case o: JObj => o }
-          .find(s => jLong(s, "spec-id").contains(defaultId))
+          .find(_.long("spec-id").contains(defaultId))
           .toSeq.flatMap(_.get("fields")).flatMap {
             case JValue.JArr(fs) => fs.collect {
               case f: JObj =>
@@ -314,40 +362,6 @@ object IcebergLite {
     partitionSpecFields(meta).collect {
       case f if f.transform == "identity" => f.name
     }
-
-  /** Declared fields of the current schema: (name, iceberg type name). */
-  def currentSchemaFields(meta: JObj): Option[Seq[(String, String)]] =
-    meta.get("schemas").flatMap {
-      case JValue.JArr(schemas) =>
-        val id = jLong(meta, "current-schema-id").getOrElse(0L)
-        schemas.collect { case o: JObj => o }
-          .find(s => jLong(s, "schema-id").contains(id))
-          .flatMap(_.get("fields")).map {
-            case JValue.JArr(fs) => fs.collect { case f: JObj =>
-              f.str("name").getOrElse("") -> f.str("type").getOrElse("")
-            }
-            case _ => Nil
-          }
-      case _ => None
-    }.filter(_.nonEmpty)
-
-  /** Declared fields with ids: (field id, name, iceberg type name). */
-  def currentSchemaFieldIds(meta: JObj): Option[Seq[(Long, String, String)]] =
-    meta.get("schemas").flatMap {
-      case JValue.JArr(schemas) =>
-        val id = jLong(meta, "current-schema-id").getOrElse(0L)
-        schemas.collect { case o: JObj => o }
-          .find(s => jLong(s, "schema-id").contains(id))
-          .flatMap(_.get("fields")).map {
-            case JValue.JArr(fs) => fs.collect { case f: JObj =>
-              (jLong(f, "id").getOrElse(-1L),
-                f.str("name").getOrElse(""),
-                f.str("type").getOrElse(""))
-            }
-            case _ => Nil
-          }
-      case _ => None
-    }.filter(fs => fs.nonEmpty && fs.forall(_._1 >= 0))
 
   /** One data file's footer as a scan uses it: the schema
     * `spark.read.parquet(path).schema` gives, and `parquet.field.id` ->
@@ -394,25 +408,25 @@ object IcebergLite {
     */
   private def fieldIdRenames(
       footer: FileFooter,
-      declaredIds: Seq[(Long, String, String)],
+      declaredIds: Seq[SchemaField],
       partCols: Seq[String]): Option[Seq[(String, String)]] = {
     val physIds = footer.fieldIds
     val fileSchema = footer.schema
     if (physIds.isEmpty) return None
     val physTypes = fileSchema.fields.map(f => f.name -> f.dataType).toMap
     val resolved = declaredIds
-      .filterNot { case (_, n, _) => partCols.contains(n) }
-      .map { case (id, name, tpe) =>
+      .filterNot(f => partCols.contains(f.name))
+      .map { f =>
         for {
-          phys <- physIds.get(id)
+          phys <- physIds.get(f.id)
           physType <- physTypes.get(phys)
           // The declared type MUST resolve and match: with Option.forall a
           // declared type outside the mapping (decimal, uuid, nested, ...)
           // would be trusted unverified, letting a type change on such a
           // column scan silently wrong instead of staying refused.
-          declType <- icebergToSparkType(tpe)
+          declType <- icebergToSparkType(f.tpe)
           if declType == physType
-        } yield phys -> name
+        } yield phys -> f.name
       }
     if (resolved.exists(_.isEmpty)) None
     else {
@@ -422,17 +436,6 @@ object IcebergLite {
       else Some(renames)
     }
   }
-
-  /** Re-render the current schema's `fields` JSON (writer carry-forward). */
-  def currentSchemaFieldsJson(meta: JObj): Option[String] =
-    meta.get("schemas").flatMap {
-      case JValue.JArr(schemas) =>
-        val id = jLong(meta, "current-schema-id").getOrElse(0L)
-        schemas.collect { case o: JObj => o }
-          .find(s => jLong(s, "schema-id").contains(id))
-          .flatMap(_.get("fields")).map(Json.render)
-      case _ => None
-    }
 
   private val DecimalTypeRe = """decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)""".r
 
@@ -460,12 +463,8 @@ object IcebergLite {
     * "time travel via snapshots", README.md:197).
     */
   private def snapshotIdAsOfMeta(meta: JObj, tsMillis: Long, tablePath: String): Long = {
-    val snaps = meta.get("snapshots") match {
-      case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
-      case _ => Vector.empty
-    }
-    val eligible = snaps.flatMap(s =>
-      for (id <- jLong(s, "snapshot-id"); ts <- jLong(s, "timestamp-ms") if ts <= tsMillis)
+    val eligible = snapshotsOf(meta).flatMap(s =>
+      for (id <- s.long("snapshot-id"); ts <- s.long("timestamp-ms") if ts <= tsMillis)
         yield (ts, id))
     if (eligible.isEmpty)
       throw ProbeError(
@@ -530,7 +529,7 @@ object IcebergLite {
     val dataEntries = allData.filterNot(e => excludeDataFiles.contains(e.path))
 
     val partCols = partitionColumns(meta)
-    val declared = currentSchemaFields(meta)
+    val declared = currentSchemaOf(meta).map(_.fields).filter(_.nonEmpty)
 
     // Physical file schema from one footer; the vectorized reader applies
     // it to every file (schema guard below refuses drifted tables). Cached
@@ -547,19 +546,19 @@ object IcebergLite {
     // without embedded field ids — refuse rather than scan silently wrong.
     var renames: Seq[(String, String)] = Nil
     declared.foreach { fields =>
-      val declaredData = fields.map(_._1).filterNot(partCols.contains)
+      val declaredData = fields.map(_.name).filterNot(partCols.contains)
       val physical = fileSchema.fieldNames.toSeq
       val missing = declaredData.filterNot(physical.contains)
       val extra = physical.filterNot(declaredData.contains)
       if (missing.nonEmpty || extra.nonEmpty) {
-        val declaredFieldIds = currentSchemaFieldIds(meta)
+        val declaredFieldIds = Some(fields).filter(_.forall(_.id >= 0))
         val byId = declaredFieldIds.flatMap(ids =>
           fieldIdRenames(footer, ids, partCols))
         byId match {
           case Some(rs) => renames = rs.filter { case (p, d) => p != d }
           case None =>
             val unmapped = declaredFieldIds.toSeq.flatten.collect {
-              case (_, n, t) if icebergToSparkType(t).isEmpty => s"$n:$t"
+              case f if icebergToSparkType(f.tpe).isEmpty => s"${f.name}:${f.tpe}"
             }
             val unmappedNote =
               if (unmapped.isEmpty) ""
@@ -576,7 +575,7 @@ object IcebergLite {
     }
 
     val declaredTypes: Map[String, DataType] = declared.toSeq.flatten
-      .flatMap { case (n, t) => icebergToSparkType(t).map(n -> _) }.toMap
+      .flatMap(f => icebergToSparkType(f.tpe).map(f.name -> _)).toMap
     // Partition column types: declared schema first, else inferred from the
     // partition value strings (all-long -> long, all-double -> double).
     val partitionSchema = StructType(partCols.map { c =>
@@ -657,10 +656,6 @@ object IcebergLite {
         // a delete-only commit scopes identically to its parent listing.
         // The scope itself is metadata-sized, which is also the bound on
         // the isin literal below.
-        val snapObjs = meta.get("snapshots") match {
-          case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
-          case _ => Vector.empty
-        }
         val scopeCache = scala.collection.mutable.Map.empty[Long, Seq[String]]
         eqDeleteEntries.foldLeft(posApplied) { (acc, e) =>
           val delSnap = snapRe.findFirstMatchIn(e.path).map(_.group(1).toLong)
@@ -673,12 +668,12 @@ object IcebergLite {
           // sides scheme-stripped.
           def normPath(p: String): String = p.replaceFirst("^[A-Za-z0-9]+:/+", "/")
           val scope = scopeCache.getOrElseUpdate(delSnap, {
-            val delSnapObj = snapObjs.find(s => jLong(s, "snapshot-id").contains(delSnap))
+            val delSnapObj = snapshotOf(meta, delSnap)
               .getOrElse(throw ProbeError(
                 s"Iceberg table at $tablePath carries an equality-delete file " +
                   s"from snapshot $delSnap, which this metadata no longer " +
                   "records; refusing to scan rather than mis-apply it."))
-            jLong(delSnapObj, "parent-snapshot-id") match {
+            delSnapObj.long("parent-snapshot-id") match {
               case None => Nil // first snapshot: nothing strictly before
               case Some(parent) =>
                 fileEntriesOf(conf, tablePath, meta, Some(parent))
@@ -733,15 +728,12 @@ object IcebergLite {
       fromSnapshotId: Long, toSnapshotId: Option[Long] = None): DataFrame = {
     val conf = sessionHadoopConf(spark)
     val meta = resolveMetadata(conf, tablePath)
-    val snaps = meta.get("snapshots") match {
-      case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
-      case _ => Vector.empty
-    }
-    val ids = snaps.flatMap(jLong(_, "snapshot-id"))
+    val snaps = snapshotsOf(meta)
+    val ids = snaps.flatMap(_.long("snapshot-id"))
     val fromIdx = ids.indexOf(fromSnapshotId)
     if (fromIdx < 0)
       throw ProbeError(s"snapshot $fromSnapshotId not found in the log at $tablePath")
-    val toId = toSnapshotId.orElse(jLong(meta, "current-snapshot-id"))
+    val toId = toSnapshotId.orElse(currentSnapshotIdOf(meta))
       .getOrElse(throw ProbeError("metadata has no current-snapshot-id"))
     val toIdx = ids.indexOf(toId)
     if (toIdx < 0)
@@ -803,29 +795,15 @@ object IcebergLite {
     import spark.implicits._
     val conf = sessionHadoopConf(spark)
     val meta = resolveMetadata(conf, tablePath)
-    val current = jLong(meta, "current-snapshot-id")
-    val snaps = meta.get("snapshots") match {
-      case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
-      case _ => Vector.empty
-    }
-    snaps.map { s =>
-      val id = jLong(s, "snapshot-id").getOrElse(0L)
+    val current = currentSnapshotIdOf(meta)
+    snapshotsOf(meta).map { s =>
+      val id = s.long("snapshot-id").getOrElse(0L)
       (id,
-        jLong(s, "timestamp-ms").map(ms => new java.sql.Timestamp(ms)).orNull,
+        s.long("timestamp-ms").map(ms => new java.sql.Timestamp(ms)).orNull,
         s.str("manifest-list").getOrElse(""),
         current.contains(id))
     }.toDF("snapshot_id", "committed_at", "manifest_list", "is_current")
   }
-
-  /** (name, snapshot-id, type) entries of the metadata's refs map. */
-  def refsOf(meta: JObj): Seq[(String, Long, String)] =
-    meta.get("refs") match {
-      case Some(o: JObj) => o.fields.collect {
-        case (name, r: JObj) =>
-          (name, jLong(r, "snapshot-id").getOrElse(0L), r.str("type").getOrElse("tag"))
-      }
-      case _ => Nil
-    }
 
   /** The `iceberg_refs('path')` relation — real Iceberg's `<table>.refs`
     * metadata table: every named ref (tag or branch) with its pinned
@@ -835,7 +813,7 @@ object IcebergLite {
     import spark.implicits._
     val conf = sessionHadoopConf(spark)
     val meta = resolveMetadata(conf, tablePath)
-    val current = jLong(meta, "current-snapshot-id").getOrElse(0L)
+    val current = currentSnapshotIdOf(meta).getOrElse(0L)
     (("main", current, "branch") +: refsOf(meta))
       .map { case (n, id, t) => (n, t, id, id == current) }
       .toDF("ref_name", "type", "snapshot_id", "at_current")
@@ -848,25 +826,19 @@ object IcebergLite {
     * lists commit times), its parent, and whether it is an ancestor of the
     * current snapshot (`is_current_ancestor` — the flag that separates the
     * table's live lineage from branches orphaned by rollbacks).
-    * Log-less metadata (tables written before the log, or by minimal
-    * writers) degrades to commit order.
     */
   def historyRelation(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
     val conf = sessionHadoopConf(spark)
     val meta = resolveMetadata(conf, tablePath)
-    val snaps = meta.get("snapshots") match {
-      case Some(JValue.JArr(items)) => items.collect { case o: JObj => o }
-      case _ => Vector.empty
-    }
-    val parentOf: Map[Long, Option[Long]] = snaps.flatMap { s =>
-      jLong(s, "snapshot-id").map(id => id -> jLong(s, "parent-snapshot-id"))
+    val parentOf: Map[Long, Option[Long]] = snapshotsOf(meta).flatMap { s =>
+      s.long("snapshot-id").map(id => id -> s.long("parent-snapshot-id"))
     }.toMap
     // The current snapshot's ancestor chain (inclusive); bounded by the
     // snapshot count even if hostile metadata contains a parent cycle.
     val ancestors: Set[Long] = {
       val b = scala.collection.mutable.Set.empty[Long]
-      var cur = jLong(meta, "current-snapshot-id")
+      var cur = currentSnapshotIdOf(meta)
       while (cur.exists(id => !b.contains(id) && parentOf.contains(id))) {
         b += cur.get
         cur = parentOf(cur.get)
@@ -874,16 +846,7 @@ object IcebergLite {
       cur.foreach(b += _)
       b.toSet
     }
-    val log: Seq[(Long, Long)] = meta.get("snapshot-log") match {
-      case Some(JValue.JArr(items)) => items.collect { case o: JObj =>
-        (jLong(o, "timestamp-ms").getOrElse(0L), jLong(o, "snapshot-id").getOrElse(0L))
-      }
-      case _ => snaps.flatMap { s =>
-        for (id <- jLong(s, "snapshot-id"); ts <- jLong(s, "timestamp-ms"))
-          yield (ts, id)
-      }
-    }
-    log.map { case (ts, id) =>
+    snapshotLogOf(meta).map { case (ts, id) =>
       (new java.sql.Timestamp(ts), id, parentOf.get(id).flatten,
         ancestors.contains(id))
     }.toDF("made_current_at", "snapshot_id", "parent_id", "is_current_ancestor")
@@ -900,9 +863,8 @@ object IcebergLite {
     import spark.implicits._
     val conf = sessionHadoopConf(spark)
     val meta = resolveMetadata(conf, tablePath)
-    val idToName: Map[String, String] = currentSchemaFieldIds(meta)
-      .map(_.map { case (id, name, _) => id.toString -> name }.toMap)
-      .getOrElse(Map.empty)
+    val idToName: Map[String, String] = currentSchemaOf(meta).toSeq.flatMap(_.fields)
+      .collect { case f if f.id >= 0 => f.id.toString -> f.name }.toMap
     fileEntriesOf(conf, tablePath, meta, None)
       .filter(_.fileContent == 0)
       .map(e => (
@@ -985,9 +947,9 @@ object IcebergLite {
     metaOpt.foreach { meta =>
       jsonOk = true
       info = info.copy(
-        format = jLong(meta, "format-version").map(v => s"iceberg-v$v"),
-        snapshotId = jLong(meta, "current-snapshot-id").map(_.toString),
-        lastSnapshotAt = jLong(meta, "last-updated-ms").map(ms =>
+        format = meta.long("format-version").map(v => s"iceberg-v$v"),
+        snapshotId = currentSnapshotIdOf(meta).map(_.toString),
+        lastSnapshotAt = meta.long("last-updated-ms").map(ms =>
           java.time.Instant.ofEpochMilli(ms).toString))
     }
 

@@ -3,6 +3,7 @@ package graft.sources
 import java.util.UUID
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
@@ -16,6 +17,9 @@ import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types._
+
+import graft.gateway.{JValue, Json}
+import graft.gateway.JValue.{JArr, JObj, JStr, num}
 
 /** Writes a DataFrame as a minimal Iceberg-v2-shaped table (metadata JSON +
   * Avro manifest list + Avro manifest + parquet data files) so the probe /
@@ -76,14 +80,11 @@ object IcebergLiteWriter {
 
   /** Write `df` as an Iceberg-lite table rooted at `tableDir`. When
     * `partitionBy` is set the data files land Hive-partitioned and the
-    * metadata records an identity partition spec (the reader prunes on it).
-    * When `withDeleteManifest` is set, an extra position-delete manifest is
-    * added so the delete-guard path can be tested (metadata-only fixture).
+    * metadata records the partition spec (the reader prunes on it).
     */
   def write(spark: SparkSession, df: DataFrame, tableDir: String,
-      withDeleteManifest: Boolean = false,
       partitionBy: Seq[String] = Nil): Unit =
-    commit(spark, df, tableDir, SaveMode.Overwrite, withDeleteManifest, partitionBy)
+    commit(spark, df, tableDir, SaveMode.Overwrite, partitionBy)
 
   /** Append `df` as a new snapshot: new data files + a new manifest, with
     * the previous snapshot's manifests carried forward and its entry kept
@@ -91,10 +92,10 @@ object IcebergLiteWriter {
     */
   def append(spark: SparkSession, df: DataFrame, tableDir: String,
       partitionBy: Seq[String] = Nil): Unit =
-    commit(spark, df, tableDir, SaveMode.Append, withDeleteManifest = false, partitionBy)
+    commit(spark, df, tableDir, SaveMode.Append, partitionBy)
 
   /** Stamp each column with its declared Iceberg field id (ordinal, the
-    * same assignment as schemaFieldsJson) so the parquet files carry
+    * same assignment as fieldsJson) so the parquet files carry
     * `parquet.field.id` like real Iceberg writers — the reader's
     * field-id-based projection of evolved (renamed) tables depends on it.
     * The session conf flip is restored afterwards: this writer must not
@@ -177,7 +178,6 @@ object IcebergLiteWriter {
   private def footerStats(conf: Configuration, p: Path): FileStats = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
     try {
-      import scala.jdk.CollectionConverters._
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val recordCount = blocks.map(_.getRowCount).sum
       val lower = mutable.Map.empty[String, Any]
@@ -253,7 +253,8 @@ object IcebergLiteWriter {
   }
 
   /** Hive path segments `col=value` under data/ -> partition value map.
-    * Decoding must be the exact inverse of Spark's escapePathName:
+    * Spark escapes both sides of a segment, and decoding must be the
+    * exact inverse of its escapePathName:
     * URLDecoder would additionally turn a literal '+' (which Spark does
     * NOT escape) into a space, corrupting values like "C++" — and the
     * hidden-transform pruning compares these values to PROVE absence, so
@@ -263,7 +264,7 @@ object IcebergLiteWriter {
     val rel = file.toString.stripPrefix(dataDir.toString).stripPrefix("/")
     rel.split('/').dropRight(1).flatMap { seg =>
       seg.split("=", 2) match {
-        case Array(k, v) => Some(k -> unescapePathValue(v))
+        case Array(k, v) => Some(unescapePathValue(k) -> unescapePathValue(v))
         case _ => None
       }
     }.toMap
@@ -302,84 +303,66 @@ object IcebergLiteWriter {
   }
 
   private def commit(spark: SparkSession, df: DataFrame, tableDir: String,
-      mode: SaveMode, withDeleteManifest: Boolean, partitionBy: Seq[String]): Unit = {
+      mode: SaveMode, partitionBy: Seq[String]): Unit = {
     val conf = IcebergLite.sessionHadoopConf(spark)
-    val dataDir = s"$tableDir/data"
-
-    // For appends: carry forward prior manifests + snapshot log, and only
-    // manifest the data files the prior snapshot does not already track.
-    val prior = if (mode == SaveMode.Append)
-      IcebergLite.latestMetadataPath(conf, tableDir)
-        .map(p => IcebergLite.readMetadataJson(conf, p))
-    else None
-    val priorFiles = prior.toSeq
-      .flatMap(_ => IcebergLite.fileEntries(conf, tableDir)).map(_.path).toSet
+    // Appends carry the table forward; an overwrite starts a new history.
+    val prior = if (mode == SaveMode.Append) priorMetadata(conf, tableDir) else None
     // Appends inherit the table's partition spec unless re-specified.
     val partCols =
       if (partitionBy.nonEmpty) partitionBy
-      else prior.map(m => IcebergLite.partitionSpecDsl(m)).getOrElse(Nil)
-
-    // Manifest EXACTLY the files this write produces (listing diff around
-    // the write), never "whatever is unmanifested in data/": debris from a
-    // commit that died between its data write and its metadata swap must
-    // not ride along with a later commit — that would duplicate the dead
-    // commit's rows. Orphans stay unreferenced garbage instead, for an
-    // outside tool's orphan-file cleanup, as in real Iceberg. Delete files
-    // (delete-*.parquet) live under data/ too and are never data.
-    val dataPath = new Path(dataDir)
-    val fs = dataPath.getFileSystem(conf)
-    val before: Set[String] =
-      if (fs.exists(dataPath)) listParquet(fs, dataPath).map(_.getPath.toString).toSet
-      else Set.empty
-    writeStampedParquet(spark, df, dataDir, mode, partCols)
-    val dataFiles = listParquet(fs, dataPath)
-      .filter(s => !before.contains(s.getPath.toString) &&
-        !priorFiles.contains(s.getPath.toString) &&
-        !s.getPath.getName.startsWith("delete-"))
-
-    val entries = dataFiles.map { s =>
-      val stats = footerStats(conf, s.getPath)
-      entryRecord(1, s.getPath.toString, stats.recordCount, s.getLen,
-        partitionValuesOf(dataPath, s.getPath),
-        stats.lower, stats.upper, stats.nullCounts)
+      else prior.map(IcebergLite.partitionSpecDsl).getOrElse(Nil)
+    val dataDir = s"$tableDir/data"
+    val added = manifestNewFiles(conf, tableDir, new Path(dataDir)) {
+      writeStampedParquet(spark, df, dataDir, mode, partCols)
     }
-
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val metaDir = s"$tableDir/metadata"
-    val manifestPath = new Path(s"$metaDir/manifest-$snapshotId-m0.avro")
-    val manifestLen = writeAvro(conf, manifestPath, ManifestEntrySchema, entries)
-    var newManifests = Seq((manifestPath.toString, manifestLen, 0))
-
-    if (withDeleteManifest) {
-      // A position-delete manifest (content=1) referencing one delete file —
-      // enough metadata for hasDeletes to trip, as it would on a real
-      // merge-on-read table.
-      val delManifestPath = new Path(s"$metaDir/manifest-$snapshotId-m1.avro")
-      val delLen = writeAvro(conf, delManifestPath, ManifestEntrySchema, Seq(
-        deleteEntry(s"$tableDir/data/delete-00000.parquet", 1L, 0L)))
-      newManifests :+= ((delManifestPath.toString, delLen, 1))
-    }
-
-    commitSnapshot(conf, tableDir, prior, snapshotId, newManifests,
-      schemaJson = Some(schemaFieldsJson(df.schema)), partCols = partCols)
+    val snapshotId = newSnapshotId()
+    commitSnapshot(conf, tableDir, prior, snapshotId,
+      Seq(writeManifest(conf, tableDir, snapshotId, 0, added, content = 0)),
+      schemaFields = Some(fieldsJson(df.schema)), partCols = Some(partCols))
   }
 
-  /** One manifest entry (status 0=EXISTING / 1=ADDED) for a data file. */
-  private def entryRecord(status: Int, path: String, recordCount: Long,
-      fileSize: Long, partition: Map[String, String],
-      lower: Map[String, String], upper: Map[String, String],
-      nullCounts: Map[String, Long]): GenericRecord = {
+  /** Run `writeData` into `dir` (data/ or a partition directory under it) and
+    * return ADDED manifest entries, with footer statistics, for exactly
+    * the data files it produced: the listing diff around the write, never
+    * "whatever is unmanifested in data/". Debris from a commit that died
+    * between its data write and its metadata swap must not ride along
+    * with a later commit — that would duplicate the dead commit's rows.
+    * Orphans stay unreferenced garbage instead, for an outside tool's
+    * orphan-file cleanup, as in real Iceberg. Delete files
+    * (delete-*.parquet) live under data/ too and are never data.
+    */
+  private def manifestNewFiles(conf: Configuration, tableDir: String, dir: Path)(
+      writeData: => Unit): Seq[GenericRecord] = {
+    val fs = dir.getFileSystem(conf)
+    val before =
+      if (fs.exists(dir)) listParquet(fs, dir).map(_.getPath.toString).toSet
+      else Set.empty[String]
+    writeData
+    val dataPath = new Path(s"$tableDir/data")
+    listParquet(fs, dir)
+      .filter(s => !before.contains(s.getPath.toString) &&
+        !s.getPath.getName.startsWith("delete-"))
+      .map(s => entryRecord(1, 0, s.getPath.toString, s.getLen,
+        partitionValuesOf(dataPath, s.getPath), footerStats(conf, s.getPath)))
+  }
+
+  /** One manifest entry (status 0=EXISTING / 1=ADDED) for a file whose
+    * content is 0 = data, 1 = position deletes or 2 = equality deletes.
+    */
+  private def entryRecord(status: Int, content: Int, path: String, fileSize: Long,
+      partition: Map[String, String], stats: FileStats): GenericRecord = {
     val dataFile = new GenericData.Record(
       ManifestEntrySchema.getField("data_file").schema())
-    dataFile.put("content", 0)
+    dataFile.put("content", content)
     dataFile.put("file_path", path)
     dataFile.put("file_format", "PARQUET")
-    dataFile.put("record_count", recordCount)
+    dataFile.put("record_count", stats.recordCount)
     dataFile.put("file_size_in_bytes", fileSize)
-    dataFile.put("partition", toJavaMap(partition))
-    dataFile.put("lower_bounds", toJavaMap(lower))
-    dataFile.put("upper_bounds", toJavaMap(upper))
-    dataFile.put("null_value_counts", toJavaLongMap(nullCounts))
+    dataFile.put("partition", partition.asJava)
+    dataFile.put("lower_bounds", stats.lower.asJava)
+    dataFile.put("upper_bounds", stats.upper.asJava)
+    dataFile.put("null_value_counts",
+      stats.nullCounts.map { case (k, v) => k -> Long.box(v) }.asJava)
     val entry = new GenericData.Record(ManifestEntrySchema)
     entry.put("status", status)
     entry.put("snapshot_id", null)
@@ -409,20 +392,16 @@ object IcebergLiteWriter {
       targetBytes: Long = 128L << 20): CompactionResult = {
     require(targetBytes > 0, "targetBytes must be positive")
     val conf = IcebergLite.sessionHadoopConf(spark)
-    val metaPath = IcebergLite.latestMetadataPath(conf, tableDir).getOrElse(
-      throw IcebergLite.ProbeError(s"No Iceberg metadata at $tableDir"))
-    val meta = IcebergLite.readMetadataJson(conf, metaPath)
-    val entries = IcebergLite.fileEntries(conf, tableDir)
+    val meta = tableMetadata(conf, tableDir)
+    val entries = IcebergLite.fileEntriesOf(conf, tableDir, meta, None)
     if (entries.exists(e => e.fileContent != 0 || e.manifestContent != 0))
       throw IcebergLite.ProbeError(
         s"Compaction refused: $tableDir has row-level delete files, and " +
           "rewriting data files would invalidate their (file, position) " +
           "coordinates. Apply or drop the deletes first.")
 
-    val dataPath = new Path(s"$tableDir/data")
-    val fs = dataPath.getFileSystem(conf)
     val survivors = mutable.Buffer.empty[IcebergLite.FileEntry]
-    val newFiles = mutable.Buffer.empty[Path]
+    val added = mutable.Buffer.empty[GenericRecord]
     var rewritten = 0
     entries.groupBy(_.partitionValues).foreach { case (_, group) =>
       val small = group.filter(_.fileSize < targetBytes)
@@ -433,37 +412,25 @@ object IcebergLiteWriter {
         // compacted replacements land beside them (partitionValuesOf
         // re-derives the same partition tuple from the path).
         val destDir = new Path(small.head.path).getParent
-        val before = listParquet(fs, destDir).map(_.getPath.toString).toSet
         val nOut = math.max(1,
           math.ceil(small.map(_.fileSize).sum.toDouble / targetBytes).toInt)
-        val df = spark.read.parquet(small.map(_.path): _*).coalesce(nOut)
-        writeStampedParquet(spark, df, destDir.toString, SaveMode.Append, Nil)
-        newFiles ++= listParquet(fs, destDir)
-          .map(_.getPath).filterNot(p => before.contains(p.toString))
+        added ++= manifestNewFiles(conf, tableDir, destDir) {
+          val df = spark.read.parquet(small.map(_.path): _*).coalesce(nOut)
+          writeStampedParquet(spark, df, destDir.toString, SaveMode.Append, Nil)
+        }
         rewritten += small.size
       }
     }
     if (rewritten == 0) return CompactionResult(0, 0)
 
-    val newEntries = newFiles.toSeq.map { p =>
-      val stats = footerStats(conf, p)
-      entryRecord(1, p.toString, stats.recordCount,
-        fs.getFileStatus(p).getLen, partitionValuesOf(dataPath, p),
-        stats.lower, stats.upper, stats.nullCounts)
-    }
     val carried = survivors.toSeq.map(e =>
-      entryRecord(0, e.path, e.recordCount, e.fileSize, e.partitionValues,
-        e.lowerBounds, e.upperBounds, e.nullCounts))
-
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val manifestPath = new Path(s"$tableDir/metadata/manifest-$snapshotId-m0.avro")
-    val manifestLen = writeAvro(conf, manifestPath, ManifestEntrySchema,
-      carried ++ newEntries)
+      entryRecord(0, 0, e.path, e.fileSize, e.partitionValues,
+        FileStats(e.recordCount, e.lowerBounds, e.upperBounds, e.nullCounts)))
+    val snapshotId = newSnapshotId()
     commitSnapshot(conf, tableDir, Some(meta), snapshotId,
-      Seq((manifestPath.toString, manifestLen, 0)), schemaJson = None,
-      partCols = IcebergLite.partitionSpecDsl(meta),
+      Seq(writeManifest(conf, tableDir, snapshotId, 0, carried ++ added, content = 0)),
       carryPriorManifests = false, operation = "replace")
-    CompactionResult(rewritten, newFiles.size)
+    CompactionResult(rewritten, added.size)
   }
 
   /** Rewrite the table's CURRENT merged state (row-level deletes APPLIED)
@@ -482,10 +449,8 @@ object IcebergLiteWriter {
     */
   def rewriteApplyingDeletes(spark: SparkSession, tableDir: String): CompactionResult = {
     val conf = IcebergLite.sessionHadoopConf(spark)
-    val metaPath = IcebergLite.latestMetadataPath(conf, tableDir).getOrElse(
-      throw IcebergLite.ProbeError(s"No Iceberg metadata at $tableDir"))
-    val meta = IcebergLite.readMetadataJson(conf, metaPath)
-    val entries = IcebergLite.fileEntries(conf, tableDir)
+    val meta = tableMetadata(conf, tableDir)
+    val entries = IcebergLite.fileEntriesOf(conf, tableDir, meta, None)
     // Match the scan guard's predicate (status != 2, like the filters on
     // posDeleteFiles/eqDeleteEntries below): fileEntries already drops
     // tombstoned entries today, but if that ever changes, a snapshot
@@ -496,29 +461,17 @@ object IcebergLiteWriter {
       return CompactionResult(0, 0)
     val liveData = entries.filter(e =>
       e.fileContent == 0 && e.manifestContent == 0 && e.status != 2)
-    val partCols = IcebergLite.partitionSpecDsl(meta)
     val merged = IcebergLite.scan(spark, tableDir, applyDeletes = true)
-    val dataPath = new Path(s"$tableDir/data")
-    val fs = dataPath.getFileSystem(conf)
-    val before =
-      if (fs.exists(dataPath)) listParquet(fs, dataPath).map(_.getPath.toString).toSet
-      else Set.empty[String]
-    writeStampedParquet(spark, merged, dataPath.toString, SaveMode.Append, partCols)
-    val newFiles = listParquet(fs, dataPath)
-      .filter(s => !before.contains(s.getPath.toString) &&
-        !s.getPath.getName.startsWith("delete-"))
-    val newEntries = newFiles.map { s =>
-      val stats = footerStats(conf, s.getPath)
-      entryRecord(1, s.getPath.toString, stats.recordCount, s.getLen,
-        partitionValuesOf(dataPath, s.getPath), stats.lower, stats.upper, stats.nullCounts)
+    val dataDir = s"$tableDir/data"
+    val added = manifestNewFiles(conf, tableDir, new Path(dataDir)) {
+      writeStampedParquet(spark, merged, dataDir, SaveMode.Append,
+        IcebergLite.partitionSpecDsl(meta))
     }
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val manifestPath = new Path(s"$tableDir/metadata/manifest-$snapshotId-m0.avro")
-    val manifestLen = writeAvro(conf, manifestPath, ManifestEntrySchema, newEntries)
+    val snapshotId = newSnapshotId()
     commitSnapshot(conf, tableDir, Some(meta), snapshotId,
-      Seq((manifestPath.toString, manifestLen, 0)), schemaJson = None,
-      partCols = partCols, carryPriorManifests = false, operation = "replace")
-    CompactionResult(liveData.size, newFiles.size)
+      Seq(writeManifest(conf, tableDir, snapshotId, 0, added, content = 0)),
+      carryPriorManifests = false, operation = "replace")
+    CompactionResult(liveData.size, added.size)
   }
 
   /** Commit a position-delete snapshot: writes the (file_path, pos) rows as
@@ -527,37 +480,11 @@ object IcebergLiteWriter {
     * applyDeletes = true)` then merges them on read.
     */
   def addPositionDeletes(spark: SparkSession, tableDir: String,
-      deletes: Seq[(String, Long)], fileContent: Int = 1): Unit = {
+      deletes: Seq[(String, Long)]): Unit = {
     require(deletes.nonEmpty, "addPositionDeletes needs at least one (file, pos)")
-    val conf = IcebergLite.sessionHadoopConf(spark)
-    val prior = IcebergLite.latestMetadataPath(conf, tableDir)
-      .map(p => IcebergLite.readMetadataJson(conf, p))
-      .getOrElse(throw IcebergLite.ProbeError(s"No Iceberg table at $tableDir"))
-
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    // Write the delete rows through Spark, then promote the single part
-    // file to a stable name under data/.
-    val tmp = s"$tableDir/tmp-delete-$snapshotId"
     import spark.implicits._
-    deletes.toDF("file_path", "pos").coalesce(1).write.parquet(tmp)
-    val tmpPath = new Path(tmp)
-    val fs = tmpPath.getFileSystem(conf)
-    val part = listParquet(fs, tmpPath).head.getPath
-    val delFile = new Path(s"$tableDir/data/delete-$snapshotId.parquet")
-    fs.rename(part, delFile)
-    fs.delete(tmpPath, true)
-
-    val metaDir = s"$tableDir/metadata"
-    val delManifestPath = new Path(s"$metaDir/manifest-$snapshotId-m0.avro")
-    val len = fs.getFileStatus(delFile).getLen
-    // Manifest the filesystem-qualified path so later appends' prior-file
-    // exclusion (which compares against qualified listing paths) sees it.
-    val delLen = writeAvro(conf, delManifestPath, ManifestEntrySchema, Seq(
-      deleteEntry(fs.makeQualified(delFile).toString,
-        deletes.length.toLong, len, fileContent)))
-    commitSnapshot(conf, tableDir, Some(prior), snapshotId,
-      Seq((delManifestPath.toString, delLen, 1)), schemaJson = None,
-      partCols = IcebergLite.partitionSpecDsl(prior))
+    commitDeletes(spark, tableDir, deletes.toDF("file_path", "pos"), deletes.length.toLong,
+      fileContent = 1)
   }
 
   /** Commit an equality-delete snapshot. As in Iceberg proper (spec §
@@ -569,33 +496,20 @@ object IcebergLiteWriter {
     * true)` enforces by resolving the delete's snapshot file listing.
     */
   def addEqualityDeletes(spark: SparkSession, tableDir: String,
-      deleteRows: org.apache.spark.sql.DataFrame): Unit = {
+      deleteRows: DataFrame): Unit = {
     require(deleteRows.columns.nonEmpty, "equality delete needs at least one column")
-    val conf = IcebergLite.sessionHadoopConf(spark)
-    val prior = IcebergLite.latestMetadataPath(conf, tableDir)
-      .map(p => IcebergLite.readMetadataJson(conf, p))
-      .getOrElse(throw IcebergLite.ProbeError(s"No Iceberg table at $tableDir"))
-
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
     val nRows = deleteRows.count()
     require(nRows > 0, "equality delete needs at least one row")
-    val tmp = s"$tableDir/tmp-delete-$snapshotId"
-    deleteRows.coalesce(1).write.parquet(tmp)
-    val tmpPath = new Path(tmp)
-    val fs = tmpPath.getFileSystem(conf)
-    val part = listParquet(fs, tmpPath).head.getPath
-    val delFile = new Path(s"$tableDir/data/delete-$snapshotId.parquet")
-    fs.rename(part, delFile)
-    fs.delete(tmpPath, true)
+    commitDeletes(spark, tableDir, deleteRows, nRows, fileContent = 2)
+  }
 
-    val metaDir = s"$tableDir/metadata"
-    val delManifestPath = new Path(s"$metaDir/manifest-$snapshotId-m0.avro")
-    val len = fs.getFileStatus(delFile).getLen
-    val delLen = writeAvro(conf, delManifestPath, ManifestEntrySchema, Seq(
-      deleteEntry(fs.makeQualified(delFile).toString, nRows, len, fileContent = 2)))
+  private def commitDeletes(spark: SparkSession, tableDir: String, rows: DataFrame,
+      nRows: Long, fileContent: Int): Unit = {
+    val conf = IcebergLite.sessionHadoopConf(spark)
+    val prior = tableMetadata(conf, tableDir)
+    val snapshotId = newSnapshotId()
     commitSnapshot(conf, tableDir, Some(prior), snapshotId,
-      Seq((delManifestPath.toString, delLen, 1)), schemaJson = None,
-      partCols = IcebergLite.partitionSpecDsl(prior))
+      Seq(stageDeleteFile(conf, tableDir, snapshotId, 0, rows, nRows, fileContent)))
   }
 
   /** Atomic upsert (MERGE-on-read): ONE snapshot carrying BOTH an
@@ -620,76 +534,43 @@ object IcebergLiteWriter {
     require(keyCols.forall(df.columns.contains),
       s"key columns ${keyCols.mkString(",")} must exist in the upsert batch")
     val conf = IcebergLite.sessionHadoopConf(spark)
-    val prior = IcebergLite.latestMetadataPath(conf, tableDir)
-      .map(p => IcebergLite.readMetadataJson(conf, p))
-      .getOrElse(throw IcebergLite.ProbeError(s"No Iceberg table at $tableDir"))
-    val partCols = IcebergLite.partitionSpecDsl(prior)
-    val priorFiles = IcebergLite.fileEntries(conf, tableDir).map(_.path).toSet
-
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val dataDir = s"$tableDir/data"
-    val dataPath = new Path(dataDir)
-    val fs = dataPath.getFileSystem(conf)
-
+    val prior = tableMetadata(conf, tableDir)
+    val snapshotId = newSnapshotId()
     // Equality-delete file: the batch's distinct keys.
     val delRows = df.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
     val nDel = delRows.count()
     require(nDel > 0, "upsert batch is empty")
-    val tmp = s"$tableDir/tmp-delete-$snapshotId"
-    delRows.coalesce(1).write.parquet(tmp)
-    val tmpPath = new Path(tmp)
-    val part = listParquet(fs, tmpPath).head.getPath
-    val delFile = new Path(s"$dataDir/delete-$snapshotId.parquet")
-    fs.rename(part, delFile)
-    fs.delete(tmpPath, true)
-
-    // Data files: listing diff around the write, as in commit().
-    val before: Set[String] =
-      if (fs.exists(dataPath)) listParquet(fs, dataPath).map(_.getPath.toString).toSet
-      else Set.empty
-    writeStampedParquet(spark, df, dataDir, SaveMode.Append, partCols)
-    val dataFiles = listParquet(fs, dataPath)
-      .filter(s => !before.contains(s.getPath.toString) &&
-        !priorFiles.contains(s.getPath.toString) &&
-        !s.getPath.getName.startsWith("delete-"))
-    val dataEntries = dataFiles.map { s =>
-      val stats = footerStats(conf, s.getPath)
-      entryRecord(1, s.getPath.toString, stats.recordCount, s.getLen,
-        partitionValuesOf(dataPath, s.getPath),
-        stats.lower, stats.upper, stats.nullCounts)
+    val deletes = stageDeleteFile(conf, tableDir, snapshotId, 1, delRows, nDel, fileContent = 2)
+    val dataDir = s"$tableDir/data"
+    val added = manifestNewFiles(conf, tableDir, new Path(dataDir)) {
+      writeStampedParquet(spark, df, dataDir, SaveMode.Append,
+        IcebergLite.partitionSpecDsl(prior))
     }
-
-    val metaDir = s"$tableDir/metadata"
-    val dataManifestPath = new Path(s"$metaDir/manifest-$snapshotId-m0.avro")
-    val dataLen = writeAvro(conf, dataManifestPath, ManifestEntrySchema, dataEntries)
-    val delManifestPath = new Path(s"$metaDir/manifest-$snapshotId-m1.avro")
-    val delLen = writeAvro(conf, delManifestPath, ManifestEntrySchema, Seq(
-      deleteEntry(fs.makeQualified(delFile).toString, nDel,
-        fs.getFileStatus(delFile).getLen, fileContent = 2)))
     commitSnapshot(conf, tableDir, Some(prior), snapshotId,
-      Seq((dataManifestPath.toString, dataLen, 0), (delManifestPath.toString, delLen, 1)),
-      schemaJson = None, partCols = partCols, operation = "overwrite")
+      Seq(writeManifest(conf, tableDir, snapshotId, 0, added, content = 0), deletes),
+      operation = "overwrite")
   }
 
-  // fileContent 1 = position deletes; 2 = equality deletes (also settable
-  // through addPositionDeletes' fileContent for malformed-fixture tests).
-  private def deleteEntry(path: String, rows: Long, size: Long,
-      fileContent: Int = 1): GenericRecord = {
-    val delFile = new GenericData.Record(ManifestEntrySchema.getField("data_file").schema())
-    delFile.put("content", fileContent)
-    delFile.put("file_path", path)
-    delFile.put("file_format", "PARQUET")
-    delFile.put("record_count", rows)
-    delFile.put("file_size_in_bytes", size)
-    delFile.put("partition", new java.util.HashMap[String, String]())
-    delFile.put("lower_bounds", new java.util.HashMap[String, String]())
-    delFile.put("upper_bounds", new java.util.HashMap[String, String]())
-    delFile.put("null_value_counts", new java.util.HashMap[String, java.lang.Long]())
-    val delEntry = new GenericData.Record(ManifestEntrySchema)
-    delEntry.put("status", 1)
-    delEntry.put("snapshot_id", null)
-    delEntry.put("data_file", delFile)
-    delEntry
+  /** Write `rows` as the snapshot's delete file (content 1 = position, 2 =
+    * equality), `data/delete-<snapshotId>.parquet` — the reader resolves
+    * an equality delete's commit snapshot from that name — and manifest
+    * it in delete manifest `index` of the snapshot.
+    */
+  private def stageDeleteFile(conf: Configuration, tableDir: String, snapshotId: Long,
+      index: Int, rows: DataFrame, nRows: Long, fileContent: Int): (String, Long, Int) = {
+    // Write the delete rows through Spark, then promote the single part
+    // file to a stable name under data/.
+    val tmpPath = new Path(s"$tableDir/tmp-delete-$snapshotId")
+    rows.coalesce(1).write.parquet(tmpPath.toString)
+    val fs = tmpPath.getFileSystem(conf)
+    val delFile = new Path(s"$tableDir/data/delete-$snapshotId.parquet")
+    fs.rename(listParquet(fs, tmpPath).head.getPath, delFile)
+    fs.delete(tmpPath, true)
+    // Manifest the filesystem-qualified path, the form the data-file
+    // listings of later commits compare against.
+    writeManifest(conf, tableDir, snapshotId, index, Seq(entryRecord(1, fileContent,
+      fs.makeQualified(delFile).toString, fs.getFileStatus(delFile).getLen, Map.empty,
+      FileStats(nRows, Map.empty, Map.empty, Map.empty))), content = 1)
   }
 
   private def listParquet(fs: FileSystem, dir: Path): Seq[FileStatus] = {
@@ -702,148 +583,117 @@ object IcebergLiteWriter {
     out.toSeq.sortBy(_.getPath.toString)
   }
 
-  private def toJavaMap(m: Map[String, String]): java.util.Map[String, String] = {
-    val jm = new java.util.HashMap[String, String]()
-    m.foreach { case (k, v) => jm.put(k, v) }
-    jm
-  }
+  private def newSnapshotId(): Long = math.abs(UUID.randomUUID().getMostSignificantBits)
 
-  private def toJavaLongMap(m: Map[String, Long]): java.util.Map[String, java.lang.Long] = {
-    val jm = new java.util.HashMap[String, java.lang.Long]()
-    m.foreach { case (k, v) => jm.put(k, Long.box(v)) }
-    jm
-  }
-
-  /** `fields` array of the lite schema entry (name/required/type per the
-    * Iceberg spec's schema JSON; ids are ordinal — this writer never
-    * renames, so ordinal ids are stable).
+  /** Write manifest `index` of snapshot `snapshotId`; returns its
+    * manifest-list entry (path, length, content: 0 = data, 1 = deletes).
     */
-  private def schemaFieldsJson(schema: StructType): String =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      s"""{"id": ${i + 1}, "name": "${f.name}", "required": ${!f.nullable}, "type": "${icebergTypeName(f.dataType)}"}"""
-    }.mkString("[", ", ", "]")
+  private def writeManifest(conf: Configuration, tableDir: String, snapshotId: Long,
+      index: Int, entries: Seq[GenericRecord], content: Int): (String, Long, Int) = {
+    val p = new Path(s"$tableDir/metadata/manifest-$snapshotId-m$index.avro")
+    (p.toString, writeAvro(conf, p, ManifestEntrySchema, entries), content)
+  }
 
-  /** Write manifest list + new metadata JSON for a snapshot whose new
-    * manifests are `newManifests` (path, length, content), carrying the
-    * prior snapshot's manifests and snapshot log forward.
+  /** The table's current metadata, loaded once per commit. */
+  private def priorMetadata(conf: Configuration, tableDir: String): Option[JObj] =
+    IcebergLite.latestMetadataPath(conf, tableDir).map(IcebergLite.readMetadataJson(conf, _))
+
+  private def tableMetadata(conf: Configuration, tableDir: String): JObj =
+    priorMetadata(conf, tableDir)
+      .getOrElse(throw IcebergLite.ProbeError(s"No Iceberg table at $tableDir"))
+
+  /** `fields` of the lite schema (name/required/type per the Iceberg
+    * spec's schema JSON; ids are ordinal — this writer never renames, so
+    * ordinal ids are stable).
+    */
+  private def fieldsJson(schema: StructType): JValue =
+    JArr(schema.fields.toVector.zipWithIndex.map { case (f, i) =>
+      JObj("id" -> num(i + 1L), "name" -> JStr(f.name),
+        "required" -> JValue.JBool(!f.nullable), "type" -> JStr(icebergTypeName(f.dataType)))
+    })
+
+  /** Commit a snapshot whose new manifests are `newManifests` (path,
+    * length, content): its manifest list carries the prior snapshot's
+    * manifests first — except for REPLACE commits (compaction), which
+    * write a complete manifest themselves; carrying the prior ones would
+    * resurrect the rewritten files.
     */
   private def commitSnapshot(conf: Configuration, tableDir: String,
-      prior: Option[graft.gateway.JValue.JObj], snapshotId: Long,
-      newManifests: Seq[(String, Long, Int)], schemaJson: Option[String],
-      partCols: Seq[String], carryPriorManifests: Boolean = true,
-      operation: String = "append"): Unit = {
-    val metaDir = s"$tableDir/metadata"
-    // REPLACE commits (compaction) write a complete manifest themselves;
-    // carrying the prior ones would resurrect the rewritten files.
-    val priorManifests =
-      if (carryPriorManifests)
-        prior.toSeq.flatMap(m => IcebergLite.currentManifests(conf, tableDir, m))
-      else Nil
-    val carried = priorManifests.map { m =>
-      val p = new Path(m.path)
-      manifestFileRecord(m.path, p.getFileSystem(conf).getFileStatus(p).getLen,
-        m.content, snapshotId)
-    }
-    val manifestRecords = carried ++ newManifests.map { case (p, len, content) =>
-      manifestFileRecord(p, len, content, snapshotId)
-    }
-    val manifestListPath = new Path(s"$metaDir/snap-$snapshotId-1.avro")
-    writeAvro(conf, manifestListPath, ManifestFileSchema, manifestRecords)
-
+      prior: Option[JObj], snapshotId: Long, newManifests: Seq[(String, Long, Int)],
+      carryPriorManifests: Boolean = true, operation: String = "append",
+      schemaFields: Option[JValue] = None, partCols: Option[Seq[String]] = None): Unit = {
+    val carried =
+      if (!carryPriorManifests) Nil
+      else prior.toSeq.flatMap(m => IcebergLite.currentManifests(conf, tableDir, m)).map { m =>
+        val p = new Path(m.path)
+        (m.path, p.getFileSystem(conf).getFileStatus(p).getLen, m.content)
+      }
+    val manifestList = new Path(s"$tableDir/metadata/snap-$snapshotId-1.avro")
+    writeAvro(conf, manifestList, ManifestFileSchema, (carried ++ newManifests).map {
+      case (p, len, content) => manifestFileRecord(p, len, content, snapshotId)
+    })
     val nowMs = System.currentTimeMillis()
     // Lineage per the spec: each snapshot records the snapshot it was
     // committed on top of; the history relation chases this chain.
-    val parentId = prior.flatMap(longOf(_, "current-snapshot-id"))
-    val parentField = parentId.map(p => s"""
-         |      "parent-snapshot-id": $p,""".stripMargin).getOrElse("")
-    val newSnapshot =
-      s"""{
-         |      "snapshot-id": $snapshotId,$parentField
-         |      "timestamp-ms": $nowMs,
-         |      "manifest-list": "$manifestListPath",
-         |      "summary": {"operation": "$operation"}
-         |    }""".stripMargin
-    val priorSnapshots = prior.toSeq.flatMap(_.get("snapshots")).flatMap {
-      case graft.gateway.JValue.JArr(items) => items.map(graft.gateway.Json.render)
-      case _ => Nil
-    }
-    // Schema: new commits declare theirs; carry the prior declaration when
-    // this commit has none (delete commits).
-    val effSchema = schemaJson.orElse(
-      prior.flatMap(m => IcebergLite.currentSchemaFieldsJson(m)))
-    val snapshotsJson = (priorSnapshots :+ newSnapshot).mkString(",\n    ")
-    // snapshot-log: when each snapshot became the current one (the
-    // `history` metadata table reads this; distinct from the snapshot's
-    // own commit timestamp after rollbacks re-current an old snapshot).
-    val logJson = (prior.toSeq.flatMap(snapshotLogEntries) :+ (nowMs, snapshotId))
-      .map { case (ts, id) => s"""{"timestamp-ms": $ts, "snapshot-id": $id}""" }
-      .mkString(",\n    ")
-    val refsJson = renderRefs(prior.map(refEntries).getOrElse(Nil))
-    val specFields = partCols.map(PartitionSpec.parse).zipWithIndex.map {
-      case (f, i) =>
-        s"""{"name": "${f.name}", "transform": "${f.transform}", "source-name": "${f.source}", "source-id": ${i + 1}, "field-id": ${1000 + i}}"""
-    }.mkString("[", ", ", "]")
-    val schemaSection = effSchema.map(fs =>
-      s"""
-         |  "current-schema-id": 0,
-         |  "schemas": [{"type": "struct", "schema-id": 0, "fields": $fs}],""".stripMargin)
-      .getOrElse("")
-    val metadataJson =
-      s"""{
-         |  "format-version": 2,
-         |  "table-uuid": "${UUID.randomUUID()}",
-         |  "location": "$tableDir",
-         |  "last-updated-ms": $nowMs,$schemaSection
-         |  "default-spec-id": 0,
-         |  "partition-specs": [{"spec-id": 0, "fields": $specFields}],
-         |  "current-snapshot-id": $snapshotId,
-         |  "snapshots": [
-         |    $snapshotsJson
-         |  ],
-         |  "snapshot-log": [
-         |    $logJson
-         |  ],
-         |  "refs": $refsJson
-         |}""".stripMargin
-    val metaDirPath = new Path(metaDir)
-    val metaFs = metaDirPath.getFileSystem(conf)
-    val version =
-      if (!metaFs.exists(metaDirPath)) 0
-      else metaFs.listStatus(metaDirPath)
-        .count(_.getPath.getName.endsWith(".metadata.json"))
-    val metaJsonPath = new Path(f"$metaDir/$version%05d-${UUID.randomUUID()}.metadata.json")
-    val out = metaJsonPath.getFileSystem(conf).create(metaJsonPath, true)
-    out.write(metadataJson.getBytes("UTF-8"))
-    out.close()
+    val parent = prior.flatMap(IcebergLite.currentSnapshotIdOf).map("parent-snapshot-id" -> num(_))
+    val snapshot = JObj(Vector("snapshot-id" -> num(snapshotId)) ++ parent ++ Vector(
+      "timestamp-ms" -> num(nowMs),
+      "manifest-list" -> JStr(manifestList.toString),
+      "summary" -> JObj("operation" -> JStr(operation))))
+    writeMetadata(conf, tableDir, prior, nowMs, snapshotId, newSnapshot = Some(snapshot),
+      schemaFields = schemaFields, partCols = partCols)
+  }
+
+  /** Write the table's next metadata JSON — the one place that builds it.
+    * Whatever the commit does not replace is carried forward from `prior`
+    * as stored: the snapshots, the snapshot log, the refs, the partition
+    * spec and the current schema's `fields`. `newSnapshot` joins the
+    * snapshot list, and `currentId` becomes the current snapshot, entered
+    * in the snapshot log (when each snapshot became current: the
+    * `history` relation reads it, and it differs from the commit times
+    * after a rollback) unless `logCurrent` is off.
+    */
+  private def writeMetadata(conf: Configuration, tableDir: String, prior: Option[JObj],
+      nowMs: Long, currentId: Long, newSnapshot: Option[JObj] = None,
+      logCurrent: Boolean = true, refs: Option[Seq[(String, Long, String)]] = None,
+      schemaFields: Option[JValue] = None, partCols: Option[Seq[String]] = None): Unit = {
+    val fields = schemaFields.orElse(prior.flatMap(IcebergLite.currentSchemaOf).map(_.fieldsJson))
+    val spec = partCols.getOrElse(prior.toSeq.flatMap(IcebergLite.partitionSpecDsl))
+      .map(PartitionSpec.parse).zipWithIndex.map { case (f, i) =>
+        JObj("name" -> JStr(f.name), "transform" -> JStr(f.transform),
+          "source-name" -> JStr(f.source), "source-id" -> num(i + 1L), "field-id" -> num(1000L + i))
+      }
+    val log = prior.toSeq.flatMap(IcebergLite.snapshotLogOf) ++
+      (if (logCurrent) Seq((nowMs, currentId)) else Nil)
+    val metadata = JObj(Vector(
+      "format-version" -> num(2L),
+      "table-uuid" -> JStr(UUID.randomUUID().toString),
+      "location" -> JStr(tableDir),
+      "last-updated-ms" -> num(nowMs)) ++
+      fields.toVector.flatMap(fs => Vector(
+        "current-schema-id" -> num(0L),
+        "schemas" -> JArr(Vector(JObj("type" -> JStr("struct"), "schema-id" -> num(0L),
+          "fields" -> fs))))) ++
+      Vector(
+        "default-spec-id" -> num(0L),
+        "partition-specs" -> JArr(Vector(
+          JObj("spec-id" -> num(0L), "fields" -> JArr(spec.toVector)))),
+        "current-snapshot-id" -> num(currentId),
+        "snapshots" -> JArr(prior.toVector.flatMap(IcebergLite.snapshotsOf) ++ newSnapshot),
+        "snapshot-log" -> JArr(log.toVector.map { case (ts, id) =>
+          JObj("timestamp-ms" -> num(ts), "snapshot-id" -> num(id))
+        }),
+        "refs" -> JObj(refs.getOrElse(prior.toSeq.flatMap(IcebergLite.refsOf)).toVector.map {
+          case (name, id, tpe) => name -> JObj("snapshot-id" -> num(id), "type" -> JStr(tpe))
+        })))
+    val metaDir = new Path(s"$tableDir/metadata")
+    val fs = metaDir.getFileSystem(conf)
+    val version = fs.listStatus(metaDir).count(_.getPath.getName.endsWith(".metadata.json"))
+    val out = fs.create(new Path(metaDir, f"$version%05d-${UUID.randomUUID()}.metadata.json"), true)
+    try out.write(Json.render(metadata).getBytes("UTF-8")) finally out.close()
   }
 
   // ---- metadata-only commits: refs + rollback ---------------------------
-
-  private def longOf(o: graft.gateway.JValue.JObj, key: String): Option[Long] =
-    o.get(key).collect { case graft.gateway.JValue.JNum(v) => v.toLong }
-
-  private def snapshotObjs(meta: graft.gateway.JValue.JObj): Vector[graft.gateway.JValue.JObj] =
-    meta.get("snapshots") match {
-      case Some(graft.gateway.JValue.JArr(items)) =>
-        items.collect { case o: graft.gateway.JValue.JObj => o }
-      case _ => Vector.empty
-    }
-
-  /** (name, snapshot-id, type) entries of the metadata's refs map. */
-  private def refEntries(meta: graft.gateway.JValue.JObj): Seq[(String, Long, String)] =
-    meta.get("refs") match {
-      case Some(o: graft.gateway.JValue.JObj) => o.fields.collect {
-        case (name, r: graft.gateway.JValue.JObj) =>
-          (name, longOf(r, "snapshot-id").getOrElse(0L),
-            r.str("type").getOrElse("tag"))
-      }
-      case _ => Nil
-    }
-
-  private def renderRefs(refs: Seq[(String, Long, String)]): String =
-    refs.map { case (name, id, tpe) =>
-      s""""$name": {"snapshot-id": $id, "type": "$tpe"}"""
-    }.mkString("{", ", ", "}")
 
   private val RefNameRe = "^[A-Za-z0-9._-]{1,255}$".r
 
@@ -858,102 +708,30 @@ object IcebergLiteWriter {
     require(name != "main", "'main' is reserved for the current snapshot")
     require(refType == "tag" || refType == "branch",
       s"ref type must be 'tag' or 'branch', got '$refType'")
-    val conf = spark.sessionState.newHadoopConf()
-    val meta = IcebergLite.resolveMetadata(conf, tableDir)
-    val snaps = snapshotObjs(meta)
-    require(snaps.exists(s => longOf(s, "snapshot-id").contains(snapshotId)),
+    val conf = IcebergLite.sessionHadoopConf(spark)
+    val meta = tableMetadata(conf, tableDir)
+    require(IcebergLite.snapshotOf(meta, snapshotId).nonEmpty,
       s"snapshot $snapshotId not found at $tableDir")
-    val currentId = longOf(meta, "current-snapshot-id")
+    val currentId = IcebergLite.currentSnapshotIdOf(meta)
       .getOrElse(throw IcebergLite.ProbeError("metadata has no current-snapshot-id"))
-    val refs = refEntries(meta).filterNot(_._1 == name) :+ ((name, snapshotId, refType))
-    writeMetadataOnly(conf, tableDir, meta, snaps, currentId,
-      snapshotLogEntries(meta), Some(refs))
-  }
-
-  /** (timestamp-ms, snapshot-id) entries of the metadata's snapshot-log;
-    * tables written before the log existed fall back to commit order.
-    */
-  private def snapshotLogEntries(meta: graft.gateway.JValue.JObj): Seq[(Long, Long)] =
-    meta.get("snapshot-log") match {
-      case Some(graft.gateway.JValue.JArr(items)) =>
-        items.collect { case o: graft.gateway.JValue.JObj =>
-          (longOf(o, "timestamp-ms").getOrElse(0L),
-            longOf(o, "snapshot-id").getOrElse(0L))
-        }
-      case _ => snapshotObjs(meta).flatMap { s =>
-        for (id <- longOf(s, "snapshot-id"); ts <- longOf(s, "timestamp-ms"))
-          yield (ts, id)
-      }
-    }
-
-  /** Metadata-only commit: re-render the table metadata with the given
-    * snapshot list and current pointer, carrying schema and partition spec
-    * forward. No manifests or data files are touched.
-    */
-  private def writeMetadataOnly(conf: Configuration, tableDir: String,
-      prior: graft.gateway.JValue.JObj,
-      snapshots: Seq[graft.gateway.JValue.JObj], currentId: Long,
-      snapshotLog: Seq[(Long, Long)],
-      refs: Option[Seq[(String, Long, String)]] = None): Unit = {
-    val metaDir = s"$tableDir/metadata"
-    val snapshotsJson = snapshots.map(graft.gateway.Json.render).mkString(",\n    ")
-    val logJson = snapshotLog
-      .map { case (ts, id) => s"""{"timestamp-ms": $ts, "snapshot-id": $id}""" }
-      .mkString(",\n    ")
-    val refsJson = renderRefs(refs.getOrElse(refEntries(prior)))
-    val partCols = IcebergLite.partitionSpecDsl(prior)
-    val specFields = partCols.map(PartitionSpec.parse).zipWithIndex.map {
-      case (f, i) =>
-        s"""{"name": "${f.name}", "transform": "${f.transform}", "source-name": "${f.source}", "source-id": ${i + 1}, "field-id": ${1000 + i}}"""
-    }.mkString("[", ", ", "]")
-    val schemaSection = IcebergLite.currentSchemaFieldsJson(prior).map(fs =>
-      s"""
-         |  "current-schema-id": 0,
-         |  "schemas": [{"type": "struct", "schema-id": 0, "fields": $fs}],""".stripMargin)
-      .getOrElse("")
-    val metadataJson =
-      s"""{
-         |  "format-version": 2,
-         |  "table-uuid": "${UUID.randomUUID()}",
-         |  "location": "$tableDir",
-         |  "last-updated-ms": ${System.currentTimeMillis()},$schemaSection
-         |  "default-spec-id": 0,
-         |  "partition-specs": [{"spec-id": 0, "fields": $specFields}],
-         |  "current-snapshot-id": $currentId,
-         |  "snapshots": [
-         |    $snapshotsJson
-         |  ],
-         |  "snapshot-log": [
-         |    $logJson
-         |  ],
-         |  "refs": $refsJson
-         |}""".stripMargin
-    val metaDirPath = new Path(metaDir)
-    val metaFs = metaDirPath.getFileSystem(conf)
-    val version = metaFs.listStatus(metaDirPath)
-      .count(_.getPath.getName.endsWith(".metadata.json"))
-    val metaJsonPath = new Path(f"$metaDir/$version%05d-${UUID.randomUUID()}.metadata.json")
-    val out = metaJsonPath.getFileSystem(conf).create(metaJsonPath, true)
-    out.write(metadataJson.getBytes("UTF-8"))
-    out.close()
+    val refs = IcebergLite.refsOf(meta).filterNot(_._1 == name) :+ ((name, snapshotId, refType))
+    writeMetadata(conf, tableDir, Some(meta), System.currentTimeMillis(), currentId,
+      logCurrent = false, refs = Some(refs))
   }
 
   /** Roll the table's current pointer back (or forward) to an existing
     * snapshot — Iceberg's `rollback_to_snapshot` semantics: a metadata-only
     * commit, every snapshot stays addressable, so the rollback itself can
-    * be undone by rolling "back" to the newer snapshot id.
+    * be undone by rolling "back" to the newer snapshot id. The snapshot
+    * list is untouched but the history gains a new made-current entry
+    * (exactly what distinguishes `history` from `snapshots`).
     */
   def rollback(spark: SparkSession, tableDir: String, toSnapshotId: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val meta = IcebergLite.resolveMetadata(conf, tableDir)
-    val snaps = snapshotObjs(meta)
-    require(snaps.exists(s => longOf(s, "snapshot-id").contains(toSnapshotId)),
+    val conf = IcebergLite.sessionHadoopConf(spark)
+    val meta = tableMetadata(conf, tableDir)
+    require(IcebergLite.snapshotOf(meta, toSnapshotId).nonEmpty,
       s"snapshot $toSnapshotId not found at $tableDir")
-    // A rollback makes an OLD snapshot current again: the snapshot list is
-    // untouched but the history gains a new made-current entry (this is
-    // exactly what distinguishes `history` from `snapshots`).
-    val log = snapshotLogEntries(meta) :+ ((System.currentTimeMillis(), toSnapshotId))
-    writeMetadataOnly(conf, tableDir, meta, snaps, toSnapshotId, log)
+    writeMetadata(conf, tableDir, Some(meta), System.currentTimeMillis(), toSnapshotId)
   }
 
   private def manifestFileRecord(path: String, len: Long, content: Int,

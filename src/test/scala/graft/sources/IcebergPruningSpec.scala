@@ -304,7 +304,7 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
 
   test("renamed column reads correctly through field-id projection") {
     val dir = evolvedFixture("iceberg_renamed")(
-      _.replace("\"name\": \"r_name\"", "\"name\": \"region_name\""))
+      _.replaceAll("\"name\":\\s*\"r_name\"", "\"name\": \"region_name\""))
     val df = IcebergLite.scan(spark, dir)
     assert(df.columns.toSet == Set("r_regionkey", "region_name"))
     // Values come from the physical r_name column, found by field id.
@@ -319,7 +319,7 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
     // Declared schema no longer carries r_name -> the physical column is
     // unclaimed by any field id: refuse.
     val dropped = evolvedFixture("iceberg_dropped") { text =>
-      val re = """, \{"id": \d+, "name": "r_name"[^}]*\}""".r
+      val re = """,\s*\{"id":\s*\d+,\s*"name":\s*"r_name"[^}]*\}""".r
       re.replaceAllIn(text, "")
     }
     val e1 = intercept[IcebergLite.ProbeError](IcebergLite.scan(spark, dropped))
@@ -327,7 +327,7 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
     // Same field id, renamed AND retyped: the id resolves but the types
     // disagree -> refuse.
     val retyped = evolvedFixture("iceberg_retyped")(
-      _.replace("\"name\": \"r_name\", \"required\": false, \"type\": \"string\"",
+      _.replaceAll("\"name\":\\s*\"r_name\",\\s*\"required\":\\s*false,\\s*\"type\":\\s*\"string\"",
         "\"name\": \"region_name\", \"required\": false, \"type\": \"long\""))
     val e2 = intercept[IcebergLite.ProbeError](IcebergLite.scan(spark, retyped))
     assert(e2.getMessage.contains("field-id"))
@@ -476,7 +476,7 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
     // 00002-* metadata, so the commit chain stays visible.
     val next = new Path(metaPath.getParent, "00001z-evolved.metadata.json")
     val out = fs.create(next, true)
-    out.write(text.replace("\"name\": \"r_name\"", "\"name\": \"region_name\"")
+    out.write(text.replaceAll("\"name\":\\s*\"r_name\"", "\"name\": \"region_name\"")
       .getBytes("UTF-8"))
     out.close()
 
@@ -516,8 +516,8 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
     // A content=2 delete file whose columns are NOT data columns: applying
     // it is impossible, and skipping it would return rows the table has
     // deleted — so the opt-in merge path must throw.
-    IcebergLiteWriter.addPositionDeletes(spark, dir,
-      Seq(("unused", 0L)), fileContent = 2)
+    import spark.implicits._
+    IcebergLiteWriter.addEqualityDeletes(spark, dir, Seq(("unused", 0L)).toDF("file_path", "pos"))
     assertThrows[IcebergLite.DeleteGuardError](
       IcebergLite.assertNoDeletes(spark, dir))
     val err = intercept[IcebergLite.ProbeError](

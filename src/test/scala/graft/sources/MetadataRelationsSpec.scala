@@ -93,8 +93,9 @@ class MetadataRelationsSpec extends AnyFunSuite with SparkFixture {
 
   test("delete table shows DELETE manifest content") {
     val dir = tmpDir("metarel_del") + "/warehouse/t"
-    IcebergLiteWriter.write(spark, Tables.t(spark, sf0001, "region"), dir,
-      withDeleteManifest = true)
+    IcebergLiteWriter.write(spark, Tables.t(spark, sf0001, "region"), dir)
+    val dataFile = IcebergLite.fileEntries(spark.sparkContext.hadoopConfiguration, dir).head.path
+    IcebergLiteWriter.addPositionDeletes(spark, dir, Seq((dataFile, 0L)))
     val r = Engine.executeQuery(spark,
       s"SELECT BOOL_OR(manifest_content <> 'DATA') AS has_deletes FROM iceberg_metadata('$dir')",
       cfg)
