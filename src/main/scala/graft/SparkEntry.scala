@@ -23,4 +23,15 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     corpus.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The session Bench and Verify run on: `cores` local threads, as many
+    * shuffle partitions, UTC and no UI (perfbench's Harness builds the
+    * same one).
+    */
+  def sessionBuilder(cores: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
 }

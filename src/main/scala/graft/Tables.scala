@@ -24,65 +24,7 @@ object Tables {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), org.apache.spark.sql.types.StructType]()
 
-  /** Serving-mode pins: (session, dir, name) → the in-memory relation
-    * registered by [[pinForServing]]. Plain map lookup on the query
-    * path; empty unless a driver opted in.
-    */
-  private val pinned =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** Pin every base table as an in-memory relation spread over the
-    * session's cores — the warmed-gateway serving posture: a process
-    * that answers a stream of queries over the same tables holds them
-    * cached (`spark.catalog.cacheTable` in any production Spark serving
-    * tier), instead of re-decoding parquet per query. On this fixture
-    * the spread also restores scan-side parallelism the files
-    * themselves cannot provide: the testdata parquet is single
-    * row-group per file, so a cold FileScan is structurally ONE task no
-    * matter the core count (DuckDB parallelizes WITHIN a row group;
-    * Spark's split granularity is the row group), while the pinned
-    * relation computes map-heavy stages on all cores. At production
-    * scale the input has thousands of natural splits and none of this
-    * is needed — this is a SERVING-SESSION posture, opt-in
-    * (`SPARK_GRAFT_SERVE=1` in Bench, never Verify), reported in the
-    * bench artifact, and paired against DuckDB given the symmetric
-    * warm form (`--materialize` in tools/bench_duckdb.py).
-    *
-    * MEMORY_AND_DISK: at sf scales the hot set is MBs; a bigger pin
-    * spills instead of OOMing the serving JVM.
-    */
-  def pinForServing(spark: SparkSession, dir: String): Unit =
-    names.foreach { n =>
-      val base = t(spark, dir, n)
-      // Row-aware spread: enough partitions to put parallel decode
-      // behind the heavy map chains (~1k rows each), capped at the
-      // session's cores, and NO spread for dimension-sized tables — a
-      // blanket cores-wide repartition makes every downstream stage of
-      // every query pay cores× task launches for rows that fit one
-      // (measured: +47% on the dedup family), while the row-aware form
-      // keeps their plans identical to the cold ones.
-      val rows = base.count()
-      val parts = math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong, rows / 1000)).toInt
-      val df = base.repartition(parts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // materialize outside any timed region
-      // Re-pinning the same (session, dir) must not leak the previous
-      // pin's cached blocks for the life of the session (ADVICE r14).
-      Option(pinned.put((spark, dir, n), df)).foreach(_.unpersist(false))
-    }
-
-  /** Drop the serving pins for a (session, dir) — the bench's
-    * between-mode cleanup.
-    */
-  def unpinServing(spark: SparkSession, dir: String): Unit =
-    names.foreach { n =>
-      Option(pinned.remove((spark, dir, n))).foreach(_.unpersist(false))
-    }
-
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val hit = pinned.get((spark, dir, name))
-    if (hit != null) return hit
     val path = s"$dir/$name.parquet"
     // events.ts layout varies across fixture generations: TIMESTAMP(NANOS)
     // (which Spark 4 refuses to read as a timestamp — the legacy conf reads

@@ -106,9 +106,9 @@ object IcebergLite {
   /** Source-byte bound of [[metadataCache]]: a few thousand manifests. */
   val MetadataCacheBytes: Long = 64L << 20
 
-  /** Parsed metadata JSON, manifest lists and manifests by path, shared by
-    * every session of the process. All three are write-once files (see
-    * [[SourceCache]]).
+  /** Parsed metadata JSON, manifest lists, manifests and data-file
+    * footers by path, shared by every session of the process. All four
+    * come from write-once files (see [[SourceCache]]).
     */
   private[sources] val metadataCache = new SourceCache(MetadataCacheBytes)
 
@@ -191,15 +191,16 @@ object IcebergLite {
     schemas.toSeq.flatten
       .collectFirst { case s: JObj if s.long("schema-id").contains(id) => s }
       .flatMap(_.get("fields"))
-      .map { fs =>
-        CurrentSchema(fs, fs match {
-          case JValue.JArr(items) => items.collect { case f: JObj =>
-            SchemaField(f.long("id").getOrElse(-1L), f.str("name").getOrElse(""),
-              f.str("type").getOrElse(""))
-          }
-          case _ => Nil
-        })
-      }
+      .map(fs => CurrentSchema(fs, schemaFieldsOf(fs)))
+  }
+
+  /** A schema's `fields` value read as [[SchemaField]]s. */
+  def schemaFieldsOf(fields: JValue): Seq[SchemaField] = fields match {
+    case JValue.JArr(items) => items.collect { case f: JObj =>
+      SchemaField(f.long("id").getOrElse(-1L), f.str("name").getOrElse(""),
+        f.str("type").getOrElse(""))
+    }
+    case _ => Nil
   }
 
   /** Every record of an Avro container file, decoded with its writer
@@ -370,11 +371,6 @@ object IcebergLite {
   private[sources] final case class FileFooter(
       schema: org.apache.spark.sql.types.StructType, fieldIds: Map[Long, String])
 
-  /** Footer per data-file path (Iceberg data files are immutable, so a
-    * path keys identical content for the process lifetime).
-    */
-  private val footerCache = new java.util.concurrent.ConcurrentHashMap[String, FileFooter]()
-
   /** The footer of the file at `path`, read on this thread under `conf`
     * and converted as Spark converts it under the session's Parquet
     * settings, every field nullable as a file source reads it.
@@ -533,10 +529,15 @@ object IcebergLite {
 
     // Physical file schema from one footer; the vectorized reader applies
     // it to every file (schema guard below refuses drifted tables). Cached
-    // per head-file path — a path names immutable content in Iceberg, and
-    // re-reading a footer per scan() call is planning overhead at scale.
-    val footer = footerCache.computeIfAbsent(
-      allData.head.path, p => readFooter(spark, conf, p))
+    // in metadataCache per head-file path — a path names immutable content
+    // in Iceberg, and re-reading a footer per scan() call is planning
+    // overhead at scale. An entry is charged its schema's JSON length: it
+    // holds that schema plus a field-id map of one short entry per column.
+    val headPath = allData.head.path
+    val footer = metadataCache.getOrLoad(s"footer:$headPath") {
+      val f = readFooter(spark, conf, headPath)
+      (f, f.schema.json.length.toLong)
+    }
     val fileSchema = footer.schema
 
     // Schema-evolution guard: if the metadata declares a schema and the

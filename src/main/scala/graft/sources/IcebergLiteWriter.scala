@@ -658,10 +658,15 @@ object IcebergLiteWriter {
       logCurrent: Boolean = true, refs: Option[Seq[(String, Long, String)]] = None,
       schemaFields: Option[JValue] = None, partCols: Option[Seq[String]] = None): Unit = {
     val fields = schemaFields.orElse(prior.flatMap(IcebergLite.currentSchemaOf).map(_.fieldsJson))
+    // A spec field's source-id is the field id of its source column (left
+    // out when the schema does not name that column).
+    val fieldIds = fields.toSeq.flatMap(IcebergLite.schemaFieldsOf).map(f => f.name -> f.id).toMap
     val spec = partCols.getOrElse(prior.toSeq.flatMap(IcebergLite.partitionSpecDsl))
       .map(PartitionSpec.parse).zipWithIndex.map { case (f, i) =>
-        JObj("name" -> JStr(f.name), "transform" -> JStr(f.transform),
-          "source-name" -> JStr(f.source), "source-id" -> num(i + 1L), "field-id" -> num(1000L + i))
+        JObj(Vector("name" -> JStr(f.name), "transform" -> JStr(f.transform),
+          "source-name" -> JStr(f.source)) ++
+          fieldIds.get(f.source).map(id => "source-id" -> num(id)) ++
+          Vector("field-id" -> num(1000L + i)))
       }
     val log = prior.toSeq.flatMap(IcebergLite.snapshotLogOf) ++
       (if (logCurrent) Seq((nowMs, currentId)) else Nil)

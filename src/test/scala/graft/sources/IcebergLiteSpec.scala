@@ -166,4 +166,23 @@ class IcebergLiteSpec extends AnyFunSuite with SparkFixture {
     assert(num(arr(rolledBack, "snapshot-log").last, "snapshot-id").contains(current(appended)))
     assert(IcebergLite.scan(spark, dir).count() == 20)
   }
+
+  test("a partition field's source-id is the field id of the column its source-name names") {
+    import spark.implicits._
+    val dir = tmpDir("iceberg_source_id") + "/warehouse/events"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val df = (0 until 8).map(i => (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-0${i % 2 + 1} 10:00:00"),
+      (i % 3).toLong, s"r${i % 2}")).toDF("event_id", "ts", "user_id", "region")
+    IcebergLiteWriter.write(spark, df, dir, partitionBy = Seq("region", "day(ts)", "bucket(4, user_id)"))
+    IcebergLiteWriter.append(spark, df, dir)
+    val meta = IcebergLite.readMetadataJson(conf, IcebergLite.latestMetadataPath(conf, dir).get)
+    val ids = IcebergLite.currentSchemaOf(meta).get.fields.map(f => f.name -> f.id).toMap
+    val specFields = meta.get("partition-specs").collect { case JArr(specs) =>
+      specs.collect { case s: JObj => s.get("fields") }.flatten
+    }.toSeq.flatten.collect { case JArr(fs) => fs.collect { case f: JObj => f } }.flatten
+    assert(specFields.flatMap(_.str("source-name")) == Seq("region", "ts", "user_id"))
+    specFields.foreach { f =>
+      assert(f.long("source-id") == f.str("source-name").flatMap(ids.get), f.render)
+    }
+  }
 }

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkFixture, Tables}
 
-/** Local filesystem that counts directory listings and file opens. */
+/** Local filesystem that counts directory listings and file opens, and
+  * separately the opens of Parquet data files.
+  */
 class CountingLocalFs extends LocalFileSystem {
   override def listStatus(f: Path): Array[FileStatus] = {
     CountingLocalFs.listings.incrementAndGet()
@@ -15,13 +17,14 @@ class CountingLocalFs extends LocalFileSystem {
   }
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     CountingLocalFs.opens.incrementAndGet()
+    if (f.getName.endsWith(".parquet")) CountingLocalFs.parquetOpens.incrementAndGet()
     super.open(f, bufferSize)
   }
 }
 
 object CountingLocalFs {
-  val listings, opens = new AtomicInteger()
-  def reset(): Unit = { listings.set(0); opens.set(0) }
+  val listings, opens, parquetOpens = new AtomicInteger()
+  def reset(): Unit = { listings.set(0); opens.set(0); parquetOpens.set(0) }
 }
 
 /** Iceberg metadata is read once per table state: later scans list the
@@ -76,6 +79,28 @@ class MetadataCacheSpec extends AnyFunSuite with SparkFixture {
     // An entry larger than the bound is served but not kept.
     assert(cache.getOrLoad("huge")(("huge", 101L)) == "huge")
     assert(cache.bytes == 70)
+    assert(IcebergLite.metadataCache.bytes <= IcebergLite.MetadataCacheBytes)
+  }
+
+  test("data-file footers share the metadata cache's byte bound") {
+    val dir = tmpDir("meta_cache_footer") + "/warehouse/region"
+    IcebergLiteWriter.write(spark, Tables.t(spark, sf0001, "region"), dir)
+    val counted = spark.newSession()
+    counted.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    counted.conf.set("fs.file.impl.disable.cache", "true")
+    IcebergLite.scan(counted, dir)
+    CountingLocalFs.reset()
+    IcebergLite.scan(counted, dir)
+    assert(CountingLocalFs.parquetOpens.get == 0)
+
+    // An entry charged the whole bound evicts everything else: the next
+    // scan reads the head file's footer again, because the footer was an
+    // entry of the same cache.
+    IcebergLite.metadataCache.getOrLoad("filler")(("filler", IcebergLite.MetadataCacheBytes))
+    CountingLocalFs.reset()
+    val df = IcebergLite.scan(counted, dir)
+    assert(CountingLocalFs.parquetOpens.get == 1)
+    assert(df.count() == 5)
     assert(IcebergLite.metadataCache.bytes <= IcebergLite.MetadataCacheBytes)
   }
 }

@@ -3,16 +3,12 @@
 engine) over the same sf parquet the Spark bench uses, for the
 matches-or-beats single-node-throughput comparison in BASELINE.md.
 
-Usage: python3 tools/bench_duckdb.py <sfDir> <verifyOutDir-with-oracle_sql.json> [--jobs N] [--materialize]
+Usage: python3 tools/bench_duckdb.py <sfDir> <verifyOutDir-with-oracle_sql.json> [--jobs N]
 
---jobs N       serving-throughput pairing: N threads drain the corpus
-               concurrently on separate connections to one shared
-               in-process database (the posture SPARK_GRAFT_CONC=N
-               measures on the Spark side); wall-clock per sweep.
---materialize  warm-serving pairing for SPARK_GRAFT_SERVE=1: load every
-               parquet into a native DuckDB table once (untimed), so the
-               timed queries never touch parquet — the same hot-table
-               posture as the Spark pins.
+--jobs N  serving-throughput pairing: N threads drain the corpus
+          concurrently on separate connections to one shared in-process
+          database (the posture SPARK_GRAFT_CONC=N measures on the Spark
+          side); wall-clock per sweep.
 """
 import contextlib, json, os, sys, time
 
@@ -21,7 +17,7 @@ import duckdb
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
-def main(sf_dir, out_dir, jobs=1, materialize=False):
+def main(sf_dir, out_dir, jobs=1):
     con = duckdb.connect()
     # Sequential runs keep the historical 16-thread setting every
     # BASELINE.md band was recorded under. Under --jobs N the setting is
@@ -35,12 +31,8 @@ def main(sf_dir, out_dir, jobs=1, materialize=False):
     threads = 16 if jobs == 1 else max(2, (os.cpu_count() or 32) // jobs)
     con.execute(f"SET threads TO {threads}")
     for t in TABLES:
-        if materialize:
-            con.execute(
-                f"CREATE TABLE {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-        else:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     if jobs > 1:
         from concurrent.futures import ThreadPoolExecutor
@@ -65,7 +57,7 @@ def main(sf_dir, out_dir, jobs=1, materialize=False):
             sweeps.append(round(time.time() - t0, 2))
         print(json.dumps({"metric": "duckdb_total", "value": sweeps[0],
                           "unit": "sec", "mode": "throughput", "jobs": jobs,
-                          "materialize": materialize, "sweeps": sweeps,
+                          "sweeps": sweeps,
                           "cold": sweeps[0], "steady": sweeps[-1],
                           "errors": errs, "queries": len(oracle), "sf": sf_dir}))
         return
@@ -80,8 +72,7 @@ def main(sf_dir, out_dir, jobs=1, materialize=False):
             print(f"# {name} failed: {e}", file=sys.stderr)
     total = sum(v for v in times.values() if v > 0)
     print(json.dumps({"metric": "duckdb_total", "value": round(total, 2),
-                      "unit": "sec", "materialize": materialize,
-                      "queries": times, "sf": sf_dir}))
+                      "unit": "sec", "queries": times, "sf": sf_dir}))
 
 
 if __name__ == "__main__":
@@ -97,9 +88,7 @@ if __name__ == "__main__":
         elif a.startswith("--jobs="):
             jobs = int(a.split("=", 1)[1])
             i += 1
-        elif a == "--materialize":
-            i += 1
         else:
             rest.append(a)
             i += 1
-    main(rest[0], rest[1], jobs=jobs, materialize="--materialize" in sys.argv)
+    main(rest[0], rest[1], jobs=jobs)

@@ -18,11 +18,13 @@ protocol the band is stamped from:
 
 Usage:
   python3 tools/bench_pairs.py <sfDir> <verifyOutDir> [--pairs N]
-      [--conc N] [--repeat N] [--settle LOAD] [--out FILE]
+      [--conc N] [--settle LOAD] [--out FILE]
 
 --conc N pairs the serving-throughput posture (SPARK_GRAFT_CONC=N vs
 bench_duckdb.py --jobs N); default is the sequential-latency posture
-the historical BENCH_r*.json artifacts record.
+the historical BENCH_r*.json artifacts record. Each graft leg times
+every query twice (graft.Bench's fixed repeat: cold, then steady) with
+SPARK_GRAFT_BENCH_GC=1; the band is stamped from the steady totals.
 """
 import json, os, statistics, subprocess, sys, time
 
@@ -52,11 +54,10 @@ def settle(threshold, timeout=240):
     return False
 
 
-def run_graft(sf_dir, conc, repeat, out):
+def run_graft(sf_dir, conc, out):
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR=sf_dir,
                SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-               SPARK_GRAFT_BENCH_REPEAT=str(repeat),
                SPARK_GRAFT_BENCH_GC="1",
                SPARK_GRAFT_BENCH_OUT=out)
     if conc > 1:
@@ -76,12 +77,12 @@ def run_duck(sf_dir, out_dir, conc):
 
 def main():
     argv = sys.argv[1:]
-    opts = {"--pairs": 3, "--conc": 1, "--repeat": 2, "--settle": 3.0}
+    opts = {"--pairs": 3, "--conc": 1, "--settle": 3.0}
     rest, i = [], 0
     out_file = "bench_pairs.json"
     while i < len(argv):
         a = argv[i]
-        if a in ("--pairs", "--conc", "--repeat"):
+        if a in ("--pairs", "--conc"):
             opts[a] = int(argv[i + 1]); i += 2
         elif a == "--settle":
             opts[a] = float(argv[i + 1]); i += 2
@@ -90,8 +91,7 @@ def main():
         else:
             rest.append(a); i += 1
     sf_dir, vout = rest[0], rest[1]
-    pairs, conc, repeat, thr = (opts["--pairs"], opts["--conc"],
-                                opts["--repeat"], opts["--settle"])
+    pairs, conc, thr = opts["--pairs"], opts["--conc"], opts["--settle"]
     records = []
     all_settled = True
     for p in range(pairs):
@@ -104,7 +104,7 @@ def main():
             tick0, steal0 = cpu_ticks()
             t0 = time.time()
             if leg == "graft":
-                g = run_graft(sf_dir, conc, repeat, f"/tmp/bp_graft_{p}.json")
+                g = run_graft(sf_dir, conc, f"/tmp/bp_graft_{p}.json")
                 rec["graft_steady"] = round(g["steady"], 2)
                 rec["graft_cold"] = round(g["cold"], 2)
                 rec["graft_errors"] = g.get("errors", 0)
@@ -137,7 +137,7 @@ def main():
                        for r in records)
     summary = {
         "metric": "pair_band", "sf": sf_dir, "pairs": pairs, "conc": conc,
-        "repeat": repeat, "settle_threshold": thr,
+        "settle_threshold": thr,
         "graft_steady": [r["graft_steady"] for r in records],
         "duck_steady": [r["duck_steady"] for r in records],
         "ratios": ratios, "median_ratio": round(med, 3),

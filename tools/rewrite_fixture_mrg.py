@@ -26,8 +26,9 @@ row-group framing changes, so all oracle hashes are unaffected.
 To make Spark actually split on the groups, size its splits to them:
   spark.sql.files.maxPartitionBytes ~= filesize/groups
   spark.sql.files.openCostInBytes   = 0
-(graft.Bench picks these up via SPARK_GRAFT_MAX_PARTITION_BYTES /
-standard spark confs; on single-row-group files these knobs are no-ops.)
+(graft.Bench's session reads them as JVM system properties, e.g.
+sbt 'set javaOptions += "-Dspark.sql.files.openCostInBytes=0"' 'runMain graft.Bench';
+on single-row-group files these confs are no-ops.)
 """
 import argparse
 import math
