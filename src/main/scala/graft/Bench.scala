@@ -131,6 +131,7 @@ object Bench {
       "repeat" -> num(Repeat.toLong),
       "errors" -> num((runs.size - ok.size).toLong),
       "steal_pct" -> num(round(stamp.stealPct, 2)),
+      // No serving mode is left; the key stays for readers that parse it.
       "serve" -> JBool(false),
       "cold" -> num(cold),
       "steady" -> num(steady))
@@ -257,7 +258,7 @@ object Bench {
         // eviction/GC for data they never read (p58 measured 4.0–4.5 s
         // mid-corpus vs 0.7 s standalone). Each query is measured from
         // the same clean block-manager state its standalone measurement
-        // has; repeats also re-materialize persists, as before.
+        // has; repeats also re-materialize persists.
         // Drain the CacheScope registry first: it unpersists every
         // operator-tracked persist and would otherwise retain the plan
         // trees for the whole corpus run; clearCache() then drops any
