@@ -24,9 +24,9 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     corpus.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
-  /** The session Bench and Verify run on: `cores` local threads, as many
-    * shuffle partitions, UTC and no UI (perfbench's Harness builds the
-    * same one).
+  /** The session Bench, Verify, HttpApiServer and Seed run on: `cores`
+    * local threads, as many shuffle partitions, UTC and no UI
+    * (perfbench's Harness builds the same one).
     */
   def sessionBuilder(cores: Int): SparkSession.Builder =
     SparkSession.builder()

@@ -378,12 +378,10 @@ object HttpApi {
 object HttpApiServer {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8000)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SPARK_MASTER is a deployment setting: it points the gateway at a
+    // cluster; the builder's local[4] is the default.
+    val builder = graft.SparkEntry.sessionBuilder(4)
+    val spark = sys.env.get("SPARK_MASTER").fold(builder)(builder.master).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val demoDir = s"${System.getProperty("java.io.tmpdir")}/graft_demo/warehouse/demo/documents"
     graft.sources.IcebergLiteWriter.write(

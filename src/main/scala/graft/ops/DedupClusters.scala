@@ -168,8 +168,6 @@ object DedupClusters {
       retired = List(labels, stepped)
       labels = next.select(col("id"), col("label"))
       iter += 1
-      if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-        System.err.println(s"[cc] round $iter: $changed labels changed")
     }
     val out = docs.select(col("doc_id")).distinct()
       .join(labels.select(col("id"), col("label")), col("doc_id") === col("id"), "left")

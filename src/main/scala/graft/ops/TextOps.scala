@@ -556,32 +556,6 @@ object TextOps {
         .as("text"))
   }
 
-  /** Token-diversity (Gini impurity) per doc: 1 - Σ_w (c_w / n)².
-    * A repetition signal like Shannon entropy but with NO transcendental
-    * functions: Σ c_w² and n are exact integers, so the score is a single
-    * IEEE division of two exact values — bit-reproducible on any engine
-    * (ln differs in the last ulp across libm implementations, which is
-    * why the entropy form can't be oracle-gated). Near 1 = diverse
-    * vocabulary; near 0 = one token repeated. Two shuffles, both hash
-    * aggregates: (doc, word) then doc — map-side combinable, no windows.
-    */
-  def giniDiversity(docs: DataFrame): DataFrame =
-    withToks(docs)
-      .select(col("doc_id"), explode(col("toks")).as("word"))
-      .groupBy(col("doc_id"), col("word"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg(
-        sum(col("c")).as("n_tokens"),
-        count(lit(1)).as("n_distinct_tokens"),
-        sum(col("c") * col("c")).as("sumsq"))
-      .select(
-        col("doc_id"),
-        col("n_tokens"),
-        col("n_distinct_tokens"),
-        (lit(1.0) - col("sumsq").cast("double")
-          / (col("n_tokens") * col("n_tokens")).cast("double")).as("gini"))
-
   /** BM25 relevance of every document against a fixed bag of query terms
     * (the retrieval / quality-filter scoring primitive). Corpus stats
     * (N, avgdl, per-term df) are ONE tiny aggregate collected to the

@@ -587,13 +587,13 @@ object IcebergLite {
     val liteFiles = dataEntries.map(e => LiteDataFile(
       e.path, e.fileSize, e.recordCount, e.partitionValues,
       e.lowerBounds, e.upperBounds, e.nullCounts))
-    val statTypes = fileSchema.fields.map(f => f.name -> f.dataType).toMap
+    val columnTypes = fileSchema.fields.map(f => f.name -> f.dataType).toMap
     // Hidden transform fields (day/bucket) never surface as table columns;
     // they reach the index so source-column predicates can be projected
     // through the transform onto the files' partition values.
     val hiddenFields = partitionSpecFields(meta).filter(_.transform != "identity")
     val index = new IcebergLiteFileIndex(
-      spark, new Path(tablePath), liteFiles, partitionSchema, statTypes,
+      spark, new Path(tablePath), liteFiles, partitionSchema, columnTypes,
       hiddenFields)
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       index, partitionSchema, fileSchema, None, new IcebergLiteParquetFormat(),

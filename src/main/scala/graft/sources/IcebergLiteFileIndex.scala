@@ -1,17 +1,20 @@
 package graft.sources
 
+import scala.util.Try
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, TypeUtils}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One live data file of an Iceberg-lite snapshot, with the manifest-carried
   * pruning inputs: Hive/identity partition values and per-column min/max +
-  * null-count statistics (strings, typed lazily against the table schema).
+  * null-count statistics (strings, decoded into each predicate's type).
   */
 final case class LiteDataFile(
     path: String,
@@ -38,13 +41,9 @@ final class IcebergLiteFileIndex(
     tablePath: Path,
     files: Seq[LiteDataFile],
     override val partitionSchema: StructType,
-    statTypes: Map[String, DataType],
+    columnTypes: Map[String, DataType],
     hiddenFields: Seq[PartitionField] = Nil) extends FileIndex {
-
-  // Time transforms are defined on UTC (matching the writer's pinned-UTC
-  // derive and real Iceberg's spec) — NOT the reader session's zone, which
-  // would make pruning results depend on who is asking.
-  private val transformZone = java.time.ZoneOffset.UTC
+  import IcebergLiteFileIndex._
 
   override def rootPaths: Seq[Path] = Seq(tablePath)
 
@@ -64,7 +63,7 @@ final class IcebergLiteFileIndex(
   private def partitionRow(f: LiteDataFile): InternalRow =
     InternalRow.fromSeq(partitionSchema.fields.toSeq.map { field =>
       f.partitionValues.get(field.name) match {
-        case None | Some("__HIVE_DEFAULT_PARTITION__") => null
+        case None | Some(HiveDefault) => null
         case Some(v) => castPartitionValue(v, field.dataType)
       }
     })
@@ -88,11 +87,12 @@ final class IcebergLiteFileIndex(
       }
       Predicate.createInterpreted(bound)
     }
+    val referenced = dataFilters.flatMap(_.references.map(_.name)).toSet
+    val derived = hiddenFields.filter(h => referenced(h.source))
+      .flatMap(h => derivation(h).map(h -> _))
     val kept = files.filter { f =>
-      val row = partitionRow(f)
-      partPred.forall(_.eval(row)) &&
-        !dataFilters.exists(e => StatsPruning.canSkip(e, f)) &&
-        !dataFilters.exists(e => hiddenFields.exists(h => canSkipHidden(e, h, f)))
+      partPred.forall(_.eval(partitionRow(f))) &&
+        !dataFilters.exists(e => canSkip(e, f, derived))
     }
     kept.groupBy(partitionRow).toSeq.map { case (row, fs) =>
       PartitionDirectory(row, fs.map(f =>
@@ -100,181 +100,141 @@ final class IcebergLiteFileIndex(
     }
   }
 
-  // ---- hidden-transform pruning ------------------------------------------
-  // Queries filter the SOURCE column (hidden partitioning's whole point);
-  // the predicate is projected through the transform onto the file's
-  // partition value. Conservative throughout: any shape or type outside
-  // the mapping keeps the file.
-
-  /** True when `h`'s transform PROVES no row of `f` can satisfy `e`. */
-  private def canSkipHidden(e: Expression, h: PartitionField, f: LiteDataFile): Boolean = {
-    val fileVal = f.partitionValues.get(h.name)
-    if (fileVal.isEmpty || fileVal.contains("__HIVE_DEFAULT_PARTITION__")) return false
-    val v = fileVal.get
-    e match {
-      case And(l, r) => canSkipHidden(l, h, f) || canSkipHidden(r, h, f)
-      case Or(l, r) => canSkipHidden(l, h, f) && canSkipHidden(r, h, f)
-      case EqualTo(a: AttributeReference, lit: Literal) if a.name == h.source =>
-        transformOf(h, lit).exists(_ != v)
-      case EqualTo(lit: Literal, a: AttributeReference) if a.name == h.source =>
-        transformOf(h, lit).exists(_ != v)
-      case In(a: AttributeReference, lits) if a.name == h.source &&
-          lits.forall(_.isInstanceOf[Literal]) =>
-        val ts = lits.map(l => transformOf(h, l.asInstanceOf[Literal]))
-        ts.nonEmpty && ts.forall(_.exists(_ != v))
-      // Range predicates project only through ORDER-PRESERVING transforms
-      // (the time family: fixed-width digit strings where lexicographic
-      // == chronological); bucket scrambles order and truncate's string
-      // compare can diverge from UTF8String binary order on non-ASCII,
-      // so ranges never prune those.
-      case GreaterThan(a: AttributeReference, lit: Literal)
-          if a.name == h.source && timeTransform(h) =>
-        transformOf(h, lit).exists(d => v < d) // a > t: need T(a) >= T(t)
-      case GreaterThanOrEqual(a: AttributeReference, lit: Literal)
-          if a.name == h.source && timeTransform(h) =>
-        transformOf(h, lit).exists(d => v < d)
-      case LessThan(a: AttributeReference, lit: Literal)
-          if a.name == h.source && timeTransform(h) =>
-        transformOf(h, lit).exists(d => v > d) // a < t: need T(a) <= T(t)
-      case LessThanOrEqual(a: AttributeReference, lit: Literal)
-          if a.name == h.source && timeTransform(h) =>
-        transformOf(h, lit).exists(d => v > d)
-      case GreaterThan(lit: Literal, a: AttributeReference)
-          if a.name == h.source && timeTransform(h) =>
-        transformOf(h, lit).exists(d => v > d) // t > a  ==  a < t
-      case LessThan(lit: Literal, a: AttributeReference)
-          if a.name == h.source && timeTransform(h) =>
-        transformOf(h, lit).exists(d => v < d)
-      case _ => false
-    }
-  }
-
-  private def timeTransform(h: PartitionField): Boolean =
-    PartitionSpec.TimeFormats.contains(h.transform)
-
-  /** The literal's partition value under the transform, as the same string
-    * the writer's Hive path produced — None when the literal's type is
-    * outside the bit-reproducible mapping (no pruning then).
-    *
-    * day: 'yyyy-MM-dd' at UTC (lexicographic == chronological, so the
-    * range cases above compare strings). bucket: md5-prefix mod N of
-    * the value's plain string form, matching `CAST(x AS STRING)` only for
-    * integral and string types — others stay unpruned.
+  /** The writer's own derivation of hidden field `h`
+    * ([[PartitionSpec.deriveSql]]), resolved over its source column and
+    * bound to a one-column row, with every time-zone-aware node pinned to
+    * UTC as the writer pins its session. Projecting a literal through it
+    * gives the partition value the writer derived for that value, so
+    * writer and reader agree by construction. None when it does not
+    * resolve (the field then prunes nothing).
     */
-  private def transformOf(h: PartitionField, lit: Literal): Option[String] =
-    if (lit.value == null) None
-    else h.transform match {
-      case t @ ("year" | "month" | "day" | "hour") =>
-        // TIMESTAMP (with zone): the writer derives under a pinned-UTC
-        // session, so the projection renders the instant at UTC too.
-        // TIMESTAMP_NTZ is deliberately unmapped (its micros are wall
-        // clock, not an instant) — conservative no-prune.
-        val local: Option[java.time.LocalDateTime] = lit.dataType match {
-          case TimestampType =>
-            val micros = lit.value.asInstanceOf[Long]
-            Some(java.time.Instant
-              .ofEpochSecond(Math.floorDiv(micros, 1000000L),
-                Math.floorMod(micros, 1000000L) * 1000L)
-              .atZone(transformZone).toLocalDateTime)
-          case DateType =>
-            Some(java.time.LocalDate.ofEpochDay(lit.value.asInstanceOf[Int].toLong)
-              .atStartOfDay)
-          case _ => None
+  private def derivation(h: PartitionField): Option[Expression] =
+    columnTypes.get(h.source).flatMap { dt =>
+      val source = AttributeReference(h.source, dt)()
+      Try {
+        val parsed = spark.sessionState.sqlParser.parseExpression(PartitionSpec.deriveSql(h))
+        spark.sessionState.executePlan(
+          Project(Seq(Alias(parsed, h.name)()), LocalRelation(source))).analyzed
+      }.toOption.collect { case Project(Seq(Alias(e, _)), _) =>
+        BindReferences.bindReference(e, Seq(source)).transform {
+          case tz: TimeZoneAwareExpression => tz.withTimeZone("UTC")
         }
-        local.map(_.format(java.time.format.DateTimeFormatter.ofPattern(
-          PartitionSpec.TimeFormats(t))))
-      case t if t.startsWith("bucket[") =>
-        val n = h.bucketCount.get
-        (lit.dataType match {
-          case LongType => Some(lit.value.asInstanceOf[Long].toString)
-          case IntegerType => Some(lit.value.asInstanceOf[Int].toString)
-          case ShortType => Some(lit.value.asInstanceOf[Short].toString)
-          case StringType => Some(lit.value.toString)
-          case _ => None
-        }).map(s => PartitionSpec.bucketOf(s, n).toString)
-      case t if t.startsWith("truncate[") =>
-        // Equality-only projection, ASCII-only: Spark's substring slices
-        // codepoints and UTF8String compares bytes — both coincide with
-        // java.lang.String on ASCII, and nowhere else that matters here.
-        val w = PartitionSpec.truncWidth(h.transform).get
-        lit.dataType match {
-          case StringType =>
-            val s = lit.value.toString
-            if (s.forall(_ < 128)) Some(s.substring(0, math.min(w, s.length)))
-            else None
-          case _ => None
-        }
-      case _ => None
+      }
     }
 }
 
-/** Min/max + null-count file skipping straight off the Catalyst filter
-  * expressions (literal values arrive Catalyst-internal: UTF8String for
-  * strings, days for DATE, micros for TIMESTAMP — exactly the encoding the
-  * bounds store). Conservative in every unknown case: a file is skipped
-  * only when the bounds PROVE no row can match.
+/** File skipping straight off the Catalyst filter expressions: one walker,
+  * one ordering. Each leaf reduces to (column, op, values), with Catalyst's
+  * internal values (UTF8String for strings, days for DATE, micros for
+  * TIMESTAMP), and asks every piece of evidence the file carries about
+  * that column whether a row could satisfy it:
+  *  - the manifest bounds, exact;
+  *  - each hidden partition field over that column, as the range [v, v]
+  *    of the file's transformed value.
+  * Bounds and partition values decode into the leaf's type and compare
+  * under Catalyst's own ordering for it, so strings compare by unsigned
+  * bytes, as Parquet orders its statistics. Conservative in every unknown
+  * case: a file is skipped only when the evidence PROVES no row can match.
   */
-object StatsPruning {
+object IcebergLiteFileIndex {
 
-  def canSkip(e: Expression, f: LiteDataFile): Boolean = e match {
-    case And(l, r) => canSkip(l, f) || canSkip(r, f)
-    case Or(l, r) => canSkip(l, f) && canSkip(r, f)
-    case EqualTo(a: AttributeReference, l: Literal) => outside(a.name, l, f)
-    case EqualTo(l: Literal, a: AttributeReference) => outside(a.name, l, f)
-    case GreaterThan(a: AttributeReference, l: Literal) => // a > v: skip when max <= v
-      cmpUpper(a.name, l, f).exists(_ <= 0)
-    case GreaterThan(l: Literal, a: AttributeReference) => // v > a: skip when min >= v
-      cmpLower(a.name, l, f).exists(_ >= 0)
-    case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-      cmpUpper(a.name, l, f).exists(_ < 0)
-    case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-      cmpLower(a.name, l, f).exists(_ > 0)
-    case LessThan(a: AttributeReference, l: Literal) => // a < v: skip when min >= v
-      cmpLower(a.name, l, f).exists(_ >= 0)
-    case LessThan(l: Literal, a: AttributeReference) => // v < a: skip when max <= v
-      cmpUpper(a.name, l, f).exists(_ <= 0)
-    case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-      cmpLower(a.name, l, f).exists(_ > 0)
-    case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-      cmpUpper(a.name, l, f).exists(_ < 0)
+  private val HiveDefault = "__HIVE_DEFAULT_PARTITION__"
+
+  /** Comparison symbols, each mapped to its form with the sides swapped. */
+  private val Flipped = Map("=" -> "=", "<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+
+  /** A comparison leaf, column on the left: `=` with several values is IN. */
+  private final case class Leaf(column: String, op: String, dataType: DataType, values: Seq[Any])
+
+  private def leaf(e: Expression): Option[Leaf] = e match {
     case In(a: AttributeReference, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-      vs.forall(v => outside(a.name, v.asInstanceOf[Literal], f))
+      Some(Leaf(a.name, "=", a.dataType, vs.map(_.asInstanceOf[Literal].value)))
     case InSet(a: AttributeReference, vs) if vs.nonEmpty =>
-      vs.forall(v => outside(a.name, Literal.create(v, a.dataType), f))
+      Some(Leaf(a.name, "=", a.dataType, vs.toSeq))
+    case c: BinaryComparison if Flipped.contains(c.symbol) => (c.left, c.right) match {
+      case (a: AttributeReference, l: Literal) => Some(Leaf(a.name, c.symbol, l.dataType, Seq(l.value)))
+      case (l: Literal, a: AttributeReference) =>
+        Some(Leaf(a.name, Flipped(c.symbol), l.dataType, Seq(l.value)))
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** True when no row of `f` can satisfy `e`. */
+  private def canSkip(e: Expression, f: LiteDataFile,
+      derived: Seq[(PartitionField, Expression)]): Boolean = e match {
+    case And(l, r) => canSkip(l, f, derived) || canSkip(r, f, derived)
+    case Or(l, r) => canSkip(l, f, derived) && canSkip(r, f, derived)
     case IsNull(a: AttributeReference) => f.nullCounts.get(a.name).contains(0L)
     case IsNotNull(a: AttributeReference) =>
       f.nullCounts.get(a.name).exists(n => n > 0 && n == f.recordCount)
-    case _ => false
+    case _ => leaf(e).exists { l =>
+      excluded(l.dataType, f.lower.get(l.column), f.upper.get(l.column), l.op, l.values) ||
+        derived.exists { case (h, d) => h.source == l.column && hiddenExcludes(h, d, l, f) }
+    }
   }
 
-  /** v provably outside [min, max] of the file's column. */
-  private def outside(c: String, l: Literal, f: LiteDataFile): Boolean =
-    cmpUpper(c, l, f).exists(_ < 0) || cmpLower(c, l, f).exists(_ > 0)
-
-  /** sign(file-min - v); None when no bound / not comparable. */
-  private def cmpLower(c: String, l: Literal, f: LiteDataFile): Option[Int] =
-    f.lower.get(c).flatMap(b => cmp(b, l))
-
-  /** sign(file-max - v). */
-  private def cmpUpper(c: String, l: Literal, f: LiteDataFile): Option[Int] =
-    f.upper.get(c).flatMap(b => cmp(b, l))
-
-  /** Bounds store the parquet-physical encoding (longs for integral, date
-    * days, timestamp micros; doubles; raw strings) — the same shapes
-    * Catalyst literals use internally.
+  /** The leaf projected through hidden field `h`'s derivation `d` onto the
+    * file's partition value. A time transform is monotone over a date or
+    * timestamp source, so a strict range becomes its non-strict form;
+    * every other projection answers only `=` and IN. A value whose
+    * projection throws keeps the file.
     */
-  private def cmp(bound: String, l: Literal): Option[Int] =
-    if (l.value == null) None
-    else (l.dataType, l.value) match {
-      case (ByteType | ShortType | IntegerType | LongType | DateType | _: TimestampType, n: Number) =>
-        Some(java.lang.Long.compare(bound.toLong, n.longValue()))
-      case (FloatType, n: Number) =>
-        Some(java.lang.Double.compare(bound.toDouble, n.doubleValue()))
-      case (DoubleType, n: Number) =>
-        Some(java.lang.Double.compare(bound.toDouble, n.doubleValue()))
-      case (StringType, s: UTF8String) => Some(bound.compareTo(s.toString))
-      case (BooleanType, b: java.lang.Boolean) =>
-        Some(java.lang.Boolean.compare(bound.toBoolean, b))
-      case _ => None
+  private def hiddenExcludes(h: PartitionField, d: Expression, l: Leaf,
+      f: LiteDataFile): Boolean = {
+    val monotone = PartitionSpec.TimeFormats.contains(h.transform) &&
+      (l.dataType match {
+        case DateType | TimestampType | TimestampNTZType => true
+        case _ => false
+      })
+    val op = if (monotone && (l.op == "<" || l.op == ">")) l.op + "=" else l.op
+    val fileValue = f.partitionValues.get(h.name).filter(_ != HiveDefault)
+    (op == "=" || monotone) && fileValue.nonEmpty && l.values.forall { v =>
+      // Catalyst's = holds between -0.0 and 0.0, whose derivations differ.
+      val equal = v match {
+        case x: Double if x == 0.0 => Seq(0.0, -0.0)
+        case x: Float if x == 0.0f => Seq(0.0f, -0.0f)
+        case _ => Seq(v)
+      }
+      val projected = equal.map(x => Try(d.eval(InternalRow(x))).getOrElse(null))
+      excluded(d.dataType, fileValue, fileValue, op, projected)
     }
+  }
+
+  /** True when the range [lower, upper] (decoded into `dt`; an end may be
+    * unknown) holds no value x with `x op v` for any v in `values`.
+    */
+  private def excluded(dt: DataType, lower: Option[String], upper: Option[String],
+      op: String, values: Seq[Any]): Boolean = {
+    val lo = lower.flatMap(catalystValue(_, dt))
+    val hi = upper.flatMap(catalystValue(_, dt))
+    (lo.nonEmpty || hi.nonEmpty) && {
+      val ord = TypeUtils.getInterpretedOrdering(dt)
+      values.forall(v => v != null && (op match {
+        case "=" => lo.exists(ord.gt(_, v)) || hi.exists(ord.lt(_, v))
+        case "<" => lo.exists(ord.gteq(_, v))
+        case "<=" => lo.exists(ord.gt(_, v))
+        case ">" => hi.exists(ord.lteq(_, v))
+        case ">=" => hi.exists(ord.lt(_, v))
+      }))
+    }
+  }
+
+  /** A manifest bound or partition value as the Catalyst value of `dt`.
+    * Bounds store the Parquet-physical encoding (longs for integral, date
+    * days and timestamp micros; doubles; UTF-8 strings), which is the
+    * internal form Catalyst uses for these types. None for other types.
+    */
+  private def catalystValue(s: String, dt: DataType): Option[Any] =
+    Try[Any](dt match {
+      case BooleanType => s.toBoolean
+      case ByteType => s.toByte
+      case ShortType => s.toShort
+      case IntegerType | DateType => s.toInt
+      case LongType | TimestampType | TimestampNTZType => s.toLong
+      case FloatType => s.toFloat
+      case DoubleType => s.toDouble
+      case StringType => UTF8String.fromString(s)
+      case _ => null
+    }).toOption.flatMap(Option(_))
 }

@@ -10,6 +10,7 @@ import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -98,8 +99,8 @@ object IcebergLiteWriter {
     * same assignment as fieldsJson) so the parquet files carry
     * `parquet.field.id` like real Iceberg writers — the reader's
     * field-id-based projection of evolved (renamed) tables depends on it.
-    * The session conf flip is restored afterwards: this writer must not
-    * change how the caller's OTHER parquet writes behave.
+    * The session confs it pins are restored afterwards: this writer must
+    * not change how the caller's OTHER parquet writes behave.
     */
   private def writeStampedParquet(spark: SparkSession, df: DataFrame,
       dir: String, mode: SaveMode, partCols: Seq[String]): Unit = {
@@ -130,19 +131,23 @@ object IcebergLiteWriter {
           "collides with a data column of the same name; rename the column " +
           "or partition differently")
     }
-    val fieldIdKey = "spark.sql.parquet.fieldId.write.enabled"
-    val priorFieldId = spark.conf.getOption(fieldIdKey)
-    val tzKey = "spark.sql.session.timeZone"
-    val priorTz = spark.conf.getOption(tzKey)
-    spark.conf.set(fieldIdKey, "true")
-    // Time transforms are defined on UTC, as in real Iceberg: the derive
-    // runs under a pinned UTC session so a writer in any timezone (or a
-    // reader in a different one — the index projects literals in UTC too)
-    // sees identical partition values. Stored timestamp DATA is an
-    // instant (micros), unaffected by the session flip. The pin MUST
-    // precede building `derived`: ResolveTimeZone stamps the session zone
-    // into date_format at analysis time (withColumn), not at execution.
-    spark.conf.set(tzKey, "UTC")
+    // Session pins for the write, each restored afterwards:
+    //  - field ids, for the reader's field-id projection;
+    //  - UTC: time transforms are defined on UTC, as in real Iceberg, so a
+    //    writer in any timezone (or a reader in a different one: the index
+    //    evaluates the same derivation at UTC) sees identical partition
+    //    values. Stored timestamp DATA is an instant (micros), unaffected.
+    //    The pin MUST precede building `derived`: ResolveTimeZone stamps
+    //    the session zone into date_format at analysis time (withColumn),
+    //    not at execution;
+    //  - INT64 micros timestamps, Iceberg's `timestamptz` encoding. Spark's
+    //    default INT96 carries no statistics, so its files get no bounds.
+    val pins = Map(
+      "spark.sql.parquet.fieldId.write.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+    val prior = pins.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    pins.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val derived = fields.filter(_.transform != "identity").foldLeft(withIds) {
         (d, f) => d.withColumn(f.name, org.apache.spark.sql.functions.expr(
@@ -151,15 +156,9 @@ object IcebergLiteWriter {
       val writer = derived.write.mode(mode)
       val names = fields.map(_.name)
       (if (names.nonEmpty) writer.partitionBy(names: _*) else writer).parquet(dir)
-    } finally {
-      priorFieldId match {
-        case Some(v) => spark.conf.set(fieldIdKey, v)
-        case None => spark.conf.unset(fieldIdKey)
-      }
-      priorTz match {
-        case Some(v) => spark.conf.set(tzKey, v)
-        case None => spark.conf.unset(tzKey)
-      }
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -171,7 +170,9 @@ object IcebergLiteWriter {
       nullCounts: Map[String, Long])
 
   /** Lift record count + per-column min/max/null-count from the parquet
-    * footer (row-group statistics merged across blocks). Columns whose
+    * footer. Row-group statistics merge with parquet's own
+    * `mergeStatistics`, which orders values by the column's declared
+    * order (unsigned bytes for strings), and decode once. Columns whose
     * statistics are absent in any non-empty block are dropped — pruning
     * must only ever see bounds that hold for every row of the file.
     */
@@ -180,9 +181,7 @@ object IcebergLiteWriter {
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val recordCount = blocks.map(_.getRowCount).sum
-      val lower = mutable.Map.empty[String, Any]
-      val upper = mutable.Map.empty[String, Any]
-      val nulls = mutable.Map.empty[String, Long]
+      val merged = mutable.Map.empty[String, Statistics[_]]
       val broken = mutable.Set.empty[String]
       for (b <- blocks; c <- b.getColumns.asScala if c.getPath.size == 1) {
         val name = c.getPath.toDotString
@@ -202,27 +201,24 @@ object IcebergLiteWriter {
           case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => !i.isSigned
           case _ => false
         }
-        if (stats == null || !stats.isNumNullsSet || unitMismatch) broken += name
-        else {
-          nulls.update(name, nulls.getOrElse(name, 0L) + stats.getNumNulls)
-          if (stats.hasNonNullValue) {
-            val (mn, mx) = (decodeStat(pt.getPrimitiveTypeName, stats.genericGetMin),
-              decodeStat(pt.getPrimitiveTypeName, stats.genericGetMax))
-            (mn, mx) match {
-              case (Some(a), Some(z)) =>
-                lower.update(name, lower.get(name).map(statMin(_, a)).getOrElse(a))
-                upper.update(name, upper.get(name).map(statMax(_, z)).getOrElse(z))
-              case _ => broken += name
-            }
-          } else if (stats.getNumNulls < b.getRowCount) broken += name
-          // all-null block: bounds of the file are unaffected
-        }
+        // A block with non-null rows but no min/max leaves the file's
+        // bounds unknown; an all-null block leaves them unaffected.
+        if (stats == null || !stats.isNumNullsSet || unitMismatch ||
+            (!stats.hasNonNullValue && stats.getNumNulls < b.getRowCount)) broken += name
+        else merged.getOrElseUpdate(name, Statistics.createStats(pt)).mergeStatistics(stats)
       }
-      broken.foreach { n => lower.remove(n); upper.remove(n); nulls.remove(n) }
+      // INT96 / FIXED / unknown physical types publish neither bounds nor
+      // null counts.
+      val decoded = (merged.toMap -- broken).flatMap { case (n, s) =>
+        val pt = s.`type`.getPrimitiveTypeName
+        if (!s.hasNonNullValue) Some(n -> (s.getNumNulls, None))
+        else for (lo <- decodeStat(pt, s.genericGetMin); hi <- decodeStat(pt, s.genericGetMax))
+          yield n -> (s.getNumNulls, Some((lo.toString, hi.toString)))
+      }
       FileStats(recordCount,
-        lower.map { case (k, v) => k -> v.toString }.toMap,
-        upper.map { case (k, v) => k -> v.toString }.toMap,
-        nulls.toMap)
+        decoded.collect { case (n, (_, Some((lo, _)))) => n -> lo },
+        decoded.collect { case (n, (_, Some((_, hi)))) => n -> hi },
+        decoded.map { case (n, (nulls, _)) => n -> nulls })
     } finally reader.close()
   }
 
@@ -234,22 +230,6 @@ object IcebergLiteWriter {
       Some(n.doubleValue())
     case (PrimitiveTypeName.BOOLEAN, b: java.lang.Boolean) => Some(b.booleanValue())
     case _ => None // INT96 / FIXED / unknown: no bounds
-  }
-
-  private def statMin(a: Any, b: Any): Any = (a, b) match {
-    case (x: Long, y: Long) => math.min(x, y)
-    case (x: Double, y: Double) => math.min(x, y)
-    case (x: String, y: String) => if (x <= y) x else y
-    case (x: Boolean, y: Boolean) => x && y
-    case _ => a
-  }
-
-  private def statMax(a: Any, b: Any): Any = (a, b) match {
-    case (x: Long, y: Long) => math.max(x, y)
-    case (x: Double, y: Double) => math.max(x, y)
-    case (x: String, y: String) => if (x >= y) x else y
-    case (x: Boolean, y: Boolean) => x || y
-    case _ => a
   }
 
   /** Hive path segments `col=value` under data/ -> partition value map.

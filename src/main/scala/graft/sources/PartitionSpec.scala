@@ -75,8 +75,10 @@ object PartitionSpec {
   /** Spark SQL deriving the partition value from the source column.
     * Time transforms: UTC calendar rendering (see TimeFormats) — the
     * writer pins the session timezone to UTC around the derive, and the
-    * reader projects predicate literals at UTC, so partition values are
-    * writer/reader-zone independent like real Iceberg's. bucket:
+    * reader's file index evaluates this same expression over predicate
+    * literals at UTC, so partition values are writer/reader-zone
+    * independent like real Iceberg's, and writer and reader agree on
+    * every transform by construction. bucket:
     * md5-prefix int64 mod N — non-negative, engine-reproducible.
     * truncate: string prefix (Iceberg's string semantics; numeric
     * truncate is refused at write rather than risking float-precision
@@ -91,18 +93,5 @@ object PartitionSpec {
       s"substring(CAST(`${f.source}` AS STRING), 1, ${truncWidth(f.transform).get})"
     case "identity" => s"`${f.source}`"
     case other => throw new IllegalArgumentException(s"unknown transform $other")
-  }
-
-  /** The JVM mirror of the bucket derivation, for planning-time pruning:
-    * bucket of a literal value's string form. Must stay bit-identical to
-    * [[deriveSql]]'s md5 path (CAST AS STRING of integral/string values
-    * is their plain decimal/identity rendering in Spark, matching
-    * `toString` here — which is why pruning only engages for those
-    * types).
-    */
-  def bucketOf(value: String, n: Int): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(value.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex, 16) % n
   }
 }

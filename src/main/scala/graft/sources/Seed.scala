@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 /** Demo/ops tool: seed an Iceberg-lite table from a testdata table, or
   * append another snapshot to one.
   *
@@ -10,12 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Seed {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, tableName, targetDir, rest @ _*) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.sessionBuilder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = graft.Tables.t(spark, sfDir, tableName)
     if (rest.contains("append")) IcebergLiteWriter.append(spark, df, targetDir)

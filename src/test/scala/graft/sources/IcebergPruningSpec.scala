@@ -254,6 +254,24 @@ class IcebergPruningSpec extends AnyFunSuite with SparkFixture {
     assert(df.filter(col("o_orderkey") < 100).count() == expected)
   }
 
+  test("timestamp bounds skip files of an unpartitioned table") {
+    import spark.implicits._
+    // The writer stores timestamps as INT64 micros, which carry column
+    // statistics; Spark's default INT96 carries none, so no bounds.
+    val dir = tmpDir("iceberg_ts_bounds") + "/warehouse/events_ts"
+    val start = java.time.Instant.parse("2024-01-01T00:00:00Z")
+    val df = (0 until 40).map(i => (i.toLong, java.sql.Timestamp.from(start.plusSeconds(i * 3600L))))
+      .toDF("id", "ts").repartitionByRange(4, col("ts"))
+    IcebergLiteWriter.write(spark, df, dir)
+    val scan = IcebergLite.scan(spark, dir)
+    val all = filesScanned(scan)
+    assert(all == 4)
+    val early = col("ts") < lit(java.sql.Timestamp.from(start.plusSeconds(5 * 3600L)))
+    val pruned = filesScanned(scan.filter(early))
+    assert(pruned < all, s"expected timestamp bounds pruning: $pruned < $all")
+    assert(scan.filter(early).count() == 5)
+  }
+
   test("TIMESTAMP AS OF resolves via the snapshot log") {
     val dir = tmpDir("iceberg_ts") + "/warehouse/region_ts"
     IcebergLiteWriter.write(spark, Tables.t(spark, sf0001, "region"), dir)

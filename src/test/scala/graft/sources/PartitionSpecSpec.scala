@@ -28,14 +28,4 @@ class PartitionSpecSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](PartitionSpec.parse("bucket(0, x)"))
     intercept[IllegalArgumentException](PartitionSpec.parse("truncate(0, x)"))
   }
-
-  test("bucketOf matches the SQL derivation's md5-prefix semantics") {
-    // CAST(conv(substring(md5('7'), 1, 8), 16, 10) AS BIGINT) % 4 — the
-    // Spark-side value for user_id=7, recomputed independently here.
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest("7".getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    assert(PartitionSpec.bucketOf("7", 4) == java.lang.Long.parseLong(hex, 16) % 4)
-    assert((0 until 100).map(i => PartitionSpec.bucketOf(i.toString, 8))
-      .forall(b => b >= 0 && b < 8))
-  }
 }

@@ -22,9 +22,10 @@ Usage:
 
 --conc N pairs the serving-throughput posture (SPARK_GRAFT_CONC=N vs
 bench_duckdb.py --jobs N); default is the sequential-latency posture
-the historical BENCH_r*.json artifacts record. Each graft leg times
-every query twice (graft.Bench's fixed repeat: cold, then steady) with
-SPARK_GRAFT_BENCH_GC=1; the band is stamped from the steady totals.
+the historical BENCH_r*.json artifacts record. Each graft leg runs at
+SPARK_GRAFT_CPUS cores (default: this machine's os.cpu_count()) and
+times every query twice (graft.Bench's fixed repeat: cold, then steady)
+with SPARK_GRAFT_BENCH_GC=1; the band is stamped from the steady totals.
 """
 import json, os, statistics, subprocess, sys, time
 
@@ -57,7 +58,7 @@ def settle(threshold, timeout=240):
 def run_graft(sf_dir, conc, out):
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "32"),
+               SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count())),
                SPARK_GRAFT_BENCH_GC="1",
                SPARK_GRAFT_BENCH_OUT=out)
     if conc > 1:
