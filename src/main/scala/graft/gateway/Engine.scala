@@ -5,7 +5,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.graft.LocalTasks
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
+import org.apache.spark.sql.catalyst.expressions.{CallMethodViaReflection, CodegenObjectFactoryMode, TryReflect}
 import org.apache.spark.sql.catalyst.optimizer.InlineCTE
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, Range}
 import org.apache.spark.sql.execution.{CoalesceExec, CollectLimitExec, SQLExecution, SparkPlan, TakeOrderedAndProjectExec}
@@ -478,8 +478,9 @@ object Engine {
 }
 
 /** Idle request sessions, each built once: `newSession()`, graft's
-  * function registrations and one exact storage-settings map. See the
-  * session model on [[Engine]].
+  * function registrations less Spark's reflection calls, no SQL on files,
+  * and one exact storage-settings map. See the session model on
+  * [[Engine]].
   */
 private[gateway] object SessionPool {
 
@@ -497,6 +498,9 @@ private[gateway] object SessionPool {
   /** An idle session, with the mode confs it is restored to. */
   private final class Pooled(val key: Key, val session: SparkSession,
       val compiled: Map[String, String])
+
+  private val ReflectionCalls =
+    Set(classOf[CallMethodViaReflection], classOf[TryReflect]).map(_.getName)
 
   // Oldest first; guarded by itself.
   private val idle = new java.util.ArrayDeque[Pooled]()
@@ -536,6 +540,16 @@ private[gateway] object SessionPool {
     // gateway works on ANY root session, not only one built with
     // GraftExtensions.
     graft.functions.GraftFunctions.register(s)
+    // Read-only, within the flat-file gate: no calls of static JDK methods
+    // (reflect, java_method and try_reflect reach System.getenv and
+    // System.setProperty) and no `format.`path`` queries, so files are
+    // read only through iceberg_scan and the gated readers.
+    val registry = s.sessionState.functionRegistry
+    registry.listFunction().foreach { f =>
+      if (registry.lookupFunction(f).exists(i => ReflectionCalls(i.getClassName)))
+        registry.dropFunction(f)
+    }
+    s.conf.set(SQLConf.RUN_SQL_ON_FILES.key, "false")
     key.settings.foreach { case (k, v) => s.conf.set(k, v) }
     val compiled = Engine.compiledConfs(s.conf.get(SQLConf.SHUFFLE_PARTITIONS.key),
       s.conf.get(SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.key))

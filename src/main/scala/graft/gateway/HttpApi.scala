@@ -4,35 +4,40 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
-import scala.util.{Failure, Success, Try}
-
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Row, SparkSession}
 
 import graft.sources.TableInfo
 import JValue._
 
-/** HTTP adapter (the reference's FastAPI surface,
-  * /root/reference/backend/main.py:646-770) on the JDK's built-in
-  * HttpServer — the build is offline, so no web framework resolves. Routes
-  * and JSON shapes mirror the reference:
+/** HTTP adapter (the reference's FastAPI surface, its
+  * `backend/main.py:646-770`) on the JDK's built-in HttpServer — the build
+  * is offline, so no web framework resolves. Routes and JSON shapes mirror
+  * the reference:
   *
-  *   GET  /                    health stub
-  *   GET  /health              engine version + timestamp
-  *   POST /api/connect/test    {connection} -> {status,message,tableInfo}
-  *   POST /api/query           {sql,connection,rowLimit} -> QueryResponse
-  *   POST /api/query/export    same body -> text/csv attachment (A14)
-  *   POST /api/format          {sql} -> {formatted} (A15)
-  *   GET  /api/demo/connection canned demo config
-  *   GET  /api/demo/queries    sample queries over the demo table
+  *   GET  /                         health stub
+  *   GET  /ui                       the browser client
+  *   GET  /health                   engine version + timestamp
+  *   POST /api/connect/test         {connection} -> {status,message,tableInfo}
+  *   POST /api/query                {sql,connection,rowLimit} -> QueryResponse
+  *   POST /api/query/export         same body -> text/csv attachment (A14)
+  *   POST /api/format               {sql} -> {formatted} (A15)
+  *   POST /api/maintenance/compact  {connection,tablePath,targetBytes} -> counts
+  *   GET  /api/demo/connection      canned demo config
+  *   GET  /api/demo/queries         sample queries over the demo table
   *
-  * Errors: HTTP 400 with {"detail": ...} for validation/guard/execution
-  * errors, 413 for a body over [[HttpApi.MaxBodyBytes]], 500
-  * {"detail":"Internal server error"} otherwise (logged with its stack
-  * trace); CORS `*`. Both query routes answer with an `X-Request-Id`
-  * header, the id their log line carries.
+  * One context serves them all from [[routes]], keyed by exact method and
+  * path: any other path is 404, `OPTIONS` on a route's path is 204, any
+  * other method is 405. Errors: 400 with {"detail": ...} for validation,
+  * guard and execution errors and for a request that nests too deeply to
+  * process, 413 for a body over [[HttpApi.MaxBodyBytes]], 500
+  * {"detail":"Internal server error"} for anything else (logged with its
+  * stack trace). Every response carries CORS `*` and is answered, whatever
+  * the failure. Both query routes answer with an `X-Request-Id` header,
+  * the id their log line carries.
   */
 final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String]) {
+  import HttpApi.Reply
 
   private val server = HttpApi.createServer(new InetSocketAddress(port))
   // Non-daemon request threads: kept so stop() can shut them down.
@@ -41,123 +46,7 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[HttpApi])
 
   def start(): Unit = {
-    server.createContext("/", (ex: HttpExchange) => {
-      (ex.getRequestMethod, ex.getRequestURI.getPath) match {
-        // The browser client (the reference ships it as a separate static
-        // frontend; here it is one self-contained HTML route).
-        case ("GET", "/ui") =>
-          respondRaw(ex, 200, WebUi.html.getBytes(StandardCharsets.UTF_8),
-            "text/html; charset=utf-8", None)
-        case ("GET", "/") =>
-          respond(ex, Success((200, JObj(
-            "message" -> JStr("Graft API"),
-            "version" -> JStr("0.1.0"),
-            "status" -> JStr("running")))))
-        case ("GET", "/health") =>
-          respond(ex, Success((200, JObj(
-            "status" -> JStr("healthy"),
-            "spark_version" -> JStr(spark.version),
-            "timestamp" -> JValue.num(System.currentTimeMillis() / 1000.0)))))
-        case _ => respond(ex, Success((404, JObj("detail" -> JStr("Not Found")))))
-      }
-    })
-    server.createContext("/api/connect/test", handlerWithBody { body =>
-      val conn = connectionFrom(body)
-      Engine.runConnectionTest(spark, conn, demoTablePath) match {
-        case Some(info) =>
-          (200, JObj(
-            "status" -> JStr("success"),
-            "message" -> JStr("Connection successful"),
-            "tableInfo" -> tableInfoJson(info)))
-        case None => (400, JObj("detail" -> JStr("Connection test failed")))
-      }
-    })
-    server.createContext("/api/query", logged { (ex, heard) =>
-      handleBody(ex)(body => (200, queryResponseJson(runQuery(body, heard))))
-    })
-    // CSV export (A14): same request as /api/query, result as a text/csv
-    // attachment — the server-side analog of the reference UI's
-    // exportResults download (frontend/js/app.js:451-479).
-    server.createContext("/api/query/export", logged { (ex, heard) =>
-      Try {
-        ex.getRequestMethod match {
-          case "OPTIONS" => Left((204, JObj()))
-          case "POST" => Right(ResultExport.toCsv(runQuery(readBody(ex), heard)))
-          case _ => Left((405, JObj("detail" -> JStr("Method Not Allowed"))))
-        }
-      } match {
-        case Success(Right(csv)) =>
-          respondRaw(ex, 200, csv.getBytes(StandardCharsets.UTF_8), "text/csv",
-            Some(s"attachment; filename=graft-results-${System.currentTimeMillis()}.csv"))
-          200
-        case Success(Left(r)) => respond(ex, Success(r))
-        case Failure(e) => respond(ex, Failure(e))
-      }
-    })
-    // Table maintenance (beyond-reference): the delete guard's own
-    // remediation run in-house — delete-applying rewrite + small-file
-    // compaction. Mutating, so gated off by default
-    // (-Dgraft.gateway.maintenance=true); see Engine.runCompaction.
-    server.createContext("/api/maintenance/compact", handlerWithBody { body =>
-      val conn = connectionFrom(body)
-      val targetBytes = body match {
-        case Some(b) if b.get("targetBytes").isDefined =>
-          b.long("targetBytes").filter(_ > 0).getOrElse(throw Engine.EngineError(400,
-            "targetBytes must be a positive whole number of bytes"))
-        case _ => 128L << 20
-      }
-      val r = Engine.runCompaction(spark, conn, targetBytes,
-        body.flatMap(_.str("tablePath")))
-      (200, JObj(
-        "status" -> JStr("success"),
-        "deletesApplied" -> JBool(r.deletesApplied),
-        "deleteRewrite" -> JObj(
-          "rewritten" -> JValue.num(r.rewriteRewritten.toLong),
-          "written" -> JValue.num(r.rewriteWritten.toLong)),
-        "compaction" -> JObj(
-          "rewritten" -> JValue.num(r.compactRewritten.toLong),
-          "written" -> JValue.num(r.compactWritten.toLong))))
-    })
-    // SQL formatter (A15): the reference formats in the editor
-    // (frontend/js/app.js:352-369); the engine exposes the same transform
-    // as an endpoint so any client gets identical output.
-    server.createContext("/api/format", handlerWithBody { body =>
-      val obj = body.getOrElse(throw Engine.EngineError(400, "Request body required"))
-      val sql = obj.str("sql").getOrElse(throw Engine.EngineError(400, "sql is required"))
-      (200, JObj("formatted" -> JStr(SqlFormatter.format(sql))))
-    })
-    server.createContext("/api/demo/connection", handler {
-      case ("GET", _) =>
-        (200, JObj(
-          "storageType" -> JStr("minio"),
-          "endpoint" -> JStr("http://localhost:9000"),
-          "accessKey" -> JStr("graft"),
-          "secretKey" -> JStr("graft123"),
-          "region" -> JStr("us-east-1"),
-          "tablePath" -> JStr(demoTablePath.getOrElse(""))))
-      case _ => (405, JObj("detail" -> JStr("Method Not Allowed")))
-    })
-    server.createContext("/api/demo/queries", handler {
-      case ("GET", _) =>
-        val t = demoTablePath.getOrElse("")
-        def q(name: String, description: String, sql: String): JValue =
-          JObj("name" -> JStr(name), "description" -> JStr(description), "sql" -> JStr(sql))
-        (200, JObj("queries" -> JArr(Vector(
-          q("Sample Documents", "Preview first 10 documents",
-            s"SELECT doc_id, lang, source, n_chars FROM iceberg_scan('$t') ORDER BY doc_id LIMIT 10"),
-          q("Row Count", "Count total rows in dataset",
-            s"SELECT COUNT(*) AS total_docs FROM iceberg_scan('$t')"),
-          q("Documents by Language", "Count documents by language",
-            s"SELECT lang, COUNT(*) AS doc_count FROM iceberg_scan('$t') GROUP BY lang ORDER BY doc_count DESC"),
-          q("Long Documents", "Find documents over 300 chars",
-            s"SELECT doc_id, n_chars FROM iceberg_scan('$t') WHERE n_chars > 300 ORDER BY n_chars DESC"),
-          // Reference-shaped DuckDB dialect (its "Popular Genres" sample,
-          // main.py:767) — served VERBATIM now that the gateway's dialect
-          // pre-pass runs it, rather than a quiet Spark translation.
-          q("Word Frequency", "Most common words",
-            s"SELECT TRIM(word) AS word, COUNT(*) AS count FROM (SELECT UNNEST(string_split(text, ' ')) AS word FROM iceberg_scan('$t') WHERE text IS NOT NULL) GROUP BY word ORDER BY count DESC")))))
-      case _ => (405, JObj("detail" -> JStr("Method Not Allowed")))
-    })
+    server.createContext("/", serve(_))
     server.setExecutor(executor)
     server.start()
   }
@@ -173,7 +62,194 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
 
   def address: String = s"http://localhost:${server.getAddress.getPort}"
 
+  // --- routes -------------------------------------------------------------
+
+  /** A route gets the request's JSON object body (None for a GET or a
+    * blank body) and a [[Heard]] the query routes fill in.
+    */
+  private type Route = (Option[JObj], Heard) => Reply
+
+  private val routes: Map[(String, String), Route] = Map(
+    ("GET", "/") -> { (_, _) =>
+      json(200, JObj(
+        "message" -> JStr("Graft API"),
+        "version" -> JStr("0.1.0"),
+        "status" -> JStr("running")))
+    },
+    // The browser client (the reference ships it as a separate static
+    // frontend; here it is one self-contained HTML route).
+    ("GET", "/ui") -> { (_, _) =>
+      Reply(200, WebUi.html.getBytes(StandardCharsets.UTF_8), "text/html; charset=utf-8")
+    },
+    ("GET", "/health") -> { (_, _) =>
+      json(200, JObj(
+        "status" -> JStr("healthy"),
+        "spark_version" -> JStr(spark.version),
+        "timestamp" -> JValue.num(System.currentTimeMillis() / 1000.0)))
+    },
+    ("POST", "/api/connect/test") -> { (body, _) =>
+      Engine.runConnectionTest(spark, connectionFrom(body), demoTablePath) match {
+        case Some(info) =>
+          json(200, JObj(
+            "status" -> JStr("success"),
+            "message" -> JStr("Connection successful"),
+            "tableInfo" -> tableInfoJson(info)))
+        case None => json(400, detail("Connection test failed"))
+      }
+    },
+    ("POST", "/api/query") -> { (body, heard) =>
+      json(200, queryResponseJson(runQuery(body, heard)))
+    },
+    // CSV export (A14): same request as /api/query, result as a text/csv
+    // attachment — the server-side analog of the reference UI's
+    // exportResults download (frontend/js/app.js:451-479).
+    ("POST", "/api/query/export") -> { (body, heard) =>
+      Reply(200, ResultExport.toCsv(runQuery(body, heard)).getBytes(StandardCharsets.UTF_8),
+        "text/csv",
+        Some(s"attachment; filename=graft-results-${System.currentTimeMillis()}.csv"))
+    },
+    // Table maintenance (beyond-reference): the delete guard's own
+    // remediation run in-house — delete-applying rewrite + small-file
+    // compaction. Mutating, so gated off by default
+    // (-Dgraft.gateway.maintenance=true); see Engine.runCompaction.
+    ("POST", "/api/maintenance/compact") -> { (body, _) =>
+      val conn = connectionFrom(body)
+      val targetBytes = body match {
+        case Some(b) if b.get("targetBytes").isDefined =>
+          b.long("targetBytes").filter(_ > 0).getOrElse(throw Engine.EngineError(400,
+            "targetBytes must be a positive whole number of bytes"))
+        case _ => 128L << 20
+      }
+      val r = Engine.runCompaction(spark, conn, targetBytes,
+        body.flatMap(_.str("tablePath")))
+      json(200, JObj(
+        "status" -> JStr("success"),
+        "deletesApplied" -> JBool(r.deletesApplied),
+        "deleteRewrite" -> JObj(
+          "rewritten" -> JValue.num(r.rewriteRewritten.toLong),
+          "written" -> JValue.num(r.rewriteWritten.toLong)),
+        "compaction" -> JObj(
+          "rewritten" -> JValue.num(r.compactRewritten.toLong),
+          "written" -> JValue.num(r.compactWritten.toLong))))
+    },
+    // SQL formatter (A15): the reference formats in the editor
+    // (frontend/js/app.js:352-369); the engine exposes the same transform
+    // as an endpoint so any client gets identical output.
+    ("POST", "/api/format") -> { (body, _) =>
+      val obj = body.getOrElse(throw Engine.EngineError(400, "Request body required"))
+      val sql = obj.str("sql").getOrElse(throw Engine.EngineError(400, "sql is required"))
+      json(200, JObj("formatted" -> JStr(SqlFormatter.format(sql))))
+    },
+    ("GET", "/api/demo/connection") -> { (_, _) =>
+      json(200, JObj(
+        "storageType" -> JStr("minio"),
+        "endpoint" -> JStr("http://localhost:9000"),
+        "accessKey" -> JStr("graft"),
+        "secretKey" -> JStr("graft123"),
+        "region" -> JStr("us-east-1"),
+        "tablePath" -> JStr(demoTablePath.getOrElse(""))))
+    },
+    ("GET", "/api/demo/queries") -> { (_, _) =>
+      val t = demoTablePath.getOrElse("")
+      def q(name: String, description: String, sql: String): JValue =
+        JObj("name" -> JStr(name), "description" -> JStr(description), "sql" -> JStr(sql))
+      json(200, JObj("queries" -> JArr(Vector(
+        q("Sample Documents", "Preview first 10 documents",
+          s"SELECT doc_id, lang, source, n_chars FROM iceberg_scan('$t') ORDER BY doc_id LIMIT 10"),
+        q("Row Count", "Count total rows in dataset",
+          s"SELECT COUNT(*) AS total_docs FROM iceberg_scan('$t')"),
+        q("Documents by Language", "Count documents by language",
+          s"SELECT lang, COUNT(*) AS doc_count FROM iceberg_scan('$t') GROUP BY lang ORDER BY doc_count DESC"),
+        q("Long Documents", "Find documents over 300 chars",
+          s"SELECT doc_id, n_chars FROM iceberg_scan('$t') WHERE n_chars > 300 ORDER BY n_chars DESC"),
+        // Reference-shaped DuckDB dialect (its "Popular Genres" sample,
+        // main.py:767) — served VERBATIM now that the gateway's dialect
+        // pre-pass runs it, rather than a quiet Spark translation.
+        q("Word Frequency", "Most common words",
+          s"SELECT TRIM(word) AS word, COUNT(*) AS count FROM (SELECT UNNEST(string_split(text, ' ')) AS word FROM iceberg_scan('$t') WHERE text IS NOT NULL) GROUP BY word ORDER BY count DESC")))))
+    })
+
+  private val paths: Set[String] = routes.keySet.map(_._2)
+
+  /** The query routes: each request to one gets an `X-Request-Id` header
+    * and one log line.
+    */
+  private val queryPaths = Set("/api/query", "/api/query/export")
+
   // --- plumbing -----------------------------------------------------------
+
+  private def json(status: Int, payload: JValue): Reply =
+    Reply(status, payload.render.getBytes(StandardCharsets.UTF_8), "application/json")
+
+  private def detail(message: String): JObj = JObj("detail" -> JStr(message))
+
+  /** Serves one request: finds its route, reads a POST's body, runs the
+    * route inside the one error boundary ([[failed]]), sends the reply and
+    * always closes the exchange. A query route's request also gets an
+    * `X-Request-Id` and one INFO line, for "why was this request slow":
+    * that id, the status, the time, the execution mode the engine chose
+    * and whether the plan ran on the request thread or as Spark jobs.
+    * Never the SQL or the connection, which may carry credentials.
+    */
+  private def serve(ex: HttpExchange): Unit = {
+    val t0 = System.nanoTime()
+    val method = ex.getRequestMethod
+    val path = ex.getRequestURI.getPath
+    val id = if (queryPaths(path)) Some(UUID.randomUUID().toString) else None
+    id.foreach(ex.getResponseHeaders.set("X-Request-Id", _))
+    val heard = new Heard
+    val reply =
+      try {
+        if (!paths(path)) json(404, detail("Not Found"))
+        else if (method == "OPTIONS") json(204, JObj())
+        else routes.get((method, path)) match {
+          case None => json(405, detail("Method Not Allowed"))
+          case Some(r) => r(if (method == "POST") readBody(ex) else None, heard)
+        }
+      } catch {
+        case e: Throwable => failed(s"$method $path${id.fold("")(i => s" id=$i")}", e)
+      }
+    try write(ex, reply) finally ex.close()
+    id.foreach { id =>
+      val mode = heard.mode
+      if (log.isInfoEnabled) log.info(
+        s"query id=$id status=${reply.status} ms=${(System.nanoTime() - t0) / 1000000} " +
+          s"inputRows=${mode.flatMap(_.inputRows.toOption).getOrElse("-")} " +
+          s"mode=${mode.fold("-")(_.name)} ran=${heard.ran.fold("-")(_.name)} " +
+          s"unknownLeaf=${mode.flatMap(_.inputRows.left.toOption).getOrElse("-")}")
+    }
+  }
+
+  /** The one error boundary: what a request that failed with `e` gets.
+    * It also takes what `Try` lets pass: a statement nested deeply enough
+    * to overflow the parser's or analyzer's stack is the request's fault.
+    */
+  private def failed(request: String, e: Throwable): Reply = e match {
+    case e: Engine.EngineError => json(e.status, detail(e.detail))
+    case e: ConnectionConfig.InvalidConfig => json(400, detail(e.message))
+    case e: Json.JsonParseException => json(400, detail(s"Invalid JSON: ${e.msg}"))
+    case e: StackOverflowError =>
+      log.error(s"400 on $request: stack overflow", e)
+      json(400, detail("Request nests too deeply to process"))
+    case e =>
+      log.error(s"500 on $request", e)
+      json(500, detail("Internal server error"))
+  }
+
+  /** Sends `r` with the CORS headers; a 204 sends the headers only. */
+  private def write(ex: HttpExchange, r: Reply): Unit = {
+    val h = ex.getResponseHeaders
+    h.set("Content-Type", r.contentType)
+    r.disposition.foreach(h.set("Content-Disposition", _))
+    h.set("Access-Control-Allow-Origin", "*")
+    h.set("Access-Control-Allow-Methods", "*")
+    h.set("Access-Control-Allow-Headers", "*")
+    if (r.status == 204) ex.sendResponseHeaders(r.status, -1)
+    else {
+      ex.sendResponseHeaders(r.status, r.body.length)
+      ex.getResponseBody.write(r.body)
+    }
+  }
 
   /** The `{sql, connection, rowLimit}` request both query routes take. */
   private def runQuery(body: Option[JObj], heard: Heard): Engine.QueryResult = {
@@ -201,53 +277,6 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
     var ran: Option[Engine.Ran] = None
   }
 
-  /** A query route that answers with an `X-Request-Id` header and logs one
-    * INFO line per request, for "why was this request slow": that id, the
-    * status, the time, the execution mode the engine chose and whether the
-    * plan ran on the request thread or as Spark jobs. Never the SQL or the
-    * connection, which may carry credentials. `serve` returns the status
-    * it sent.
-    */
-  private def logged(serve: (HttpExchange, Heard) => Int): HttpHandler =
-    (ex: HttpExchange) => {
-      val t0 = System.nanoTime()
-      val id = UUID.randomUUID().toString
-      ex.getResponseHeaders.set("X-Request-Id", id)
-      val heard = new Heard
-      val status = serve(ex, heard)
-      val mode = heard.mode
-      if (log.isInfoEnabled) log.info(
-        s"query id=$id status=$status ms=${(System.nanoTime() - t0) / 1000000} " +
-          s"inputRows=${mode.flatMap(_.inputRows.toOption).getOrElse("-")} " +
-          s"mode=${mode.fold("-")(_.name)} ran=${heard.ran.fold("-")(_.name)} " +
-          s"unknownLeaf=${mode.flatMap(_.inputRows.left.toOption).getOrElse("-")}")
-    }
-
-  private def handler(
-      route: PartialFunction[(String, String), (Int, JValue)]): HttpHandler =
-    (ex: HttpExchange) => {
-      val key = (ex.getRequestMethod, ex.getRequestURI.getPath)
-      val resp = Try {
-        if (route.isDefinedAt(key)) route(key)
-        else (404, JObj("detail" -> JStr("Not Found")))
-      }
-      respond(ex, resp)
-    }
-
-  private def handlerWithBody(
-      route: Option[JObj] => (Int, JValue)): HttpHandler =
-    (ex: HttpExchange) => handleBody(ex)(route)
-
-  /** Serves one JSON-body POST route; returns the status sent. */
-  private def handleBody(ex: HttpExchange)(route: Option[JObj] => (Int, JValue)): Int =
-    respond(ex, Try {
-      ex.getRequestMethod match {
-        case "OPTIONS" => (204, JObj())
-        case "POST" => route(readBody(ex))
-        case _ => (405, JObj("detail" -> JStr("Method Not Allowed")))
-      }
-    })
-
   /** The request's JSON object body (None when blank), read only up to
     * [[HttpApi.MaxBodyBytes]]: a larger body is refused with 413.
     */
@@ -260,40 +289,6 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
     else Json.parse(raw) match {
       case o: JObj => Some(o)
       case _ => throw Engine.EngineError(400, "Request body must be a JSON object")
-    }
-  }
-
-  /** Sends the JSON response for `result`; returns its status. */
-  private def respond(ex: HttpExchange, result: Try[(Int, JValue)]): Int = {
-    val (status, payload) = result match {
-      case Success(r) => r
-      case Failure(e: Engine.EngineError) => (e.status, JObj("detail" -> JStr(e.detail)))
-      case Failure(e: ConnectionConfig.InvalidConfig) => (400, JObj("detail" -> JStr(e.message)))
-      case Failure(e: Json.JsonParseException) => (400, JObj("detail" -> JStr(s"Invalid JSON: ${e.msg}")))
-      case Failure(e) =>
-        log.error(s"500 on ${ex.getRequestMethod} ${ex.getRequestURI.getPath}", e)
-        (500, JObj("detail" -> JStr("Internal server error")))
-    }
-    respondRaw(ex, status, payload.render.getBytes(StandardCharsets.UTF_8),
-      "application/json")
-    status
-  }
-
-  /** Sends `bytes` with the CORS headers; a 204 sends the headers only. */
-  private def respondRaw(ex: HttpExchange, status: Int, bytes: Array[Byte],
-      contentType: String, disposition: Option[String] = None): Unit = {
-    val h = ex.getResponseHeaders
-    h.set("Content-Type", contentType)
-    disposition.foreach(h.set("Content-Disposition", _))
-    h.set("Access-Control-Allow-Origin", "*")
-    h.set("Access-Control-Allow-Methods", "*")
-    h.set("Access-Control-Allow-Headers", "*")
-    if (status == 204) ex.sendResponseHeaders(status, -1)
-    else {
-      ex.sendResponseHeaders(status, bytes.length)
-      val os = ex.getResponseBody
-      os.write(bytes)
-      os.close()
     }
   }
 
@@ -350,6 +345,10 @@ final class HttpApi(spark: SparkSession, port: Int, demoTablePath: Option[String
 }
 
 object HttpApi {
+
+  /** One route's answer, as the one writer sends it. */
+  private final case class Reply(status: Int, body: Array[Byte], contentType: String,
+      disposition: Option[String] = None)
 
   /** Largest request body any route reads; SQL text is far smaller. */
   val MaxBodyBytes: Int = 1 << 20

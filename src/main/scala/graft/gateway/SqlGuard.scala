@@ -3,6 +3,7 @@ package graft.gateway
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.UnresolvedExecuteImmediate
 import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, ParsedStatement}
 
@@ -14,7 +15,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, Parsed
   * In Catalyst terms, every mutating or session-altering statement parses
   * to a `Command` (CREATE/DROP/ALTER/SET/USE/SHOW/CALL/...) or a
   * `ParsedStatement` (INSERT/...) — plus a small name-matched set for DML
-  * nodes that are plain logical plans. Multi-statement input is already a
+  * nodes that are plain logical plans. `EXECUTE IMMEDIATE` is neither,
+  * and analysis would parse and run its text unguarded, so it is rejected
+  * by type whatever that text says. Multi-statement input is already a
   * parse error in Spark's single-statement parser.
   */
 object SqlGuard {
@@ -43,6 +46,7 @@ object SqlGuard {
     val offender = plan.collectFirst {
       case c: Command => c.nodeName
       case s: ParsedStatement => s.nodeName
+      case _: UnresolvedExecuteImmediate => "EXECUTE IMMEDIATE"
       case p if ForbiddenNodeNames.contains(p.nodeName) => p.nodeName
     }
     offender match {

@@ -30,7 +30,9 @@ import graft.sources.{IcebergLite, RestCatalogClient}
   *
   * Trust model: paths reach the readers exactly as the reference's DuckDB
   * takes them; the gateway can read what its process can read. The
-  * flat-file readers are gated further ([[checkFlatFilePath]]).
+  * flat-file readers are gated further ([[checkFlatFilePath]]). Gateway
+  * sessions run no `format.`path`` queries (`SessionPool`), so these
+  * functions are the only way a request reads files.
   */
 object TableFunctions {
 

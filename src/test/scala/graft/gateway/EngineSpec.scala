@@ -14,30 +14,38 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     storageType = "minio", endpoint = "http://localhost:9000",
     accessKey = "k", secretKey = "s")
 
+  // Gateway sessions run no `parquet.`path`` queries; the gated reader
+  // reads the fixture once its root is allowed.
   private def regionSql =
-    s"SELECT r_regionkey, r_name FROM parquet.`$sf0001/region.parquet`"
+    s"SELECT r_regionkey, r_name FROM read_parquet('$sf0001/region.parquet')"
+
+  private def withFlatFileRoots[A](roots: String)(body: => A): A = {
+    System.setProperty("graft.gateway.flatFileRoot", roots)
+    try body finally System.clearProperty("graft.gateway.flatFileRoot")
+  }
 
   test("limit injected when absent; truncated flagged") {
-    val r = Engine.executeQuery(spark, regionSql, cfg, rowLimit = 3)
+    val r = withFlatFileRoots(sf0001)(Engine.executeQuery(spark, regionSql, cfg, rowLimit = 3))
     assert(r.rows.length == 3)
     assert(r.truncated)
     assert(r.columns == Seq("r_regionkey", "r_name"))
   }
 
   test("existing LIMIT never overwritten") {
-    val r = Engine.executeQuery(spark, regionSql + " ORDER BY r_regionkey LIMIT 2", cfg)
+    val r = withFlatFileRoots(sf0001)(
+      Engine.executeQuery(spark, regionSql + " ORDER BY r_regionkey LIMIT 2", cfg))
     assert(r.rows.length == 2)
     assert(!r.truncated)
   }
 
   test("LIMIT behind a CTE wrapper is seen") {
     val sql = s"WITH t AS ($regionSql) SELECT * FROM t LIMIT 2"
-    val r = Engine.executeQuery(spark, sql, cfg, rowLimit = 1000)
+    val r = withFlatFileRoots(sf0001)(Engine.executeQuery(spark, sql, cfg, rowLimit = 1000))
     assert(r.rows.length == 2)
   }
 
   test("stats: wall clock, real bytesScanned from scan metrics, row count") {
-    val r = Engine.executeQuery(spark, regionSql, cfg)
+    val r = withFlatFileRoots(sf0001)(Engine.executeQuery(spark, regionSql, cfg))
     assert(r.stats.rowsReturned == 5)
     assert(r.stats.bytesScanned > 0)
     assert(r.stats.executionTimeMs >= 0)
@@ -172,11 +180,6 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     assert(Engine.runConnectionTest(spark, cfg, Some("/no/such/table")).isEmpty)
   }
 
-  private def withFlatFileRoots[A](roots: String)(body: => A): A = {
-    System.setProperty("graft.gateway.flatFileRoot", roots)
-    try body finally System.clearProperty("graft.gateway.flatFileRoot")
-  }
-
   test("duckdb flat-file readers bind: read_csv, read_json, plain read_parquet") {
     val dir = tmpDir("engine_flat")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/t.csv"),
@@ -240,6 +243,43 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     withFlatFileRoots("*") {
       val all = Engine.executeQuery(spark, s"SELECT * FROM read_csv('$dir/t.csv')", cfg)
       assert(all.rows == Seq(Seq(1)))
+    }
+  }
+
+  test("EXECUTE IMMEDIATE gets 400 and changes no conf of the pooled session") {
+    val e = intercept[Engine.EngineError](Engine.executeQuery(spark,
+      "EXECUTE IMMEDIATE 'SET spark.sql.shuffle.partitions=3'", cfg))
+    assert(e.status == 400 && e.detail == "EXECUTE IMMEDIATE statements are not allowed", e.detail)
+    val partitions = SessionPool.withSession(spark, Engine.storageSettings(cfg))(
+      _.conf.get("spark.sql.shuffle.partitions"))
+    assert(partitions != "3")
+  }
+
+  test("reflect, java_method and try_reflect fail analysis in every spelling; the root session keeps them") {
+    val key = "graft.gateway.flatFileRoot"
+    assert(System.getProperty(key) == null)
+    for {
+      fn <- Seq("reflect", "java_method", "try_reflect")
+      call <- Seq(fn, fn.toUpperCase, s"IDENTIFIER('$fn')")
+      sql <- Seq(
+        s"SELECT $call('java.lang.System', 'setProperty', '$key', '*') AS r",
+        s"SELECT $call('java.lang.System', 'getenv', 'PATH') AS r")
+    } {
+      val e = intercept[Engine.EngineError](Engine.executeQuery(spark, sql, cfg))
+      assert(e.status == 400 && e.detail.startsWith("Query execution failed"), s"$sql: ${e.detail}")
+      assert(System.getProperty(key) == null, sql)
+    }
+    assert(spark.sql("SELECT reflect('java.lang.String', 'valueOf', 7) AS r").head().getString(0) == "7")
+  }
+
+  test("direct file queries get 400 whatever the flat-file root says") {
+    val dir = tmpDir("engine_direct")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/secret.txt"), "s3cr3t\n".getBytes("UTF-8"))
+    for (roots <- Seq(None, Some("*")); format <- Seq("text", "binaryFile", "csv", "parquet")) {
+      val sql = s"SELECT * FROM $format.`$dir/secret.txt`"
+      val e = intercept[Engine.EngineError](roots.fold(Engine.executeQuery(spark, sql, cfg))(
+        withFlatFileRoots(_)(Engine.executeQuery(spark, sql, cfg))))
+      assert(e.status == 400 && e.detail.startsWith("Query execution failed"), s"$roots $sql: ${e.detail}")
     }
   }
 

@@ -126,7 +126,10 @@ class ExecutionModeSpec extends AnyFunSuite with SparkFixture {
       assert(big.rows == Seq(Seq(199999L * 200000L / 2)))
       assert(bigMode == Engine.ExecutionMode(Right(200000L), interpreted = false))
       assert(nextCompiled(seen))
-      val (_, flatMode) = run(s"SELECT COUNT(*) AS n FROM parquet.`$sf0001/region.parquet`")
+      System.setProperty("graft.gateway.flatFileRoot", sf0001)
+      val (_, flatMode) =
+        try run(s"SELECT COUNT(*) AS n FROM read_parquet('$sf0001/region.parquet')")
+        finally System.clearProperty("graft.gateway.flatFileRoot")
       assert(flatMode == Engine.ExecutionMode(Left("InMemoryFileIndex"), interpreted = false))
       assert(nextCompiled(seen))
     }

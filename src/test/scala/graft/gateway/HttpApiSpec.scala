@@ -21,6 +21,9 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
   private val client = HttpClient.newHttpClient()
 
   override def beforeAll(): Unit = {
+    // Gateway sessions run no `parquet.`path`` queries; the gated reader
+    // reads the fixture parquet under this root.
+    System.setProperty("graft.gateway.flatFileRoot", sf0001)
     val demo = tmpDir("http_demo") + "/warehouse/documents"
     IcebergLiteWriter.write(spark, Tables.t(spark, sf0001, "documents"), demo)
     api = new HttpApi(spark, 0, Some(demo))
@@ -28,7 +31,10 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     base = api.address
   }
 
-  override def afterAll(): Unit = if (api != null) api.stop()
+  override def afterAll(): Unit = {
+    System.clearProperty("graft.gateway.flatFileRoot")
+    if (api != null) api.stop()
+  }
 
   private def get(path: String): HttpResponse[String] =
     client.send(
@@ -91,7 +97,7 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
   }
 
   test("POST /api/query runs SQL with limit + stats") {
-    val sql = s"SELECT r_regionkey FROM parquet.`$sf0001/region.parquet` ORDER BY r_regionkey"
+    val sql = s"SELECT r_regionkey FROM read_parquet('$sf0001/region.parquet') ORDER BY r_regionkey"
     val r = post("/api/query", s"""{"sql":"$sql","connection":$connJson,"rowLimit":3}""")
     assert(r.statusCode() == 200)
     val o = obj(r)
@@ -110,7 +116,7 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
       """{"storageType":"s3","endpoint":"https://s3.amazonaws.com",
         |"accessKey":"AKIDEXAMPLE","secretKey":"s",
         |"sessionToken":"FwoGZXIvYXdzEBYaDEXAMPLETOKEN123"}""".stripMargin
-    val sql = s"SELECT r_name FROM parquet.`$sf0001/region.parquet` ORDER BY r_name LIMIT 1"
+    val sql = s"SELECT r_name FROM read_parquet('$sf0001/region.parquet') ORDER BY r_name LIMIT 1"
     val r = post("/api/query", s"""{"sql":"$sql","connection":$stsConn}""")
     assert(r.statusCode() == 200)
     assert(obj(r).get("rows").exists {
@@ -125,7 +131,7 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
   }
 
   test("POST /api/query with rowLimit below 1 -> 400 + detail") {
-    val sql = s"SELECT r_name FROM parquet.`$sf0001/region.parquet`"
+    val sql = s"SELECT r_name FROM read_parquet('$sf0001/region.parquet')"
     Seq(0, -1).foreach { n =>
       val r = post("/api/query", s"""{"sql":"$sql","connection":$connJson,"rowLimit":$n}""")
       assert(r.statusCode() == 400, n)
@@ -364,7 +370,7 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
   }
 
   test("POST /api/query/export streams the result as CSV (A14)") {
-    val sql = s"SELECT r_regionkey, r_name FROM parquet.`$sf0001/region.parquet` ORDER BY r_regionkey"
+    val sql = s"SELECT r_regionkey, r_name FROM read_parquet('$sf0001/region.parquet') ORDER BY r_regionkey"
     val r = post("/api/query/export", s"""{"sql":"$sql","connection":$connJson,"rowLimit":2}""")
     assert(r.statusCode() == 200)
     assert(r.headers().firstValue("Content-Type").orElse("").startsWith("text/csv"))
@@ -412,7 +418,8 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     import org.apache.logging.log4j.core.config.Property
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val appender = new AbstractAppender("query-lines", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage +
+        Option(e.getThrown).fold("")(t => s" thrown=${t.getClass.getName}"))
     }
     appender.start()
     val logger = LogManager.getLogger(classOf[HttpApi]).asInstanceOf[Logger]
@@ -452,7 +459,7 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
       val one = logged(lines, "SELECT 1 AS one")
       assert(one.matches(
         s"query id=$RequestId status=200 ms=\\d+ inputRows=1 mode=interpreted ran=thread unknownLeaf=-"), one)
-      val flat = logged(lines, s"SELECT COUNT(*) AS n FROM parquet.`$sf0001/region.parquet`")
+      val flat = logged(lines, s"SELECT COUNT(*) AS n FROM read_parquet('$sf0001/region.parquet')")
       assert(flat.matches(
         s"query id=$RequestId status=200 ms=\\d+ inputRows=- mode=compiled ran=jobs unknownLeaf=InMemoryFileIndex"), flat)
       val refused = logged(lines, "DROP TABLE x")
@@ -485,6 +492,103 @@ class HttpApiSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
       }
       assert(ids.distinct.length == ids.length)
     }
+  }
+
+  private def send(method: String, path: String, body: String = ""): HttpResponse[String] =
+    client.send(
+      HttpRequest.newBuilder(URI.create(base + path))
+        .timeout(java.time.Duration.ofSeconds(20))
+        .method(method,
+          if (body.isEmpty) HttpRequest.BodyPublishers.noBody()
+          else HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def assertCors(r: HttpResponse[String], clue: Any): Unit =
+    Seq("Origin", "Methods", "Headers").foreach { h =>
+      assert(r.headers().firstValue(s"Access-Control-Allow-$h").orElse("") == "*", clue)
+    }
+
+  /** Every route with a request it serves: (method, path, body, status,
+    * Content-Type, Content-Disposition pattern, the JSON body's keys in
+    * order; None for a body that is not JSON).
+    */
+  private val routeContract = Seq(
+    ("GET", "/", "", 200, "application/json", "", Some(Seq("message", "version", "status"))),
+    ("GET", "/ui", "", 200, "text/html; charset=utf-8", "", None),
+    ("GET", "/health", "", 200, "application/json", "",
+      Some(Seq("status", "spark_version", "timestamp"))),
+    ("POST", "/api/connect/test", s"""{"connection":$connJson}""", 200, "application/json", "",
+      Some(Seq("status", "message", "tableInfo"))),
+    ("POST", "/api/query", s"""{"sql":"SELECT 1 AS one","connection":$connJson}""", 200,
+      "application/json", "", Some(Seq("columns", "rows", "stats", "truncated"))),
+    ("POST", "/api/query/export", s"""{"sql":"SELECT 1 AS one","connection":$connJson}""", 200,
+      "text/csv", "attachment; filename=graft-results-\\d+\\.csv", None),
+    ("POST", "/api/format", """{"sql":"SELECT 1"}""", 200, "application/json", "",
+      Some(Seq("formatted"))),
+    ("POST", "/api/maintenance/compact", s"""{"connection":$connJson}""", 403,
+      "application/json", "", Some(Seq("detail"))),
+    ("GET", "/api/demo/connection", "", 200, "application/json", "",
+      Some(Seq("storageType", "endpoint", "accessKey", "secretKey", "region", "tablePath"))),
+    ("GET", "/api/demo/queries", "", 200, "application/json", "", Some(Seq("queries"))))
+
+  test("route contract: every route's status, content type, disposition, CORS and body keys") {
+    routeContract.foreach { case (method, path, body, status, contentType, disposition, keys) =>
+      val r = send(method, path, body)
+      assert(r.statusCode() == status, s"$method $path: ${r.body()}")
+      assert(r.headers().firstValue("Content-Type").orElse("") == contentType, path)
+      assert(r.headers().firstValue("Content-Disposition").orElse("").matches(disposition), path)
+      assertCors(r, path)
+      keys.foreach(k => assert(obj(r).fields.map(_._1) == k, path))
+    }
+    assert(send("POST", "/api/query/export",
+      s"""{"sql":"SELECT 1 AS one","connection":$connJson}""").body() == "\"one\"\n\"1\"\n")
+  }
+
+  test("route contract: OPTIONS on every route is 204 with CORS, a wrong method 405") {
+    routeContract.map(_._2).distinct.foreach { path =>
+      val r = send("OPTIONS", path)
+      assert(r.statusCode() == 204, path)
+      assert(r.body().isEmpty, path)
+      assertCors(r, path)
+    }
+    for ((method, path) <- Seq(("GET", "/api/query"), ("GET", "/api/query/export"),
+        ("PUT", "/api/format"), ("POST", "/health"), ("DELETE", "/api/demo/queries"))) {
+      val r = send(method, path, if (method == "GET") "" else "{}")
+      assert(r.statusCode() == 405, s"$method $path")
+      assert(obj(r) == JObj("detail" -> JStr("Method Not Allowed")), s"$method $path")
+      assertCors(r, s"$method $path")
+    }
+  }
+
+  test("route contract: a path is served only when it equals a route's path") {
+    for ((method, path) <- Seq(("POST", "/api/queryXYZ"), ("POST", "/api/query/export2"),
+        ("POST", "/api/format2"), ("GET", "/api/demo/queries/x"), ("POST", "/api/query/"),
+        ("GET", "/healthz"), ("OPTIONS", "/nope"))) {
+      val r = send(method, path,
+        if (method == "POST") s"""{"sql":"SELECT 1 AS one","connection":$connJson}""" else "")
+      assert(r.statusCode() == 404, s"$method $path: ${r.body()}")
+      assert(obj(r) == JObj("detail" -> JStr("Not Found")), s"$method $path")
+      assertCors(r, s"$method $path")
+    }
+  }
+
+  test("a statement that overflows the stack gets 400 and a logged trace; the next request is served") {
+    val sql = "SELECT " + "(" * 3000 + "1" + ")" * 3000 + " AS x"
+    withLogLines { lines =>
+      // Bounded wait: a request thread that dies unanswered times out.
+      val r = send("POST", "/api/query", s"""{"sql":"$sql","connection":$connJson}""")
+      assert(r.statusCode() == 400, r.body())
+      assert(obj(r) == JObj("detail" -> JStr("Request nests too deeply to process")))
+      val id = r.headers().firstValue("X-Request-Id").orElse("")
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      def line = lines.toArray(Array.empty[String]).find(_.startsWith(s"query id=$id ")).getOrElse("")
+      while (line.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(line.matches(s"query id=$id status=400 ms=\\d+ inputRows=- mode=- ran=- unknownLeaf=-"), line)
+      assert(lines.contains(
+        s"400 on POST /api/query id=$id: stack overflow thrown=java.lang.StackOverflowError"), lines)
+    }
+    val next = post("/api/query", s"""{"sql":"SELECT 1 AS one","connection":$connJson}""")
+    assert(next.statusCode() == 200, next.body())
   }
 
   test("keep-alive responses are not held back by Nagle's algorithm") {

@@ -33,7 +33,9 @@ class SqlGuardPropertySpec extends AnyFunSuite with SparkFixture {
       "DROP TABLE %s", "DELETE FROM %s", "TRUNCATE TABLE %s",
       "INSERT INTO %s VALUES (1)", "UPDATE %s SET a = 1",
       "CREATE TABLE %s (a INT)", "ALTER TABLE %s ADD COLUMN b INT")
-  } yield stmt.format(table)
+    // The same statement run as text, which analysis would parse unguarded.
+    wrap <- Gen.oneOf("%s", "EXECUTE IMMEDIATE '%s'")
+  } yield wrap.format(stmt.format(table))
 
   test("mutating statements never pass, for any table name (100 samples)") {
     samples(mutationGen, 100).foreach { sql =>

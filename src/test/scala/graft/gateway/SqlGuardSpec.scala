@@ -54,6 +54,14 @@ class SqlGuardSpec extends AnyFunSuite with SparkFixture {
   }
   test("multi-statement rejected") { rejected("SELECT 1; SELECT 2") }
   test("garbage rejected without throwing") { rejected("not really sql at all") }
+  test("EXECUTE IMMEDIATE rejected, whatever its text") {
+    // Analysis would parse and run the text, past the guard.
+    Seq("SELECT 1", "SET spark.sql.shuffle.partitions=3", "DROP TABLE t").foreach { inner =>
+      val sql = s"EXECUTE IMMEDIATE '$inner'"
+      assert(SqlGuard.validate(spark, sql) ==
+        Left(SqlGuard.Rejection("EXECUTE IMMEDIATE statements are not allowed")), sql)
+    }
+  }
   test("mutation nested under a CTE is rejected") {
     rejected("WITH t AS (SELECT 1) INSERT INTO u SELECT * FROM t")
   }
